@@ -29,45 +29,16 @@ object Analytics {
   private val viewSeq = new java.util.concurrent.atomic.AtomicInteger(0)
 
   /** r15, guide §2.6/§5: register a BOUNDED reduced frame as a
-    * LocalRelation-backed temp view for the procedural surfaces
-    * (WITH RECURSIVE / SQL scripting). Their per-step machinery runs one
-    * driver-coordinated statement per row of the anchor; over a
-    * distributed anchor (the previous localCheckpoint shape) every step
-    * pays job submission + scheduling (~4 jobs and ~35 ms/step —
-    * JobTrace r15: q207 144 jobs, q236 146, q217 119), while over a
-    * LocalRelation the optimizer's ConvertToLocalRelation folds each
-    * step's anchor lookup to a driver-local LocalTableScan. The collect is
-    * NOT corpus data reaching the driver: the frame is the post-aggregate
-    * series (|quarters| / |weeks| rows — bounded by the corpus time span,
-    * sf-invariant), and the procedural loop already pulls exactly these
-    * rows to the driver one statement at a time; this moves them once,
-    * before the loop, instead of once per step. The caller's aggregate
-    * that PRODUCES the frame still runs distributed. Returns the view
-    * name; no cache registration needed (nothing distributed persists). */
-  /** r15, guide §1.2 step 3 (config only after the algorithm is right),
-    * applied per-query: run `body` — which must EXECUTE its query, e.g.
-    * end in a localCheckpoint — with adaptive execution off, restoring the
-    * prior value after. The procedural surfaces (WITH RECURSIVE / SQL
-    * scripting) re-plan a bounded ≤|series|-row, one-partition step per
-    * iteration; AQE's per-step query-stage machinery multiplies driver
-    * jobs ~4× there (JobTrace r15: q207 144 jobs for ~35 recursion steps)
-    * and can coalesce nothing, because every step plan is already a
-    * single-partition, shuffle-free tree. This is scale-independent: the
-    * step frame is the reduced series at ANY corpus size; the corpus-scale
-    * aggregate that produces the anchor runs OUTSIDE the wrapper, with AQE
-    * on. Session-global conf save/restore, same discipline as q217's
-    * scripting.enabled toggle (ADVICE r8). */
-  /** r15, guide §2.6/§5: register a BOUNDED reduced frame as a
     * LocalRelation-backed temp view for the procedural surfaces. The
     * collect is NOT corpus data reaching the driver: the frame is the
     * post-aggregate series (|quarters| / |weeks| rows — bounded by the
     * corpus time span, sf-invariant), and the procedural loop already
     * pulls exactly these rows to the driver one statement at a time; this
-    * moves them once, before the loop. With accurate LocalRelation stats
-    * the per-step anchor join auto-broadcasts (the checkpointed-RDD shape
-    * reported unknown-huge stats, forcing SMJ + exchanges each step). The
-    * corpus-scale aggregate that PRODUCES the frame still runs
-    * distributed. */
+    * moves them once, before the loop. Over a LocalRelation the
+    * optimizer's ConvertToLocalRelation folds each step's anchor lookup to
+    * a driver-local LocalTableScan (the checkpointed-RDD anchor paid job
+    * submission + scheduling per step). The corpus-scale aggregate that
+    * PRODUCES the frame still runs distributed. */
   private def localAnchorView(s: SparkSession, df: DataFrame, prefix: String): String = {
     val rows = df.collect()
     val name = s"${prefix}${viewSeq.incrementAndGet()}"
@@ -76,15 +47,51 @@ object Analytics {
     name
   }
 
-  private def noAqe[T](s: SparkSession)(body: => T): T = {
-    val k = "spark.sql.adaptive.enabled"
-    val prior = s.conf.getOption(k)
-    s.conf.set(k, "false")
-    try body
-    finally prior match {
-      case Some(v) => s.conf.set(k, v)
-      case None    => s.conf.unset(k)
-    }
+  /** Integer division truncating toward zero — SQL `div`, DuckDB `//`. */
+  private def idiv(a: Column, b: Any): Column = call_function("div", a, lit(b))
+
+  /** Quarterly order revenue in exact cents: (qi = year·4 + quarter, x) —
+    * the bounded series the quarterly folds (q207/q217/q236/q252) walk. */
+  private def quarterRevenue(s: SparkSession, dir: String): DataFrame =
+    Tables.orders(s, dir)
+      .groupBy(expr("CAST(year(o_orderdate) * 4 + quarter(o_orderdate) AS BIGINT)")
+        .as("qi"))
+      .agg(sum(graft.Exact.cents(col("o_totalprice"))).as("x"))
+
+  /** Field `x` of the 0-based k-th element of a [[seriesFold]] array (NULL
+    * when out of range, like the oracles' missing-row scalar subquery). */
+  private def xAt(xs: Column, k: Int): Column = get(xs, lit(k)).getField("x")
+
+  /** A left fold over a BOUNDED reduced series (|quarters| / |weeks| rows,
+    * sf-invariant) as ONE in-plan array fold — the loop stays inside one
+    * plan instead of WITH RECURSIVE's driver-coordinated job batch per
+    * step (q252: 145 jobs → 4). Three steps:
+    *  1. reduce: the caller's corpus aggregate `series` (one row per step;
+    *     its FIRST column is the order key) gathers into one sorted array
+    *     `xs` — one single-partition exchange of |series| rows;
+    *  2. fold: `aggregate(xs, init, (state, e) -> next, state -> state.out)`
+    *     from element `from` (0-based) on. `init(xs)` gives the named fold
+    *     variables; positional reads use `get(xs, k)` (0-based, NULL out of
+    *     range — never `element_at`, which throws under ANSI). `step(state,
+    *     e)` gives the next variables and the row that step emits, whose
+    *     fields are named and typed by the `row` DDL; the state carries the
+    *     emitted rows in its `out` array;
+    *  3. expand: `inline` turns `out` back into rows, already in fold order.
+    * The fold is non-associative (truncating `div`), which is why it is a
+    * sequential fold and not a window; the oracles stay DuckDB recursive
+    * CTEs, so parity is checked against independent semantics. */
+  private def seriesFold(series: DataFrame, row: String, from: Int = 0)(
+      init: Column => Seq[Column])(
+      step: (Column, Column) => (Seq[Column], Column)): DataFrame = {
+    val xs = col("xs")
+    series.agg(sort_array(collect_list(struct(series.columns.toSeq.map(col): _*))).as("xs"))
+      .select(inline(aggregate(filter(xs, (_, i) => i >= from),
+        struct(init(xs) :+ array().cast(s"array<struct<$row>>").as("out"): _*),
+        (st, e) => {
+          val (next, emit) = step(st, e)
+          struct(next :+ concat(st("out"), array(emit)).as("out"): _*)
+        },
+        _("out"))))
   }
 
   /** Explicit GROUPING SETS (SURVEY §2.4 A8, completing rollup/cube): the
@@ -1710,12 +1717,8 @@ object Analytics {
     * limit (spark.sql.cteRecursionLevelLimit, default 100) budgets exactly
     * this bounded-series use. Money is exact cents (Exact.cents law). */
   def q207RecursiveEma(s: SparkSession, dir: String): DataFrame = {
-    val idx = Tables.orders(s, dir)
-      .groupBy(expr("CAST(year(o_orderdate) * 4 + quarter(o_orderdate) AS BIGINT)")
-        .as("qi"))
-      .agg(sum(graft.Exact.cents(col("o_totalprice"))).as("revenue_cents"))
-      .withColumn("i", row_number().over(
-        org.apache.spark.sql.expressions.Window.orderBy(col("qi"))))
+    val idx = quarterRevenue(s, dir).withColumnRenamed("x", "revenue_cents")
+      .withColumn("i", row_number().over(Window.orderBy(col("qi"))))
     // r15 audit, left as-is: the per-step cost here is UnionLoopExec's own
     // machinery (2-4 driver jobs per recursion step, JobTrace). Variants
     // measured and REJECTED this round: LocalRelation anchor (141 jobs,
@@ -1780,12 +1783,8 @@ object Analytics {
     * A per-KEY fold at corpus scale stays in flatMapGroupsWithState
     * (q25); scripting, like recursion, is for bounded control flow. */
   def q217SqlScriptFold(s: SparkSession, dir: String): DataFrame = {
-    val idx = Tables.orders(s, dir)
-      .groupBy(expr("CAST(year(o_orderdate) * 4 + quarter(o_orderdate) AS BIGINT)")
-        .as("qi"))
-      .agg(sum(graft.Exact.cents(col("o_totalprice"))).as("revenue_cents"))
-      .withColumn("i", row_number().over(
-        org.apache.spark.sql.expressions.Window.orderBy(col("qi"))))
+    val idx = quarterRevenue(s, dir).withColumnRenamed("x", "revenue_cents")
+      .withColumn("i", row_number().over(Window.orderBy(col("qi"))))
     // r15, guide §2.6 (VERDICT r14 item 3: reduce the per-statement fixed
     // cost): the script's WHILE body is a pure Filter+Project lookup over
     // the anchor — over a LocalRelation view the optimizer's
@@ -1989,44 +1988,38 @@ object Analytics {
     * S(w) = Π_{w'≤w} (n_{w'} − d_{w'}) / n_{w'} is a product of
     * data-dependent ratios — under the house truncating-integer discipline
     * (ppm fixed point, floor division per step) the fold is
-    * NON-ASSOCIATIVE, so it runs as a recursive CTE over the reduced
-    * weekly frame (the q207 surface), never over raw events.
+    * NON-ASSOCIATIVE, so it runs as a sequential [[seriesFold]] over the
+    * reduced weekly frame, never over raw events.
     *
     * Scale stance: events reduce by TWO hash aggregates (per-user span →
     * per-week churn/censor counts) to a bounded sf-invariant frame
-    * (≤ corpus-span weeks); the at-risk counts come from a suffix-sum
-    * window on that reduced frame (lint-conformant), and the recursion
-    * walks |weeks| 1-row frontiers. At 100 TB only the two aggregates see
-    * data. */
+    * (≤ corpus-span weeks); the corpus-max day attaches as a scalar
+    * subquery (no join), the at-risk counts come from a suffix-sum window
+    * on the reduced frame (lint-conformant), and the fold walks |weeks|
+    * steps inside one plan. At 100 TB only the two aggregates see data.
+    * The oracle's anchor s₁ = (10⁶·(n−d)) div n is the step applied to
+    * s₀ = 10⁶. */
   def q235KaplanMeier(s: SparkSession, dir: String): DataFrame = {
     val ev = Tables.events(s, dir)
       .select(col("user_id"), col("ts").cast("date").as("d"))
     val span = ev.groupBy("user_id")
       .agg(min(col("d")).as("fd"), max(col("d")).as("ld"))
-    val mx = ev.agg(max(col("d")).as("md"))
-    val wk = span.crossJoin(broadcast(mx))
+    val md = ev.agg(max(col("d"))).scalar()
+    val wk = span
       .select(expr("CAST(datediff(ld, fd) AS BIGINT) div 7").as("w"),
-        (datediff(col("md"), col("ld")) < 14).cast("long").as("cen"))
+        (datediff(md, col("ld")) < 14).cast("long").as("cen"))
       .groupBy(col("w"))
       .agg(sum(lit(1L) - col("cen")).as("d"), sum(col("cen")).as("c"))
     val wSuf = Window.orderBy(col("w").desc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val f = wk
-      .withColumn("n", sum(col("d") + col("c")).over(wSuf))
-      .withColumn("i", row_number().over(Window.orderBy(col("w"))))
-    val mat = graft.Caches.trackCheckpoint(f.localCheckpoint())
-    val mv = s"graft_km_v${viewSeq.incrementAndGet()}"
-    mat.createOrReplaceTempView(mv)
-    try s.sql(
-      s"""WITH RECURSIVE r(i, w, n, d, c, s) AS (
-         |  SELECT i, w, n, d, c, (1000000L * (n - d)) div n FROM $mv WHERE i = 1
-         |  UNION ALL
-         |  SELECT x.i, x.w, x.n, x.d, x.c, (rr.s * (x.n - x.d)) div x.n
-         |  FROM r rr JOIN $mv x ON x.i = rr.i + 1)
-         |SELECT w AS week, n AS n_risk, d AS n_churned, c AS n_censored,
-         |       s AS surv_ppm
-         |FROM r ORDER BY week""".stripMargin)
-    finally s.catalog.dropTempView(mv)
+    val f = wk.withColumn("n", sum(col("d") + col("c")).over(wSuf))
+    seriesFold(f, "week bigint, n_risk bigint, n_churned bigint, " +
+        "n_censored bigint, surv_ppm bigint")(
+        _ => Seq(lit(1000000L).as("s"))) { (st, e) =>
+      val sn = idiv(st("s") * (e("n") - e("d")), e("n"))
+      (Seq(sn.as("s")), struct(e("w").as("week"), e("n").as("n_risk"),
+        e("d").as("n_churned"), e("c").as("n_censored"), sn.as("surv_ppm")))
+    }.orderBy("week")
   }
 
   val q235Oracle: String =
@@ -2064,34 +2057,22 @@ object Analytics {
     * fixed-point), initialized l₁ = x₁, b₁ = x₂ − x₁. Emits the one-step-
     * ahead in-sample forecast l+b per quarter — the anomaly baseline a
     * revenue monitor alerts against. A TWO-variable non-associative fold
-    * pins that the recursive-CTE surface composes state, not just a
-    * scalar. Same scale stance as q207: one corpus aggregate → ~27-row
-    * checkpointed quarter frame → |quarters| 1-row recursion steps. */
-  def q236HoltTrend(s: SparkSession, dir: String): DataFrame = {
-    val idx = Tables.orders(s, dir)
-      .groupBy(expr("CAST(year(o_orderdate) * 4 + quarter(o_orderdate) AS BIGINT)")
-        .as("qi"))
-      .agg(sum(graft.Exact.cents(col("o_totalprice"))).as("x"))
-      .withColumn("i", row_number().over(
-        org.apache.spark.sql.expressions.Window.orderBy(col("qi"))))
-    val mat = graft.Caches.trackCheckpoint(idx.localCheckpoint())
-    val mv = s"graft_holt_v${viewSeq.incrementAndGet()}"
-    mat.createOrReplaceTempView(mv)
-    try s.sql(
-      s"""WITH RECURSIVE r(i, qi, x, l, b) AS (
-         |  SELECT a.i, a.qi, a.x, a.x,
-         |         (SELECT x FROM $mv WHERE i = 2) - a.x
-         |  FROM $mv a WHERE a.i = 1
-         |  UNION ALL
-         |  SELECT x.i, x.qi, x.x,
-         |    (x.x + 3 * (rr.l + rr.b)) div 4,
-         |    (((x.x + 3 * (rr.l + rr.b)) div 4 - rr.l) + 3 * rr.b) div 4
-         |  FROM r rr JOIN $mv x ON x.i = rr.i + 1)
-         |SELECT qi AS quarter_index, x AS revenue_cents, l AS level_cents,
-         |       b AS trend_cents, l + b AS forecast_next_cents
-         |FROM r ORDER BY quarter_index""".stripMargin)
-    finally s.catalog.dropTempView(mv)
-  }
+    * carries composed state, not just a scalar. Same scale stance as
+    * q207: one corpus aggregate → ~27-row quarter series → one
+    * [[seriesFold]] over it. The seed (l₁, b₁) is the fold's initial
+    * state; the first step emits it unchanged, as the oracle's anchor
+    * row does. */
+  def q236HoltTrend(s: SparkSession, dir: String): DataFrame =
+    seriesFold(quarterRevenue(s, dir), "quarter_index bigint, revenue_cents bigint, " +
+        "level_cents bigint, trend_cents bigint, forecast_next_cents bigint")(
+        xs => Seq(xAt(xs, 0).as("l"), (xAt(xs, 1) - xAt(xs, 0)).as("b"))) { (st, e) =>
+      val first = size(st("out")) === 0
+      val l = when(first, st("l")).otherwise(idiv(e("x") + (st("l") + st("b")) * 3, 4))
+      val b = when(first, st("b")).otherwise(idiv((l - st("l")) + st("b") * 3, 4))
+      (Seq(l.as("l"), b.as("b")), struct(e("qi").as("quarter_index"),
+        e("x").as("revenue_cents"), l.as("level_cents"), b.as("trend_cents"),
+        (l + b).as("forecast_next_cents")))
+    }.orderBy("quarter_index")
 
   val q236Oracle: String =
     """WITH RECURSIVE q AS (
@@ -2123,50 +2104,36 @@ object Analytics {
     * s₊ = ((x − l₊) + 3s₋₄) div 4, one-step forecast = l + b + s₋₄.
     * Init is the textbook deterministic start: l₀ = mean of year 1,
     * b₀ = (mean year 2 − mean year 1) div 4², s_i = x_i − l₀.
-    * A five-variable non-associative fold — the hardest state shape the
-    * recursive-CTE surface (q207/q235/q236) has to carry, and the reason
-    * this is a recursion, not a window.
+    * A five-variable non-associative fold — the hardest state shape a
+    * sequential fold here carries, and the reason this is a fold, not a
+    * window.
     *
     * Scale: one corpus hash aggregate reduces to the bounded ~28-row
-    * quarter frame (localCheckpoint-materialized — the q207 anchor rule);
-    * the recursion walks |quarters| 1-row steps. Emits per-quarter state
-    * + the one-step-ahead forecast and its error — the anomaly-monitor
-    * artifact. */
-  def q252HoltWinters(s: SparkSession, dir: String): DataFrame = {
-    val idx = Tables.orders(s, dir)
-      .groupBy(expr("CAST(year(o_orderdate) * 4 + quarter(o_orderdate) AS BIGINT)")
-        .as("qi"))
-      .agg(sum(graft.Exact.cents(col("o_totalprice"))).as("x"))
-      .withColumn("i", row_number().over(
-        org.apache.spark.sql.expressions.Window.orderBy(col("qi"))))
-    val mat = graft.Caches.trackCheckpoint(idx.localCheckpoint())
-    val mv = s"graft_hw_v${viewSeq.incrementAndGet()}"
-    mat.createOrReplaceTempView(mv)
-    def xq(k: Int) = s"(SELECT x FROM $mv WHERE i = $k)"
-    val l0 = s"((${xq(1)} + ${xq(2)} + ${xq(3)} + ${xq(4)}) div 4)"
-    val b0 = s"(((${xq(5)} + ${xq(6)} + ${xq(7)} + ${xq(8)}) - " +
-      s"(${xq(1)} + ${xq(2)} + ${xq(3)} + ${xq(4)})) div 16)"
-    val lnew = "(((x.x - rr.s1) + 3 * (rr.l + rr.b)) div 4)"
-    try s.sql(
-      s"""WITH RECURSIVE r(i, qi, x, l, b, s1, s2, s3, s4, fc) AS (
-         |  SELECT a.i, a.qi, a.x, $l0, $b0,
-         |    ${xq(1)} - $l0, ${xq(2)} - $l0, ${xq(3)} - $l0, ${xq(4)} - $l0,
-         |    CAST(0 AS BIGINT)
-         |  FROM $mv a WHERE a.i = 4
-         |  UNION ALL
-         |  SELECT x.i, x.qi, x.x,
-         |    $lnew,
-         |    (($lnew - rr.l) + 3 * rr.b) div 4,
-         |    rr.s2, rr.s3, rr.s4,
-         |    ((x.x - $lnew) + 3 * rr.s1) div 4,
-         |    rr.l + rr.b + rr.s1
-         |  FROM r rr JOIN $mv x ON x.i = rr.i + 1)
-         |SELECT qi AS quarter_index, x AS revenue_cents, l AS level_cents,
-         |  b AS trend_cents, s4 AS seasonal_cents, fc AS forecast_cents,
-         |  x - fc AS error_cents
-         |FROM r WHERE i >= 5 ORDER BY quarter_index""".stripMargin)
-    finally s.catalog.dropTempView(mv)
-  }
+    * quarter series; quarters 1–4 seed the fold's initial state (the
+    * oracle's i = 4 anchor row, not emitted) and one [[seriesFold]] walks
+    * quarters 5.. inside one plan. With < 8 quarters b₀ is NULL and NULL
+    * propagates through every emitted state, as in the oracle. Emits
+    * per-quarter state + the one-step-ahead forecast and its error — the
+    * anomaly-monitor artifact. */
+  def q252HoltWinters(s: SparkSession, dir: String): DataFrame =
+    seriesFold(quarterRevenue(s, dir), "quarter_index bigint, revenue_cents bigint, " +
+        "level_cents bigint, trend_cents bigint, seasonal_cents bigint, " +
+        "forecast_cents bigint, error_cents bigint", from = 4) { xs =>
+      def y(k0: Int) = (k0 until k0 + 4).map(xAt(xs, _)).reduce(_ + _)
+      val l0 = idiv(y(0), 4)
+      Seq(l0.as("l"), idiv(y(4) - y(0), 16).as("b")) ++
+        (1 to 4).map(k => (xAt(xs, k - 1) - l0).as(s"s$k"))
+    } { (st, e) =>
+      val l = idiv((e("x") - st("s1")) + (st("l") + st("b")) * 3, 4)
+      val b = idiv((l - st("l")) + st("b") * 3, 4)
+      val s4 = idiv((e("x") - l) + st("s1") * 3, 4)
+      val fc = st("l") + st("b") + st("s1")
+      (Seq(l.as("l"), b.as("b"),
+        st("s2").as("s1"), st("s3").as("s2"), st("s4").as("s3"), s4.as("s4")),
+        struct(e("qi").as("quarter_index"), e("x").as("revenue_cents"),
+          l.as("level_cents"), b.as("trend_cents"), s4.as("seasonal_cents"),
+          fc.as("forecast_cents"), (e("x") - fc).as("error_cents")))
+    }.orderBy("quarter_index")
 
   val q252Oracle: String = {
     def xq(k: Int) = s"(SELECT x FROM idx WHERE i = $k)"

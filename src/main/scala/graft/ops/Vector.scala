@@ -391,8 +391,9 @@ object Vector {
   def q102IvfPqTopk(s: SparkSession, dir: String): DataFrame = {
     // r15 second pass (guide §2.3/§2.4 — the q282 array-fold discipline):
     // one array-form quantization; coarse assignment, residual, codes,
-    // and the query LUT are row-local codegen folds against 1-row
-    // broadcast codebook frames (constant-key equi joins); codes are
+    // and the query LUT are row-local codegen folds against the 1-row
+    // codebook frames attached as scalar subqueries (no join: a constant
+    // equi-key join plans as a BroadcastNestedLoopJoin); codes are
     // POSITIONS into the (block, pcid)-sorted codebook array so the ADC
     // sum indexes the query LUT directly — the before shape shuffled
     // O(n·cells) and O(n·blocks·codes) distance rows through hash
@@ -403,15 +404,14 @@ object Vector {
         s"x -> CAST(round(CAST(x AS DOUBLE) * $FixedPoint) AS BIGINT))").as("xv")))
     def l2(a: String, b: String): String =
       s"aggregate(zip_with($a, $b, (xx, yy) -> (xx - yy) * (xx - yy)), 0L, (acc2, vv) -> acc2 + vv)"
-    val k1 = lit(1).as("k1")
-    val centsRow = eintQ.filter(col("vec_id") < IvfCells)
+    val cents = eintQ.filter(col("vec_id") < IvfCells)
       .select(col("vec_id").as("cid"), col("xv").as("cq"))
-      .groupBy().agg(sort_array(collect_list(struct(col("cid"), col("cq")))).as("cents"))
+      .groupBy().agg(sort_array(collect_list(struct(col("cid"), col("cq")))))
+      .scalar().as("cents")
     // assignment + residual in one row-local projection ((cd2, ccid) tie
     // rule as a lexicographic struct min)
     val casg = graft.Caches.persist(
-      eintQ.select(col("vec_id"), col("xv"), k1)
-        .join(broadcast(centsRow.select(col("cents"), k1)), Seq("k1"))
+      eintQ.select(col("vec_id"), col("xv"), cents)
         .withColumn("best", expr(
           s"array_min(transform(cents, ce -> struct(${l2("xv", "ce.cq")} AS d2, ce.cid AS cid)))"))
         .select(col("vec_id"), col("best").getField("cid").as("ccid"),
@@ -419,29 +419,27 @@ object Vector {
             "(a, b) -> a - b)").as("rq")))
     // untrained PQ codebook: the PqK smallest vec_ids' residual subspaces,
     // one 1-row frame in (block, pcid) order
-    val pcRow = casg.filter(col("vec_id") < PqK)
+    val pents = casg.filter(col("vec_id") < PqK)
       .select(col("vec_id").as("pcid"),
         posexplode(expr(s"transform(sequence(0, ${PqBlocks - 1}), " +
           s"b -> slice(rq, b * $PqDims + 1, $PqDims))")).as(Seq("block", "pq8")))
-      .groupBy().agg(sort_array(collect_list(struct(col("block"), col("pcid"), col("pq8")))).as("pents"))
+      .groupBy().agg(sort_array(collect_list(struct(col("block"), col("pcid"), col("pq8")))))
+      .scalar().as("pents")
     // one-byte codes, stored as POSITIONS into the sorted codebook array
     // ((d2, pcid) tie rule preserved inside the struct min)
-    val codes = casg.select(col("vec_id"), col("ccid"), col("rq"), k1)
-      .join(broadcast(pcRow.select(col("pents"), k1)), Seq("k1"))
+    val codes = casg.select(col("vec_id"), col("ccid"), col("rq"), pents)
       .select(col("vec_id"), col("ccid"),
         expr(s"transform(sequence(0, ${PqBlocks - 1}), b -> array_min(transform(pents, (pe, i) -> IF(pe.block = b, struct(${l2(s"slice(rq, b * $PqDims + 1, $PqDims)", "pe.pq8")} AS d2, pe.pcid AS pcid, i AS i), struct(9223372036854775807L AS d2, 9223372036854775807L AS pcid, -1 AS i)))).i)")
           .as("cidx"))
     // query LUT per (query, probed cell), in codebook-array order
     val lut = eintQ.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("query_id"), col("xv"), k1)
-      .join(broadcast(centsRow.select(col("cents"), k1)), Seq("k1"))
+      .select(col("vec_id").as("query_id"), col("xv"), cents)
       .select(col("query_id"), col("xv"), col("cents"),
         explode(expr(s"slice(array_sort(transform(cents, ce -> struct(${l2("xv", "ce.cq")} AS d2, ce.cid AS cid))), 1, $IvfProbes).cid"))
           .as("ccid"))
       .select(col("query_id"), col("ccid"),
         expr("zip_with(xv, element_at(filter(cents, ce -> ce.cid = ccid), 1).cq, " +
-          "(a, b) -> a - b)").as("qrq"), k1)
-      .join(broadcast(pcRow.select(col("pents"), k1)), Seq("k1"))
+          "(a, b) -> a - b)").as("qrq"), pents)
       .select(col("query_id"), col("ccid"),
         expr(s"transform(pents, pe -> ${l2(s"slice(qrq, pe.block * $PqDims + 1, $PqDims)", "pe.pq8")})").as("lutArr"))
     val wTop = Window.partitionBy(col("query_id"))
@@ -1936,9 +1934,9 @@ object Vector {
   def q281TrainedPqDistortion(s: SparkSession, dir: String): DataFrame = {
     // r15 second pass (guide §2.3/§2.4, the q282 discipline): one array-
     // form quantization; coarse assignment + residual are a row-local
-    // struct-min fold against the 1-row broadcast codebook (constant-key
-    // equi join); PQ assignment is a row-local fold per (vec, block); the
-    // only shuffles left are the dictionary-size per-round centroid
+    // struct-min fold against the 1-row codebook attached as a scalar
+    // subquery (no join); PQ assignment is a row-local fold per (vec,
+    // block); the only shuffles left are the dictionary-size per-round centroid
     // partial aggregates and the 8-row SSE aggregates. Before: every
     // round exploded n·64 coordinates against the broadcast codebook into
     // two O(n·codes) exchanges + a rank window.
@@ -1951,20 +1949,19 @@ object Vector {
         s"x -> CAST(round(CAST(x AS DOUBLE) * $KmFP) AS BIGINT))").as("xv")))
     def l2(a: String, b: String): String =
       s"aggregate(zip_with($a, $b, (xx, yy) -> (xx - yy) * (xx - yy)), 0L, (acc2, vv) -> acc2 + vv)"
-    val k1 = lit(1).as("k1")
     // coarse quantize against the UNTRAINED stand-in cells (q102's shape,
     // data-derived seeds) — the residual plane the PQ training operates on
     val cseeds = Tables.embeddings(s, dir).select(col("vec_id"))
       .orderBy(col("vec_id")).limit(IvfCells)
-    val centsRow = eint.join(broadcast(cseeds), Seq("vec_id"))
+    val cents = eint.join(broadcast(cseeds), Seq("vec_id"))
       .select(col("vec_id").as("cid"), col("xv").as("cq"))
-      .groupBy().agg(sort_array(collect_list(struct(col("cid"), col("cq")))).as("cents"))
+      .groupBy().agg(sort_array(collect_list(struct(col("cid"), col("cq")))))
+      .scalar().as("cents")
     // assignment + residual in one row-local projection ((cd2, ccid) tie
     // rule as a lexicographic struct min; best referenced twice → the
     // expensive fold is never re-inlined)
     val casgRes = graft.Caches.persist(
-      eint.select(col("vec_id"), col("xv"), k1)
-        .join(broadcast(centsRow.select(col("cents"), k1)), Seq("k1"))
+      eint.select(col("vec_id"), col("xv"), cents)
         .withColumn("best", expr(
           s"array_min(transform(cents, ce -> struct(${l2("xv", "ce.cq")} AS d2, ce.cid AS cid)))"))
         .select(col("vec_id"),
@@ -1977,12 +1974,12 @@ object Vector {
     // residuals — q102's untrained codebook, data-derived)
     val pseeds = Tables.embeddings(s, dir).select(col("vec_id"))
       .orderBy(col("vec_id")).limit(PqK)
-    def pcentsRow(p: DataFrame): DataFrame =
-      p.groupBy().agg(sort_array(collect_list(struct(col("block"), col("pcid"), col("pq8")))).as("pents"))
-    // row-local nearest code per (vec, block): (d2 asc, pcid asc) struct min
+    // row-local nearest code per (vec, block): (d2 asc, pcid asc) struct
+    // min against the 1-row codebook p, attached as a scalar subquery
     def asg(p: DataFrame): DataFrame =
-      residBlocks.select(col("vec_id"), col("block"), col("rq8"), k1)
-        .join(broadcast(pcentsRow(p).select(col("pents"), k1)), Seq("k1"))
+      residBlocks.select(col("vec_id"), col("block"), col("rq8"),
+          p.groupBy().agg(sort_array(collect_list(struct(col("block"), col("pcid"), col("pq8")))))
+            .scalar().as("pents"))
         .select(col("vec_id"), col("block"), col("rq8"),
           expr(s"array_min(transform(filter(pents, pe -> pe.block = block), pe -> struct(${l2("rq8", "pe.pq8")} AS d2, pe.pcid AS pcid)))")
             .as("best"))

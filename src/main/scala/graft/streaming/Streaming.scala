@@ -800,8 +800,8 @@ object Streaming {
 
   /** q168: streaming dedup within watermark — `dropDuplicatesWithinWatermark`
     * as an oracle-certified operator, with its THREE boundary rules pinned
-    * empirically (tools/Dbg168 probes; StreamingSpec re-pins them through
-    * this query on a crafted non-aligned fixture):
+    * empirically (StreamingSpec re-pins them through this query on a
+    * crafted non-aligned fixture):
     *
     *   1. LATE FILTER, two-batch lag: batch N drops an arriving row iff
     *      `ts ≤ W_f` where W_f = watermark from batch N−2's stats (same

@@ -1885,6 +1885,131 @@ class OperatorsSpec extends SparkSpec {
     Caches.releaseAll()
   }
 
+  /** One order per consecutive quarter from 2020-Q1, priced `cents[k]`;
+    * returns the data dir holding the planted orders table. */
+  private def plantQuarters(cents: Seq[Long]): String = {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-quarters").toString
+    cents.zipWithIndex.map { case (c, k) =>
+      (k + 1L, c / 100.0, java.sql.Timestamp.valueOf(
+        f"${2020 + k / 4}-${1 + 3 * (k % 4)}%02d-05 00:00:00"))
+    }.toDF("o_orderkey", "o_totalprice", "o_orderdate")
+      .write.mode("overwrite").parquet(s"$dir/orders.parquet")
+    dir
+  }
+
+  /** The sf tier's quarterly revenue series (qi, cents), ordered by qi. */
+  private def sfQuarterRevenue(): Array[(Long, Long)] =
+    Tables.orders(spark, sf())
+      .groupBy(expr("CAST(year(o_orderdate) * 4 + quarter(o_orderdate) AS BIGINT)"))
+      .agg(sum(Exact.cents(col("o_totalprice"))))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).sortBy(_._1)
+
+  test("q236 Holt trend: hand-computed fold on planted quarters; exact refold on sf") {
+    // l₁ = x₁, b₁ = x₂ − x₁; then l = (x + 3(l+b)) div 4,
+    // b = ((l' − l) + 3b) div 4 — e.g. quarter 4: (1000 + 3·32500) div 4
+    // = 24625, ((24625 − 24000) + 3·8500) div 4 = 6531 (truncated)
+    val out = Analytics.q236HoltTrend(spark, plantQuarters(Seq(10000L, 20000L, 6000L, 1000L)))
+      .collect().map(r => (r.getAs[Long]("quarter_index"), r.getAs[Long]("revenue_cents"),
+        r.getAs[Long]("level_cents"), r.getAs[Long]("trend_cents"),
+        r.getAs[Long]("forecast_next_cents")))
+    val q0 = 2020L * 4 + 1
+    assert(out.toSeq == Seq(
+      (q0, 10000L, 10000L, 10000L, 20000L),
+      (q0 + 1, 20000L, 20000L, 10000L, 30000L),
+      (q0 + 2, 6000L, 24000L, 8500L, 32500L),
+      (q0 + 3, 1000L, 24625L, 6531L, 31156L)))
+    // real corpus: a literal Scala left fold over the independently
+    // aggregated series (Long `/` truncates toward zero, like `div`)
+    val xs = sfQuarterRevenue()
+    val rows = Analytics.q236HoltTrend(spark, sf()).collect()
+    assert(xs.length >= 2 && rows.length == xs.length)
+    var l = xs(0)._2
+    var b = xs(1)._2 - xs(0)._2
+    rows.zip(xs).zipWithIndex.foreach { case ((r, (qi, x)), i) =>
+      if (i > 0) {
+        val ln = (x + 3 * (l + b)) / 4
+        b = ((ln - l) + 3 * b) / 4
+        l = ln
+      }
+      assert(r.getAs[Long]("quarter_index") == qi && r.getAs[Long]("revenue_cents") == x)
+      assert(r.getAs[Long]("level_cents") == l && r.getAs[Long]("trend_cents") == b &&
+        r.getAs[Long]("forecast_next_cents") == l + b, s"quarter $qi")
+    }
+  }
+
+  test("q252 Holt-Winters: hand-computed fold on 10 planted quarters; exact refold on sf") {
+    // l₀ = (x₁+x₂+x₃+x₄) div 4 = 75000 div 4 = 18750,
+    // b₀ = (84000 − 75000) div 16 = 562, sᵢ = xᵢ − l₀; 10 quarters rotate the
+    // 4-slot seasonal register twice (quarter 9 reads quarter 5's season)
+    // and negative seasonals pin truncation toward zero (−33921 div 4 =
+    // −8480, not −8481)
+    val planted = Seq(10000L, 20000L, 15000L, 30000L, 12000L,
+      22000L, 17000L, 33000L, 9000L, 26000L)
+    val cols = Seq("quarter_index", "revenue_cents", "level_cents", "trend_cents",
+      "seasonal_cents", "forecast_cents", "error_cents")
+    val out = Analytics.q252HoltWinters(spark, plantQuarters(planted))
+      .collect().map(r => cols.map(r.getAs[Long]))
+    val q0 = 2020L * 4 + 1
+    assert(out.toSeq == Seq(
+      Seq(q0 + 4, 12000L, 19671L, 651L, -8480L, 10562L, 1438L),
+      Seq(q0 + 5, 22000L, 20429L, 677L, 1330L, 21572L, 428L),
+      Seq(q0 + 6, 17000L, 21017L, 654L, -3816L, 17356L, -356L),
+      Seq(q0 + 7, 33000L, 21690L, 658L, 11265L, 32921L, 79L),
+      Seq(q0 + 8, 9000L, 21131L, 353L, -9392L, 13868L, -4868L),
+      Seq(q0 + 9, 26000L, 22280L, 552L, 1927L, 22814L, 3186L)))
+    // real corpus: literal Scala left refold from the same textbook init
+    val xs = sfQuarterRevenue()
+    val x = xs.map(_._2)
+    val rows = Analytics.q252HoltWinters(spark, sf()).collect()
+    assert(xs.length >= 9 && rows.length == xs.length - 4)
+    var l = x.take(4).sum / 4
+    var b = (x.slice(4, 8).sum - x.take(4).sum) / 16
+    var season = x.take(4).map(_ - l).toVector
+    rows.zip(xs.drop(4)).foreach { case (r, (qi, xi)) =>
+      val ln = ((xi - season(0)) + 3 * (l + b)) / 4
+      val bn = ((ln - l) + 3 * b) / 4
+      val sn = ((xi - ln) + 3 * season(0)) / 4
+      val fc = l + b + season(0)
+      assert(cols.map(r.getAs[Long]) == Seq(qi, xi, ln, bn, sn, fc, xi - fc), s"quarter $qi")
+      l = ln; b = bn; season = season.tail :+ sn
+    }
+  }
+
+  test("q252 Holt-Winters on 5 quarters: NULL b0 propagates like the recursive CTE") {
+    // b₀ needs quarters 5–8; the oracle's missing-row scalar subqueries
+    // make it NULL, and NULL arithmetic nulls every derived state column
+    // of the one emitted quarter while revenue stays
+    val out = Analytics.q252HoltWinters(spark,
+      plantQuarters(Seq(10000L, 20000L, 15000L, 30000L, 12000L))).collect()
+    assert(out.length == 1)
+    val r = out.head
+    assert(r.getAs[Long]("quarter_index") == 2021L * 4 + 1 && r.getAs[Long]("revenue_cents") == 12000L)
+    Seq("level_cents", "trend_cents", "seasonal_cents", "forecast_cents", "error_cents")
+      .foreach(c => assert(r.isNullAt(r.fieldIndex(c)), c))
+  }
+
+  test("q235 Kaplan-Meier: hand-computed survival fold on planted user spans") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-km").toString
+    val t0 = java.time.LocalDateTime.of(2024, 1, 1, 12, 0)
+    // (user, first day, last day); the corpus ends on day 100, so users last
+    // seen on day ≥ 87 are censored: u1 w0 churned, u2 w1 churned, u3 w2
+    // churned, u4 w6 censored, u5 w1 censored
+    val spans = Seq((1L, 0, 0), (2L, 0, 10), (3L, 0, 20), (4L, 50, 95), (5L, 90, 100))
+    spans.flatMap { case (u, a, b) => Seq(u -> a, u -> b) }.zipWithIndex.map {
+      case ((u, day), i) => (i.toLong, java.sql.Timestamp.valueOf(t0.plusDays(day)), u,
+        "view", 1.0, "{}")
+    }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+    // at risk n = suffix sum of churned + censored; s = (s·(n − d)) div n
+    // from s₀ = 10⁶: 10⁶·4/5, then ·3/4, ·1/2, ·1/1
+    val out = Analytics.q235KaplanMeier(spark, dir).collect()
+      .map(r => Seq("week", "n_risk", "n_churned", "n_censored", "surv_ppm").map(r.getAs[Long]))
+    assert(out.toSeq == Seq(Seq(0L, 5L, 1L, 0L, 800000L), Seq(1L, 4L, 1L, 1L, 600000L),
+      Seq(2L, 2L, 1L, 0L, 300000L), Seq(6L, 1L, 0L, 1L, 300000L)))
+  }
+
   test("q208 variant extract: typed get, null-safe miss, schema-drift flag") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-variant").toString

@@ -194,8 +194,6 @@ class PlanSpec extends SparkSpec {
       "q232_tokenizer_fertility",
       // 1-row broadcast |seeds| count onto the node frame (teleport base)
       "q234_personalized_pagerank",
-      // 1-row broadcast corpus-max-day frame onto the per-user span frame
-      "q235_kaplan_meier",
       // 1-row × 1-row sketch-pair join (two 64-element bottom-k arrays)
       "q237_sketch_set_algebra",
       // q50's declared brute-force query-points × corpus scan (mining pass)
