@@ -368,12 +368,140 @@ object Vector {
   private val IvfCells = 8
   private val IvfProbes = 2
 
+  // Array-form IVF-PQ kernels, shared by q102, q281 and q282. A vector is
+  // one `xv` array<bigint>; a codebook is ONE row holding its whole sorted
+  // entry list, attached to corpus rows with `.scalar()` (a constant-key
+  // join plans as a BroadcastNestedLoopJoin). Every distance, argmin,
+  // residual and LUT entry is then a row-local integer array fold, so the
+  // n·cells and n·blocks·codes distance fan-outs never cross an exchange:
+  // the only corpus-scale shuffles left are the Lloyd mean updates (partial
+  // aggregates, dictionary-sized after map-side combine) and the top-k
+  // windows. All values are exact int64, so every argmin and sum is
+  // order-independent and engine-identical.
+
+  /** The corpus as one `xv` array per vector at fixed-point `scale`,
+    * persisted and fanned out to session parallelism: file splits are sized
+    * for raw bytes while every downstream pass is a CPU-dense fold (A/B on
+    * q282 at sf0.1: 1.9 s vs 2.8 s serial). */
+  private def quantPlane(s: SparkSession, dir: String, scale: Long): DataFrame =
+    graft.Caches.persist(Tables.embeddings(s, dir)
+      .repartition(s.sparkContext.defaultParallelism)
+      .select(col("vec_id"), expr("transform(embedding, " +
+        s"x -> CAST(round(CAST(x AS DOUBLE) * $scale) AS BIGINT))").as("xv")))
+
+  /** Exact integer squared L2 between two BIGINT array expressions. */
+  private def l2(a: String, b: String): String =
+    s"aggregate(zip_with($a, $b, (xx, yy) -> (xx - yy) * (xx - yy)), 0L, (acc2, vv) -> acc2 + vv)"
+
+  /** `rows` as a 1-row codebook: one array of struct(<rows' columns>),
+    * sorted by those columns in order. */
+  private def codebook(rows: DataFrame): DataFrame =
+    rows.groupBy().agg(sort_array(collect_list(struct(rows.columns.toSeq.map(col): _*))))
+
+  /** The rows of `df` whose vec_id is one of the corpus's `k` smallest:
+    * data-derived seeds, never empty on a filtered or re-keyed corpus. */
+  private def seedRows(s: SparkSession, dir: String, df: DataFrame, k: Int): DataFrame =
+    df.join(broadcast(Tables.embeddings(s, dir).select(col("vec_id"))
+      .orderBy(col("vec_id")).limit(k)), Seq("vec_id"))
+
+  /** (d2, cid) from array `v` to every cell of the attached `cents`. */
+  private def cellDists(v: String): String =
+    s"transform(cents, ce -> struct(${l2(v, "ce.cq")} AS d2, ce.cid AS cid))"
+
+  /** `v` minus the centroid of cell `cid` in the attached `cents`. */
+  private def minusCell(v: String, cid: String): Column =
+    expr(s"zip_with($v, element_at(filter(cents, ce -> ce.cid = $cid), 1).cq, (a, b) -> a - b)")
+
+  /** Each `plane` row with its nearest cell `best` = (d2, cid) under the
+    * (cid, cq) codebook `cells` — the (d2 asc, cid asc) tie rule as a
+    * lexicographic struct min. */
+  private def nearestCell(plane: DataFrame, cells: DataFrame): DataFrame =
+    plane.select(col("vec_id"), col("xv"), cells.scalar().as("cents"))
+      .withColumn("best", expr(s"array_min(${cellDists("xv")})"))
+
+  /** Persisted (vec_id, ccid, rq): each vector's nearest cell and its
+    * residual against that centroid (`best` is referenced twice, so its
+    * fold is never re-inlined). */
+  private def assignResid(plane: DataFrame, cells: DataFrame): DataFrame =
+    graft.Caches.persist(nearestCell(plane, cells)
+      .select(col("vec_id"), col("best.cid").as("ccid"), minusCell("xv", "best.cid").as("rq")))
+
+  /** (query_id, ccid, qrq): the IvfProbes nearest cells of each `queries`
+    * row (vec_id, xv) with the query's residual against each. */
+  private def probeResid(queries: DataFrame, cells: DataFrame): DataFrame =
+    queries.select(col("vec_id").as("query_id"), col("xv"), cells.scalar().as("cents"))
+      .select(col("query_id"), col("xv"), col("cents"),
+        explode(expr(s"slice(array_sort(${cellDists("xv")}), 1, $IvfProbes).cid")).as("ccid"))
+      .select(col("query_id"), col("ccid"), minusCell("xv", "ccid").as("qrq"))
+
+  /** (vec_id, block, rq8): each residual `rq` split into its PqBlocks
+    * subspaces. */
+  private def residBlocks(casg: DataFrame): DataFrame =
+    casg.select(col("vec_id"), posexplode(expr(s"transform(sequence(0, ${PqBlocks - 1}), " +
+      s"b -> slice(rq, b * $PqDims + 1, $PqDims))")).as(Seq("block", "rq8")))
+
+  /** Each residual block with its nearest code `best` = (d2, pcid) under
+    * the (block, pcid, pq8) codebook `book` ((d2 asc, pcid asc) tie rule). */
+  private def pqAssign(blocks: DataFrame, book: DataFrame): DataFrame =
+    blocks.select(col("vec_id"), col("block"), col("rq8"), book.scalar().as("pents"))
+      .select(col("vec_id"), col("block"), col("rq8"), expr("array_min(transform(" +
+        "filter(pents, pe -> pe.block = block), " +
+        s"pe -> struct(${l2("rq8", "pe.pq8")} AS d2, pe.pcid AS pcid)))").as("best"))
+
+  /** The Lloyd update: exact truncating per-(keys, coordinate) mean of the
+    * `v` arrays, reassembled as one array `out` per key. */
+  private def centroidMeans(asg: DataFrame, keys: Seq[String], v: String, out: String): DataFrame =
+    asg.select(keys.map(col) :+ posexplode(col(v)).as(Seq("j0", "x")): _*)
+      .groupBy((keys :+ "j0").map(col): _*)
+      .agg(expr("sum(x) div count(1)").as("m"))
+      .groupBy(keys.map(col): _*)
+      .agg(expr("transform(array_sort(collect_list(struct(j0, m))), e -> e.m)").as(out))
+
+  /** KmIters per-subspace Lloyd rounds over `blocks` from the seed entries
+    * (block, pcid, pq8); returns the trained entries. */
+  private def pqLloyd(blocks: DataFrame, seed: DataFrame): DataFrame =
+    (1 to KmIters).foldLeft(seed) { (p, _) =>
+      centroidMeans(pqAssign(blocks, codebook(p)).withColumn("pcid", col("best.pcid")),
+        Seq("block", "pcid"), "rq8", "pq8")
+    }
+
+  /** (vec_id, ccid, cidx): each vector's PQ codes, stored as the POSITION
+    * of the nearest entry per block in the sorted codebook `book`, so the
+    * ADC sum reads a LUT built in the same order by index. */
+  private def pqCodes(casg: DataFrame, book: DataFrame): DataFrame =
+    casg.select(col("vec_id"), col("ccid"), col("rq"), book.scalar().as("pents"))
+      .select(col("vec_id"), col("ccid"),
+        expr(s"transform(sequence(0, ${PqBlocks - 1}), b -> array_min(transform(pents, (pe, i) -> IF(pe.block = b, struct(${l2(s"slice(rq, b * $PqDims + 1, $PqDims)", "pe.pq8")} AS d2, pe.pcid AS pcid, i AS i), struct(9223372036854775807L AS d2, 9223372036854775807L AS pcid, -1 AS i)))).i)")
+          .as("cidx"))
+
+  /** (query_id, ccid, lutArr): per probe row, the distance from the query
+    * residual's block to every entry of `book`, in codebook order. */
+  private def pqLut(probes: DataFrame, book: DataFrame): DataFrame =
+    probes.select(col("query_id"), col("ccid"), col("qrq"), book.scalar().as("pents"))
+      .select(col("query_id"), col("ccid"),
+        expr(s"transform(pents, pe -> ${l2(s"slice(qrq, pe.block * $PqDims + 1, $PqDims)", "pe.pq8")})")
+          .as("lutArr"))
+
+  /** (query_id, vec_id, approx_d2, rk) for rk ≤ 10: candidates are the
+    * members of each query's probed cells other than itself, scored by
+    * summing LUT entries at their code positions (ADC) and ranked by
+    * (approx_d2, vec_id). */
+  private def adcTop10(codes: DataFrame, lut: DataFrame): DataFrame =
+    codes.join(broadcast(lut), Seq("ccid"))
+      .filter(col("query_id") =!= col("vec_id"))
+      .select(col("query_id"), col("vec_id"),
+        expr(s"aggregate(sequence(0, ${PqBlocks - 1}), 0L, (acc, b) -> acc + element_at(lutArr, element_at(cidx, b + 1) + 1))")
+          .as("approx_d2"))
+      .withColumn("rk", row_number().over(Window.partitionBy(col("query_id"))
+        .orderBy(col("approx_d2").asc, col("vec_id").asc)))
+      .filter(col("rk") <= 10)
+
   /** IVF-PQ top-k — the production ANN shape (IVF coarse cells + PQ
     * residual codes + asymmetric-distance lookup), composing q51's inverted
     * file with q53's product quantizer the way FAISS-style indexes do:
     *
-    *  1. coarse quantize: every vector joins the 8 broadcast cell centroids
-    *     (deterministic stand-in: vec_id < 8) and keeps its argmin-L2 cell;
+    *  1. coarse quantize: every vector keeps its argmin-L2 cell among the 8
+    *     cell centroids (deterministic stand-in: vec_id < 8);
     *  2. encode residuals: `vector − cell centroid` splits into 8×8-dim
     *     blocks, each argmin-matched to 16 residual centroids (vec_id < 16)
     *     → 8 one-byte codes per vector;
@@ -385,73 +513,19 @@ object Vector {
     *
     * All arithmetic is exact fixed-point int64 (`round(x·2²⁴)`), so every
     * argmin and distance sum is order-independent and engine-identical.
-    * At scale: codes+cell ids are ~9 bytes/vector, the probe is an
-    * equi-join on cell id touching ~nprobe/cells of the corpus, and every
-    * aggregation is partial+final over ≤ Dim rows per vector. */
+    * At scale: codes+cell ids are ~9 bytes/vector and the probe is an
+    * equi-join on cell id touching ~nprobe/cells of the corpus. */
   def q102IvfPqTopk(s: SparkSession, dir: String): DataFrame = {
-    // r15 second pass (guide §2.3/§2.4 — the q282 array-fold discipline):
-    // one array-form quantization; coarse assignment, residual, codes,
-    // and the query LUT are row-local codegen folds against the 1-row
-    // codebook frames attached as scalar subqueries (no join: a constant
-    // equi-key join plans as a BroadcastNestedLoopJoin); codes are
-    // POSITIONS into the (block, pcid)-sorted codebook array so the ADC
-    // sum indexes the query LUT directly — the before shape shuffled
-    // O(n·cells) and O(n·blocks·codes) distance rows through hash
-    // aggregates and rank windows.
-    val eintQ = graft.Caches.persist(Tables.embeddings(s, dir)
-      .repartition(s.sparkContext.defaultParallelism)
-      .select(col("vec_id"), expr("transform(embedding, " +
-        s"x -> CAST(round(CAST(x AS DOUBLE) * $FixedPoint) AS BIGINT))").as("xv")))
-    def l2(a: String, b: String): String =
-      s"aggregate(zip_with($a, $b, (xx, yy) -> (xx - yy) * (xx - yy)), 0L, (acc2, vv) -> acc2 + vv)"
-    val cents = eintQ.filter(col("vec_id") < IvfCells)
-      .select(col("vec_id").as("cid"), col("xv").as("cq"))
-      .groupBy().agg(sort_array(collect_list(struct(col("cid"), col("cq")))))
-      .scalar().as("cents")
-    // assignment + residual in one row-local projection ((cd2, ccid) tie
-    // rule as a lexicographic struct min)
-    val casg = graft.Caches.persist(
-      eintQ.select(col("vec_id"), col("xv"), cents)
-        .withColumn("best", expr(
-          s"array_min(transform(cents, ce -> struct(${l2("xv", "ce.cq")} AS d2, ce.cid AS cid)))"))
-        .select(col("vec_id"), col("best").getField("cid").as("ccid"),
-          expr("zip_with(xv, element_at(filter(cents, ce -> ce.cid = best.cid), 1).cq, " +
-            "(a, b) -> a - b)").as("rq")))
-    // untrained PQ codebook: the PqK smallest vec_ids' residual subspaces,
-    // one 1-row frame in (block, pcid) order
-    val pents = casg.filter(col("vec_id") < PqK)
-      .select(col("vec_id").as("pcid"),
-        posexplode(expr(s"transform(sequence(0, ${PqBlocks - 1}), " +
-          s"b -> slice(rq, b * $PqDims + 1, $PqDims))")).as(Seq("block", "pq8")))
-      .groupBy().agg(sort_array(collect_list(struct(col("block"), col("pcid"), col("pq8")))))
-      .scalar().as("pents")
-    // one-byte codes, stored as POSITIONS into the sorted codebook array
-    // ((d2, pcid) tie rule preserved inside the struct min)
-    val codes = casg.select(col("vec_id"), col("ccid"), col("rq"), pents)
-      .select(col("vec_id"), col("ccid"),
-        expr(s"transform(sequence(0, ${PqBlocks - 1}), b -> array_min(transform(pents, (pe, i) -> IF(pe.block = b, struct(${l2(s"slice(rq, b * $PqDims + 1, $PqDims)", "pe.pq8")} AS d2, pe.pcid AS pcid, i AS i), struct(9223372036854775807L AS d2, 9223372036854775807L AS pcid, -1 AS i)))).i)")
-          .as("cidx"))
-    // query LUT per (query, probed cell), in codebook-array order
-    val lut = eintQ.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("query_id"), col("xv"), cents)
-      .select(col("query_id"), col("xv"), col("cents"),
-        explode(expr(s"slice(array_sort(transform(cents, ce -> struct(${l2("xv", "ce.cq")} AS d2, ce.cid AS cid))), 1, $IvfProbes).cid"))
-          .as("ccid"))
-      .select(col("query_id"), col("ccid"),
-        expr("zip_with(xv, element_at(filter(cents, ce -> ce.cid = ccid), 1).cq, " +
-          "(a, b) -> a - b)").as("qrq"), pents)
-      .select(col("query_id"), col("ccid"),
-        expr(s"transform(pents, pe -> ${l2(s"slice(qrq, pe.block * $PqDims + 1, $PqDims)", "pe.pq8")})").as("lutArr"))
-    val wTop = Window.partitionBy(col("query_id"))
-      .orderBy(col("approx_d2").asc, col("vec_id").asc)
-    codes.join(broadcast(lut), Seq("ccid")) // candidates = probed cells' members
-      .filter(col("query_id") =!= col("vec_id"))
-      .select(col("query_id"), col("vec_id"),
-        expr(s"aggregate(sequence(0, ${PqBlocks - 1}), 0L, (acc, b) -> acc + element_at(lutArr, element_at(cidx, b + 1) + 1))")
-          .as("approx_d2"))
-      .withColumn("rk", row_number().over(wTop).cast("long"))
-      .filter(col("rk") <= 10)
-      .select(col("query_id"), col("rk"), col("vec_id"), col("approx_d2"))
+    val plane = quantPlane(s, dir, FixedPoint)
+    val cells = codebook(plane.filter(col("vec_id") < IvfCells)
+      .select(col("vec_id").as("cid"), col("xv").as("cq")))
+    val casg = assignResid(plane, cells)
+    // untrained PQ codebook: the PqK smallest vec_ids' residual blocks
+    val book = codebook(residBlocks(casg).filter(col("vec_id") < PqK)
+      .select(col("block"), col("vec_id").as("pcid"), col("rq8").as("pq8")))
+    adcTop10(pqCodes(casg, book),
+        pqLut(probeResid(plane.filter(col("vec_id") % 100 === 0), cells), book))
+      .select(col("query_id"), col("rk").cast("long").as("rk"), col("vec_id"), col("approx_d2"))
       .orderBy(col("query_id"), col("rk"))
   }
 
@@ -1924,82 +1998,24 @@ object Vector {
     * a law OperatorsSpec pins; the real-corpus win on planted structure is
     * quantified by IvfTrainProbe's α grid.
     *
-    * Scale stance: q110's two-shuffle iteration with a block key — assign
-    * is an equi-join on (block, j) against a BROADCAST codebook (8·16·8
-    * rows) with partial-aggregated argmin per (vec, block); update is a
-    * hash agg per (block, code, j). The corpus is touched once per
-    * iteration, never pairwise. All arithmetic exact int64 at the 2¹²
-    * training scale; the ppm improvement rides DECIMAL(38,0)/HUGEINT
-    * (sse·10⁶ passes 2⁶³ on large corpora). */
+    * Scale stance: the shared array-form IVF-PQ kernels — assignment is a
+    * row-local fold per (vec, block) against the 1-row codebook attached
+    * as a scalar subquery; the update is a partial-aggregated mean per
+    * (block, code, coordinate). The corpus is touched once per iteration,
+    * never pairwise. All arithmetic exact int64 at the 2¹² training scale;
+    * the ppm improvement rides DECIMAL(38,0)/HUGEINT (sse·10⁶ passes 2⁶³
+    * on large corpora). */
   def q281TrainedPqDistortion(s: SparkSession, dir: String): DataFrame = {
-    // r15 second pass (guide §2.3/§2.4, the q282 discipline): one array-
-    // form quantization; coarse assignment + residual are a row-local
-    // struct-min fold against the 1-row codebook attached as a scalar
-    // subquery (no join); PQ assignment is a row-local fold per (vec,
-    // block); the only shuffles left are the dictionary-size per-round centroid
-    // partial aggregates and the 8-row SSE aggregates. Before: every
-    // round exploded n·64 coordinates against the broadcast codebook into
-    // two O(n·codes) exchanges + a rank window.
-    // scan fan-out (the q114/q290 lesson): file splits are sized for raw
-    // bytes, and every downstream pass is a CPU-dense row-local fold —
-    // without it the whole query runs on the single-file split count
-    val eint = graft.Caches.persist(Tables.embeddings(s, dir)
-      .repartition(s.sparkContext.defaultParallelism)
-      .select(col("vec_id"), expr("transform(embedding, " +
-        s"x -> CAST(round(CAST(x AS DOUBLE) * $KmFP) AS BIGINT))").as("xv")))
-    def l2(a: String, b: String): String =
-      s"aggregate(zip_with($a, $b, (xx, yy) -> (xx - yy) * (xx - yy)), 0L, (acc2, vv) -> acc2 + vv)"
-    // coarse quantize against the UNTRAINED stand-in cells (q102's shape,
-    // data-derived seeds) — the residual plane the PQ training operates on
-    val cseeds = Tables.embeddings(s, dir).select(col("vec_id"))
-      .orderBy(col("vec_id")).limit(IvfCells)
-    val cents = eint.join(broadcast(cseeds), Seq("vec_id"))
-      .select(col("vec_id").as("cid"), col("xv").as("cq"))
-      .groupBy().agg(sort_array(collect_list(struct(col("cid"), col("cq")))))
-      .scalar().as("cents")
-    // assignment + residual in one row-local projection ((cd2, ccid) tie
-    // rule as a lexicographic struct min; best referenced twice → the
-    // expensive fold is never re-inlined)
-    val casgRes = graft.Caches.persist(
-      eint.select(col("vec_id"), col("xv"), cents)
-        .withColumn("best", expr(
-          s"array_min(transform(cents, ce -> struct(${l2("xv", "ce.cq")} AS d2, ce.cid AS cid)))"))
-        .select(col("vec_id"),
-          expr("zip_with(xv, element_at(filter(cents, ce -> ce.cid = best.cid), 1).cq, " +
-            "(a, b) -> a - b)").as("rq")))
-    def residBlocks = casgRes.select(col("vec_id"),
-      posexplode(expr(s"transform(sequence(0, ${PqBlocks - 1}), " +
-        s"b -> slice(rq, b * $PqDims + 1, $PqDims))")).as(Seq("block", "rq8")))
-    // per-subspace Lloyd from the seed codebook (the PqK smallest vec_ids'
-    // residuals — q102's untrained codebook, data-derived)
-    val pseeds = Tables.embeddings(s, dir).select(col("vec_id"))
-      .orderBy(col("vec_id")).limit(PqK)
-    // row-local nearest code per (vec, block): (d2 asc, pcid asc) struct
-    // min against the 1-row codebook p, attached as a scalar subquery
-    def asg(p: DataFrame): DataFrame =
-      residBlocks.select(col("vec_id"), col("block"), col("rq8"),
-          p.groupBy().agg(sort_array(collect_list(struct(col("block"), col("pcid"), col("pq8")))))
-            .scalar().as("pents"))
-        .select(col("vec_id"), col("block"), col("rq8"),
-          expr(s"array_min(transform(filter(pents, pe -> pe.block = block), pe -> struct(${l2("rq8", "pe.pq8")} AS d2, pe.pcid AS pcid)))")
-            .as("best"))
-    var pcent = residBlocks.join(broadcast(pseeds), Seq("vec_id"))
+    val plane = quantPlane(s, dir, KmFP)
+    // residuals against the UNTRAINED seed cells (q102's shape, data-derived)
+    val blocks = residBlocks(assignResid(plane, codebook(seedRows(s, dir, plane, IvfCells)
+      .select(col("vec_id").as("cid"), col("xv").as("cq")))))
+    // seed codebook: the PqK smallest vec_ids' residual blocks
+    val seed = seedRows(s, dir, blocks, PqK)
       .select(col("block"), col("vec_id").as("pcid"), col("rq8").as("pq8"))
-    var seedAsg: DataFrame = null
-    for (t <- 1 to KmIters) {
-      val a = asg(pcent)
-      if (t == 1) seedAsg = a // assignment under the seed codebook
-      pcent = a // exact truncating per-(block, code, coordinate) mean
-        .select(col("block"), col("best").getField("pcid").as("pcid"),
-          posexplode(col("rq8")).as(Seq("j0", "rv")))
-        .groupBy(col("block"), col("pcid"), col("j0"))
-        .agg(expr("sum(rv) div count(1)").as("pq"))
-        .groupBy(col("block"), col("pcid"))
-        .agg(expr("transform(array_sort(collect_list(struct(j0, pq))), e -> e.pq)").as("pq8"))
-    }
-    val seedSse = seedAsg.groupBy(col("block"))
+    val seedSse = pqAssign(blocks, codebook(seed)).groupBy(col("block"))
       .agg(count(lit(1)).as("n_vecs"), sum(col("best.d2")).as("sse_seed"))
-    val trainedSse = asg(pcent).groupBy(col("block"))
+    val trainedSse = pqAssign(blocks, codebook(pqLloyd(blocks, seed))).groupBy(col("block"))
       .agg(sum(col("best.d2")).as("sse_trained"))
     seedSse.join(trainedSse, Seq("block"))
       .select(col("block").cast("long").as("block"), col("n_vecs"),
@@ -2080,143 +2096,46 @@ object Vector {
     * coarse, train PQ on residuals, probe, ADC) — q102 executes the same
     * topology untrained, q277/q281 train each half in isolation.
     *
-    * Scale stance (r15 second pass, guide §2.3/§2.4): ONE quantization
-    * pass in array form feeds every side (VERDICT r14 item 2's shared
-    * plane). Every distance, argmin, and LUT entry is computed ROW-LOCALLY
-    * by codegen'd integer array folds against 1-row broadcast codebook
-    * frames (constant-key equi-joins — never a nested-loop join), so the
-    * n·|cells| and n·|blocks|·|codes| distance fan-outs never cross an
-    * exchange; the only corpus-scale shuffles left are the per-round
-    * centroid-update partial aggregates (dictionary-sized after map-side
-    * combine) and the two top-k windows. The before shape shuffled
-    * O(n·cells) rows per Lloyd round twice per half (QueryProbe: 44 jobs /
-    * 354 tasks / 15.8 s task time → after: ~25 jobs, task time ~3×
-    * lower). Every distance, argmin, mean, and rank is exact int64 at the
-    * 2¹² training scale, so the DuckDB oracle hash-matches bit-for-bit. */
+    * Scale stance: ONE quantization pass in array form feeds every side,
+    * and the index side is built from the shared array-form IVF-PQ
+    * kernels: every distance, argmin, and LUT entry is a row-local integer
+    * fold against a 1-row codebook attached as a scalar subquery (no join),
+    * so the only corpus-scale shuffles are the per-round centroid-update
+    * partial aggregates and the two top-k windows. The one nested-loop
+    * join is the brute grading scan's declared query × corpus inequality.
+    * Every distance, argmin, mean, and rank is exact int64 at the 2¹²
+    * training scale, so the DuckDB oracle hash-matches bit-for-bit. */
   def q282TrainedIvfPqRecall(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.{Window => W}
-    // shared quantized plane, array form (also the brute side's input);
-    // fanned to session parallelism (the q114/q290 lesson: file splits are
-    // sized for raw bytes, every downstream pass is a CPU-dense fold —
-    // A/B at sf0.1: 1.9 s vs 2.8 s serial)
-    val eint = graft.Caches.persist(Tables.embeddings(s, dir)
-      .repartition(s.sparkContext.defaultParallelism)
-      .select(col("vec_id"), expr("transform(embedding, " +
-        s"x -> CAST(round(CAST(x AS DOUBLE) * $KmFP) AS BIGINT))").as("xv")))
-    // exact integer L2 between two BIGINT arrays (the q50 codegen fold)
-    def l2(a: String, b: String): String =
-      s"aggregate(zip_with($a, $b, (xx, yy) -> (xx - yy) * (xx - yy)), 0L, (acc2, vv) -> acc2 + vv)"
-    val k1 = lit(1).as("k1") // constant equi-key: BroadcastHashJoin, not BNLJ
-    // 1-row frame holding the WHOLE coarse codebook as array<struct<cid,cq>>
-    def centsRow(c: DataFrame): DataFrame =
-      c.groupBy().agg(sort_array(collect_list(struct(col("cid"), col("cq")))).as("cents"))
-    // row-local nearest cell — the exact (d2 asc, cid asc) tie rule as a
-    // lexicographic struct min over the codebook array
-    val bestCell = expr(
-      s"array_min(transform(cents, ce -> struct(${l2("xv", "ce.cq")} AS d2, ce.cid AS cid)))")
+    val plane = quantPlane(s, dir, KmFP) // also the brute side's input
     // coarse codebook: q277's trained recurrence (data-derived seeds)
-    val cseeds = Tables.embeddings(s, dir).select(col("vec_id"))
-      .orderBy(col("vec_id")).limit(IvfCells)
-    var cent = eint.join(broadcast(cseeds), Seq("vec_id"))
-      .select(col("vec_id").as("cid"), col("xv").as("cq"))
-    for (_ <- 1 to KmIters) {
-      val asg = eint.select(col("vec_id"), col("xv"), k1)
-        .join(broadcast(centsRow(cent).select(col("cents"), k1)), Seq("k1"))
-        .select(bestCell.getField("cid").as("cid"), col("xv"))
-      cent = asg // exact truncating per-(cell, coordinate) mean
-        .select(col("cid"), posexplode(col("xv")).as(Seq("j0", "xk")))
-        .groupBy(col("cid"), col("j0"))
-        .agg(expr("sum(xk) div count(1)").as("cq"))
-        .groupBy(col("cid"))
-        .agg(expr("transform(array_sort(collect_list(struct(j0, cq))), e -> e.cq)").as("cq"))
-    }
-    val centF = graft.Caches.trackCheckpoint(
-      centsRow(cent).select(col("cents"), k1).localCheckpoint())
-    val scored = eint.select(col("vec_id"), col("xv"), k1)
-      .join(broadcast(centF), Seq("k1"))
-    // final assignment + residual against the TRAINED centroid, one
-    // row-local projection (best is referenced twice → never re-inlined)
-    val casg = graft.Caches.persist(scored
-      .withColumn("best", bestCell)
-      .select(col("vec_id"), col("best").getField("cid").as("ccid"),
-        expr("zip_with(xv, element_at(filter(cents, ce -> ce.cid = best.cid), 1).cq, " +
-          "(a, b) -> a - b)").as("rq")))
-    // nprobe probed cells per query, with the query residual vs EACH
-    // probed cell's centroid — bounded |queries|·nprobe rows
-    val probes = graft.Caches.trackCheckpoint(
-      scored.join(broadcast(evalProbeIds(s, dir)), Seq("vec_id"))
-        .select(col("vec_id").as("query_id"), col("xv"), col("cents"),
-          expr(s"slice(array_sort(transform(cents, ce -> struct(${l2("xv", "ce.cq")} AS d2, ce.cid AS cid))), 1, $IvfProbes)")
-            .as("top"))
-        .select(col("query_id"), col("xv"), col("cents"),
-          explode(col("top.cid")).as("ccid"))
-        .select(col("query_id"), col("ccid"),
-          expr("zip_with(xv, element_at(filter(cents, ce -> ce.cid = ccid), 1).cq, " +
-            "(a, b) -> a - b)").as("qrq"))
-        .localCheckpoint())
+    var cent = seedRows(s, dir, plane, IvfCells).select(col("vec_id").as("cid"), col("xv").as("cq"))
+    for (_ <- 1 to KmIters)
+      cent = centroidMeans(nearestCell(plane, codebook(cent)).withColumn("cid", col("best.cid")),
+        Seq("cid"), "xv", "cq")
+    // each trained codebook is checkpointed once, so its training chain
+    // runs once instead of inside every consumer's scalar subquery
+    val cells = graft.Caches.trackCheckpoint(codebook(cent).localCheckpoint())
+    val casg = assignResid(plane, cells)
+    val probes = graft.Caches.trackCheckpoint(probeResid(
+      plane.join(broadcast(evalProbeIds(s, dir)), Seq("vec_id")), cells).localCheckpoint())
     // PQ codebooks: q281's trained recurrence on the residual subspaces
-    val pseeds = Tables.embeddings(s, dir).select(col("vec_id"))
-      .orderBy(col("vec_id")).limit(PqK)
-    def residBlocks = casg.select(col("vec_id"),
-      posexplode(expr(s"transform(sequence(0, ${PqBlocks - 1}), " +
-        s"b -> slice(rq, b * $PqDims + 1, $PqDims))")).as(Seq("block", "rq8")))
-    def pcentsRow(p: DataFrame): DataFrame =
-      p.groupBy().agg(sort_array(collect_list(struct(col("block"), col("pcid"), col("pq8")))).as("pents"))
-    var pcent = residBlocks.join(broadcast(pseeds), Seq("vec_id"))
-      .select(col("block"), col("vec_id").as("pcid"), col("rq8").as("pq8"))
-    for (_ <- 1 to KmIters) {
-      val asg = residBlocks.select(col("vec_id"), col("block"), col("rq8"), k1)
-        .join(broadcast(pcentsRow(pcent).select(col("pents"), k1)), Seq("k1"))
-        .select(col("block"),
-          expr(s"array_min(transform(filter(pents, pe -> pe.block = block), pe -> struct(${l2("rq8", "pe.pq8")} AS d2, pe.pcid AS pcid))).pcid")
-            .as("pcid"),
-          col("rq8"))
-      pcent = asg // exact truncating per-(block, code, coordinate) mean
-        .select(col("block"), col("pcid"), posexplode(col("rq8")).as(Seq("j0", "rv")))
-        .groupBy(col("block"), col("pcid"), col("j0"))
-        .agg(expr("sum(rv) div count(1)").as("pq"))
-        .groupBy(col("block"), col("pcid"))
-        .agg(expr("transform(array_sort(collect_list(struct(j0, pq))), e -> e.pq)").as("pq8"))
-    }
-    val pcentF = graft.Caches.trackCheckpoint(
-      pcentsRow(pcent).select(col("pents"), k1).localCheckpoint())
-    // trained codes, stored as the POSITION of the winning entry inside
-    // the (block, pcid)-sorted codebook array — the ADC sum then reads the
-    // query LUT (built in the same order) by index, no (block, code) join
-    val codes = casg.select(col("vec_id"), col("ccid"), col("rq"), k1)
-      .join(broadcast(pcentF), Seq("k1"))
-      .select(col("vec_id"), col("ccid"),
-        expr(s"transform(sequence(0, ${PqBlocks - 1}), b -> array_min(transform(pents, (pe, i) -> IF(pe.block = b, struct(${l2(s"slice(rq, b * $PqDims + 1, $PqDims)", "pe.pq8")} AS d2, pe.pcid AS pcid, i AS i), struct(9223372036854775807L AS d2, 9223372036854775807L AS pcid, -1 AS i)))).i)")
-          .as("cidx"))
-    // query ADC LUT per (query, probed cell): distances to every codebook
-    // entry, in codebook-array order — bounded |q|·nprobe rows
-    val lut = probes.select(col("query_id"), col("ccid"), col("qrq"), k1)
-      .join(broadcast(pcentF), Seq("k1"))
-      .select(col("query_id"), col("ccid"),
-        expr(s"transform(pents, pe -> ${l2(s"slice(qrq, pe.block * $PqDims + 1, $PqDims)", "pe.pq8")})").as("lutArr"))
-    val wTop = W.partitionBy(col("query_id"))
-      .orderBy(col("approx_d2").asc, col("vec_id").asc)
-    val ivfTop = graft.Caches.persist(
-      codes.join(broadcast(lut), Seq("ccid")) // candidates = probed cells' members
-        .filter(col("query_id") =!= col("vec_id"))
-        .select(col("query_id"), col("vec_id"),
-          expr(s"aggregate(sequence(0, ${PqBlocks - 1}), 0L, (acc, b) -> acc + element_at(lutArr, element_at(cidx, b + 1) + 1))")
-            .as("approx_d2"))
-        .withColumn("rk", row_number().over(wTop)).filter(col("rk") <= 10)
-        .select(col("query_id"), col("vec_id")))
+    val blocks = residBlocks(casg)
+    val book = graft.Caches.trackCheckpoint(codebook(pqLloyd(blocks, seedRows(s, dir, blocks, PqK)
+      .select(col("block"), col("vec_id").as("pcid"), col("rq8").as("pq8")))).localCheckpoint())
+    val ivfTop = graft.Caches.persist(adcTop10(pqCodes(casg, book), pqLut(probes, book))
+      .select(col("query_id"), col("vec_id")))
     // brute exact-L2 reference on the same 2^12 plane — the q50 broadcast
     // query × corpus scan with a codegen'd integer array fold (the exploded
     // j-join formulation computes identical values but pays a 64× shuffle
     // fan-out and dominated the bench wall at 9.3 s; this shape reads the
     // corpus once per query batch, no shuffle before the top-k window).
-    // eint is the SAME persisted frame the IVF side trained on.
-    val qv = eint.join(broadcast(evalProbeIds(s, dir)), Seq("vec_id"))
+    val qv = plane.join(broadcast(evalProbeIds(s, dir)), Seq("vec_id"))
       .select(col("vec_id").as("query_id"), col("xv").as("qxv"))
     val wB = W.partitionBy(col("query_id")).orderBy(col("bd2").asc, col("vec_id").asc)
     val bfTop = graft.Caches.persist(
-      broadcast(qv).join(eint, col("query_id") =!= col("vec_id"))
-        .withColumn("bd2", expr("aggregate(zip_with(qxv, xv, " +
-          "(a, b) -> (a - b) * (a - b)), 0L, (acc, v) -> acc + v)"))
+      broadcast(qv).join(plane, col("query_id") =!= col("vec_id"))
+        .withColumn("bd2", expr(l2("qxv", "xv")))
         .withColumn("rk", row_number().over(wB)).filter(col("rk") <= 10)
         .select(col("query_id"), col("vec_id")))
     val ov = bfTop.join(ivfTop, Seq("query_id", "vec_id"))
@@ -2394,8 +2313,8 @@ object Vector {
          else mind2.join(d2, Seq("vec_id"))
            .select(col("vec_id"), least(col("mind2"), col("d2")).as("mind2")))
           .localCheckpoint())
-      val radius = mind2.agg(max(col("mind2")).as("radius_d2")) // 1-row bound
-      picks += sel.withColumn("sel_rank", lit(t.toLong)).crossJoin(broadcast(radius))
+      picks += sel.select(col("cid"), lit(t.toLong).as("sel_rank"),
+        mind2.agg(max(col("mind2"))).scalar().as("radius_d2"))
       if (t < KcK)
         sel = mind2.orderBy(col("mind2").desc, col("vec_id").asc).limit(1)
           .select(col("vec_id").as("cid"))
@@ -3005,8 +2924,8 @@ object Vector {
     val top = v.orderBy(abs(col("vi")).desc, col("i").asc).limit(1)
       .select(col("i").as("top_dim0"), col("vi").as("top_vi"))
     top
-      .crossJoin(broadcast(nv)).crossJoin(broadcast(tr))
-      .crossJoin(broadcast(num)).crossJoin(broadcast(den))
+      .select(col("top_dim0"), col("top_vi"), nv.scalar().as("n_vecs"), tr.scalar().as("trace"),
+        num.scalar().as("num"), den.scalar().as("den"))
       .select(col("n_vecs"), col("trace"),
         expr("CAST((num * 64 * 1000000) div (CAST(den AS DECIMAL(38,0)) * trace) AS BIGINT)")
           .as("anisotropy_ppm"),

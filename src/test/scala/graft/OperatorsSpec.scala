@@ -2302,6 +2302,41 @@ class OperatorsSpec extends SparkSpec {
     }
   }
 
+  test("q102 IVF-PQ top-k: exact driver-side recomputation on sf") {
+    val got = ops.Vector.q102IvfPqTopk(spark, sf()).collect().toSeq.map(r =>
+      (r.getAs[Long]("query_id"), r.getAs[Long]("rk"), r.getAs[Long]("vec_id"), r.getAs[Long]("approx_d2")))
+    Caches.releaseAll()
+    // quantize like Spark's round: HALF_UP on the double's decimal form, 2²⁴ scale
+    val xv: Map[Long, Array[Long]] = Tables.embeddings(spark, sf()).collect().map { r =>
+      r.getAs[Long]("vec_id") -> r.getSeq[Any](r.fieldIndex("embedding")).map(x =>
+        BigDecimal(x.asInstanceOf[Number].doubleValue * (1L << 24))
+          .setScale(0, BigDecimal.RoundingMode.HALF_UP).toLongExact).toArray
+    }.toMap
+    def l2(a: Array[Long], b: Array[Long]): Long = a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum
+    def minus(a: Array[Long], b: Array[Long]): Array[Long] = a.zip(b).map { case (x, y) => x - y }
+    def block(v: Array[Long], b: Int): Array[Long] = v.slice(b * 8, b * 8 + 8)
+    // 8 seed cells (vec_id < 8), ranked per vector by (d2, cid)
+    val cells = xv.toSeq.filter(_._1 < 8)
+    def cellRank(v: Array[Long]): Seq[Long] = cells.map { case (c, cq) => (l2(v, cq), c) }.sorted.map(_._2)
+    val cell = xv.map { case (id, v) => id -> cellRank(v).head }
+    val rq = xv.map { case (id, v) => id -> minus(v, xv(cell(id))) }
+    // untrained PQ codebook: the residual blocks of vec_id < 16; codes by (d2, pcid)
+    val book = for (b <- 0 until 8; p <- xv.keys.filter(_ < 16)) yield (b, p, block(rq(p), b))
+    val code = rq.map { case (id, r) => id -> (0 until 8).map(b =>
+      book.filter(_._1 == b).map(e => (l2(block(r, b), e._3), e._2)).min._2) }
+    val want = xv.keys.filter(_ % 100 == 0).toSeq.sorted.flatMap { q =>
+      val scored = cellRank(xv(q)).take(2).flatMap { c => // nprobe = 2
+        val qrq = minus(xv(q), xv(c))
+        val lut = book.map(e => (e._1, e._2) -> l2(block(qrq, e._1), e._3)).toMap
+        cell.collect { case (id, `c`) if id != q =>
+          ((0 until 8).map(b => lut((b, code(id)(b)))).sum, id) }
+      }
+      scored.sorted.take(10).zipWithIndex.map { case ((d2, id), i) => (q, i + 1L, id, d2) }
+    }
+    assert(want.nonEmpty)
+    assert(got == want)
+  }
+
   test("q281 trained PQ: Lloyd descent within truncation slack, exact ppm identity") {
     val rows = ops.Vector.q281TrainedPqDistortion(spark, sf()).collect()
     Caches.releaseAll()

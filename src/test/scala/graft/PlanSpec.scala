@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops._
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Physical-plan shape assertions (SURVEY.md §4): the plans we want at
   * 100 TB, pinned so a refactor can't silently regress them — filters and
@@ -11,6 +12,21 @@ class PlanSpec extends SparkSpec {
 
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
+
+  /** Every query's optimized plan and executed-plan string, built once
+    * (with the query's caches live) for the two all-query lints. Building
+    * can throw — streaming queries execute eagerly — so each lint decides
+    * what a failure means. */
+  private lazy val queryPlans: Seq[(String, Either[Throwable, LogicalPlan], Either[Throwable, String])] =
+    SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      def attempt[T](f: => T): Either[Throwable, T] =
+        try Right(f) catch { case e: Throwable => Left(e) }
+      try {
+        val qe = attempt(fn(spark, sf()).queryExecution)
+        (name, qe.flatMap(q => attempt(q.optimizedPlan)),
+          qe.flatMap(q => attempt(q.executedPlan.toString)))
+      } finally Caches.releaseAll()
+    }
 
   /** AQE only materializes WholeStageCodegen spans in the final plan —
     * execute first, then render the formatted explain (the adaptive plan's
@@ -165,9 +181,6 @@ class PlanSpec extends SparkSpec {
       // two 1-row broadcast bounds frames (n_total, w_hat) onto the ≤ K-row
       // surviving-counter frame (the q133/q142 global-scalar shape)
       "q285_mg_heavy_hitters",
-      // per-round 1-row broadcast radius frame onto the 1-row selection
-      // (the greedy farthest-point pick; the q154 per-iteration scalar shape)
-      "q286_kcenter_coreset",
       // 1-row broadcast corpus-size frame (ring init) + the declared
       // fixed-probe × corpus brute grading scan (the q274/q277/q282 shape)
       "q287_nndescent_graph",
@@ -177,9 +190,6 @@ class PlanSpec extends SparkSpec {
       // the ≤ K² fixed-probe all-pairs audit grid (non-equi self-join of
       // two ≤ K-row broadcast frames — an eval workload, corpus-independent)
       "q289_jl_projection_audit",
-      // per-round 1-row broadcast max-norm frame + the final 1-row scalar
-      // joins (n, trace, Rayleigh num/den) onto the 1-row argmax pick
-      "q290_embedding_anisotropy",
       // q278's range probe with the pooled frame GRID-bounded by
       // logBucketScore (≤ 8·63 rows regardless of corpus cardinality —
       // the bound is a law-tested result column)
@@ -223,7 +233,8 @@ class PlanSpec extends SparkSpec {
       "q277_trained_ivf_eval",
       // q50's declared brute-force broadcast query × corpus scan as the
       // exact integer-L2 grading reference for the fully-trained IVF-PQ;
-      // the index side is equi-joins on (cell) and (cell, block, code)
+      // the index side attaches its codebooks as scalar subqueries and has
+      // no nested-loop join (pinned by the IVF-PQ attach test below)
       "q282_trained_ivfpq_recall",
       // 1-row broadcast base-chain conversion probability onto the 4-row
       // removal frame (the q133/q142 global-scalar shape)
@@ -237,16 +248,64 @@ class PlanSpec extends SparkSpec {
       // |sources|-row aggregate × broadcast 200-token vocab densification
       // (the q230 bounded-grid shape) before the JS log chains
       "q256_js_divergence")
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      try {
-        val p = fn(spark, sf()).queryExecution.executedPlan.toString
+    val offenders = queryPlans.flatMap {
+      case (name, _, Right(p)) =>
         val cartesian = p.contains("CartesianProduct")
         val bnlj = p.contains("BroadcastNestedLoopJoin") && !nestedLoopOk(name)
         if (cartesian || bnlj) Some(s"$name: cartesian=$cartesian bnlj=$bnlj") else None
-      } catch { case _: Throwable => None } // streaming queries execute eagerly; skip
-      finally Caches.releaseAll()
+      case _ => None // streaming queries execute eagerly; skip
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("plan lint: IVF-PQ codebooks attach without nested-loop joins, loop stages included") {
+    // The final-plan lint above never sees the plans of checkpointed loop
+    // stages, so walk every SQL execution a query runs, as perfbench's
+    // probe does. A constant-key codebook join plans as a condition-less
+    // BroadcastNestedLoopJoin; the only one allowed is q282's brute
+    // grading scan on its query_id <> vec_id inequality.
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.SparkPlanInfo
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
+    def nestedLoops(build: => org.apache.spark.sql.DataFrame): Seq[String] = {
+      val found = java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
+      val fence = new java.util.concurrent.CountDownLatch(1)
+      def walk(p: SparkPlanInfo): Unit = {
+        if (p.nodeName == "BroadcastNestedLoopJoin") found.add(p.simpleString)
+        p.children.foreach(walk)
+      }
+      val listener = new SparkListener {
+        override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+          case s: SparkListenerSQLExecutionStart => walk(s.sparkPlanInfo)
+          case u: SparkListenerSQLAdaptiveExecutionUpdate => walk(u.sparkPlanInfo)
+          case _ => ()
+        }
+        override def onJobStart(j: SparkListenerJobStart): Unit =
+          if (Option(j.properties).exists(_.getProperty("graft.fence") != null)) fence.countDown()
+      }
+      val sc = spark.sparkContext
+      sc.addSparkListener(listener)
+      try {
+        build.collect()
+        // the bus delivers in order: once the fence job's start arrives,
+        // every plan event the query posted has been walked
+        sc.setLocalProperty("graft.fence", "1")
+        try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.fence", null)
+        assert(fence.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus never drained")
+        found.toArray.map(_.toString).toSeq
+      } finally {
+        sc.removeSparkListener(listener)
+        Caches.releaseAll()
+      }
+    }
+    for ((q, bnlj) <- Seq("q102" -> nestedLoops(Vector.q102IvfPqTopk(spark, sf())),
+        "q281" -> nestedLoops(Vector.q281TrainedPqDistortion(spark, sf()))))
+      assert(bnlj.isEmpty, s"$q nested-loop joins:\n${bnlj.mkString("\n")}")
+    val bnlj = nestedLoops(Vector.q282TrainedIvfPqRecall(spark, sf()))
+    assert(bnlj.nonEmpty, "q282's brute grading scan should plan as a nested-loop join")
+    val brute = "NOT \\(query_id#\\d+L = vec_id#\\d+L\\)".r
+    val stray = bnlj.filter(brute.findFirstIn(_).isEmpty)
+    assert(stray.isEmpty, s"q282 nested-loop joins besides the brute scan:\n${stray.mkString("\n")}")
   }
 
   test("plan lint: no window over an unreduced input without a high-cardinality partition key") {
@@ -282,21 +341,18 @@ class PlanSpec extends SparkSpec {
       }
       found
     }
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      try {
-        fn(spark, sf()).queryExecution.optimizedPlan.collect {
+    val offenders = queryPlans.flatMap {
+      case (name, Right(optimized), _) =>
+        optimized.collect {
           case w: LWindow =>
             val keys = w.partitionSpec.flatMap(_.references.toSeq.map(_.name))
             if (reducedBelow(w) || keys.exists(highCardKeys)) None
             else Some(s"$name: window partitioned by [${keys.mkString(",")}] over unreduced input")
         }.flatten
-      } catch {
-        // loud, not silent: a query that fails to BUILD would otherwise
-        // pass the lint forever
-        case e: Throwable =>
-          Seq(s"$name: LINT-ERROR ${e.getClass.getSimpleName}: ${e.getMessage}")
-      }
-      finally Caches.releaseAll()
+      // loud, not silent: a query that fails to BUILD would otherwise
+      // pass the lint forever
+      case (name, Left(e), _) =>
+        Seq(s"$name: LINT-ERROR ${e.getClass.getSimpleName}: ${e.getMessage}")
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
