@@ -1,7 +1,7 @@
 package graft.ops
 
 import graft.Tables
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Iterative graph ranking (PageRank), complementing the connected-components
@@ -19,13 +19,32 @@ import org.apache.spark.sql.functions._
   * (`ops/Vector.scala`) and centroid sums (`ops/Vector.scala:354`). Float
   * PageRank would hash-differently per run; integer PageRank cannot.
   *
-  * Scale stance: one hash-partitioned equi-join (ranks ⋈ edges on src) +
-  * one partial+final HashAggregate (on dst) per iteration — the textbook
-  * Spark PageRank topology. Edge shares are computed once and persisted;
-  * iteration count is fixed (k=5), so the unrolled plan is k joins deep and
-  * needs no driver-side convergence reads at all. Overflow-safe at any edge
-  * weight: shares are pre-normalized to 1e6 fixed-point, so the per-edge
-  * product is ≤ 1e12·1e6 = 1e18 < Long.MaxValue regardless of raw weights.
+  * Scale stance: one equi-join (ranks ⋈ edges on src) + one aggregate (on
+  * dst) per iteration — the textbook Pregel PageRank topology. Edge shares
+  * are computed once and persisted; iteration count is fixed (k=5), so the
+  * unrolled plan is k joins deep and needs no driver-side convergence reads
+  * at all. Overflow-safe at any edge weight: shares are pre-normalized to
+  * 1e6 fixed-point, so the per-edge product is ≤ 1e12·1e6 = 1e18 <
+  * Long.MaxValue regardless of raw weights.
+  *
+  * The loop operators ([[pageRank]], [[pageRankRedistributed]],
+  * [[cheapestPaths]], [[shortestHops]], [[labelPropagationWithGraph]])
+  * share one contract: the NODE domain is bounded (the trade graph's is the
+  * 25-nation key, constant at any sf), while the edge build feeding them
+  * may be corpus-scale. The edge frame is aggregated at full parallelism
+  * and persisted, then `coalesce(1)` makes every loop frame
+  * SinglePartition, so each round's join and aggregate satisfy their
+  * required distribution with zero new exchanges. The node-sized per-round
+  * frames ride broadcast hints: coalesce alone is not enough, because the
+  * cached edge frame's pre-materialization stats are the (huge) join-tree
+  * estimate, so the planner would pick a SortMergeJoin whose
+  * co-partitioning requirement re-shuffles the SinglePartition side back
+  * to the shuffle width (q171: 12 exchanges over ≤625-row frames and
+  * 7.6–10.9 s that way, 1.4 s with the hints). A loop whose state is read
+  * twice per round, or eagerly through a broadcast, checkpoints it every
+  * round after the first, so round k never re-executes rounds 1..k-1 and
+  * Catalyst never re-optimizes an unrolled tree. A graph whose node set
+  * grows with the data belongs on a distributed loop instead (q203).
   */
 object Graph {
 
@@ -33,70 +52,67 @@ object Graph {
   val ShareScale: Long = 1000000L  // 1e6 edge-share fixed-point
   val Damping: Int = 85            // ×1/100
 
+  /** PageRank's shared prelude over `edges(src, dst, w)`: the persisted
+    * one-partition node set and 1e6 edge shares, the lazy out-weight
+    * frame, and the node count (at least 1) as a scalar column. */
+  private def rankPrelude(edges: DataFrame): (DataFrame, DataFrame, DataFrame, Column) = {
+    // persist the aggregated edge frame before its fan-out into nodes,
+    // out-weights and shares: without it a corpus-scale edge build (e.g.
+    // tradeEdges' three-dim lineitem join) re-executes per consumer
+    val edgesP = graft.Caches.persist(edges.coalesce(1))
+    val nodes = graft.Caches.persist(edgesP.select(col("src").as("id"))
+      .union(edgesP.select(col("dst").as("id"))).distinct().coalesce(1))
+    val outw = edgesP.groupBy("src").agg(sum(col("w")).as("ow"))
+    // each edge pre-normalized to its source's out-share once (1e6 fixed
+    // point): rounds never touch raw weights, so k rounds cost k (join +
+    // agg), not k (join + join + agg)
+    val shares = graft.Caches.persist(edgesP.join(outw, "src")
+      .select(col("src"), col("dst"), expr("(w * 1000000L) div ow").as("share"))
+      .coalesce(1))
+    // the node count is a scalar subquery, not an eager .count(): building
+    // the plan runs no job
+    (nodes, outw, shares, nodes.agg(greatest(count(lit(1)), lit(1L))).scalar())
+  }
+
+  /** Teleport over `n` nodes: `base = ((Scale div n) · (100 − d)) div 100`
+    * and the starting rank `init = Scale div n`, both BIGINT floor
+    * divisions matching the oracle's `//`; `guard` wraps each term (q234
+    * zeroes them off its seed set). */
+  private def uniformBase(n: String, guard: Column => Column = identity): Seq[Column] = Seq(
+    guard(expr(s"(($Scale div $n) * ${100 - Damping}) div 100")).as("base"),
+    guard(expr(s"$Scale div $n")).as("init"))
+
+  /** `iterations` rounds of the simplified recurrence `rank' = base +
+    * d·Σ contribs` from `baseF(id, base, init)`. Each round references the
+    * previous rank frame once, so the lazy chain stays linear and needs no
+    * checkpoint; the broadcast ranks run as k sequential subjobs inside the
+    * one action. */
+  private def simplifiedRanks(shares: DataFrame, baseF: DataFrame, iterations: Int): DataFrame = {
+    var ranks = baseF.select(col("id"), col("init").as("rank"))
+    for (_ <- 1 to iterations) {
+      val contrib = shares.join(broadcast(ranks), shares("src") === ranks("id"))
+        .select(col("dst"), expr("(rank * share) div 1000000L").as("c"))
+        .groupBy("dst").agg(sum(col("c")).as("cb"))
+      ranks = baseF.join(contrib, baseF("id") === contrib("dst"), "left")
+        .select(col("id"),
+          (col("base") + expr(s"(${Damping}L * coalesce(cb, 0L)) div 100")).as("rank"))
+    }
+    ranks
+  }
+
   /** Fixed-iteration weighted PageRank over `edges(src: long, dst: long,
-    * w: long)`. Returns `(id, pr_scaled)` — rank in 1e12 fixed-point.
+    * w: long)` with a bounded node domain. Returns `(id, pr_scaled)` —
+    * rank in 1e12 fixed-point.
     *
     * Dangling nodes (no out-edges) receive rank but emit none — the
     * simplified formulation (no dangling-mass redistribution), stated so the
     * oracle pins the same semantics.
     */
-  def pageRank(edges: DataFrame, iterations: Int,
-      compact: Boolean = false): DataFrame = {
-    // r15, guide §2.4 (the labelPropagation compact lesson applied to the
-    // rank loop): with `compact=true` — for graphs whose NODE domain is
-    // known-bounded, e.g. the 25-nation trade graph — the post-aggregate
-    // frames coalesce(1) AFTER the distributed edge build, so every loop
-    // frame is SinglePartition and each iteration's join + aggregate
-    // satisfies its required distribution with ZERO new exchanges
-    // (before: 2 exchanges of ≤625 rows per iteration, 32 empty tasks
-    // each). The heavy upstream aggregation keeps full parallelism
-    // (coalesce sits above its exchange). The in-loop rank frame rides a
-    // BROADCAST hint — coalesce alone is not enough because the unreliable
-    // stats of the unrolled chain otherwise pick an SMJ whose
-    // co-partitioning requirement re-shuffles the SinglePartition side
-    // back to 32 (r6 measurement, labelPropagationWithGraph scaladoc).
-    def c1(df: DataFrame): DataFrame = if (compact) df.coalesce(1) else df
-    def tiny(df: DataFrame): DataFrame = if (compact) broadcast(df) else df
-    // r15: persist the aggregated edge frame BEFORE the nodes/outw/shares
-    // fan-out — it is consumed four times below, and without the persist
-    // the corpus-scale edge build (e.g. tradeEdges' three-dim lineitem
-    // join) re-executes per consumer (JobTrace: three ~270 ms scan jobs
-    // per run).
-    val edgesP = graft.Caches.persist(c1(edges))
-    val nodes = edgesP.select(col("src").as("id"))
-      .union(edgesP.select(col("dst").as("id"))).distinct()
-    val outw = edgesP.groupBy("src").agg(sum(col("w")).as("ow"))
-    // Pre-normalize each edge to its source's out-share once (1e6 fixed
-    // point); iterations then never touch raw weights, so k iterations cost
-    // k (join + agg), not k (join + join + agg).
-    val shares = edgesP.join(outw, "src")
-      .select(col("src"), col("dst"), expr("(w * 1000000L) div ow").as("share"))
-    val sharesP = graft.Caches.persist(c1(shares))
-    val nodesP = graft.Caches.persist(c1(nodes))
-    // VERDICT r11 item 4: the node count rides as a broadcast 1-row
-    // aggregate frame (q234's nSeeds shape), not an eager .count() —
-    // constructing the plan runs zero driver-side jobs, and init/base
-    // become column arithmetic: init = Scale div n, base = (init·15) div
-    // 100, both BIGINT floor divisions matching the oracle's `//`.
-    val nF = nodesP.agg(greatest(count(lit(1)), lit(1L)).as("nn"))
-    val baseF = graft.Caches.persist(nodesP.crossJoin(broadcast(nF))
-      .select(col("id"),
-        expr(s"(($Scale div nn) * ${100 - Damping}) div 100").as("base"),
-        expr(s"$Scale div nn").as("init")))
-    var ranks = baseF.select(col("id"), col("init").as("rank"))
-    for (_ <- 1 to iterations) {
-      // ranks is referenced ONCE per iteration, so the lazy chain stays
-      // linear (no subtree duplication) and needs no per-round checkpoint;
-      // the nested per-round broadcasts execute as k sequential subjobs
-      // inside the one action.
-      val contrib = sharesP.join(tiny(ranks), sharesP("src") === ranks("id"))
-        .select(col("dst"), expr("(rank * share) div 1000000L").as("c"))
-        .groupBy("dst").agg(sum(col("c")).as("cb"))
-      ranks = baseF.join(contrib, baseF("id") === contrib("dst"), "left")
-        .select(col("id"),
-          (col("base") + expr("(85L * coalesce(cb, 0L)) div 100")).as("rank"))
-    }
-    ranks.select(col("id"), col("rank").as("pr_scaled"))
+  def pageRank(edges: DataFrame, iterations: Int): DataFrame = {
+    val (nodes, _, shares, n) = rankPrelude(edges)
+    val baseF = graft.Caches.persist(
+      nodes.select(col("id"), n.as("nn")).select(col("id") +: uniformBase("nn"): _*))
+    simplifiedRanks(shares, baseF, iterations).select(col("id"), col("rank").as("pr_scaled"))
   }
 
   /** Textbook PageRank with dangling-mass redistribution (VERDICT r4
@@ -105,83 +121,46 @@ object Graph {
     * damping — `rank' = base + d·(contribs + dm/n)` — so total rank is
     * conserved, the property the simplified [[pageRank]] deliberately
     * trades away. Still exact integer fixed-point: the dangling sum is a
-    * 1-row aggregate attached via broadcast (no driver read, no global
-    * window), `dm div n` is floor division in both engines. Per iteration:
-    * one equi-join + one hash aggregate (as [[pageRank]]) plus one
-    * broadcast-anti-join-derived 1-row sum — O(|dangling|) extra, never a
-    * second wide shuffle. */
-  def pageRankRedistributed(edges: DataFrame, iterations: Int,
-      compact: Boolean = false): DataFrame = {
-    // r15, guide §2.4: with `compact=true` (bounded node domain) the
-    // dictionary-sized post-aggregate frames become SinglePartition (see
-    // [[pageRank]]); with the in-loop broadcast hints below, each iteration
-    // plans with zero new exchanges and the per-round localCheckpoint
-    // materializes a one-partition, one-task RDD (before: 74 jobs / 1135
-    // near-empty tasks for 5 rounds at 32 shuffle partitions — QueryProbe
-    // r15 baseline).
-    def c1(df: DataFrame): DataFrame = if (compact) df.coalesce(1) else df
-    def tiny(df: DataFrame): DataFrame = if (compact) broadcast(df) else df
-    // r15: persist the aggregated edge frame before the 4-way fan-out (see
-    // [[pageRank]]).
-    val edgesP = graft.Caches.persist(c1(edges))
-    val nodes = edgesP.select(col("src").as("id"))
-      .union(edgesP.select(col("dst").as("id"))).distinct()
-    val outw = edgesP.groupBy("src").agg(sum(col("w")).as("ow"))
-    val shares = edgesP.join(outw, "src")
-      .select(col("src"), col("dst"), expr("(w * 1000000L) div ow").as("share"))
-    val sharesP = graft.Caches.persist(c1(shares))
-    val nodesP = graft.Caches.persist(c1(nodes))
-    // VERDICT r11 item 4 shape as [[pageRank]]: broadcast 1-row node count
-    // instead of an eager .count().
-    //
+    * 1-row aggregate over the round's state (no driver read, no global
+    * window), `dm div n` is floor division in both engines. Same bounded
+    * node-domain contract as [[pageRank]]. */
+  def pageRankRedistributed(edges: DataFrame, iterations: Int): DataFrame = {
+    val (nodes, outw, shares, n) = rankPrelude(edges)
     // r15 (VERDICT r14 item 1: "fuse the dangling-mass scalar into the
     // rank aggregation"): the loop state carries (id, base, dang, nn, rank)
     // — the dangling FLAG and the node count ride the checkpointed frame
     // itself, so each round's dangling mass is ONE lazy aggregate over the
-    // previous checkpoint attached by a 1-row cartesian (1 partition × 1
-    // row — no broadcast job, no separate dangling anti-join frame). Per
-    // round the only eager work is the single-task localCheckpoint; the
-    // broadcast(r) hint into the one-partition share scan is the round's
-    // one subjob (before: 3 eager subjobs/round — dangling-join broadcast,
-    // nF broadcast, dm broadcast — 74 jobs total; after: ~13).
-    val nF = nodesP.agg(greatest(count(lit(1)), lit(1L)).as("nn"))
+    // previous checkpoint. Per round the only eager work is the single-task
+    // localCheckpoint plus the round's 1-row dangling sum.
     val baseF = graft.Caches.persist(
-      nodesP
-        .join(tiny(outw.select(col("src"))), nodesP("id") === col("src"), "left_anti")
-        .select(col("id"), lit(true).as("dang"))
-        .join(nodesP, Seq("id"), "right")
-        .crossJoin(broadcast(nF))
-        .select(col("id"), coalesce(col("dang"), lit(false)).as("dang"), col("nn"),
-          expr(s"(($Scale div nn) * ${100 - Damping}) div 100").as("base"),
-          expr(s"$Scale div nn").as("init")))
+      nodes.join(broadcast(outw.select(col("src"))), nodes("id") === col("src"), "left")
+        .select(col("id"), col("src").isNull.as("dang"), n.as("nn"))
+        .select(col("id") +: col("dang") +: col("nn") +: uniformBase("nn"): _*))
     var ranks = baseF.select(col("id"), col("dang"), col("nn"), col("base"),
       col("init").as("rank"))
-    for (it <- 1 to iterations) {
+    for (_ <- 1 to iterations) {
       // localCheckpoint each iteration: the state frame is consumed by BOTH
       // the contribution join and the dangling-mass aggregate — without
       // materialization the lazy tree duplicates every earlier round 2^k
       // ways (and plain persist() keeps the ever-deepening lineage that
       // Catalyst re-analyzes per iteration — the q48 lesson, measured
       // SLOWER than no cache at all here). Checkpointing gives O(k) work on
-      // a flat plan. q117 needs none of this — its chain references each
-      // round once and stays a single lazily-evaluated tree.
+      // a flat plan.
       // coalesce(1) after the checkpoint: the checkpointed RDD reports
       // UnknownPartitioning (even with one partition), which would force
       // an exchange under every downstream join/aggregate; the no-op
       // coalesce re-declares SinglePartition, so the whole round plans
-      // exchange-free — no broadcast subjob either.
-      val r = c1(graft.Caches.trackCheckpoint(ranks.localCheckpoint()))
-      // one lazy 1-row aggregate over the checkpointed frame; attached via
-      // cartesian (1 partition × 1 row), not broadcast — no eager subjob
-      val dm = r.agg(
+      // exchange-free.
+      val r = graft.Caches.trackCheckpoint(ranks.localCheckpoint()).coalesce(1)
+      val dshare = r.agg(
           coalesce(sum(when(col("dang"), col("rank"))), lit(0L)).as("dmass"),
           max(col("nn")).as("dnn"))
-        .select(expr("dmass div dnn").as("dshare"))
-      val contrib = sharesP.join(r, sharesP("src") === r("id"))
+        .select(expr("dmass div dnn")).scalar()
+      val contrib = shares.join(r, shares("src") === r("id"))
         .select(col("dst"), expr("(rank * share) div 1000000L").as("c"))
         .groupBy("dst").agg(sum(col("c")).as("cb"))
       ranks = baseF.join(contrib, baseF("id") === contrib("dst"), "left")
-        .crossJoin(dm)
+        .select(col("id"), col("dang"), col("nn"), col("base"), col("cb"), dshare.as("dshare"))
         .select(col("id"), col("dang"), col("nn"), col("base"),
           (col("base") + expr("(85L * (coalesce(cb, 0L) + dshare)) div 100")).as("rank"))
     }
@@ -197,7 +176,7 @@ object Graph {
       .select(col("n_nationkey").cast("long").as("rid"))
     val edges = tradeEdges(s, dir)
       .join(broadcast(r0), col("src") === col("rid"), "left_anti")
-    pageRankRedistributed(edges, iterations = 5, compact = true)
+    pageRankRedistributed(edges, iterations = 5)
       .select(col("id").as("nation_id"), col("pr_scaled"))
       .orderBy(col("nation_id"))
   }
@@ -244,7 +223,7 @@ object Graph {
     * lineitem, dims broadcast); the rank loop then runs on the aggregated
     * graph. 5 iterations, damping 0.85. */
   def q117Pagerank(s: SparkSession, dir: String): DataFrame = {
-    pageRank(tradeEdges(s, dir), iterations = 5, compact = true)
+    pageRank(tradeEdges(s, dir), iterations = 5)
       .select(col("id").as("nation_id"), col("pr_scaled"))
       .orderBy(col("nation_id"))
   }
@@ -285,33 +264,11 @@ object Graph {
 
   /** Fixed-depth unweighted shortest hops from a seed set: iterative
     * min-plus relaxation — `dist_{i+1}(v) = min(dist_i(v), 1 + min over
-    * in-edges (u,v) of dist_i(u))` — k rounds, each one equi-join + one
-    * partial+final min-aggregate on the edge endpoint. The frontier never
-    * materializes on the driver; unreached nodes simply carry no row.
-    * All-integer, so exact under any execution order. */
-  def shortestHops(edges: DataFrame, seeds: DataFrame, maxHops: Int,
-      compact: Boolean = false): DataFrame = {
-    // r15, guide §2.4: `dist` is consumed TWICE per round (the relax join
-    // and the union), so the lazy unrolled tree duplicates every earlier
-    // round 2^k ways — QueryProbe measured 49 jobs / 996 near-empty tasks
-    // at k=4. `compact=true` (bounded node domain) flattens each round
-    // onto a one-partition checkpointed frame (the labelPropagation
-    // pattern): the relax join broadcasts dist into the one-partition edge
-    // scan, union+aggregate run exchange-free on SinglePartition, and the
-    // per-round materialization is a single task.
-    def c1(df: DataFrame): DataFrame = if (compact) df.coalesce(1) else df
-    def tiny(df: DataFrame): DataFrame = if (compact) broadcast(df) else df
-    val e = graft.Caches.persist(c1(edges.select(col("src"), col("dst")).distinct()))
-    var dist = seeds.select(col("id"), lit(0L).as("dist"))
-    for (i <- 1 to maxHops) {
-      if (compact && i > 1)
-        dist = graft.Caches.trackCheckpoint(dist.localCheckpoint())
-      val hop = e.join(tiny(dist), e("src") === dist("id"))
-        .select(col("dst").as("id"), (col("dist") + lit(1L)).as("dist"))
-      dist = c1(dist.union(hop)).groupBy("id").agg(min(col("dist")).as("dist"))
-    }
-    dist
-  }
+    * in-edges (u,v) of dist_i(u))` — i.e. [[cheapestPaths]] over the
+    * distinct edges with unit weight. Unreached nodes carry no row. */
+  def shortestHops(edges: DataFrame, seeds: DataFrame, maxHops: Int): DataFrame =
+    cheapestPaths(edges.select(col("src"), col("dst")).distinct().withColumn("w", lit(1L)),
+      seeds, maxHops)
 
   /** q121: trade-graph reachability — hop distance from the region-0
     * supplier nations to every nation they (transitively) ship to, 4
@@ -322,7 +279,7 @@ object Graph {
     val edges = tradeEdges(s, dir)
     val seeds = Tables.nation(s, dir).filter(col("n_regionkey") === 0)
       .select(col("n_nationkey").cast("long").as("id"))
-    shortestHops(edges, seeds, maxHops = 4, compact = true)
+    shortestHops(edges, seeds, maxHops = 4)
       .select(col("id").as("nation_id"), col("dist").as("hops"))
       .orderBy(col("nation_id"))
   }
@@ -446,62 +403,42 @@ object Graph {
     * integer aggregate with a total tie order.
     *
     * Scale: per round, one equi-join (labels ⋈ edges on the neighbor id)
-    * and three partial+final hash aggregates — (v,label) vote sums, per-v
-    * max vote, min label among maxima — the same O(E)-per-round shuffle
-    * topology as [[pageRank]]; the round count is fixed, so the plan
-    * unrolls with no driver-side reads. The tie-break runs as a self-join
-    * on (v, vote = max) rather than a struct max_by, keeping every
-    * aggregate on fixed-width primitives in HashAggregate (the round-4
-    * SortAggregate-fallback gotcha).
+    * and three aggregates — (v,label) vote sums, per-v max vote, min label
+    * among maxima; the round count is fixed, so the plan needs no
+    * driver-side reads. The tie-break runs as a self-join on (v, vote =
+    * max) rather than a struct max_by, keeping every aggregate on
+    * fixed-width primitives in HashAggregate (the round-4
+    * SortAggregate-fallback gotcha). The loop follows the bounded
+    * node-domain contract in the object doc: the symmetrized edge frame is
+    * coalesced to one partition after its distributed build, and the
+    * per-round label and max-vote frames are broadcast, so every round
+    * plans with zero shuffle exchanges.
     *
-    * `compact=true` (for graphs whose NODE domain is known-bounded — q171's
-    * is the 25-nation key, constant at any sf) coalesces the symmetrized
-    * edge table to one partition after the expensive distributed build AND
-    * broadcasts the per-round label/max-vote frames into their joins.
-    * Both are needed: coalesce alone is NOT enough, because the cached
-    * edge table's pre-materialization stats are the (huge) join-tree
-    * estimate, so the planner picks SortMergeJoin and its co-partitioning
-    * requirement re-shuffles the SinglePartition side back to 32
-    * (r6's 7.6–10.9 s was exactly that: 12 exchanges per run over ≤625-row
-    * frames). With the hints every iteration join is a BroadcastHashJoin
-    * over the one-partition edge scan, every aggregate's required
-    * distribution is satisfied by `SinglePartition`, and the whole
-    * iteration + community rollup plans with ZERO shuffle exchanges after
-    * the edge build. The heavy upstream edge aggregation keeps full
-    * parallelism either way. */
-  def labelPropagation(edges: DataFrame, rounds: Int, compact: Boolean = false): DataFrame =
-    labelPropagationWithGraph(edges, rounds, compact)._2
-
-  /** [[labelPropagation]], also returning the symmetrized loopless edge
-    * frame it propagated over — so downstream graph statistics (q214's
-    * modularity) reuse the ONE expensive distributed edge build instead of
-    * re-aggregating the corpus. Returned und is (a, b, w), each undirected
-    * edge present in both orientations with the merged weight. */
-  def labelPropagationWithGraph(edges: DataFrame, rounds: Int,
-      compact: Boolean = false): (DataFrame, DataFrame) = {
+    * Returns `(und, labels)`: the symmetrized loopless edge frame it
+    * propagated over — (a, b, w), each undirected edge present in both
+    * orientations with the merged weight, so downstream graph statistics
+    * (q214's modularity) reuse the ONE edge build — and the final
+    * `(id, label)` frame. */
+  def labelPropagationWithGraph(edges: DataFrame, rounds: Int): (DataFrame, DataFrame) = {
     val loopless = edges.filter(col("src") =!= col("dst"))
-    val undDist = graft.Caches.persist(
+    val und = graft.Caches.persist(
       loopless.select(col("src").as("a"), col("dst").as("b"), col("w"))
         .unionAll(loopless.select(col("dst").as("a"), col("src").as("b"), col("w")))
         .groupBy(col("a"), col("b")).agg(sum(col("w")).as("w")))
-    val und = if (compact) undDist.coalesce(1) else undDist
-    def tiny(df: DataFrame): DataFrame = if (compact) broadcast(df) else df
+      .coalesce(1)
     var labels = und.select(col("a").as("id")).distinct()
       .select(col("id"), col("id").as("label"))
     for (i <- 1 to rounds) {
-      // compact mode: flatten each round onto a ≤|V|-row checkpointed frame
-      // — the broadcast hint makes every round's labels an EAGER subjob, so
-      // without materialization round k re-executes rounds 1..k-1 (the
-      // O(k²) pageRank lesson above) and Catalyst re-optimizes an
-      // ever-deepening unrolled tree (~750 nodes at 4 rounds, measured
-      // ~2 s of pure planning). Distributed mode keeps the lazy chain —
-      // rounds are fixed and nothing re-executes eagerly there.
-      if (compact && i > 1)
+      // the broadcast hint makes every round's labels an EAGER subjob, so
+      // without materialization round k would re-execute rounds 1..k-1 and
+      // Catalyst would re-optimize an ever-deepening unrolled tree (~750
+      // nodes at 4 rounds, measured ~2 s of pure planning)
+      if (i > 1)
         labels = graft.Caches.trackCheckpoint(labels.coalesce(1).localCheckpoint())
-      val votes = und.join(tiny(labels), und("b") === labels("id"))
+      val votes = und.join(broadcast(labels), und("b") === labels("id"))
         .groupBy(col("a"), col("label")).agg(sum(col("w")).as("vote"))
       val mv = votes.groupBy(col("a")).agg(max(col("vote")).as("mv"))
-      labels = votes.join(tiny(mv), "a").filter(col("vote") === col("mv"))
+      labels = votes.join(broadcast(mv), "a").filter(col("vote") === col("mv"))
         .groupBy(col("a")).agg(min(col("label")).as("label"))
         .select(col("a").as("id"), col("label"))
     }
@@ -517,7 +454,7 @@ object Graph {
     * community with its size and numerically-sorted member list (rendered
     * as a string — the driver hasher takes no array columns). */
   def q171LpaCommunities(s: SparkSession, dir: String): DataFrame =
-    labelPropagation(tradeEdges(s, dir), rounds = 4, compact = true)
+    labelPropagationWithGraph(tradeEdges(s, dir), rounds = 4)._2
       .groupBy(col("label").as("community"))
       .agg(count(lit(1)).as("n_members"),
         expr("array_join(transform(sort_array(collect_list(id)), x -> cast(x AS string)), ',')")
@@ -578,14 +515,13 @@ object Graph {
     * (round-4 div law). Σ of the column is the graph's modularity in ppm.
     *
     * Scale stance: reuses the ONE distributed edge build via
-    * [[labelPropagationWithGraph]] (the compact ≤|V|²-row und frame and
-    * ≤|V|-row label frame); the three statistics are broadcast joins +
-    * hash aggregates over those bounded frames, and S rides a 1-row
-    * broadcast crossJoin (the q180 boundary idiom, PlanSpec-allowlisted).
-    * Nothing returns to the corpus after the edge aggregation. */
+    * [[labelPropagationWithGraph]] (its one-partition ≤|V|²-row und frame
+    * and ≤|V|-row label frame); the three statistics are broadcast joins +
+    * hash aggregates over those bounded frames, and S attaches as a scalar
+    * subquery. Nothing returns to the corpus after the edge aggregation. */
   def q214Modularity(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
-    val (und, labels) = labelPropagationWithGraph(tradeEdges(s, dir), rounds = 4, compact = true)
+    val (und, labels) = labelPropagationWithGraph(tradeEdges(s, dir), rounds = 4)
     val lab = labels.select(col("id"), col("label"))
     val deg = und.groupBy(col("a")).agg(sum(col("w")).as("deg"))
     val dC = deg.join(broadcast(lab), deg("a") === lab("id"))
@@ -598,10 +534,10 @@ object Graph {
         col("b") === col("ib"))
       .filter(col("la") === col("lb"))
       .groupBy(col("la").as("label")).agg(sum(col("w")).as("int2"))
-    val sTot = und.agg(sum(col("w")).cast(DecimalType(38, 0)).as("s2"))
+    val sTot = und.agg(sum(col("w")).cast(DecimalType(38, 0))).scalar()
     dC.join(intC, Seq("label"), "left_outer")
-      .crossJoin(broadcast(sTot))
-      .withColumn("int2", coalesce(col("int2"), lit(0L)))
+      .select(col("label"), col("n_members"), col("d_c"),
+        coalesce(col("int2"), lit(0L)).as("int2"), sTot.as("s2"))
       .select(col("label").as("community"), col("n_members"),
         expr("int2 div 2").as("internal_w"), col("d_c").as("degree_w"),
         expr("""CAST((CAST(int2 AS DECIMAL(38,0)) * s2
@@ -895,26 +831,22 @@ object Graph {
 
   /** Fixed-round WEIGHTED single-source cheapest paths (Bellman–Ford
     * relaxation): `dist_{i+1}(v) = min(dist_i(v), min over in-edges (u,v)
-    * of dist_i(u) + w(u,v))` — [[shortestHops]] with the +1 hop cost
-    * generalized to the edge weight. k rounds bound the path length
-    * (exactly the Pregel/GraphX SSSP shape); each round is one equi-join
-    * on the edge key + one partial+final min-aggregate, the same O(E)
-    * shuffle topology as [[pageRank]], no driver-side frontier. All
-    * arithmetic BIGINT, so relaxation order can't perturb the result. */
-  def cheapestPaths(edges: DataFrame, seeds: DataFrame, rounds: Int,
-      compact: Boolean = false): DataFrame = {
-    // r15: same double-reference flattening + SinglePartition discipline as
-    // [[shortestHops]] (QueryProbe baseline: 49 jobs / 996 tasks at k=4).
-    def c1(df: DataFrame): DataFrame = if (compact) df.coalesce(1) else df
-    def tiny(df: DataFrame): DataFrame = if (compact) broadcast(df) else df
-    val e = graft.Caches.persist(c1(edges.select(col("src"), col("dst"), col("w"))))
+    * of dist_i(u) + w(u,v))` over `edges(src, dst, w)`. k rounds bound the
+    * path length (exactly the Pregel/GraphX SSSP shape); each round is one
+    * equi-join on the edge key + one min-aggregate, no driver-side
+    * frontier. All arithmetic BIGINT, so relaxation order can't perturb the
+    * result. Bounded node-domain contract (object doc): `dist` is read
+    * twice per round (the relax join and the union), so it is checkpointed
+    * every round after the first. */
+  def cheapestPaths(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
+    val e = graft.Caches.persist(edges.select(col("src"), col("dst"), col("w")).coalesce(1))
     var dist = seeds.select(col("id"), lit(0L).as("dist"))
     for (i <- 1 to rounds) {
-      if (compact && i > 1)
+      if (i > 1)
         dist = graft.Caches.trackCheckpoint(dist.localCheckpoint())
-      val relax = e.join(tiny(dist), e("src") === dist("id"))
+      val relax = e.join(broadcast(dist), e("src") === dist("id"))
         .select(col("dst").as("id"), (col("dist") + col("w")).as("dist"))
-      dist = c1(dist.union(relax)).groupBy("id").agg(min(col("dist")).as("dist"))
+      dist = dist.union(relax).coalesce(1).groupBy("id").agg(min(col("dist")).as("dist"))
     }
     dist
   }
@@ -937,7 +869,7 @@ object Graph {
       .agg(min(graft.Exact.cents(col("l_extendedprice"))).as("w"))
     val seeds = Tables.nation(s, dir).filter(col("n_regionkey") === 0)
       .select(col("n_nationkey").cast("long").as("id"))
-    cheapestPaths(lanes, seeds, rounds = 4, compact = true)
+    cheapestPaths(lanes, seeds, rounds = 4)
       .select(col("id").as("nation_id"), col("dist").as("min_cost_cents"))
       .orderBy(col("nation_id"))
   }
@@ -972,45 +904,22 @@ object Graph {
     * to S's outgoing trade, the "related to these sources" importance a
     * pipeline uses to expand a trusted seed-domain list. Same exact
     * 1e12 fixed-point integer arithmetic, same pre-normalized 1e6 edge
-    * shares, same k(join+agg) unrolled plan as q117 — only the base term
-    * changes, and |S| comes from a broadcast 1-row count, no driver read.
+    * shares, same k(join+agg) loop as q117 — only the base term changes,
+    * and |S| is a scalar subquery, no driver read.
     * Simplified dangling semantics (q117's), stated so the oracle pins
     * the same thing. */
   def q234PersonalizedPagerank(s: SparkSession, dir: String): DataFrame = {
-    // r15, guide §2.4: nation-bounded frames → SinglePartition + in-loop
-    // broadcast hints, the [[pageRank]] compact discipline; the aggregated
-    // edge frame persists before its 4-way fan-out (see [[pageRank]]).
-    val edges = graft.Caches.persist(tradeEdges(s, dir).coalesce(1))
-    val nodes = graft.Caches.persist(
-      edges.select(col("src").as("id"))
-        .union(edges.select(col("dst").as("id"))).distinct().coalesce(1))
-    val outw = edges.groupBy("src").agg(sum(col("w")).as("ow"))
-    val shares = graft.Caches.persist(edges.join(outw, "src")
-      .select(col("src"), col("dst"), expr("(w * 1000000L) div ow").as("share"))
-      .coalesce(1))
+    val (nodes, _, shares, _) = rankPrelude(tradeEdges(s, dir))
     val seeds = Tables.nation(s, dir).filter(col("n_regionkey") === 0)
       .select(col("n_nationkey").cast("long").as("sid"))
-    val nSeeds = seeds.agg(count(lit(1)).as("ns"))
-    // seed-indicator frame: base teleport term per node, 0 for non-seeds
+    // seed-indicator frame: teleport base per node, 0 for non-seeds
     val baseF = graft.Caches.persist(
       nodes.join(broadcast(seeds), nodes("id") === seeds("sid"), "left")
-        .crossJoin(broadcast(nSeeds))
-        .select(col("id"),
-          when(col("sid").isNotNull,
-            expr(s"(($Scale div ns) * ${100 - Damping}) div 100"))
-            .otherwise(lit(0L)).as("base"),
-          when(col("sid").isNotNull, expr(s"$Scale div ns"))
-            .otherwise(lit(0L)).as("init")))
-    var ranks = baseF.select(col("id"), col("init").as("rank"))
-    for (_ <- 1 to 5) {
-      val contrib = shares.join(broadcast(ranks), shares("src") === ranks("id"))
-        .select(col("dst"), expr("(rank * share) div 1000000L").as("c"))
-        .groupBy("dst").agg(sum(col("c")).as("cb"))
-      ranks = baseF.join(contrib, baseF("id") === contrib("dst"), "left")
-        .select(col("id"),
-          (col("base") + expr(s"(${Damping}L * coalesce(cb, 0L)) div 100")).as("rank"))
-    }
-    ranks.select(col("id").as("nation_id"), col("rank").as("ppr_scaled"))
+        .select(col("id"), col("sid"), seeds.agg(count(lit(1))).scalar().as("ns"))
+        .select(col("id") +:
+          uniformBase("ns", when(col("sid").isNotNull, _).otherwise(lit(0L))): _*))
+    simplifiedRanks(shares, baseF, 5)
+      .select(col("id").as("nation_id"), col("rank").as("ppr_scaled"))
       .orderBy(col("nation_id"))
   }
 
@@ -1065,7 +974,7 @@ object Graph {
   def q251HitsScores(s: SparkSession, dir: String): DataFrame = {
     // r15, guide §2.4: nation-bounded frames → SinglePartition after the
     // distributed edge build + broadcast hints on the per-round score
-    // frames (the [[pageRank]]/labelPropagation compact discipline;
+    // frames (the bounded node-domain loop contract in the object doc;
     // QueryProbe baseline: 58 jobs / 774 near-empty tasks). The
     // normalization window needs AllTuples, which the one-partition frame
     // already satisfies — no exchange anywhere inside a round.

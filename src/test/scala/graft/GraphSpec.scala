@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.{Analytics, Graph}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Properties for the round-4 mining operators: fixed-point PageRank
@@ -9,14 +10,74 @@ import org.apache.spark.sql.functions._
   * invariants on hand-built inputs and sf0.001. */
 class GraphSpec extends SparkSpec {
 
+  private type Edge = (Long, Long, Long)
+
+  /** Collect an operator's `(id, value)` rows inside [[Caches.scoped]], so
+    * the persisted frames and per-round checkpoints it registers are
+    * released once the result is on the driver. */
+  private def pairs(df: => DataFrame): Map[Long, Long] = {
+    val before = Caches.liveCountHere
+    val got = Caches.scoped(df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    assert(Caches.liveCountHere == before, "operator caches outlived the scope")
+    got
+  }
+
+  /** Driver-side fixed-point PageRank in `Long`s: 1e6 edge shares, teleport
+    * over `teleport` (default: every node; base 0 elsewhere), and with
+    * `redistribute` the dangling mass re-spread over all nodes each round. */
+  private def refRank(edges: Seq[Edge], iterations: Int, redistribute: Boolean = false,
+      teleport: Option[Set[Long]] = None): Map[Long, Long] = {
+    val nodes = (edges.map(_._1) ++ edges.map(_._2)).distinct
+    val ow = edges.groupMapReduce(_._1)(_._3)(_ + _)
+    val tele = teleport.getOrElse(nodes.toSet)
+    val init = nodes.map(v => v -> (if (tele(v)) Graph.Scale / tele.size else 0L)).toMap
+    var rank = init
+    for (_ <- 1 to iterations) {
+      val contrib = edges.groupMapReduce(_._2) { case (s, _, w) =>
+        rank(s) * (w * Graph.ShareScale / ow(s)) / Graph.ShareScale }(_ + _)
+      val dshare =
+        if (redistribute) nodes.filterNot(ow.contains).map(rank).sum / nodes.size else 0L
+      rank = nodes.map(v => v -> (init(v) * (100 - Graph.Damping) / 100 +
+        Graph.Damping * (contrib.getOrElse(v, 0L) + dshare) / 100)).toMap
+    }
+    rank
+  }
+
+  /** Driver-side Bellman–Ford: `rounds` min-plus relaxations from `seeds`. */
+  private def refPaths(edges: Seq[Edge], seeds: Seq[Long], rounds: Int): Map[Long, Long] = {
+    var dist = seeds.map(_ -> 0L).toMap
+    for (_ <- 1 to rounds) {
+      val relaxed = for ((s, d, w) <- edges; ds <- dist.get(s)) yield d -> (ds + w)
+      dist = (dist.toSeq ++ relaxed).groupMapReduce(_._1)(_._2)(math.min)
+    }
+    dist
+  }
+
+  /** Driver-side synchronous min-label LPA: symmetrized weights, self-loops
+    * dropped, each node adopting the smallest label among its top-voted. */
+  private def refLpa(edges: Seq[Edge], rounds: Int): Map[Long, Long] = {
+    val und = edges.filter(e => e._1 != e._2)
+      .flatMap { case (s, d, w) => Seq((s, d) -> w, (d, s) -> w) }
+      .groupMapReduce(_._1)(_._2)(_ + _)
+    var label = und.keys.map { case (a, _) => a -> a }.toMap
+    for (_ <- 1 to rounds) {
+      val votes = und.toSeq.flatMap { case ((a, b), w) => label.get(b).map(l => (a, l) -> w) }
+        .groupMapReduce(_._1)(_._2)(_ + _)
+      label = votes.groupBy(_._1._1).map { case (a, vs) =>
+        val top = vs.values.max
+        a -> vs.collect { case ((_, l), v) if v == top => l }.min
+      }
+    }
+    label
+  }
+
   test("pageRank matches an integer reference on a hand-built graph") {
     import spark.implicits._
     // 4-node graph: 1→2, 1→3, 2→3, 3→1, 4→3 (node 4 dangles nothing; all
     // nodes have out-edges except none — 4 has one edge out, receives none)
     val edgeList = Seq((1L, 2L, 1L), (1L, 3L, 1L), (2L, 3L, 2L), (3L, 1L, 1L), (4L, 3L, 5L))
     val edges = edgeList.toDF("src", "dst", "w")
-    val got = Graph.pageRank(edges, iterations = 5)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got = pairs(Graph.pageRank(edges, iterations = 5))
 
     // In-test reference: same fixed-point integer recurrence, scalar loop.
     val nodes = (edgeList.map(_._1) ++ edgeList.map(_._2)).distinct.sorted
@@ -43,8 +104,7 @@ class GraphSpec extends SparkSpec {
         s <- 1L to n; d <- 1L to n
         if s != d && rnd.nextDouble() < 0.12
       } yield (s, d, 1L + rnd.nextInt(9))).toVector
-      val got = Graph.pageRank(edgeList.toDF("src", "dst", "w"), iterations = 4)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val got = pairs(Graph.pageRank(edgeList.toDF("src", "dst", "w"), iterations = 4))
       val nodes = (edgeList.map(_._1) ++ edgeList.map(_._2)).distinct
       val ow = edgeList.groupBy(_._1).view.mapValues(_.map(_._3).sum).toMap
       val share = edgeList.map { case (s, d, w) => (s, d) -> (w * Graph.ShareScale) / ow(s) }.toMap
@@ -70,8 +130,7 @@ class GraphSpec extends SparkSpec {
         u <- 1L to n; v <- 1L to n
         if u != v && rnd.nextDouble() < 0.2
       } yield (u, v)).toVector // directed duplicates exercise canonicalization
-      val got = Graph.triangleCounts(und.toDF("u", "v"))
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val got = pairs(Graph.triangleCounts(und.toDF("u", "v")))
       val es = und.map { case (u, v) => (math.min(u, v), math.max(u, v)) }.toSet
       val ids = (und.map(_._1) ++ und.map(_._2)).distinct.sorted
       val expected = (for {
@@ -97,8 +156,7 @@ class GraphSpec extends SparkSpec {
         case v        => v
       }
       val hops = 3
-      val got = Graph.shortestHops(edges.toDF("src", "dst"), seeds.toDF("id"), hops)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val got = pairs(Graph.shortestHops(edges.toDF("src", "dst"), seeds.toDF("id"), hops))
       val adj = edges.groupBy(_._1).view.mapValues(_.map(_._2)).toMap
       var dist = seeds.map(_ -> 0L).toMap
       for (_ <- 1 to hops) {
@@ -112,20 +170,19 @@ class GraphSpec extends SparkSpec {
   }
 
   test("q117 ranks are positive and rank mass stays below the scale budget") {
-    val rows = Graph.q117Pagerank(spark, sf()).collect()
-    assert(rows.nonEmpty)
-    rows.foreach(r => assert(r.getAs[Long]("pr_scaled") > 0))
+    val ranks = pairs(Graph.q117Pagerank(spark, sf())).values
+    assert(ranks.nonEmpty)
+    ranks.foreach(r => assert(r > 0))
     // Integer floor-division only loses mass, never creates it: total rank
     // can never exceed the fixed-point budget (1e12).
-    assert(rows.map(_.getAs[Long]("pr_scaled")).sum <= Graph.Scale)
+    assert(ranks.sum <= Graph.Scale)
   }
 
   test("shortestHops computes BFS distances on a path graph, bounded by maxHops") {
     import spark.implicits._
     val edges = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("src", "dst")
     val seeds = Seq(1L).toDF("id")
-    val got = Graph.shortestHops(edges, seeds, maxHops = 2)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got = pairs(Graph.shortestHops(edges, seeds, maxHops = 2))
     assert(got == Map(1L -> 0L, 2L -> 1L, 3L -> 2L), s"got=$got (4 is beyond 2 hops)")
   }
 
@@ -135,8 +192,7 @@ class GraphSpec extends SparkSpec {
     // fed partly reversed + duplicated to exercise canonicalization.
     val und = Seq((2L, 1L), (1L, 3L), (2L, 3L), (3L, 2L), (4L, 2L), (3L, 4L))
       .toDF("u", "v")
-    val got = Graph.triangleCounts(und)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got = pairs(Graph.triangleCounts(und))
     assert(got == Map(1L -> 1L, 2L -> 2L, 3L -> 2L, 4L -> 1L), s"got=$got")
   }
 
@@ -151,10 +207,9 @@ class GraphSpec extends SparkSpec {
     val outDeg = oriented.groupBy("s").count().agg(max("count")).head.getLong(0)
     assert(outDeg == 1L, s"hub must emit nothing; max out-degree=$outDeg")
     assert(oriented.filter(col("s") === 0L).count() == 0L, "all edges point INTO the hub")
-    assert(Graph.triangleCounts(star).count() == 0L, "a star has no triangles")
+    assert(pairs(Graph.triangleCounts(star)).isEmpty, "a star has no triangles")
     // Star + one leaf-leaf edge: exactly one triangle {0, 1, 2}.
-    val tri = Graph.triangleCounts(star.union(Seq((1L, 2L)).toDF("u", "v")))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val tri = pairs(Graph.triangleCounts(star.union(Seq((1L, 2L)).toDF("u", "v"))))
     assert(tri == Map(0L -> 1L, 1L -> 1L, 2L -> 1L), s"got=$tri")
   }
 
@@ -163,8 +218,7 @@ class GraphSpec extends SparkSpec {
     // 1→2, 2→3; node 3 dangles (receives, never emits). Redistribution
     // returns its mass to the pool each iteration.
     val edges = Seq((1L, 2L, 1L), (2L, 3L, 1L)).toDF("src", "dst", "w")
-    val got = Graph.pageRankRedistributed(edges, iterations = 4)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got = pairs(Graph.pageRankRedistributed(edges, iterations = 4))
     // Scalar reference of the same integer recurrence.
     val nodes = Seq(1L, 2L, 3L)
     val share = Map((1L, 2L) -> Graph.ShareScale, (2L, 3L) -> Graph.ShareScale)
@@ -179,8 +233,7 @@ class GraphSpec extends SparkSpec {
       rank = nodes.map(v => v -> (base + 85L * (contrib(v) + dshare) / 100)).toMap
     }
     assert(got == rank, s"got=$got expected=$rank")
-    val simplified = Graph.pageRank(edges, iterations = 4)
-      .collect().map(r => r.getLong(1)).sum
+    val simplified = pairs(Graph.pageRank(edges, iterations = 4)).values.sum
     assert(got.values.sum > simplified, "redistribution conserves the dangling mass")
   }
 
@@ -365,11 +418,7 @@ class GraphSpec extends SparkSpec {
     Caches.releaseAll()
   }
 
-  test("compact single-partition iteration computes identical results (r15)") {
-    // r15 optimization invariant: the `compact` flag on the four
-    // parameterized graph loops (coalesce(1) dictionary frames + broadcast
-    // hints + flattened loop state) is a pure physical-plan change — every
-    // ranked/relaxed value must be bit-identical to the distributed shape.
+  test("loop operators equal driver-side Long recurrences on a seeded weighted graph") {
     import spark.implicits._
     val rnd = new scala.util.Random(7)
     val edgeList = (for {
@@ -377,20 +426,59 @@ class GraphSpec extends SparkSpec {
       if s != d && rnd.nextDouble() < 0.15
     } yield (s, d, 1L + rnd.nextInt(9))).toVector
     val edges = edgeList.toDF("src", "dst", "w")
-    val seeds = Seq(1L, 5L).toDF("id")
-    def rows(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
-      df.collect().map(_.toSeq).toSet
-    assert(rows(Graph.pageRank(edges, 4, compact = true)) ==
-      rows(Graph.pageRank(edges, 4)))
-    Caches.releaseAll()
-    assert(rows(Graph.pageRankRedistributed(edges, 4, compact = true)) ==
-      rows(Graph.pageRankRedistributed(edges, 4)))
-    Caches.releaseAll()
-    assert(rows(Graph.shortestHops(edges, seeds, 3, compact = true)) ==
-      rows(Graph.shortestHops(edges, seeds, 3)))
-    Caches.releaseAll()
-    assert(rows(Graph.cheapestPaths(edges, seeds, 3, compact = true)) ==
-      rows(Graph.cheapestPaths(edges, seeds, 3)))
-    Caches.releaseAll()
+    val seeds = Seq(1L, 5L)
+    assert(pairs(Graph.pageRank(edges, 4)) == refRank(edgeList, 4))
+    assert(pairs(Graph.pageRankRedistributed(edges, 4)) ==
+      refRank(edgeList, 4, redistribute = true))
+    assert(pairs(Graph.shortestHops(edges, seeds.toDF("id"), 3)) ==
+      refPaths(edgeList.map { case (s, d, _) => (s, d, 1L) }, seeds, 3))
+    assert(pairs(Graph.cheapestPaths(edges, seeds.toDF("id"), 3)) ==
+      refPaths(edgeList, seeds, 3))
+  }
+
+  test("labelPropagationWithGraph equals a scalar min-label LPA on seeded random graphs") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(29)
+    for (trial <- 1 to 3) {
+      val n = 15L + trial * 5
+      // sparse, small weights (many vote ties), self-loops and both
+      // orientations of some pairs (merged weights) included
+      val edgeList = (for {
+        s <- 1L to n; d <- 1L to n
+        if rnd.nextDouble() < (if (s == d) 0.2 else 0.08)
+      } yield (s, d, 1L + rnd.nextInt(3))).toVector
+      val (und, labels) = Caches.scoped {
+        val (u, l) = Graph.labelPropagationWithGraph(edgeList.toDF("src", "dst", "w"), 4)
+        (u.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap,
+          l.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+      }
+      val ref = refLpa(edgeList, 4)
+      assert(labels == ref, s"trial $trial (n=$n, ${edgeList.size} edges)")
+      assert(ref.values.toSet.size > 1, s"trial $trial: one community tests no tie-break")
+      assert(und.keys.forall { case (a, b) => a != b && und.contains((b, a)) })
+    }
+  }
+
+  test("q234 personalized PageRank equals a driver-side recurrence over the sf trade graph") {
+    def longs(df: DataFrame, a: String, b: String): Seq[(Long, Long)] =
+      df.select(col(a).cast("long"), col(b).cast("long")).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toSeq
+    val suppNation = longs(Tables.supplier(spark, sf()), "s_suppkey", "s_nationkey").toMap
+    val orderCust = longs(Tables.orders(spark, sf()), "o_orderkey", "o_custkey").toMap
+    val custNation = longs(Tables.customer(spark, sf()), "c_custkey", "c_nationkey").toMap
+    val edgeList = longs(Tables.lineitem(spark, sf()), "l_orderkey", "l_suppkey")
+      .flatMap { case (o, sk) =>
+        for (src <- suppNation.get(sk); c <- orderCust.get(o); dst <- custNation.get(c))
+          yield (src, dst)
+      }
+      .groupMapReduce(identity)(_ => 1L)(_ + _)
+      .map { case ((src, dst), w) => (src, dst, w) }.toSeq
+    val seeds = longs(Tables.nation(spark, sf()), "n_nationkey", "n_regionkey")
+      .collect { case (nk, 0L) => nk }.toSet
+    val nodes = edgeList.flatMap(e => Seq(e._1, e._2)).toSet
+    assert(nodes.exists(seeds) && !nodes.forall(seeds), "needs seed and non-seed nodes")
+    val got = Caches.scoped(Graph.q234PersonalizedPagerank(spark, sf()).collect()
+      .map(r => r.getAs[Long]("nation_id") -> r.getAs[Long]("ppr_scaled")).toMap)
+    assert(got == refRank(edgeList, 5, teleport = Some(seeds)))
   }
 }

@@ -86,10 +86,10 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q117: PageRank plan construction runs zero Graph-side Spark jobs (VERDICT r11 item 4)") {
-    // The node count rides as a broadcast 1-row aggregate frame, so
-    // building the unrolled 5-iteration plan must submit no jobs from
-    // Graph code — the eager-scalar idiom (.count() at construction) is
-    // retired repo-wide. Parquet footer/schema-inference jobs from the
+    // The node count rides as a scalar subquery, so building the
+    // unrolled 5-iteration plan must submit no jobs from Graph code —
+    // the eager-scalar idiom (.count() at construction) is retired
+    // repo-wide. Parquet footer/schema-inference jobs from the
     // table reads are tolerated (every query construction has those);
     // what's pinned is that no job's call site lands in Graph.scala.
     val sites = java.util.Collections.synchronizedList(
@@ -130,12 +130,6 @@ class PlanSpec extends SparkSpec {
       "q142_rolling_bitmap",
       // Layout.normalized attaches a 1-row broadcast min/max bounds frame
       "q152_layout_pruning",
-      // per-iteration 1-row broadcast dangling-mass share + the 1-row
-      // broadcast node-count frame (VERDICT r11 item 4: replaces the
-      // construction-time .count(); the q234 nSeeds shape)
-      "q154_pagerank_dangling",
-      // 1-row broadcast node-count frame (same r11 item 4 shape)
-      "q117_pagerank",
       // 1-row broadcast (mn,mx,tot) stats frame + 8-row broadcast boundary
       // probe (v <= b_k) — both bounded-constant sides by construction
       "q162_equidepth_histogram",
@@ -155,9 +149,6 @@ class PlanSpec extends SparkSpec {
       // 1-row weights + 1-row broadcast (mn, mx) score-bounds frame over
       // the bounded (p, y) reduced domain (q162/q187's argument)
       "q211_calibration_curve",
-      // 1-row broadcast total-edge-weight S onto the ≤|V|-row community
-      // frame (the q180 boundary idiom)
-      "q214_modularity",
       // 1-row broadcast total-bigram count onto the vocab-sized pair frame
       "q197_pmi_collocations",
       // 1-row broadcast (lo, hi) id-span bounds — the q152 normalized-bounds shape
@@ -202,8 +193,6 @@ class PlanSpec extends SparkSpec {
       // frame, once per EM round (the q184/q197 shape)
       "q231_unigram_lm_train",
       "q232_tokenizer_fertility",
-      // 1-row broadcast |seeds| count onto the node frame (teleport base)
-      "q234_personalized_pagerank",
       // 1-row × 1-row sketch-pair join (two 64-element bottom-k arrays)
       "q237_sketch_set_algebra",
       // q50's declared brute-force query-points × corpus scan (mining pass)
@@ -240,7 +229,7 @@ class PlanSpec extends SparkSpec {
       // removal frame (the q133/q142 global-scalar shape)
       "q260_markov_attribution",
       // 1-row broadcast order-count frame onto the frequent-rule frame
-      // (ADVICE r9: replaces the eager .count(); the q234 nSeeds shape)
+      // (ADVICE r9: replaces the eager .count())
       "q245_assoc_rules",
       // same 1-row broadcast order-count frame onto the frequent-pair
       // frame (VERDICT r10 item 3: q118 ports the q245 fix)
@@ -258,46 +247,50 @@ class PlanSpec extends SparkSpec {
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
-  test("plan lint: IVF-PQ codebooks attach without nested-loop joins, loop stages included") {
-    // The final-plan lint above never sees the plans of checkpointed loop
-    // stages, so walk every SQL execution a query runs, as perfbench's
-    // probe does. A constant-key codebook join plans as a condition-less
-    // BroadcastNestedLoopJoin; the only one allowed is q282's brute
-    // grading scan on its query_id <> vec_id inequality.
+  /** The plan strings of every BroadcastNestedLoopJoin a query's SQL
+    * executions run. The final-plan lint never sees the plans of
+    * checkpointed loop stages or scalar subqueries, so this walks the
+    * `sparkPlanInfo` of every SQL execution start and AQE update, as
+    * perfbench's probe does. */
+  private def nestedLoops(build: => org.apache.spark.sql.DataFrame): Seq[String] = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
     import org.apache.spark.sql.execution.SparkPlanInfo
     import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
-    def nestedLoops(build: => org.apache.spark.sql.DataFrame): Seq[String] = {
-      val found = java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
-      val fence = new java.util.concurrent.CountDownLatch(1)
-      def walk(p: SparkPlanInfo): Unit = {
-        if (p.nodeName == "BroadcastNestedLoopJoin") found.add(p.simpleString)
-        p.children.foreach(walk)
-      }
-      val listener = new SparkListener {
-        override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-          case s: SparkListenerSQLExecutionStart => walk(s.sparkPlanInfo)
-          case u: SparkListenerSQLAdaptiveExecutionUpdate => walk(u.sparkPlanInfo)
-          case _ => ()
-        }
-        override def onJobStart(j: SparkListenerJobStart): Unit =
-          if (Option(j.properties).exists(_.getProperty("graft.fence") != null)) fence.countDown()
-      }
-      val sc = spark.sparkContext
-      sc.addSparkListener(listener)
-      try {
-        build.collect()
-        // the bus delivers in order: once the fence job's start arrives,
-        // every plan event the query posted has been walked
-        sc.setLocalProperty("graft.fence", "1")
-        try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.fence", null)
-        assert(fence.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus never drained")
-        found.toArray.map(_.toString).toSeq
-      } finally {
-        sc.removeSparkListener(listener)
-        Caches.releaseAll()
-      }
+    val found = java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
+    val fence = new java.util.concurrent.CountDownLatch(1)
+    def walk(p: SparkPlanInfo): Unit = {
+      if (p.nodeName == "BroadcastNestedLoopJoin") found.add(p.simpleString)
+      p.children.foreach(walk)
     }
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => walk(s.sparkPlanInfo)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate => walk(u.sparkPlanInfo)
+        case _ => ()
+      }
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("graft.fence") != null)) fence.countDown()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      build.collect()
+      // the bus delivers in order: once the fence job's start arrives,
+      // every plan event the query posted has been walked
+      sc.setLocalProperty("graft.fence", "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.fence", null)
+      assert(fence.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus never drained")
+      found.toArray.map(_.toString).toSeq
+    } finally {
+      sc.removeSparkListener(listener)
+      Caches.releaseAll()
+    }
+  }
+
+  test("plan lint: IVF-PQ codebooks attach without nested-loop joins, loop stages included") {
+    // A constant-key codebook join plans as a condition-less
+    // BroadcastNestedLoopJoin; the only one allowed is q282's brute
+    // grading scan on its query_id <> vec_id inequality.
     for ((q, bnlj) <- Seq("q102" -> nestedLoops(Vector.q102IvfPqTopk(spark, sf())),
         "q281" -> nestedLoops(Vector.q281TrainedPqDistortion(spark, sf()))))
       assert(bnlj.isEmpty, s"$q nested-loop joins:\n${bnlj.mkString("\n")}")
@@ -306,6 +299,20 @@ class PlanSpec extends SparkSpec {
     val brute = "NOT \\(query_id#\\d+L = vec_id#\\d+L\\)".r
     val stray = bnlj.filter(brute.findFirstIn(_).isEmpty)
     assert(stray.isEmpty, s"q282 nested-loop joins besides the brute scan:\n${stray.mkString("\n")}")
+  }
+
+  test("plan lint: graph loop scalars attach without condition-less nested-loop joins") {
+    // Node counts, q234's seed count, q214's total weight and q154's
+    // per-round dangling share attach as scalar subqueries; a 1-row
+    // crossJoin would plan as a BroadcastNestedLoopJoin with no condition.
+    val bare = "^BroadcastNestedLoopJoin Build(Left|Right), \\w+$".r
+    for ((q, bnlj) <- Seq("q117" -> nestedLoops(Graph.q117Pagerank(spark, sf())),
+        "q154" -> nestedLoops(Graph.q154PagerankDangling(spark, sf())),
+        "q214" -> nestedLoops(Graph.q214Modularity(spark, sf())),
+        "q234" -> nestedLoops(Graph.q234PersonalizedPagerank(spark, sf())))) {
+      val stray = bnlj.filter(bare.findFirstIn(_).isDefined)
+      assert(stray.isEmpty, s"$q condition-less nested-loop joins:\n${stray.mkString("\n")}")
+    }
   }
 
   test("plan lint: no window over an unreduced input without a high-cardinality partition key") {
