@@ -61,17 +61,9 @@ case class DotProduct(left: Expression, right: Expression) extends BinaryExpress
 }
 
 object VectorExpressions {
-  import org.apache.spark.sql.SparkSession
   import org.apache.spark.sql.functions.call_function
 
-  /** Idempotently register `graft_dot` on the session's function registry
-    * (Spark 4's Column API no longer exposes raw Expressions, so the
-    * registry + call_function is the supported bridge). */
-  def register(spark: SparkSession): Unit =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .sessionState.functionRegistry.createOrReplaceTempFunction(
-        "graft_dot", exprs => DotProduct(exprs.head, exprs(1)), "built-in")
-
-  /** Column API for [[DotProduct]] — requires [[register]] on the session. */
+  /** Column API for [[DotProduct]] — resolves on sessions built with
+    * [[GraftExtensions]] or after [[GraftExtensions.register]]. */
   def dot_product(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 }

@@ -90,35 +90,22 @@ object Dedup {
   /** One row per (doc_id, distinct 5-gram shingle hash) — the shared base
     * for signatures and Jaccard counting. Only the 32-hex md5 survives past
     * this point: the raw shingle string is hashed and dropped immediately,
-    * so every downstream shuffle (dedup, signature agg, the Jaccard
-    * equality join) carries a fixed-width key instead of arbitrary-length
-    * text. Jaccard on hashes ≡ Jaccard on shingles modulo md5 collisions,
-    * and the oracle applies the identical transformation.
+    * so every downstream shuffle (signature agg, the Jaccard equality join)
+    * carries a fixed-width key instead of arbitrary-length text. Jaccard on
+    * hashes ≡ Jaccard on shingles modulo md5 collisions, and the oracle
+    * applies the identical transformation.
     *
-    * Built with posexplode + window `lead`s instead of array lambdas: Spark's
-    * higher-order functions evaluate interpreted (no codegen), which
-    * profiled at ~60µs per shingle; the explode/window/concat path is fully
-    * codegen'd apart from the (cheap, partition-local) WindowExec. One
-    * shuffle on doc_id, then everything is narrow. Digesting happens exactly
-    * once per shingle; the 8 minhash "functions" are integer universal
-    * hashes over hex chunks of hg (see HashA/HashB above), not re-digests.
-    * (r15 second pass: an arrays_zip-of-5-shifted-slices build — codegen,
-    * exchange-free — was tried and REVERTED: the five per-row array copies
-    * measured q46 0.90→1.1 s, q48 1.36→1.7 s vs the accepted artifact.
-    * The 2-slice variant DID pay on q169's bigrams; 5 slices do not.) */
-  private def hashedShingles(s: SparkSession, dir: String): DataFrame = {
-    val toks = Tables.documents(s, dir)
-      .select(col("doc_id"), posexplode(split(lower(col("text")), "[^a-z0-9]+")).as(Seq("p", "tok")))
-      .filter(col("tok") =!= "")
-    val w = Window.partitionBy(col("doc_id")).orderBy(col("p"))
-    toks
-      .withColumn("g", concat_ws(" ", col("tok"),
-        lead("tok", 1).over(w), lead("tok", 2).over(w), lead("tok", 3).over(w), lead("tok", 4).over(w)))
-      .withColumn("ok", lead("tok", 4).over(w).isNotNull)
-      .filter(col("ok"))
+    * Built on [[Text.docShingles]]: the documents shuffle by doc_id (one row
+    * per document), and each is shingled in place by the native kernel,
+    * which already drops a document's repeated grams — no token rows, no
+    * window, no dedup aggregate. The result stays hash-partitioned by
+    * doc_id, so the per-document signature agg needs no further shuffle.
+    * Digesting happens exactly once per shingle; the 8 minhash "functions"
+    * are integer universal hashes over hex chunks of hg (see HashA/HashB
+    * above), not re-digests. */
+  private def hashedShingles(s: SparkSession, dir: String): DataFrame =
+    Text.docShingles(Tables.documents(s, dir))
       .select(col("doc_id"), md5(col("g").cast("binary")).as("hg"))
-      .dropDuplicates("doc_id", "hg")
-  }
 
   private def hashedShinglesSql: String =
     s"""hx AS (
@@ -136,7 +123,7 @@ object Dedup {
     * shape. */
   def q46MinhashLshPairs(s: SparkSession, dir: String): DataFrame = {
     // hx feeds three consumers (signatures + both sides of the Jaccard
-    // join); persist so the tokenize/shingle/window pipeline runs once.
+    // join); persist so the tokenize/shingle/hash pipeline runs once.
     // Spark's CacheManager matches by canonical plan, so q48 (which embeds
     // this query) and repeated invocations reuse the same cached table —
     // a few MB per sf dir — until the harness's post-query Caches.releaseAll.

@@ -8,11 +8,11 @@ import org.apache.spark.sql.functions._
   * mandated LLM-pipeline extensions; no reference implementation exists):
   * tokenization + term stats, quality scoring, language ID, fingerprinting.
   *
-  * All token work happens inside codegen'd builtins (split / filter /
-  * transform / explode) — no UDFs — so the hot path stays in whole-stage
-  * codegen and distributes trivially: per-document work is embarrassingly
-  * parallel; only the term-frequency groupBy shuffles (partial counts first,
-  * map-side combined).
+  * Tokenizing and shingling run inside codegen'd builtins (split /
+  * array_remove / explode) and the native shingle kernel — no UDFs — so
+  * the hot path stays in whole-stage codegen and distributes trivially:
+  * per-document work is embarrassingly parallel; only the term-frequency
+  * groupBy shuffles (partial counts first, map-side combined).
   *
   * Oracle parity: tokenization is `lower` + split on `[^a-z0-9]+` with empty
   * tokens dropped — DuckDB mirror:
@@ -24,21 +24,25 @@ object Text {
 
   /** Lowercased alphanumeric tokens, empties removed. */
   def tokens(c: Column): Column =
-    filter(split(lower(c), "[^a-z0-9]+"), t => t =!= lit(""))
+    array_remove(split(lower(c), "[^a-z0-9]+"), "")
 
   val tokensSql: String =
     "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '')"
 
   /** Distinct 5-gram shingles of the token stream (word n-grams joined by a
-    * single space) — the unit for minhash/Jaccard dedup (ops.Dedup). */
-  def shingles5(toks: Column): Column = {
-    val grams = transform(
-      sequence(lit(1), greatest(size(toks) - lit(4), lit(0))),
-      i => concat_ws(" ",
-        element_at(toks, i), element_at(toks, i + lit(1)), element_at(toks, i + lit(2)),
-        element_at(toks, i + lit(3)), element_at(toks, i + lit(4))))
-    array_distinct(when(size(toks) >= 5, grams).otherwise(array()))
-  }
+    * single space, first-occurrence order; empty below 5 tokens) — the unit
+    * for minhash/Jaccard dedup (ops.Dedup). One native row-local loop
+    * ([[graft.functions.Shingles5]], `graft_shingles5`), which resolves on
+    * every session built by [[graft.GraftSession]]. */
+  def shingles5(toks: Column): Column = call_function("graft_shingles5", toks)
+
+  /** One row per (doc_id, distinct 5-gram `g`) of `docs`, hash-partitioned
+    * by doc_id: the documents shuffle (one row per document), then each
+    * document is tokenized and shingled in place. Shared by the near-dup
+    * family (Dedup's hashed shingles) and q205. */
+  def docShingles(docs: DataFrame): DataFrame =
+    docs.repartition(col("doc_id"))
+      .select(col("doc_id"), explode(shingles5(tokens(col("text")))).as("g"))
 
   /** DuckDB mirror of [[shingles5]] over a token-list expression `t`. */
   def shingles5Sql(t: String): String =
@@ -2648,8 +2652,10 @@ object Text {
     * after the dump — novelty_ppm falling across dumps is the saturation
     * signal that caps how many more dumps are worth the scan.
     *
-    * Scale stance: ONE shuffle keyed by the 60-bit md5 slice of the
-    * shingle — the q46 discipline (hash and DROP the gram text before the
+    * Scale stance: the shingles come from [[docShingles]] (documents
+    * shuffled by doc_id, one row each, then shingled row-locally), then
+    * ONE gram shuffle keyed by the 60-bit md5 slice of the shingle — the
+    * q46 discipline (hash and DROP the gram text before the
     * shuffle; both engines hash identically, so novelty-over-hashes is
     * bit-identical even under a collision). The per-gram reduce carries a
     * single long: the bit_or dump MASK (bit d set ⇔ the gram occurs in
@@ -2662,25 +2668,12 @@ object Text {
     * gram strings + collect_set: 18.1 s at sf0.1; this shape: ~1 s,
     * identical hashes.) */
   def q205DumpNovelty(s: SparkSession, dir: String): DataFrame = {
-    // posexplode + window leads, NOT shingles5: the array-lambda path
-    // evaluates interpreted (~60µs/shingle — q46's profiled trap; the
-    // first cut of this query spent 17 s at sf0.1 in exactly that).
-    // Duplicate in-doc shingles are kept — bit_or is idempotent, so the
-    // mask (and every output column) is unchanged and the dropDuplicates
-    // shuffle is saved.
-    val w5 = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id")).orderBy(col("p"))
-    val maskCounts = Tables.documents(s, dir)
-      .select(col("doc_id"),
-        posexplode(split(lower(col("text")), "[^a-z0-9]+")).as(Seq("p", "tok")))
-      .filter(col("tok") =!= "")
-      .withColumn("g5", concat_ws(" ", col("tok"),
-        lead("tok", 1).over(w5), lead("tok", 2).over(w5),
-        lead("tok", 3).over(w5), lead("tok", 4).over(w5)))
-      .withColumn("ok", lead("tok", 4).over(w5).isNotNull)
-      .filter(col("ok"))
+    // The shared shingle stream: grams repeated within a document are
+    // already dropped by the kernel, and bit_or would not count them twice
+    // anyway.
+    val maskCounts = docShingles(Tables.documents(s, dir))
       .select((col("doc_id") % 4).as("dump"),
-        conv(substring(md5(col("g5").cast("binary")), 1, 15), 16, 10)
+        conv(substring(md5(col("g").cast("binary")), 1, 15), 16, 10)
           .cast("long").as("g"))
       .groupBy(col("g"))
       .agg(expr("bit_or(shiftleft(1, cast(dump AS int)))").as("mask"))

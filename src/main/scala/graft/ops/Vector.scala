@@ -33,7 +33,7 @@ object Vector {
   /** Sequential left-fold dot product — the codegen'd native expression
     * ([[graft.functions.DotProduct]]); emits the identical `acc += a[i]*b[i]`
     * fold as the HOF formulation and DuckDB's list_reduce, just compiled.
-    * Sessions must call [[graft.functions.VectorExpressions.register]] first
+    * Sessions must call [[graft.functions.GraftExtensions.register]] first
     * (each query entry does). */
   private def dot(a: Column, b: Column): Column =
     graft.functions.VectorExpressions.dot_product(a, b)
@@ -69,7 +69,7 @@ object Vector {
     * are the query set (broadcast); each scans the full corpus once
     * (BroadcastNestedLoopJoin) and keeps its 10 nearest by cosine. */
   def q50CosineTopk(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
+    graft.functions.GraftExtensions.register(s)
     val emb = Tables.embeddings(s, dir).select(col("vec_id"), v(col("embedding")).as("v"))
       .withColumn("nrm", norm(col("v")))
     val q = emb.filter(col("vec_id") % 100 === 0)
@@ -105,7 +105,7 @@ object Vector {
     * an equi-join on centroid id, which is what makes IVF the 100 TB path.
     * Self-matches are excluded. */
   def q51IvfTopk(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
+    graft.functions.GraftExtensions.register(s)
     val emb = Tables.embeddings(s, dir).select(col("vec_id"), v(col("embedding")).as("v"))
       .withColumn("nrm", norm(col("v")))
     val cent = emb.filter(col("vec_id") < 8)
@@ -935,7 +935,7 @@ object Vector {
     * PQ (q53). The plan is q50's shape: broadcast query set, one corpus
     * scan, per-query top-k window; the recall join is per-query-bounded. */
   def q191Int8QuantRecall(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
+    graft.functions.GraftExtensions.register(s)
     val qz = transform(col("v"), x =>
       greatest(lit(-127L), least(lit(127L),
         floor(x * lit(127.0) / col("ma") + lit(0.5)).cast("long"))))
@@ -1219,7 +1219,7 @@ object Vector {
     * double (IEEE-deterministic per row: same fold order both engines);
     * ranking ties break on vec_id. */
   def q239HardNegatives(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
+    graft.functions.GraftExtensions.register(s)
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("label"), v(col("embedding")).as("v"))
       .withColumn("nrm", norm(col("v")))
@@ -1293,7 +1293,7 @@ object Vector {
     * sub-vector — MaxSim over approximate per-slot candidates is exactly
     * ColBERT's production retrieval mode; the pivot+rank is unchanged. */
   def q249MaxsimTopk(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
+    graft.functions.GraftExtensions.register(s)
     val sub = Tables.embeddings(s, dir)
       .select(col("vec_id"), v(col("embedding")).as("vv"))
       .select(col("vec_id"), explode(expr(
@@ -1364,7 +1364,7 @@ object Vector {
     * |queries| rows. */
   def q265NdcgRetrieval(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.{Window => W}
-    graft.functions.VectorExpressions.register(s)
+    graft.functions.GraftExtensions.register(s)
     val emb = graft.Caches.persist(
       Tables.embeddings(s, dir)
         .select(col("vec_id"), col("label").cast("long").as("label"),
@@ -1449,7 +1449,7 @@ object Vector {
     * everything after runs on |queries| rows. */
   def q268RetrievalMrrRecall(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.{Window => W}
-    graft.functions.VectorExpressions.register(s)
+    graft.functions.GraftExtensions.register(s)
     val emb = graft.Caches.persist(
       Tables.embeddings(s, dir)
         .select(col("vec_id"), col("label").cast("long").as("label"),
@@ -1525,7 +1525,7 @@ object Vector {
     * integer ppm. */
   def q274IvfRetrievalEval(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.{Window => W}
-    graft.functions.VectorExpressions.register(s)
+    graft.functions.GraftExtensions.register(s)
     val emb = graft.Caches.persist(
       Tables.embeddings(s, dir)
         .select(col("vec_id"), col("label").cast("long").as("label"),
@@ -1684,7 +1684,7 @@ object Vector {
     * rows. */
   def q275MapAtK(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.{Window => W}
-    graft.functions.VectorExpressions.register(s)
+    graft.functions.GraftExtensions.register(s)
     val emb = graft.Caches.persist(
       Tables.embeddings(s, dir)
         .select(col("vec_id"), col("label").cast("long").as("label"),
@@ -1767,7 +1767,7 @@ object Vector {
     * precision sums). */
   def q277TrainedIvfEval(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.{Window => W}
-    graft.functions.VectorExpressions.register(s)
+    graft.functions.GraftExtensions.register(s)
     val emb = graft.Caches.persist(
       Tables.embeddings(s, dir)
         .select(col("vec_id"), col("label").cast("long").as("label"),
@@ -2425,7 +2425,7 @@ object Vector {
     * same graph): returns (qv = quantized integral-double arrays + ‖·‖²,
     * initEdges = ring graph, edges = refined kNN graph). */
   private def nnDescentBuild(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) = {
-    graft.functions.VectorExpressions.register(s)
+    graft.functions.GraftExtensions.register(s)
     val qv = graft.Caches.persist(Tables.embeddings(s, dir)
       .select(col("vec_id"),
         transform(col("embedding"), x => round(x.cast("double") * KmFP, 0)).as("vec"))
@@ -2751,7 +2751,7 @@ object Vector {
     * plane, `|est−m·d2|·10⁶ div (m·d2)` floored ppm, aggregated per
     * probe (mean/max over its K−1 pairs). */
   def q289JlProjectionAudit(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorExpressions.register(s)
+    graft.functions.GraftExtensions.register(s)
     val pid = evalProbeIds(s, dir)
     // probe vectors only: the audit grid is fixed-size by construction
     val px = Tables.embeddings(s, dir).join(broadcast(pid), Seq("vec_id"))

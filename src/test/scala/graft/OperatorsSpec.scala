@@ -160,11 +160,11 @@ class OperatorsSpec extends SparkSpec {
     }
   }
 
-  test("GraftExtensions injection makes graft_dot resolvable from SQL text") {
-    // A shared-context test can't build a second session with withExtensions
-    // (builder reuses the existing one), so apply the injected functions to
-    // the live registry via the same public registerFunctions hook a real
-    // session build uses.
+  /** A shared-context test can't build a second session with withExtensions
+    * (builder reuses the existing one), so apply the injected functions to
+    * the live registry via the same public registerFunctions hook a real
+    * session build uses. */
+  private def injectGraftExtensions(): Unit = {
     val ext = new org.apache.spark.sql.SparkSessionExtensions
     new graft.functions.GraftExtensions()(ext)
     val registry = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
@@ -172,9 +172,21 @@ class OperatorsSpec extends SparkSpec {
     // registerFunctions is private[sql] in Scala but public in bytecode
     ext.getClass.getMethods.find(_.getName == "registerFunctions").get
       .invoke(ext, registry)
+  }
+
+  test("GraftExtensions injection makes graft_dot resolvable from SQL text") {
+    injectGraftExtensions()
     val v = spark.sql(
       "SELECT graft_dot(array(1.0d, 2.0d), array(3.0d, 4.0d)) AS d").head.getDouble(0)
     assert(v == 11.0)
+  }
+
+  test("GraftExtensions injection makes graft_shingles5 resolvable from SQL text") {
+    injectGraftExtensions()
+    val v = spark.sql(
+      "SELECT graft_shingles5(array('a', 'b', 'c', 'd', 'e', 'a', 'b', 'c', 'd', 'e', 'f')) AS g")
+      .head.getSeq[String](0)
+    assert(v == Seq("a b c d e", "b c d e a", "c d e a b", "d e a b c", "e a b c d", "b c d e f"))
   }
 
   test("q83 KMV sketch estimates distinct counts within 4 standard errors") {
@@ -332,6 +344,56 @@ class OperatorsSpec extends SparkSpec {
       .collect()
     assert(tiny(0).getSeq[String](0).isEmpty)
     assert(tiny(1).getSeq[String](0).size == 2)
+  }
+
+  /** `shingles5` over each token array, through a shuffle so the projection
+    * runs in generated code rather than being folded on the driver. */
+  private def shingled(arrays: Seq[Seq[String]]): Seq[Seq[String]] = {
+    import spark.implicits._
+    arrays.map(Option(_)).zipWithIndex.toDF("t", "i").repartition(2)
+      .select(col("i"), Text.shingles5(col("t")).as("g")).collect()
+      .sortBy(_.getInt(0)).map(r => if (r.isNullAt(1)) null else r.getSeq[String](1)).toSeq
+  }
+
+  /** Driver-side reference: distinct word 5-grams in first-occurrence order. */
+  private def gramsRef(toks: Seq[String]): Seq[String] =
+    if (toks.size < 5) Seq.empty else toks.sliding(5).map(_.mkString(" ")).toSeq.distinct
+
+  test("shingles5 kernel: hand-computed grams, first-occurrence distinct, NULL stays NULL") {
+    val got = shingled(Seq(
+      Seq("a", "b", "c", "d"),
+      Seq("a", "b", "c", "d", "e"),
+      Seq("x", "y", "z", "x", "y", "z", "x", "y", "z", "x"),
+      Seq.empty,
+      null))
+    assert(got(0) == Seq.empty)
+    assert(got(1) == Seq("a b c d e"))
+    // grams 4-6 repeat grams 1-3 and are dropped
+    assert(got(2) == Seq("x y z x y", "y z x y z", "z x y z x"))
+    assert(got(3) == Seq.empty)
+    assert(got(4) == null)
+    import spark.implicits._
+    val toks = Seq((0, Some(",Hello  World!-2x")), (1, None)).toDF("i", "text").repartition(2)
+      .select(col("i"), Text.tokens(col("text"))).collect().sortBy(_.getInt(0))
+    assert(toks(0).getSeq[String](1) == Seq("hello", "world", "2x"))
+    assert(toks(1).isNullAt(1))
+  }
+
+  test("shingles5 kernel equals a driver-side reference on seeded random token arrays") {
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.catalyst.util.ArrayData
+    import org.apache.spark.sql.types.{ArrayType, StringType}
+    // a 3-word vocabulary, so grams repeat within most arrays
+    val rnd = new scala.util.Random(20)
+    val vocab = Seq("a", "b", "c")
+    val arrays = Seq.fill(300)(Seq.fill(rnd.nextInt(16))(vocab(rnd.nextInt(vocab.size))))
+    // generated code (through a shuffle) and the interpreted eval
+    shingled(arrays).zip(arrays).foreach { case (g, t) => assert(g == gramsRef(t), t) }
+    arrays.foreach { t =>
+      val a = graft.functions.Shingles5(Literal.create(t, ArrayType(StringType))).eval()
+        .asInstanceOf[ArrayData]
+      assert(a.toSeq[Any](StringType).map(_.toString) == gramsRef(t), t)
+    }
   }
 
   // The testdata embeddings are isotropic random (no cluster structure), so
@@ -1024,9 +1086,13 @@ class OperatorsSpec extends SparkSpec {
     // real corpus: novel counts close on the corpus-wide distinct-shingle
     // total, and novelty is a bounded share of each dump's vocabulary
     val rows = Text.q205DumpNovelty(spark, sf()).collect().sortBy(_.getAs[Long]("dump"))
-    val corpusGrams = Tables.documents(spark, sf())
-      .select(explode(Text.shingles5(Text.tokens(col("text")))).as("g"))
-      .distinct().count()
+    // reference built on the driver, independent of the shingle kernel
+    val corpusGrams = Tables.documents(spark, sf()).select(col("text")).collect()
+      .flatMap { r =>
+        val toks = r.getString(0).toLowerCase(java.util.Locale.ROOT)
+          .split("[^a-z0-9]+").filter(_.nonEmpty).toSeq
+        gramsRef(toks)
+      }.toSet.size.toLong
     assert(rows.map(_.getAs[Long]("novel_grams")).sum == corpusGrams)
     assert(rows.last.getAs[Long]("cumulative_vocab") == corpusGrams)
     rows.foreach { r =>

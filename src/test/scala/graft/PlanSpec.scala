@@ -247,19 +247,19 @@ class PlanSpec extends SparkSpec {
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }
 
-  /** The plan strings of every BroadcastNestedLoopJoin a query's SQL
+  /** The plan strings of every `node` (a physical node name) a query's SQL
     * executions run. The final-plan lint never sees the plans of
-    * checkpointed loop stages or scalar subqueries, so this walks the
-    * `sparkPlanInfo` of every SQL execution start and AQE update, as
+    * checkpointed loop stages, scalar subqueries or writes, so this walks
+    * the `sparkPlanInfo` of every SQL execution start and AQE update, as
     * perfbench's probe does. */
-  private def nestedLoops(build: => org.apache.spark.sql.DataFrame): Seq[String] = {
+  private def executedNodes(node: String)(build: => org.apache.spark.sql.DataFrame): Seq[String] = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
     import org.apache.spark.sql.execution.SparkPlanInfo
     import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
     val found = java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
     val fence = new java.util.concurrent.CountDownLatch(1)
     def walk(p: SparkPlanInfo): Unit = {
-      if (p.nodeName == "BroadcastNestedLoopJoin") found.add(p.simpleString)
+      if (p.nodeName == node) found.add(p.simpleString)
       p.children.foreach(walk)
     }
     val listener = new SparkListener {
@@ -287,6 +287,9 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  private def nestedLoops(build: => org.apache.spark.sql.DataFrame): Seq[String] =
+    executedNodes("BroadcastNestedLoopJoin")(build)
+
   test("plan lint: IVF-PQ codebooks attach without nested-loop joins, loop stages included") {
     // A constant-key codebook join plans as a condition-less
     // BroadcastNestedLoopJoin; the only one allowed is q282's brute
@@ -313,6 +316,37 @@ class PlanSpec extends SparkSpec {
       val stray = bnlj.filter(bare.findFirstIn(_).isDefined)
       assert(stray.isEmpty, s"$q condition-less nested-loop joins:\n${stray.mkString("\n")}")
     }
+  }
+
+  test("plan lint: 5-gram shingles are row-local, with no window over doc_id") {
+    // Shingling is row-local: one doc_id repartition, then the kernel per
+    // document. A window over doc_id means a per-token stream is back.
+    val byDoc = "^Window \\[.*\\], \\[doc_id#\\d+L?\\], \\[".r
+    for ((q, windows) <- Seq("q46" -> executedNodes("Window")(Dedup.q46MinhashLshPairs(spark, sf())),
+        "q48" -> executedNodes("Window")(Dedup.q48DedupClusters(spark, sf())),
+        "q101" -> executedNodes("Window")(Pipelines.q101CorpusPipeline(spark, sf())),
+        "q205" -> executedNodes("Window")(Text.q205DumpNovelty(spark, sf())))) {
+      val docWindows = windows.filter(byDoc.findFirstIn(_).isDefined)
+      assert(docWindows.isEmpty, s"$q windows partitioned by doc_id:\n${docWindows.mkString("\n")}")
+    }
+    // q46's distinct shuffles, the cached hx build's included: hx's doc_id
+    // shuffle and the final sort.
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    def shuffles(p: SparkPlan): Set[Int] = (p match {
+      case a: AdaptiveSparkPlanExec => shuffles(a.executedPlan)
+      case q: QueryStageExec => shuffles(q.plan)
+      case m: InMemoryTableScanExec => shuffles(m.relation.cachedPlan)
+      case _ => (p.children ++ p.subqueries).flatMap(shuffles).toSet
+    }) ++ (if (p.isInstanceOf[ShuffleExchangeExec]) Set(p.id) else Set.empty)
+    val q46 = Dedup.q46MinhashLshPairs(spark, sf())
+    try {
+      q46.collect()
+      assert(shuffles(q46.queryExecution.executedPlan).size <= 2,
+        q46.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))
+    } finally Caches.releaseAll()
   }
 
   test("plan lint: no window over an unreduced input without a high-cardinality partition key") {

@@ -356,7 +356,7 @@ class ScaleSpec extends SparkSpec {
     // latency, not semantics). Untested dimension until now: concurrent
     // plans racing through the same SparkSession, catalog (q207/q27-style
     // temp views — unique-name discipline), and the thread-local Caches
-    // registry. Mixed shapes on purpose: scan-agg, join, shingle+window,
+    // registry. Mixed shapes on purpose: scan-agg, join, shingling,
     // pair-join, recursive CTE (temp view + localCheckpoint), sketch.
     val names = Seq("q01_pricing_summary", "q03_revenue_by_nation",
       "q46_minhash_lsh_pairs", "q118_basket_pairs", "q207_recursive_ema",
