@@ -100,23 +100,32 @@ def main(sf_dir, out_dir):
         con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{f}')")
     with open(os.path.join(out_dir, "oracle_sql.json")) as fh:
         oracles = json.load(fh)
-    results = {}
+    seen = bad = 0
+
+    def report(name, r):
+        # one line per query as soon as it is compared, flushed, so a run
+        # cut short (a timeout at sf0.1) keeps every result it reached
+        nonlocal seen, bad
+        seen += 1
+        status = "PASS" if r.startswith("OK") or r.startswith("NO-ORACLE") else "FAIL"
+        if status == "FAIL":
+            bad += 1
+        print(f"[{status}] {name}: {r}", flush=True)
+
     # A query that threw Spark-side leaves no result dir — flag it rather
     # than silently skipping (q65 r2 dev: Verify logged the failure but this
     # script reported all-pass).
     have = {n for n in os.listdir(out_dir) if os.path.isdir(os.path.join(out_dir, n))}
     for name in sorted(set(oracles) - have):
-        results[name] = "MISSING-RESULT (query failed in Verify?)"
-    for name in sorted(os.listdir(out_dir)):
+        report(name, "MISSING-RESULT (query failed in Verify?)")
+    for name in sorted(have):
         d = os.path.join(out_dir, name)
-        if not os.path.isdir(d):
-            continue
         got = con.sql(f"SELECT * FROM read_parquet('{d}/*.parquet')")
         got_cols = list(got.columns)
         got_types = dict(zip(got_cols, [norm_type(t) for t in got.types]))
         got_rows = got.fetchall()
         if name not in oracles:
-            results[name] = f"NO-ORACLE rows={len(got_rows)}"
+            report(name, f"NO-ORACLE rows={len(got_rows)}")
             continue
         try:
             exp = con.sql(oracles[name])
@@ -124,18 +133,18 @@ def main(sf_dir, out_dir):
             exp_types = dict(zip(exp_cols, [norm_type(t) for t in exp.types]))
             exp_rows = exp.fetchall()
         except Exception as e:
-            results[name] = f"ORACLE-ERROR {e}"
+            report(name, f"ORACLE-ERROR {e}")
             continue
         if sorted(got_cols) != sorted(exp_cols):
-            results[name] = f"COLS-MISMATCH got={sorted(got_cols)} exp={sorted(exp_cols)}"
+            report(name, f"COLS-MISMATCH got={sorted(got_cols)} exp={sorted(exp_cols)}")
             continue
         tdiff = {c: (got_types[c], exp_types[c]) for c in got_cols
                  if got_types[c] != exp_types[c]}
         if tdiff:
-            results[name] = f"TYPES-MISMATCH (spark,oracle)={tdiff}"
+            report(name, f"TYPES-MISMATCH (spark,oracle)={tdiff}")
             continue
         if len(got_rows) != len(exp_rows):
-            results[name] = f"ROWS-MISMATCH got={len(got_rows)} exp={len(exp_rows)}"
+            report(name, f"ROWS-MISMATCH got={len(got_rows)} exp={len(exp_rows)}")
             continue
         g = table_key(got_rows, got_cols)
         e = table_key(exp_rows, exp_cols)
@@ -150,16 +159,10 @@ def main(sf_dir, out_dir):
             diffs = [(i, a, b) for i, (a, b) in enumerate(zip(g, e)) if a != b][:3]
             loc = profile_diff(name, got_rows, exp_rows, got_cols,
                                got_types, exp_types)
-            results[name] = (f"VALUES-MISMATCH first_diffs={diffs}\n{loc}")
+            report(name, f"VALUES-MISMATCH first_diffs={diffs}\n{loc}")
         else:
-            results[name] = f"OK rows={len(got_rows)}{risk_note}"
-    bad = 0
-    for name, r in sorted(results.items()):
-        status = "PASS" if r.startswith("OK") or r.startswith("NO-ORACLE") else "FAIL"
-        if status == "FAIL":
-            bad += 1
-        print(f"[{status}] {name}: {r}")
-    print(f"\n{len(results) - bad}/{len(results)} pass")
+            report(name, f"OK rows={len(got_rows)}{risk_note}")
+    print(f"\n{seen - bad}/{seen} pass")
     sys.exit(1 if bad else 0)
 
 if __name__ == "__main__":

@@ -2877,10 +2877,11 @@ object Text {
   // q231/q232: unigram-LM (SentencePiece-style) tokenizer training
   // ---------------------------------------------------------------------
 
-  /** DP position cap = unrolled Viterbi rounds; words longer than this are
-    * excluded from training (and from q232's fertility support, mirrored
-    * oracle-side) — the standard max-sentencepiece-length style bound that
-    * keeps the unrolled DP finite in BOTH engines. */
+  /** Word-length cap of the training support: longer words are excluded
+    * from training (and from q232/q247/q273's support, mirrored
+    * oracle-side) — the standard max-sentencepiece-length style bound. It
+    * also fixes the DuckDB oracle's unrolled DP depth and keeps every
+    * Viterbi backpointer (a position ≤ 12) below the enc code's 32. */
   private val UniMaxWordLen = 12
   private val UniMaxPieceLen = 4
   private val UniEmRounds = 2
@@ -2966,18 +2967,47 @@ object Text {
 
   /** Add-one-smoothed −log₂ p(piece) cost table at fixed-point 2^16 over a
     * (piece, c) count frame: cost = log2fp(C + |V|) − log2fp(c + 1). The
-    * C+|V| term is a 1-row broadcast (q142's global-scalar shape). Shared
-    * by the EM rounds inside [[unigramTrain]] and by q247's final scoring
-    * pass — hoisted so the SCORING model is definitionally the same
-    * arithmetic the TRAINING rounds used. */
+    * C+|V| term attaches as a scalar subquery. Shared by the EM rounds
+    * inside [[unigramTrain]] and by q247's final scoring pass — hoisted so
+    * the SCORING model is definitionally the same arithmetic the TRAINING
+    * rounds used. */
   private def uniCostFrame(counts: DataFrame): DataFrame = {
     val tot = counts.agg(
       coalesce(sum(col("c")), lit(0L)).as("tc"), count(lit(1)).as("nv"))
-    val lgTot = withLog2fp(tot, "tc + nv", "lg_tot").select(col("lg_tot"))
+    val lgTot = withLog2fp(tot, "tc + nv", "lg_tot").select(col("lg_tot")).scalar()
     withLog2fp(counts, "c + 1", "lg_piece")
-      .crossJoin(broadcast(lgTot))
-      .select(col("piece"), (col("lg_tot") - col("lg_piece")).as("cost"))
+      .select(col("piece"), (lgTot - col("lg_piece")).as("cost"))
   }
+
+  /** Viterbi segmentation of every word in an edge frame (w, i, j, cost),
+    * one candidate piece w[i, j) per row → emissions (w, i, j, piece), one
+    * row per piece of the word's cheapest path 0 → n = max(j). Each word's
+    * DP is one row-local fold: its edges gather into one array sorted by
+    * j (every edge into i precedes every edge out of i); `aggregate` runs
+    * the forward DP over the enc array st[0..n] (st[0] = 0, others NULL),
+    * each edge setting st[j] = least(st[j], (st[i] div 32 + cost)·32 + i) —
+    * enc = total·32 + backpointer, so least() is the argmin with ties to
+    * the smaller predecessor (the longer last piece), and least() skipping
+    * NULL drops unreachable predecessors; the finish lambda backtracks
+    * from n via enc % 32, and `inline` expands its (i, j) pairs to rows. */
+  private[graft] def uniViterbi(edges: DataFrame): DataFrame =
+    edges.groupBy(col("w"))
+      .agg(sort_array(collect_list(struct(col("j"), col("i"), col("cost")))).as("es"),
+        max(col("j")).as("n"))
+      .select(col("w"), inline(expr(
+        """aggregate(es,
+          |  transform(sequence(0, n), k -> IF(k = 0, 0L, NULL)),
+          |  (st, e) -> transform(st, (x, k) ->
+          |    IF(k = e.j, least(x, (get(st, e.i) div 32 + e.cost) * 32 + e.i), x)),
+          |  st -> aggregate(sequence(1, n),
+          |    named_struct('pos', n, 'out', CAST(array() AS ARRAY<STRUCT<i: INT, j: INT>>)),
+          |    (b, t) -> IF(b.pos > 0 AND get(st, b.pos) IS NOT NULL,
+          |      named_struct('pos', CAST(get(st, b.pos) % 32 AS INT),
+          |        'out', concat(b.out, array(named_struct(
+          |          'i', CAST(get(st, b.pos) % 32 AS INT), 'j', b.pos)))),
+          |      b),
+          |    b -> b.out))""".stripMargin)))
+      .select(col("w"), col("i"), col("j"), expr("substring(w, i + 1, j - i)").as("piece"))
 
   /** In-engine unigram-LM tokenizer training (Kudo 2018's SentencePiece
     * unigram model, hard-EM/Viterbi variant) — the OTHER production
@@ -2994,22 +3024,16 @@ object Text {
     *  - piece cost = log2fp(C + |V|) − log2fp(c + 1) (add-one smoothed,
     *    fixed-point 2^16 — [[withLog2fp]]) so a NEVER-USED single char
     *    keeps a finite cost and coverage is total;
-    *  - Viterbi DP is unrolled to 12 position rounds; the DP state is ONE
-    *    BIGINT enc = total_cost·32 + backpointer, so the argmin is the
-    *    natural min() with a built-in deterministic tie-break (equal
-    *    totals → smaller predecessor index = longer piece);
-    *  - backtracking (12 unrolled rounds) emits the segmentation, whose
+    *  - each EM round Viterbi-segments every word ([[uniViterbi]]: least
+    *    total cost, ties → longer last piece); the segmentations'
     *    frequency-weighted piece counts are the E-step; 2 EM rounds run,
     *    re-costing over the pruned vocabulary (used pieces ∪ all single
     *    chars) between them.
     *
     * Scale: the corpus is touched ONCE (word-frequency dictionary — the
     * same tractability argument as q181: the dict is ≪ corpus at 100 TB);
-    * every DP/backtrack round is a hash join over dictionary-sized
-    * frames, localCheckpointed to keep the 24-round lineage flat. The
-    * only non-keyed join is the 1-row broadcast log2fp(C+|V|) scalar
-    * (the q184/q197 shape). Returns (seed counts, per-EM-round counts,
-    * final-round emissions). */
+    * each word's DP is one row-local fold, so an EM round is one plan.
+    * Returns (seed counts, per-EM-round counts, final-round emissions). */
   private def unigramTrain(s: SparkSession, dir: String): (DataFrame, Seq[DataFrame], DataFrame) =
     // Session-scoped train-once memo (VERDICT r9 item 2): q231/q232/q247
     // all consume this artifact — previously each retrained it (the
@@ -3035,48 +3059,13 @@ object Text {
     val c0 = graft.Caches.trackCheckpoint(
       occ.groupBy(col("piece")).agg(sum(col("freq")).as("c")).localCheckpoint())
 
-    // counts (piece, c) → (piece, cost); 1-row broadcast for the C+|V| term
-    def costFrame(counts: DataFrame): DataFrame = uniCostFrame(counts)
-
-    // Viterbi segmentation of every dictionary word under the given piece
-    // costs → emissions (w, i, j, piece), one row per path piece
-    def viterbi(cost: DataFrame): DataFrame = {
-      val edges = graft.Caches.trackCheckpoint(
-        occ.join(cost, Seq("piece"))
-          .select(col("w"), col("i"), col("j"), col("cost"))
-          .localCheckpoint())
-      var cum = graft.Caches.trackCheckpoint(
-        wcap.select(col("w").as("wu"), lit(0).as("jpos"), lit(0L).as("enc"))
-          .localCheckpoint())
-      for (j <- 1 to UniMaxWordLen) {
-        val dj = edges.filter(col("j") === j)
-          .join(cum, col("w") === col("wu") && col("jpos") === col("i"))
-          .groupBy(col("w"))
-          .agg(min(expr("(enc div 32 + cost) * 32 + i")).as("enc"))
-          .select(col("w").as("wu"), lit(j).as("jpos"), col("enc"))
-        cum = graft.Caches.trackCheckpoint(cum.unionByName(dj).localCheckpoint())
-      }
-      var cur = wcap.select(col("w").as("wb"), col("n").as("pos"))
-      var ems = List.empty[DataFrame]
-      for (_ <- 1 to UniMaxWordLen) {
-        val step = graft.Caches.trackCheckpoint(
-          cur.join(cum, col("wb") === col("wu") && col("jpos") === col("pos"))
-            .select(col("wb").as("w"), expr("cast(enc % 32 as int)").as("i"),
-              col("pos").as("j"))
-            .localCheckpoint())
-        ems ::= step
-        cur = step.filter(col("i") > 0).select(col("w").as("wb"), col("i").as("pos"))
-      }
-      ems.reduce(_ unionByName _)
-        .select(col("w"), col("i"), col("j"),
-          expr("substring(w, i + 1, j - i)").as("piece"))
-    }
-
-    var cost = costFrame(c0)
+    var cost = uniCostFrame(c0)
     val emCounts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     var lastEm: DataFrame = null
     for (r <- 1 to UniEmRounds) {
-      val em = graft.Caches.trackCheckpoint(viterbi(cost).localCheckpoint())
+      val em = graft.Caches.trackCheckpoint(
+        uniViterbi(occ.join(cost, Seq("piece")).select(col("w"), col("i"), col("j"), col("cost")))
+          .localCheckpoint())
       lastEm = em
       val cr = graft.Caches.trackCheckpoint(
         em.join(wcap.select(col("w"), col("freq")), Seq("w"))
@@ -3090,7 +3079,7 @@ object Text {
         val vr = cr.select(col("piece"))
           .union(c0.filter(length(col("piece")) === 1).select(col("piece")))
           .distinct()
-        cost = costFrame(
+        cost = uniCostFrame(
           vr.join(cr, Seq("piece"), "left")
             .select(col("piece"), coalesce(col("c"), lit(0L)).as("c")))
       }
@@ -3321,11 +3310,12 @@ object Text {
   }
 
   /** The unigram chain as DuckDB CTE definitions (no leading WITH) —
-    * mirrors [[unigramTrain]] round for round: wcap/occ/c0, then per EM
-    * round r ∈ {0, 1}: cost{r} (with the [[uniLog2Sql]] chains), edge
-    * frame e{r}, unrolled DP u{r}_0…u{r}_12, unrolled backtrack
-    * em{r}_1…em{r}_12 → emall{r} → c{r+1}; v1 is the pruned round-2
-    * vocabulary. Every round CTE is MATERIALIZED (the q171/q181 rule —
+    * the same arithmetic as [[unigramTrain]], with the Viterbi DP written
+    * as joins instead of [[uniViterbi]]'s fold (an independent reference):
+    * wcap/occ/c0, then per EM round r ∈ {0, 1}: cost{r} (with the
+    * [[uniLog2Ctes]] chains), edge frame e{r}, unrolled DP u{r}_0…u{r}_12,
+    * unrolled backtrack em{r}_1…em{r}_12 → emall{r} → c{r+1}; v1 is the
+    * pruned round-2 vocabulary. Every round CTE is MATERIALIZED (the q171/q181 rule —
     * chained CTEs referenced twice otherwise re-evaluate their whole
     * prefix). `def`, not `val` (round-5 init-order discipline). */
   private def uniCteSql: String = {

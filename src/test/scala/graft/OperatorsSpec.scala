@@ -2156,6 +2156,56 @@ class OperatorsSpec extends SparkSpec {
     }
   }
 
+  private def viterbiPieces(edges: Seq[(String, Int, Int, Long)]): Set[(String, Int, Int, String)] = {
+    import spark.implicits._
+    Text.uniViterbi(edges.toDF("w", "i", "j", "cost")).collect()
+      .map(r => (r.getAs[String]("w"), r.getAs[Int]("i"), r.getAs[Int]("j"),
+        r.getAs[String]("piece"))).toSet
+  }
+
+  test("unigram Viterbi fold: hand-computed segmentations, ties to the longer last piece") {
+    val abcd = Seq((0, 1, 2L), (1, 2, 2L), (2, 3, 2L), (3, 4, 2L), (0, 2, 3L), (2, 4, 3L),
+      (1, 4, 4L), (0, 3, 6L)).map { case (i, j, c) => ("abcd", i, j, c) }
+    val got = viterbiPieces(abcd ++ Seq(
+      ("xy", 0, 1, 1L), ("xy", 1, 2, 1L), ("xy", 0, 2, 3L),
+      ("zz", 0, 1, 1L), ("zz", 1, 2, 1L), ("zz", 0, 2, 2L),
+      ("pq", 1, 2, 1L), ("pq", 0, 2, 5L)))
+    assert(got == Set(
+      // best into 2 is ab (3 < a|b = 4), into 3 is ab|c (5 < abc = 6); into
+      // 4, ab|cd and a|bcd tie at 6, and predecessor 1 < 2 wins
+      ("abcd", 0, 1, "a"), ("abcd", 1, 4, "bcd"),
+      ("xy", 0, 1, "x"), ("xy", 1, 2, "y"),
+      // zz and z|z tie at 2: predecessor 0 wins
+      ("zz", 0, 2, "zz"),
+      // no edge reaches 1, so q (cost 1) is unreachable and pq (5) is taken
+      ("pq", 0, 2, "pq")))
+  }
+
+  test("unigram Viterbi fold equals a driver-side Long Viterbi on seeded tie-heavy words") {
+    val rnd = new scala.util.Random(231)
+    val words = Seq.fill(400)(Seq.fill(1 + rnd.nextInt(12))("abc"(rnd.nextInt(3))).mkString).distinct
+    val spans = words.flatMap(w => for (i <- w.indices; l <- 1 to 4 if i + l <= w.length)
+      yield (w, i, i + l))
+    // costs 0..3 per piece: equal path totals are common
+    val cost = spans.map { case (w, i, j) => w.substring(i, j) }.distinct
+      .map(_ -> rnd.nextInt(4).toLong).toMap
+    val edges = spans.map { case (w, i, j) => (w, i, j, cost(w.substring(i, j))) }
+    // per position: least total, then least predecessor
+    val expected = words.flatMap { w =>
+      val best = Array.fill[Option[(Long, Int)]](w.length + 1)(None)
+      best(0) = Some((0L, 0))
+      for (j <- 1 to w.length; i <- math.max(0, j - 4) until j; (t, _) <- best(i)) {
+        val cand = (t + cost(w.substring(i, j)), i)
+        if (best(j).forall(b => cand._1 < b._1 || (cand._1 == b._1 && cand._2 < b._2)))
+          best(j) = Some(cand)
+      }
+      Iterator.iterate(w.length)(j => best(j).get._2).takeWhile(_ > 0)
+        .map { j => val i = best(j).get._2; (w, i, j, w.substring(i, j)) }.toSeq
+    }.toSet
+    val got = viterbiPieces(edges)
+    assert(got == expected, s"kernel-only ${(got -- expected).take(5)}, reference-only ${(expected -- got).take(5)}")
+  }
+
   test("q272 degenerate all-zero Neyman weights: fallback keeps both allocations summing to B") {
     // ADVICE r10: one doc per source → every N·Σx²−(Σx)² = 0 → every Neyman
     // weight 0; without the proportional fallback the Hamilton pass hands

@@ -189,19 +189,10 @@ class PlanSpec extends SparkSpec {
       // ≤40-row size frame — the q200 fixed-benchmark argument) + the
       // |grid|×|bins| ≈ 69×10 planner cross onto broadcast 10-row bins
       "q279_lsh_band_planner",
-      // 1-row broadcast log2fp(C+|V|) normalization scalar onto the vocab
-      // frame, once per EM round (the q184/q197 shape)
-      "q231_unigram_lm_train",
-      "q232_tokenizer_fertility",
       // 1-row × 1-row sketch-pair join (two 64-element bottom-k arrays)
       "q237_sketch_set_algebra",
       // q50's declared brute-force query-points × corpus scan (mining pass)
       "q239_hard_negatives",
-      // 1-row broadcast log2fp(C+|V|) normalization scalar (the shared
-      // uniCostFrame shape q231/q232 carry) on the final scoring pass
-      "q247_subword_nll_filter",
-      // same shared uniCostFrame 1-row broadcast scalar, per-source grain
-      "q273_domain_reweight",
       // q50's declared brute-force broadcast query sub-vectors × corpus
       // sub-vector scan (per-slot IVF probes at real scale)
       "q249_maxsim_topk",
@@ -316,6 +307,26 @@ class PlanSpec extends SparkSpec {
       val stray = bnlj.filter(bare.findFirstIn(_).isDefined)
       assert(stray.isEmpty, s"$q condition-less nested-loop joins:\n${stray.mkString("\n")}")
     }
+  }
+
+  test("plan lint: unigram training folds each word in place: no nested-loop join, few jobs") {
+    // The Viterbi DP is one row-local fold per EM round and the C+|V|
+    // cost term attaches as a scalar subquery. Memos are dropped first so
+    // training really runs inside the walked executions.
+    Caches.releaseMemos()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (!Option(j.properties).exists(_.getProperty("graft.fence") != null)) jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(counter)
+    val q231 = try nestedLoops(Text.q231UnigramLmTrain(spark, sf()))
+      finally spark.sparkContext.removeSparkListener(counter)
+    assert(q231.isEmpty, s"q231 nested-loop joins:\n${q231.mkString("\n")}")
+    // 30 at sf0.001; per-position DP and backtrack rounds would add ~145
+    assert(jobs.get <= 40, s"q231 started ${jobs.get} jobs")
+    val q247 = nestedLoops(Text.q247SubwordNllFilter(spark, sf()))
+    assert(q247.isEmpty, s"q247 nested-loop joins:\n${q247.mkString("\n")}")
   }
 
   test("plan lint: 5-gram shingles are row-local, with no window over doc_id") {
