@@ -63,6 +63,8 @@ object Bench {
     // hit a different query every run (neighbor contention, not GC —
     // profiled r1). Per-query minimum over 3 passes measures plan cost,
     // which is the thing a scheduling decision at 100 TB would be based on.
+    // Session memos survive the passes, so a memoized trainer's consumer
+    // (q181/q182/q195/q231/q232/q247/q273) is timed on its memo hit.
     val passes = sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt
     // canaries timed before and after the sweep — see the object-level
     // scaladoc; an elevated canary marks the whole run contention-affected,

@@ -36,24 +36,23 @@ object Layout {
     }
 
   /** Min/max-normalize `c` into [0, 2^bits): the rank-free scaling that
-    * makes arbitrary numeric columns interleavable. The (min, max) pair is
-    * computed in-plan and attached via a broadcast single-row cross join —
-    * no driver collect, so the whole write stays one distributed plan. */
+    * makes arbitrary numeric columns interleavable. The (min, max) pairs
+    * are computed in-plan as one struct scalar subquery — nothing is
+    * collected, so the whole write stays one distributed plan. */
   private def normalized(df: DataFrame, cols: Seq[String], bits: Int): DataFrame = {
     val span = (1L << bits) - 1
-    val aggs = cols.flatMap(c => Seq(
-      min(col(c).cast("double")).as(s"__min_$c"),
-      max(col(c).cast("double")).as(s"__max_$c")))
-    val bounds = df.agg(aggs.head, aggs.tail: _*)
-    cols.foldLeft(df.crossJoin(broadcast(bounds))) { (d, c) =>
-      val lo = col(s"__min_$c")
-      val hi = col(s"__max_$c")
+    val bounds = df.agg(struct(cols.flatMap(c => Seq(
+      min(col(c).cast("double")).as(s"min_$c"),
+      max(col(c).cast("double")).as(s"max_$c"))): _*)).scalar()
+    cols.foldLeft(df) { (d, c) =>
+      val lo = bounds.getField(s"min_$c")
+      val hi = bounds.getField(s"max_$c")
       // degenerate span (constant column / empty frame) → bucket 0
       val scaled = when(hi > lo,
         ((col(c).cast("double") - lo) / (hi - lo) * span).cast("long"))
         .otherwise(lit(0L))
       d.withColumn(s"__z_$c", least(greatest(scaled, lit(0L)), lit(span)))
-    }.drop(cols.flatMap(c => Seq(s"__min_$c", s"__max_$c")): _*)
+    }
   }
 
   /** Z-order-clustered parquet write: rows sorted along the Morton curve

@@ -811,18 +811,18 @@ object Analytics {
       Tables.lineitem(s, dir)
         .select(Exact.cents(col("l_extendedprice")).as("v"))
         .groupBy(col("v")).agg(count(lit(1)).as("cnt")))
-    val stats = broadcast(pv.agg(
+    val stats = pv.agg(struct(
       min(col("v")).as("mn"), max(col("v")).as("mx"),
-      sum(col("cnt")).as("tot")))
-    val coarse = pv.crossJoin(stats)
-      .withColumn("w", expr(s"(mx - mn + $K) div $K"))
-      .withColumn("c", expr("(v - mn) div w"))
-    val ccum = broadcast(coarse.groupBy(col("c"), col("tot"))
+      sum(col("cnt")).as("tot")).as("st"))
+    val coarse = pv.withColumn("st", stats.scalar())
+      .withColumn("w", expr(s"(st.mx - st.mn + $K) div $K"))
+      .withColumn("c", expr("(v - st.mn) div w"))
+    val ccum = broadcast(coarse.groupBy(col("c"), col("st.tot").as("tot"))
       .agg(sum(col("cnt")).as("cc"))
       .withColumn("cum", sum(col("cc")).over(
         Window.orderBy(col("c"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow))))
-    val targets = stats.select(col("tot"),
+    val targets = stats.select(col("st.tot").as("tot"),
       explode(sequence(lit(1), lit(B))).as("k"))
       .withColumn("target", expr(s"(tot * k + ${B - 1}) div $B"))
     val perK = broadcast(targets.join(ccum, Seq("tot"))
@@ -1135,10 +1135,10 @@ object Analytics {
       .agg(countDistinct(col("l_orderkey")).as("c"))
       .filter(col("c") >= minsup)
     // VERDICT r10 item 3 (the q245/ADVICE-r9 idiom): the order count rides
-    // as a broadcast 1-row aggregate frame, not an eager .count() —
-    // constructing the DataFrame (plan lint, explain) must not run a
-    // driver-side orders scan-job before the query's own plan.
-    val nOrd = Tables.orders(s, dir).agg(count(lit(1)).as("n_ord"))
+    // as a scalar subquery, not an eager .count() — constructing the
+    // DataFrame (plan lint, explain) must not run an orders scan-job
+    // before the query's own plan.
+    val nOrd = Tables.orders(s, dir).agg(count(lit(1))).scalar()
     // Frequent-item prune: itemSup is small after the HAVING (the frequent
     // head) — broadcast it into the fact scan. Item counts are NOT carried
     // through the pair shuffle (they'd widen every shuffled row and the
@@ -1170,7 +1170,7 @@ object Analytics {
       .filter(col("support") >= minsup)
       .join(supB.select(col("l_partkey").as("p1"), col("c").as("c1")), Seq("p1"))
       .join(supB.select(col("l_partkey").as("p2"), col("c").as("c2")), Seq("p2"))
-      .crossJoin(broadcast(nOrd))
+      .withColumn("n_ord", nOrd)
       .select(col("p1"), col("p2"), col("support"),
         expr("(support * n_ord * 1000000L) div (c1 * c2)").as("lift_ppm"))
       .orderBy(col("support").desc, col("p1"), col("p2"))
@@ -2408,10 +2408,10 @@ object Analytics {
     val itemSup = li.groupBy("l_partkey")
       .agg(countDistinct(col("l_orderkey")).as("c"))
       .filter(col("c") >= minsup)
-    // ADVICE r9: the order count rides as a broadcast 1-row aggregate frame
-    // (q234's nSeeds shape), not an eager .count() — constructing the
-    // DataFrame (plan lint, explain) must not run a driver-side orders scan.
-    val nOrd = Tables.orders(s, dir).agg(count(lit(1)).as("n_ord"))
+    // ADVICE r9: the order count rides as a scalar subquery (q234's seed
+    // count), not an eager .count() — constructing the DataFrame (plan
+    // lint, explain) must not run an orders scan.
+    val nOrd = Tables.orders(s, dir).agg(count(lit(1))).scalar()
     val supB = broadcast(graft.Caches.persist(itemSup))
     val pruned = li.join(supB.select(col("l_partkey")), "l_partkey")
     val pairs = pruned
@@ -2433,7 +2433,7 @@ object Analytics {
       .select(col("r.ante").as("ante"), col("r.cons").as("cons"), col("r.support").as("support"))
       .join(supB.select(col("l_partkey").as("ante"), col("c").as("ca")), Seq("ante"))
       .join(supB.select(col("l_partkey").as("cons"), col("c").as("cc")), Seq("cons"))
-      .crossJoin(broadcast(nOrd))
+      .withColumn("n_ord", nOrd)
     rules.select(col("ante"), col("cons"), col("support"),
         expr("(support * 1000000L) div ca").as("conf_ppm"),
         expr("(support * n_ord * 1000000L) div (ca * cc)").as("lift_ppm"),

@@ -1499,10 +1499,12 @@ object Events {
     }
     val pStart = v.filter(col("state") === "START")
       .select(col("variant"), col("v").as("p_conv_scaled"))
-    val base = pStart.filter(col("variant") === "base")
-      .select(col("p_conv_scaled").as("base_scaled"))
+    // every variant's edges are a subset of base's, so base has its START
+    // row whenever any variant does: the NULL of a 0-row scalar never
+    // meets a row, and no guard is needed
+    val base = pStart.filter(col("variant") === "base").select(col("p_conv_scaled")).scalar()
     pStart.filter(col("variant") =!= "base")
-      .crossJoin(broadcast(base))
+      .withColumn("base_scaled", base)
       .select(col("variant").as("channel"), col("p_conv_scaled"),
         col("base_scaled"),
         expr("((base_scaled - p_conv_scaled) * 1000000L) div base_scaled")

@@ -172,12 +172,12 @@ object Sketches {
     * compressed representation — so the expansion volume is ~32× smaller
     * than q123's at the same accuracy (both exact). OR-merge per (target
     * day, word), popcount-sum per day; the trailing-day cap is a 1-row
-    * max(dday) aggregate attached via a BROADCAST cross join — a global
+    * max(dday) aggregate attached as a scalar subquery — a global
     * window would funnel the whole daily-bitmap frame (days ×
     * |id-space|/32 words) through ONE task's sort, exactly the
     * low-cardinality-window shape PlanSpec bans elsewhere. No driver
-    * round-trip, no single-task sort, no cartesian (the broadcast side is
-    * one row). Oracle is the INDEPENDENT user-level formulation. */
+    * round-trip, no single-task sort, no join. Oracle is the INDEPENDENT
+    * user-level formulation. */
   def q142RollingBitmap(s: SparkSession, dir: String): DataFrame = {
     // Persisted: both the 1-row max and the window expansion read the
     // reduced daily frame, so the fact table is scanned once.
@@ -187,10 +187,9 @@ object Sketches {
         expr("shiftleft(1L, cast(user_id % 32 as int))").as("mask"))
       .groupBy(col("dday"), col("word"))
       .agg(bit_or(col("mask")).as("bm")))
-    val maxd = daily.agg(max(col("dday")).as("maxd"))
+    val maxd = daily.agg(max(col("dday"))).scalar()
     daily
-      .crossJoin(broadcast(maxd))
-      .select(explode(expr("sequence(dday, least(dday + 6, maxd))")).as("d"),
+      .select(explode(sequence(col("dday"), least(col("dday") + 6, maxd))).as("d"),
         col("word"), col("bm"))
       .groupBy(col("d"), col("word")).agg(bit_or(col("bm")).as("bm"))
       .groupBy(col("d"))
@@ -436,8 +435,7 @@ object Sketches {
     * in a single hash aggregate; each grid is a ≤4096-row reduce; the dot
     * product joins two 4096-row frames; exact is one more reduce of the
     * per-key frame (here for the audit — a production deployment keeps
-    * only the grids). The 1-row exact frame joins back by broadcast
-    * crossJoin (the house bounds-frame idiom). */
+    * only the grids). The exact size attaches as a scalar subquery. */
   def q206CmsJoinSize(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
     def wide(c: Column): Column = c.cast(DecimalType(38, 0))
@@ -455,12 +453,12 @@ object Sketches {
         (conv(expr("substring(m, 1 + r * 4, 4)"), 16, 10).cast("long") % CmWidth).as("cell"),
         col("n"))
       .groupBy(col("r"), col("cell")).agg(sum(col("n")).as(out))
-    val exact = pk.agg(sum(wide(col("na")) * wide(col("nb"))).as("exact_wide"))
+    val exact = pk.agg(sum(wide(col("na")) * wide(col("nb")))).scalar()
     val dots = grid("na", "ca").join(grid("nb", "cb"), Seq("r", "cell"))
       .groupBy(col("r")).agg(sum(wide(col("ca")) * wide(col("cb"))).as("dot_wide"))
     dots
       .withColumn("est_wide", min(col("dot_wide")).over(Window.partitionBy()))
-      .crossJoin(broadcast(exact))
+      .withColumn("exact_wide", exact)
       .select(col("r").cast("long").as("r"),
         col("dot_wide").cast("long").as("dot_product"),
         col("est_wide").cast("long").as("cms_estimate"),
@@ -517,7 +515,7 @@ object Sketches {
     *
     * Scale: two corpus-side hash aggregates (distinct → bottom-k, map-side
     * combined to ≤ k rows per group by the TopKAggregator); everything
-    * after is a 1-row × 1-row broadcast join over two 64-element arrays.
+    * after is one row holding two 64-element arrays.
     * At 100 TB the segment pair matrix (|segments|² comparisons) touches
     * only sketches, never the fact table. */
   def q237SketchSetAlgebra(s: SparkSession, dir: String): DataFrame = {
@@ -531,24 +529,23 @@ object Sketches {
         conv(substring(md5(col("user_id").cast("string").cast("binary")), 1, 15),
           16, 10).cast("long").as("h"))
       .distinct()
-    val sk = hashed.groupBy(col("event_type")).agg(minK(col("h"), -col("h")).as("mins"))
-    // Degenerate-input guard (ADVICE r9): an empty segment would DROP its
-    // row from sk, collapsing the crossJoin to 0 rows while the oracle's
-    // ungrouped array_agg subqueries still emit one row — so each segment
-    // left-joins a constant 1-row frame and an absent sketch coalesces to
+    // Degenerate-input guard (ADVICE r9): an empty segment has no sketch
+    // row, while the oracle's ungrouped array_agg subqueries still emit one
+    // row — so both sketches ride one struct scalar subquery (a field is
+    // NULL when its segment is absent) and an absent sketch coalesces to
     // the EMPTY array (the oracle coalesces identically), keeping the row
     // shape engine-identical on empty segments.
-    def seg(name: String, out: String) =
-      s.range(1).select(lit(name).as("event_type"))
-        .join(broadcast(sk), Seq("event_type"), "left")
-        .select(coalesce(col("mins"), expr("CAST(array() AS ARRAY<BIGINT>)")).as(out))
-    val a = seg("purchase", "ma")
-    val b = seg("click", "mb")
+    val sk = hashed.groupBy(col("event_type")).agg(minK(col("h"), -col("h")).as("mins"))
+      .agg(struct(
+        max(when(col("event_type") === "purchase", col("mins"))).as("ma"),
+        max(when(col("event_type") === "click", col("mins"))).as("mb"))).scalar()
+    def seg(name: String): Column =
+      coalesce(sk.getField(name), expr("CAST(array() AS ARRAY<BIGINT>)")).as(name)
     val est = (arr: String) =>
       s"""CASE WHEN size($arr) < $k THEN CAST(size($arr) AS BIGINT)
          |ELSE CAST((${k - 1} * CAST(1152921504606846976 AS DECIMAL(38,0)))
          |  div element_at($arr, $k) AS BIGINT) END""".stripMargin
-    a.crossJoin(broadcast(b))
+    s.range(1).select(seg("ma"), seg("mb"))
       .select(col("ma"), col("mb"),
         expr(s"slice(array_sort(array_distinct(concat(ma, mb))), 1, $k)").as("mu"))
       .select(
@@ -759,12 +756,12 @@ object Sketches {
     // aggregate run once, not three times.
     val hh = graft.Caches.trackCheckpoint(
       cur.select(col("tok"), col("est")).localCheckpoint())
-    val totals = toks.agg(count(lit(1)).as("n_total"))       // 1-row bounds frame
-    val wHat = hh.agg(sum(col("est")).as("w_hat"))           // 1-row bounds frame
+    val totals = toks.agg(count(lit(1))).scalar()
+    val wHat = hh.agg(sum(col("est"))).scalar()
     val truth = toks.join(broadcast(hh.select(col("tok"))), Seq("tok"))
       .groupBy(col("tok")).agg(count(lit(1)).as("true_cnt"))
     hh.join(truth, Seq("tok"))
-      .crossJoin(broadcast(totals)).crossJoin(broadcast(wHat))
+      .withColumn("n_total", totals).withColumn("w_hat", wHat)
       .select(col("tok"), col("est").as("mg_cnt"), col("true_cnt"),
         (col("true_cnt") - col("est")).as("err"),
         expr(s"(n_total - w_hat) div ${MgK + 1}").as("err_bound"),

@@ -249,12 +249,11 @@ object Text {
     val tf = terms.groupBy(col("doc_id"), col("token")).agg(count(lit(1)).as("tf"))
     val df = terms.select(col("doc_id"), col("token")).distinct()
       .groupBy(col("token")).agg(count(lit(1)).as("df"))
-    val n = docs.agg(count(lit(1)).as("n_docs"))
+    val n = docs.agg(count(lit(1))).scalar()
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("doc_id")).orderBy(col("score").desc, col("token").asc)
     tf.join(df, Seq("token"))
-      .crossJoin(broadcast(n))
-      .withColumn("score", (col("tf") * col("n_docs")).cast("double") / col("df"))
+      .withColumn("score", (col("tf") * n).cast("double") / col("df"))
       .withColumn("rk", row_number().over(w).cast("long"))
       .filter(col("rk") <= 3)
       .select(col("doc_id"), col("rk"), col("token"), col("tf"), col("df"), col("score"))
@@ -828,7 +827,7 @@ object Text {
     * hash aggregates (map-side combined); scoring re-joins the bigram
     * stream to the model on its own keys — at 100 TB the bigram model is
     * itself table-sized, so these stay shuffle joins (AQE broadcasts them
-    * when small). The corpus mean is a 1-row broadcast (q142's pattern);
+    * when small). The corpus mean is a scalar subquery (q142's pattern);
     * output is TakeOrderedAndProject bottom-50, a total order on
     * (score_fp, doc_id). Documents with <2 tokens carry no bigram
     * evidence and are excluded — a perplexity filter scores content, and
@@ -853,10 +852,11 @@ object Text {
       .withColumn("q", expr("(cb * 1048576) div cp"))
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_pairs"), expr("sum(q) div count(1)").as("score_fp"))
-    val tot = scored.agg(count(lit(1)).as("n"), sum(col("score_fp")).as("t"))
-    scored.crossJoin(broadcast(tot))
+    val tot = scored.agg(struct(count(lit(1)).as("n"), sum(col("score_fp")).as("t"))).scalar()
+    scored
       .withColumn("is_tail",
-        (wide(col("score_fp")) * wide(col("n")) * lit(2) < wide(col("t"))).cast("int"))
+        (wide(col("score_fp")) * wide(tot.getField("n")) * lit(2) < wide(tot.getField("t")))
+          .cast("int"))
       .select(col("doc_id"), col("n_pairs"), col("score_fp"), col("is_tail"))
       .orderBy(col("score_fp").asc, col("doc_id").asc)
       .limit(50)
@@ -924,13 +924,13 @@ object Text {
         .select(col("doc_id"), col("lang"), col("b")))
     val cr = tb.groupBy(col("b")).agg(count(lit(1)).as("cr"))
     val ct = tb.filter(col("lang") === "en").groupBy(col("b")).agg(count(lit(1)).as("ct"))
-    val tot = tb.agg(count(lit(1)).as("crt"),
-      coalesce(sum(when(col("lang") === "en", 1L).otherwise(0L)), lit(0L)).as("ctt"))
+    val tot = tb.agg(struct(count(lit(1)).as("crt"),
+      coalesce(sum(when(col("lang") === "en", 1L).otherwise(0L)), lit(0L)).as("ctt"))).scalar()
     val rb = cr.join(ct, Seq("b"), "left")
       .withColumn("ct", coalesce(col("ct"), lit(0L)))
-      .crossJoin(broadcast(tot))
-      .withColumn("num", wide(col("ct") + 1) * wide(col("crt") + 256) * wide(lit(1048576L)))
-      .withColumn("den", wide(col("cr") + 1) * wide(col("ctt") + 256))
+      .withColumn("num",
+        wide(col("ct") + 1) * wide(tot.getField("crt") + 256) * wide(lit(1048576L)))
+      .withColumn("den", wide(col("cr") + 1) * wide(tot.getField("ctt") + 256))
       .withColumn("r", expr("num div den").cast("long"))
       .select(col("b"), col("r"))
     tb.join(broadcast(rb), Seq("b"))
@@ -1255,8 +1255,8 @@ object Text {
     *
     * Scale: one corpus scan to score; boundary work happens on the
     * distinct-score aggregate (bounded by the score codomain, ≤ ~10^6
-    * ppm values at any sf); the 1-row boundary frame broadcasts back; one
-    * final (source, tier) hash aggregate. */
+    * ppm values at any sf); the 1-row boundary struct attaches back as a
+    * scalar subquery; one final (source, tier) hash aggregate. */
   def q180QualityTiers(s: SparkSession, dir: String): DataFrame = {
     val scored = graft.Caches.persist(scoredDocs(s, dir))
     val wOrd = org.apache.spark.sql.expressions.Window.orderBy(col("score_ppm"))
@@ -1264,12 +1264,13 @@ object Text {
       .withColumn("cum", sum(col("cnt")).over(wOrd))
       .withColumn("tot", sum(col("cnt")).over(
         org.apache.spark.sql.expressions.Window.partitionBy()))
-      .agg(min(when(col("cum") * 3 >= col("tot"), col("score_ppm"))).as("b1"),
-        min(when(col("cum") * 3 >= col("tot") * 2, col("score_ppm"))).as("b2"))
-    scored.crossJoin(broadcast(bounds))
+      .agg(struct(min(when(col("cum") * 3 >= col("tot"), col("score_ppm"))).as("b1"),
+        min(when(col("cum") * 3 >= col("tot") * 2, col("score_ppm"))).as("b2")))
+      .scalar()
+    scored
       .withColumn("tier",
-        when(col("score_ppm") <= col("b1"), "tail")
-          .when(col("score_ppm") <= col("b2"), "middle")
+        when(col("score_ppm") <= bounds.getField("b1"), "tail")
+          .when(col("score_ppm") <= bounds.getField("b2"), "middle")
           .otherwise("head"))
       .groupBy(col("source"), col("tier"))
       .agg(count(lit(1)).as("n_docs"),
@@ -1337,10 +1338,10 @@ object Text {
     * k merge rounds iterate over that dictionary (≪ corpus; the classic
     * reason BPE training is tractable at web scale). Per round: one
     * map-side-combined pair count, a 1-row TakeOrderedAndProject argmax
-    * broadcast onto the dictionary (the q154 per-iteration-scalar
-    * pattern — the driver never holds data), and a `localCheckpoint` to
-    * keep the k-round lineage flat (round-7 gotcha: persist alone
-    * re-plans the deepening chain). */
+    * attached to the dictionary as a scalar subquery (the q154
+    * per-iteration scalar — no data is collected), and a
+    * `localCheckpoint` to keep the k-round lineage flat (round-7 gotcha:
+    * persist alone re-plans the deepening chain). */
   private def bpeTrain(s: SparkSession, dir: String): (Seq[DataFrame], DataFrame) =
     // Session-scoped train-once memo (VERDICT r9 item 2): q181/q182/q195/
     // q232 all consume this artifact; the first caller trains, the rest
@@ -1371,16 +1372,16 @@ object Text {
       merges += best.select(lit(r).as("step"), col("l").as("left_sym"),
         col("r").as("right_sym"), concat(col("l"), col("r")).as("merged"),
         col("pair_count"))
-      // LEFT join on true, not crossJoin: a corpus that EXHAUSTS its
+      // A scalar subquery, not a crossJoin: a corpus that EXHAUSTS its
       // mergeable pairs before k rounds (tiny corpora, late rounds) yields
-      // a 0-row argmax, and a cross join would silently empty the
-      // dictionary — the null guard keeps words unchanged instead. The
-      // oracle mirrors with LEFT JOIN ... ON TRUE.
+      // a 0-row argmax, which reads as NULL here where a cross join would
+      // silently empty the dictionary — the null guard keeps words
+      // unchanged instead. The oracle mirrors with LEFT JOIN ... ON TRUE.
       words = graft.Caches.trackCheckpoint(
-        words.join(broadcast(best.select(col("l"), col("r"))), lit(true), "left")
+        words.withColumn("b", best.select(struct(col("l"), col("r"))).scalar())
           .withColumn("syms", expr(
-            "CASE WHEN l IS NULL THEN syms " +
-              "ELSE replace(syms, '<' || l || '><' || r || '>', '<' || l || r || '>') END"))
+            "CASE WHEN b.l IS NULL THEN syms " +
+              "ELSE replace(syms, '<' || b.l || '><' || b.r || '>', '<' || b.l || b.r || '>') END"))
           .select(col("w"), col("freq"), col("syms"))
           .localCheckpoint())
     }
@@ -1493,7 +1494,7 @@ object Text {
     *
     * Scale: per round, TWO dictionary-sized aggregates (unit counts + pair
     * counts — one more than BPE, the price of the normalized score), a
-    * dictionary × 1-row broadcast argmax, and a pure-map symbol rewrite;
+    * scalar-subquery argmax, and a pure-map symbol rewrite;
     * the corpus is touched once for the word dictionary (q181's
     * tractability argument). The exhausted-pairs null guard mirrors q181:
     * a 0-row argmax leaves every word unchanged. */
@@ -1530,10 +1531,10 @@ object Text {
         col("r").as("right_sym"), concat(col("l"), col("r")).as("merged"),
         col("pair_count"), col("score_fp"))
       words = graft.Caches.trackCheckpoint(
-        words.join(broadcast(best.select(col("l"), col("r"))), lit(true), "left")
+        words.withColumn("b", best.select(struct(col("l"), col("r"))).scalar())
           .withColumn("syms", expr(
-            "CASE WHEN l IS NULL THEN syms " +
-              "ELSE replace(syms, '<' || l || '><' || r || '>', '<' || l || r || '>') END"))
+            "CASE WHEN b.l IS NULL THEN syms " +
+              "ELSE replace(syms, '<' || b.l || '><' || b.r || '>', '<' || b.l || b.r || '>') END"))
           .select(col("w"), col("freq"), col("syms"))
           .localCheckpoint())
     }
@@ -1849,7 +1850,7 @@ object Text {
     * zero identically in Spark and DuckDB (verified; both trunc). */
   private val lrProbSql: String =
     s"greatest(CAST(0 AS BIGINT), least(CAST($LrScale AS BIGINT), " +
-      s"((w0*x0 + w1*x1 + w2*x2 + w3*x3) div $LrScale + ${4 * LrScale}) div 8))"
+      s"((w.w0*x0 + w.w1*x1 + w.w2*x2 + w.w3*x3) div $LrScale + ${4 * LrScale}) div 8))"
 
   /** k batch-gradient steps of the CCNet/GPT-3-style learned quality
     * filter, trained IN-ENGINE (VERDICT r7 next-round #7) — the one
@@ -1862,9 +1863,9 @@ object Text {
     * multiply), update `wᵢ += Σ div (4n)` (η = ¼, truncating division).
     *
     * Scale: each step is ONE map-side-combined aggregate over the feature
-    * frame plus a 1-row broadcast of the weights — the q110 Lloyd-
-    * iteration shape; the driver never holds data. `localCheckpoint`
-    * keeps the k-step lineage flat (round-7 gotcha). */
+    * frame, with the weights (a 1-row `w` struct) attached as a scalar
+    * subquery — the q110 Lloyd-iteration shape; no data is collected.
+    * `localCheckpoint` keeps the k-step lineage flat (round-7 gotcha). */
   private def lrTrain(s: SparkSession, dir: String,
       trainFilter: Option[Column] = None): (Seq[DataFrame], DataFrame) = {
     val fAll = graft.Caches.persist(lrFeatures(s, dir))
@@ -1872,28 +1873,28 @@ object Text {
     // w.r.t. the calibration docs); every other caller trains on everything
     val f = trainFilter.map(fAll.filter).getOrElse(fAll)
     var w = graft.Caches.trackCheckpoint(
-      s.range(1).select(
-        lit(0L).as("w0"), lit(0L).as("w1"), lit(0L).as("w2"), lit(0L).as("w3"))
+      s.range(1).select(struct(
+        lit(0L).as("w0"), lit(0L).as("w1"), lit(0L).as("w2"), lit(0L).as("w3")).as("w"))
         .localCheckpoint())
     val steps = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     for (r <- 1 to LrRounds) {
-      val g = f.crossJoin(broadcast(w))
-        .withColumn("err", expr(s"y * $LrScale - $lrProbSql"))
-        .agg(count(lit(1)).as("n"),
-          sum(expr(s"(err * x0) div $LrScale")).as("g0"),
-          sum(expr(s"(err * x1) div $LrScale")).as("g1"),
-          sum(expr(s"(err * x2) div $LrScale")).as("g2"),
-          sum(expr(s"(err * x3) div $LrScale")).as("g3"))
+      val ws = w.scalar()
       w = graft.Caches.trackCheckpoint(
-        w.crossJoin(broadcast(g))
-          .select(
-            expr("w0 + g0 div (4 * n)").as("w0"),
-            expr("w1 + g1 div (4 * n)").as("w1"),
-            expr("w2 + g2 div (4 * n)").as("w2"),
-            expr("w3 + g3 div (4 * n)").as("w3"))
+        f.withColumn("w", ws)
+          .withColumn("err", expr(s"y * $LrScale - $lrProbSql"))
+          .agg(count(lit(1)).as("n"),
+            sum(expr(s"(err * x0) div $LrScale")).as("g0"),
+            sum(expr(s"(err * x1) div $LrScale")).as("g1"),
+            sum(expr(s"(err * x2) div $LrScale")).as("g2"),
+            sum(expr(s"(err * x3) div $LrScale")).as("g3"))
+          .withColumn("w", ws)
+          .select(struct(
+            expr("w.w0 + g0 div (4 * n)").as("w0"),
+            expr("w.w1 + g1 div (4 * n)").as("w1"),
+            expr("w.w2 + g2 div (4 * n)").as("w2"),
+            expr("w.w3 + g3 div (4 * n)").as("w3")).as("w"))
           .localCheckpoint())
-      steps += w.select(lit(r).as("step"),
-        col("w0"), col("w1"), col("w2"), col("w3"))
+      steps += w.select(lit(r).as("step"), col("w.*"))
     }
     (steps.toSeq, w)
   }
@@ -1970,7 +1971,7 @@ object Text {
     * threshold). One scan + one bounded agg (|sources| rows). */
   def q185LrConfusion(s: SparkSession, dir: String): DataFrame = {
     val (_, w) = lrTrain(s, dir)
-    lrFeatures(s, dir).crossJoin(broadcast(w))
+    lrFeatures(s, dir).withColumn("w", w.scalar())
       .withColumn("pred",
         (expr(lrProbSql) * lit(2) >= lit(LrScale)).cast("long"))
       .groupBy(col("source"))
@@ -2013,7 +2014,7 @@ object Text {
     * explicit zero guards. */
   def q187ThresholdSweep(s: SparkSession, dir: String): DataFrame = {
     val (_, w) = lrTrain(s, dir)
-    val scored = lrFeatures(s, dir).crossJoin(broadcast(w))
+    val scored = lrFeatures(s, dir).withColumn("w", w.scalar())
       .select(expr(lrProbSql).as("p"), col("y"))
       .groupBy(col("p"), col("y")).agg(count(lit(1)).as("c"))
     val thr = s.range(1, 8).select((col("id") * lit(LrScale / 8)).as("t"))
@@ -2247,7 +2248,7 @@ object Text {
     * Scale stance: one tokenize+explode scan persisted with three
     * map-side-combined aggregate consumers; the scoring join is
     * vocab-sized reduced frames joined on their own keys (w1, then w2) —
-    * never the token stream; 1-row total broadcast; final top-50 is
+    * never the token stream; the total is a scalar subquery; final top-50 is
     * TakeOrderedAndProject. No all-pairs step anywhere. */
   def q197PmiCollocations(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
@@ -2262,11 +2263,10 @@ object Text {
     val cxy = bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c_pair"))
     val cx = bg.groupBy(col("w1")).agg(count(lit(1)).as("cx"))
     val cy = bg.groupBy(col("w2")).agg(count(lit(1)).as("cy"))
-    val tot = bg.agg(count(lit(1)).as("n"))
+    val tot = bg.agg(count(lit(1))).scalar()
     cxy.filter(col("c_pair") >= 5)
       .join(cx, Seq("w1")).join(cy, Seq("w2"))
-      .crossJoin(broadcast(tot))
-      .withColumn("num", wide(col("c_pair")) * wide(col("n")) * wide(lit(1000000L)))
+      .withColumn("num", wide(col("c_pair")) * wide(tot) * wide(lit(1000000L)))
       .withColumn("den", wide(col("cx")) * wide(col("cy")))
       .select(col("w1"), col("w2"), col("c_pair"),
         expr("num div den").cast("long").as("pmi_ratio_ppm"))
@@ -2298,8 +2298,8 @@ object Text {
     * is still open-ended (Heaps 1978).
     *
     * Slices are equi-width in doc_id SPAN, not row rank: bucket =
-    * ((doc_id−lo)·10) div (hi−lo+1), computed per row against a broadcast
-    * 1-row bounds frame — a pure map, where a row_number() global rank
+    * ((doc_id−lo)·10) div (hi−lo+1), computed per row against a 1-row
+    * (lo, hi) scalar subquery — a pure map, where a row_number() global rank
     * would funnel the corpus through one partition. A token's decile is
     * the decile of its FIRST-occurrence doc (min doc_id per type — one
     * map-side-combined aggregate), so each type counts exactly once and
@@ -2312,10 +2312,10 @@ object Text {
   def q198VocabGrowth(s: SparkSession, dir: String): DataFrame = {
     val docs = graft.Caches.persist(Tables.documents(s, dir)
       .select(col("doc_id"), tokens(col("text")).as("toks")))
-    val bounds = docs.agg(
-      min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
+    val bounds = docs.agg(struct(
+      min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))).scalar()
     def dec(name: String): Column =
-      expr(s"(($name - lo) * 10) div (hi - lo + 1)").cast("long")
+      expr(s"(($name - b.lo) * 10) div (b.hi - b.lo + 1)").cast("long")
     // Tagged union → ONE decile aggregate feeding the 10-row cumulative
     // window (instead of two aggregates + a join the window would then
     // have to re-sort): type-birth rows carry new_types=1, doc rows carry
@@ -2323,11 +2323,11 @@ object Text {
     val typeBirths = docs
       .select(explode(col("toks")).as("tok"), col("doc_id"))
       .groupBy(col("tok")).agg(min(col("doc_id")).as("fd"))
-      .crossJoin(broadcast(bounds))
+      .withColumn("b", bounds)
       .select(dec("fd").as("decile"), lit(1L).as("nt"), lit(0L).as("m"), lit(0L).as("d"))
     val docMass = docs
       .select(col("doc_id"), size(col("toks")).cast("long").as("m"))
-      .crossJoin(broadcast(bounds))
+      .withColumn("b", bounds)
       .select(dec("doc_id").as("decile"), lit(0L).as("nt"), col("m"), lit(1L).as("d"))
     val perDecile = typeBirths.unionByName(docMass)
       .groupBy(col("decile"))
@@ -2389,8 +2389,8 @@ object Text {
     *
     * Scale stance: one tokenize scan persisted; (source, token) and
     * (token) counts are map-side-combined aggregates; the scoring join is
-    * reduced-frame × reduced-frame on the token key; 1-row corpus total
-    * broadcast. Every product is widened to DECIMAL(38,0) BEFORE
+    * reduced-frame × reduced-frame on the token key; the corpus total is
+    * a scalar subquery. Every product is widened to DECIMAL(38,0) BEFORE
     * multiplying — c_st·T reaches 10²⁶ at the 100 TB tier. */
   def q199SourceDivergence(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.types.DecimalType
@@ -2400,8 +2400,8 @@ object Text {
     val cst = st.groupBy(col("source"), col("tok")).agg(count(lit(1)).as("cst"))
     val ct = st.groupBy(col("tok")).agg(count(lit(1)).as("ct"))
     val tsrc = cst.groupBy(col("source")).agg(sum(col("cst")).as("tsrc"))
-    val tot = st.agg(count(lit(1)).as("ttot"))
-    cst.join(ct, Seq("tok")).join(tsrc, Seq("source")).crossJoin(broadcast(tot))
+    val tot = st.agg(count(lit(1))).scalar()
+    cst.join(ct, Seq("tok")).join(tsrc, Seq("source")).withColumn("ttot", tot)
       .groupBy(col("source"))
       .agg(
         count(lit(1)).as("vocab"),
@@ -2470,7 +2470,7 @@ object Text {
     * one map-side-combined aggregate; df is a second reduced aggregate of
     * postings; probe terms join postings on the TERM key (an equi-join
     * that hash-partitions by term — the classic distributed inverted
-    * index); corpus totals are a 1-row broadcast; per-(probe, cand)
+    * index); corpus totals are a scalar subquery; per-(probe, cand)
     * scores reduce on their own key and the top-5 window partitions by
     * probe. Never doc×doc — only term-matched pairs exist.
     *
@@ -2490,19 +2490,19 @@ object Text {
       .groupBy(col("doc_id"), col("tok"))
       .agg(count(lit(1)).as("tf"), max(col("dl")).as("dl"))
     val df = postings.groupBy(col("tok")).agg(count(lit(1)).as("df"))
-    val stats = toks.agg(count(lit(1)).as("nd"),
-      coalesce(sum(size(col("toks")).cast("long")), lit(0L)).as("tt"))
+    val stats = toks.agg(struct(count(lit(1)).as("nd"),
+      coalesce(sum(size(col("toks")).cast("long")), lit(0L)).as("tt"))).scalar()
     // Pre-score each posting: decimal widening runs ONCE per posting row
     // (map-side, corpus-sized), and contrib is already a long before the
     // probe fan-out ever multiplies the row count.
     val scoredPostings = graft.Caches.persist(postings
       .join(df, Seq("tok"))
-      .crossJoin(broadcast(stats))
+      .withColumn("st", stats)
       .withColumn("tfsat_fp", expr(
-        "(CAST(44 AS DECIMAL(38,0)) * tf * tt * 1048576) div " +
-          "(CAST(20 AS DECIMAL(38,0)) * tf * tt + CAST(6 AS DECIMAL(38,0)) * tt " +
-          "+ CAST(18 AS DECIMAL(38,0)) * dl * nd)"))
-      .withColumn("idf_fp", expr("((nd - df + 1) * 1048576) div (df + 1)"))
+        "(CAST(44 AS DECIMAL(38,0)) * tf * st.tt * 1048576) div " +
+          "(CAST(20 AS DECIMAL(38,0)) * tf * st.tt + CAST(6 AS DECIMAL(38,0)) * st.tt " +
+          "+ CAST(18 AS DECIMAL(38,0)) * dl * st.nd)"))
+      .withColumn("idf_fp", expr("((st.nd - df + 1) * 1048576) div (df + 1)"))
       .withColumn("contrib",
         expr("(CAST(idf_fp AS DECIMAL(38,0)) * tfsat_fp) div 1048576"))
       .select(col("tok"), col("doc_id"), col("contrib")))
@@ -2732,7 +2732,7 @@ object Text {
     * per bucket.
     *
     * Buckets are equal-width over the OBSERVED score range (1-row min/max
-    * bounds broadcast, the q162 boundary idiom), not over the absolute
+    * bounds as a scalar subquery, as q162's stats), not over the absolute
     * [0, 2^20] scale: the hard sigmoid concentrates an entire corpus's
     * scores in a narrow mid-band (at sf0.01 ALL 500 docs share one
     * absolute octile), so absolute buckets degenerate to a 1-row curve;
@@ -2749,12 +2749,12 @@ object Text {
     import org.apache.spark.sql.types.DecimalType
     def wide(c: Column): Column = c.cast(DecimalType(38, 0))
     val (_, w) = lrTrain(s, dir)
-    val scored = lrFeatures(s, dir).crossJoin(broadcast(w))
+    val scored = lrFeatures(s, dir).withColumn("w", w.scalar())
       .select(expr(lrProbSql).as("p"), col("y"))
       .groupBy(col("p"), col("y")).agg(count(lit(1)).as("c"))
-    val bounds = scored.agg(min(col("p")).as("mn"), max(col("p")).as("mx"))
-    scored.crossJoin(broadcast(bounds))
-      .withColumn("bucket", expr("least(((p - mn) * 8) div (mx - mn + 1), 7)"))
+    val bounds = scored.agg(struct(min(col("p")).as("mn"), max(col("p")).as("mx"))).scalar()
+    scored.withColumn("b", bounds)
+      .withColumn("bucket", expr("least(((p - b.mn) * 8) div (b.mx - b.mn + 1), 7)"))
       .groupBy(col("bucket"))
       .agg(
         sum(col("c")).as("n_docs"),
@@ -2808,14 +2808,14 @@ object Text {
     * is reported in exact ppm; the spec asserts it clears 1−α minus
     * finite-sample slack, the oracle pins every value bit-for-bit.
     *
-    * Scale: training is the q184 loop (one aggregate + 1-row broadcast per
-    * step); scoring is column algebra over one corpus scan; q̂ broadcasts
-    * into the coverage aggregate (allowlisted 1-row broadcast, as the
-    * LR weight joins). */
+    * Scale: training is the q184 loop (one aggregate + a weights scalar
+    * subquery per step); scoring is column algebra over one corpus scan;
+    * q̂ attaches to the coverage aggregate as a scalar subquery, as the
+    * weights do. */
   def q228SplitConformal(s: SparkSession, dir: String): DataFrame = {
     val (_, w) = lrTrain(s, dir, Some(col("doc_id") % 4 < 2))
     val scored = graft.Caches.persist(
-      lrFeatures(s, dir).crossJoin(broadcast(w))
+      lrFeatures(s, dir).withColumn("w", w.scalar())
         .withColumn("p", expr(lrProbSql))
         .withColumn("a", expr(s"y * ($LrScale - p) + (1 - y) * p"))
         .select((col("doc_id") % 4).as("slice"), col("a")))
@@ -2832,15 +2832,17 @@ object Text {
       // k = ⌈0.9 · (n+1)⌉, clamped to n (tiny-calib degenerate case)
       .withColumn("k", least(expr("(9 * (n_calib + 1) + 9) div 10"), col("n_calib")))
       .filter(col("cum") - col("cnt") < col("k") && col("k") <= col("cum"))
-      .select(col("a").as("qhat"), col("n_calib"), col("k"))
+      .select(struct(col("a").as("qhat"), col("n_calib"), col("k"))).scalar()
+    // q̂ has no row only when the calibration slice is empty: the scalar is
+    // then NULL and the filter empties the test side, as a cross join would
     scored.filter(col("slice") === 3)
-      .crossJoin(broadcast(qhat))
+      .withColumn("q", qhat).filter(col("q").isNotNull)
       .agg(
-        first(col("n_calib")).as("n_calib"),
-        first(col("k")).as("k"),
-        first(col("qhat")).as("qhat"),
+        first(col("q.n_calib")).as("n_calib"),
+        first(col("q.k")).as("k"),
+        first(col("q.qhat")).as("qhat"),
         count(lit(1)).as("n_test"),
-        coalesce(sum(when(col("a") <= col("qhat"), 1L).otherwise(0L)), lit(0L))
+        coalesce(sum(when(col("a") <= col("q.qhat"), 1L).otherwise(0L)), lit(0L))
           .as("n_covered"))
       .select(col("n_calib"), col("k"), col("qhat"), col("n_test"), col("n_covered"),
         when(col("n_test") === 0L, lit(0L))

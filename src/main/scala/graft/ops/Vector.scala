@@ -2430,7 +2430,7 @@ object Vector {
       .select(col("vec_id"),
         transform(col("embedding"), x => round(x.cast("double") * KmFP, 0)).as("vec"))
       .withColumn("nrm2", dot(col("vec"), col("vec"))))
-    val nF = qv.agg(count(lit(1)).as("n")) // 1-row corpus-size bound
+    val n = qv.agg(count(lit(1))).scalar()
     def score(pairs: DataFrame): DataFrame =
       pairs
         .join(qv.select(col("vec_id").as("u"), col("vec").as("uvec"), col("nrm2").as("un")), Seq("u"))
@@ -2449,12 +2449,11 @@ object Vector {
     // ring segment and descent stalls at ~0 recall (measured: ring init
     // left the sf0.01 graph at 1/20 probe overlap after 2 rounds; the
     // q52 affine-degeneracy finding, same mechanism)
-    val init = qv.select(col("vec_id").as("u")).crossJoin(broadcast(nF))
-      .select(col("u"), explode(sequence(lit(1), lit(NnK))).as("j"), col("n"))
+    val init = qv.select(col("vec_id").as("u"), explode(sequence(lit(1), lit(NnK))).as("j"))
       .select(col("u"),
         (conv(substring(md5(concat(col("u").cast("string"), lit("#"),
           col("j").cast("string")).cast("binary")), 1, 8), 16, 10).cast("long")
-          % col("n")).as("v"))
+          % n).as("v"))
       .filter(col("v") =!= col("u"))
       .distinct()
     val initEdges = graft.Caches.trackCheckpoint(init.localCheckpoint())
@@ -2620,9 +2619,7 @@ object Vector {
     // greedy local minimum on isotropic data (measured: the beam converged
     // by hop 4 and missed every rank-1) — multi-entry is the flat-graph
     // stand-in for the long-range links HNSW's hierarchy provides
-    val entry = qv.agg(count(lit(1)).as("n"))
-      .select(explode(sequence(lit(0), lit(3))).as("i"), col("n"))
-      .select((col("i") * expr("n div 4")).as("v")) // 4-row bounds frame
+    val n = qv.agg(count(lit(1))).scalar()
     // r15, guide §3.1/§2.4: the beam and candidate frames are BOUNDED by
     // construction (≤ K·(K_nn+1)·B rows), so they ride BROADCAST hints into
     // the graph-expansion joins — the corpus-scale side streams in place
@@ -2650,7 +2647,9 @@ object Vector {
     val wBeam = Window.partitionBy(col("query_id")).orderBy(col("d2").asc, col("v").asc)
     // entry beam scored once (hop 1 previously scored it inside cand)
     var beam = graft.Caches.trackCheckpoint(
-      scoreNbrs(pids.crossJoin(broadcast(entry))
+      scoreNbrs(pids
+          .select(col("query_id"), explode(sequence(lit(0), lit(3))).as("i"), n.as("n"))
+          .select(col("query_id"), (col("i") * expr("n div 4")).as("v"))
           .join(qv.select(col("vec_id").as("v"), col("vec").as("vvec"),
             col("nrm2").as("vn")), Seq("v")))
         .localCheckpoint()) // (query_id, v, d2)

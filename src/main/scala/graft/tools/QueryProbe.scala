@@ -13,8 +13,9 @@ import org.apache.spark.sql.SparkSession
   * cores is compute-bound (expression work, guide §4).
   *
   * Usage: QueryProbe [sfDir] [passes] [nameSubstring...]
-  * Prints one JSON line per query (last pass's metrics, min wall over
-  * passes) and a closing summary line.
+  * Prints one JSON line per query (the fastest pass's metrics) and a
+  * closing summary line. Memos are released after every pass, so each
+  * pass measures the query's own training.
   */
 object QueryProbe {
   private class Acc extends SparkListener {
@@ -57,7 +58,7 @@ object QueryProbe {
       // warmup pass at the smallest sf (JIT/codegen), as Bench does
       try fn(spark, "/root/testdata/sf0.001").count()
       catch { case scala.util.control.NonFatal(_) => () }
-      finally graft.Caches.releaseAll()
+      finally { graft.Caches.releaseAll(); graft.Caches.releaseMemos() }
       var best = Double.MaxValue
       var line = ""
       (1 to passes).foreach { _ =>
@@ -66,7 +67,7 @@ object QueryProbe {
         try fn(spark, dir).count()
         catch { case scala.util.control.NonFatal(e) =>
           System.err.println(s"PROBE FAIL $name: ${e.getMessage}") }
-        finally graft.Caches.releaseAll()
+        finally { graft.Caches.releaseAll(); graft.Caches.releaseMemos() }
         val w = (System.nanoTime() - t0) / 1e9
         Thread.sleep(150) // let the listener bus drain before reading counters
         if (w < best) {

@@ -115,119 +115,70 @@ class PlanSpec extends SparkSpec {
     }
   }
 
+  /** Queries whose final plan may hold a BroadcastNestedLoopJoin. It is
+    * legitimate only where a query intentionally scans query-points ×
+    * corpus (brute-force ANN), probes with a non-equi condition against a
+    * broadcast-sized side, or densifies a bounded grid. A 1-row value
+    * attaches as a scalar subquery and needs no entry. */
+  private val nestedLoopOk = Set("q50_cosine_topk", "q51_ivf_topk",
+    // embeds q50's declared brute-force baseline as the recall ground truth
+    "q111_ann_recall",
+    // int8-quantized brute-force scan + the embedded q50 float baseline —
+    // both the same declared query-points × corpus shape as q50/q111
+    "q191_int8_quant_recall",
+    // 8-row broadcast boundary probe (v <= b_k) over the bounded value frame
+    "q162_equidepth_histogram",
+    // 7-row broadcast threshold frame over the bounded (p, y) reduced
+    // domain (q162's boundary-probe argument)
+    "q187_threshold_sweep",
+    // ≤|domain|-row broadcast global-value frame densifying the bounded
+    // (QI-cell × sensitive-value) grid (the q162 boundary-probe argument)
+    "q230_t_closeness",
+    // order-statistic range probe (lo ≤ k ≤ hi) into the broadcast
+    // |distinct scores| pooled-quantile frame (the q162 bounded-frame
+    // boundary-probe argument)
+    "q278_quantile_normalize",
+    // the ≤ K² fixed-probe all-pairs audit grid (non-equi self-join of
+    // two ≤ K-row broadcast frames — an eval workload, corpus-independent)
+    "q289_jl_projection_audit",
+    // q278's range probe with the pooled frame GRID-bounded by
+    // logBucketScore (≤ 8·63 rows regardless of corpus cardinality —
+    // the bound is a law-tested result column)
+    "q283_logbucket_normalize",
+    // fixed 40-doc probe pair enumeration (da < db on the broadcast
+    // ≤40-row size frame — the q200 fixed-benchmark argument) + the
+    // |grid|×|bins| ≈ 69×10 planner cross onto broadcast 10-row bins
+    "q279_lsh_band_planner",
+    // q50's declared brute-force query-points × corpus scan (mining pass)
+    "q239_hard_negatives",
+    // q50's declared brute-force broadcast query sub-vectors × corpus
+    // sub-vector scan (per-slot IVF probes at real scale)
+    "q249_maxsim_topk",
+    // q50's declared brute-force broadcast probe-queries × corpus scan
+    // (the retrieval pass being graded; IVF probes at real scale)
+    "q265_ndcg_retrieval",
+    // q265's identical scored pass (shared shape, different metrics)
+    "q268_retrieval_mrr_recall",
+    // embeds q268's brute-force pass as the REFERENCE the IVF probe
+    // path is gated against (the q111 shape at k=10); the IVF side
+    // itself is the equi-join on centroid id — no BNLJ of its own
+    // beyond the 8-row broadcast centroid assignment
+    "q274_ivf_retrieval_eval",
+    // q265/q268's identical scored pass (shared shape, MAP metric)
+    "q275_map_at_k",
+    // embeds the same brute-force reference pass as q274, graded against
+    // the trained-k-means IVF equi-join side (VERDICT r11 items 1+5)
+    "q277_trained_ivf_eval",
+    // q50's declared brute-force broadcast query × corpus scan as the
+    // exact integer-L2 grading reference for the fully-trained IVF-PQ;
+    // the index side attaches its codebooks as scalar subqueries and has
+    // no nested-loop join (pinned by the IVF-PQ attach test below)
+    "q282_trained_ivfpq_recall",
+    // |sources|-row aggregate × broadcast 200-token vocab densification
+    // (the q230 bounded-grid shape) before the JS log chains
+    "q256_js_divergence")
+
   test("plan lint: no accidental cartesian or nested-loop joins across ALL queries") {
-    // BroadcastNestedLoop is legitimate only where a query intentionally
-    // scans query-points × corpus (brute-force ANN), probes with a
-    // non-equi condition against a broadcast-sized side, or cross-joins a
-    // single broadcast scalar row (q49's corpus doc count).
-    val nestedLoopOk = Set("q50_cosine_topk", "q51_ivf_topk", "q49_tfidf_top_terms",
-      // embeds q50's declared brute-force baseline as the recall ground truth
-      "q111_ann_recall",
-      // int8-quantized brute-force scan + the embedded q50 float baseline —
-      // both the same declared query-points × corpus shape as q50/q111
-      "q191_int8_quant_recall",
-      // 1-row broadcast max(dday) cap replacing a global window (ADVICE r4)
-      "q142_rolling_bitmap",
-      // Layout.normalized attaches a 1-row broadcast min/max bounds frame
-      "q152_layout_pruning",
-      // 1-row broadcast (mn,mx,tot) stats frame + 8-row broadcast boundary
-      // probe (v <= b_k) — both bounded-constant sides by construction
-      "q162_equidepth_histogram",
-      // 1-row broadcast (n, total-score) corpus frame for the is_tail flag
-      "q169_lm_quality",
-      // 1-row broadcast (Cr, Ct) model totals onto the 256-row bucket table
-      "q170_dsir_select",
-      // 1-row broadcast (b1, b2) tertile-boundary frame (selected cells)
-      "q180_quality_tiers",
-      // 1-row broadcast weight vector (train: per-step; score: final) —
-      // the q110 Lloyd-iteration scalar-broadcast shape
-      "q184_lr_train",
-      "q185_lr_confusion",
-      // 1-row weights + 7-row broadcast threshold frame over the bounded
-      // (p, y) reduced domain (q162's boundary-probe argument)
-      "q187_threshold_sweep",
-      // 1-row weights + 1-row broadcast (mn, mx) score-bounds frame over
-      // the bounded (p, y) reduced domain (q162/q187's argument)
-      "q211_calibration_curve",
-      // 1-row broadcast total-bigram count onto the vocab-sized pair frame
-      "q197_pmi_collocations",
-      // 1-row broadcast (lo, hi) id-span bounds — the q152 normalized-bounds shape
-      "q198_vocab_growth",
-      // 1-row broadcast corpus token total onto the (source, token) reduced frame
-      "q199_source_divergence",
-      // 1-row broadcast (N docs, T tokens) corpus stats onto the postings join
-      "q200_bm25_retrieval",
-      // 1-row broadcast exact-join-size frame onto the 4-row dot-product frame
-      "q206_cms_join_size",
-      // 1-row broadcast final weights (the q184 shape) + 1-row broadcast
-      // conformal-threshold frame onto the test slice
-      "q228_split_conformal",
-      // ≤|domain|-row broadcast global-value frame densifying the bounded
-      // (QI-cell × sensitive-value) grid (the q162 boundary-probe argument)
-      "q230_t_closeness",
-      // order-statistic range probe (lo ≤ k ≤ hi) into the broadcast
-      // |distinct scores| pooled-quantile frame (the q162 bounded-frame
-      // boundary-probe argument)
-      "q278_quantile_normalize",
-      // two 1-row broadcast bounds frames (n_total, w_hat) onto the ≤ K-row
-      // surviving-counter frame (the q133/q142 global-scalar shape)
-      "q285_mg_heavy_hitters",
-      // 1-row broadcast corpus-size frame (ring init) + the declared
-      // fixed-probe × corpus brute grading scan (the q274/q277/q282 shape)
-      "q287_nndescent_graph",
-      // 1-row broadcast entry-point frame onto the fixed probe frame +
-      // q287's declared brute grading scan
-      "q288_graph_beam_search",
-      // the ≤ K² fixed-probe all-pairs audit grid (non-equi self-join of
-      // two ≤ K-row broadcast frames — an eval workload, corpus-independent)
-      "q289_jl_projection_audit",
-      // q278's range probe with the pooled frame GRID-bounded by
-      // logBucketScore (≤ 8·63 rows regardless of corpus cardinality —
-      // the bound is a law-tested result column)
-      "q283_logbucket_normalize",
-      // fixed 40-doc probe pair enumeration (da < db on the broadcast
-      // ≤40-row size frame — the q200 fixed-benchmark argument) + the
-      // |grid|×|bins| ≈ 69×10 planner cross onto broadcast 10-row bins
-      "q279_lsh_band_planner",
-      // 1-row × 1-row sketch-pair join (two 64-element bottom-k arrays)
-      "q237_sketch_set_algebra",
-      // q50's declared brute-force query-points × corpus scan (mining pass)
-      "q239_hard_negatives",
-      // q50's declared brute-force broadcast query sub-vectors × corpus
-      // sub-vector scan (per-slot IVF probes at real scale)
-      "q249_maxsim_topk",
-      // q50's declared brute-force broadcast probe-queries × corpus scan
-      // (the retrieval pass being graded; IVF probes at real scale)
-      "q265_ndcg_retrieval",
-      // q265's identical scored pass (shared shape, different metrics)
-      "q268_retrieval_mrr_recall",
-      // embeds q268's brute-force pass as the REFERENCE the IVF probe
-      // path is gated against (the q111 shape at k=10); the IVF side
-      // itself is the equi-join on centroid id — no BNLJ of its own
-      // beyond the 8-row broadcast centroid assignment
-      "q274_ivf_retrieval_eval",
-      // q265/q268's identical scored pass (shared shape, MAP metric)
-      "q275_map_at_k",
-      // embeds the same brute-force reference pass as q274, graded against
-      // the trained-k-means IVF equi-join side (VERDICT r11 items 1+5)
-      "q277_trained_ivf_eval",
-      // q50's declared brute-force broadcast query × corpus scan as the
-      // exact integer-L2 grading reference for the fully-trained IVF-PQ;
-      // the index side attaches its codebooks as scalar subqueries and has
-      // no nested-loop join (pinned by the IVF-PQ attach test below)
-      "q282_trained_ivfpq_recall",
-      // 1-row broadcast base-chain conversion probability onto the 4-row
-      // removal frame (the q133/q142 global-scalar shape)
-      "q260_markov_attribution",
-      // 1-row broadcast order-count frame onto the frequent-rule frame
-      // (ADVICE r9: replaces the eager .count())
-      "q245_assoc_rules",
-      // same 1-row broadcast order-count frame onto the frequent-pair
-      // frame (VERDICT r10 item 3: q118 ports the q245 fix)
-      "q118_basket_pairs",
-      // |sources|-row aggregate × broadcast 200-token vocab densification
-      // (the q230 bounded-grid shape) before the JS log chains
-      "q256_js_divergence")
     val offenders = queryPlans.flatMap {
       case (name, _, Right(p)) =>
         val cartesian = p.contains("CartesianProduct")
@@ -236,6 +187,15 @@ class PlanSpec extends SparkSpec {
       case _ => None // streaming queries execute eagerly; skip
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
+  test("plan lint: every nested-loop allowlist entry names a query whose plan needs it") {
+    val withBnlj = queryPlans.collect {
+      case (name, _, Right(p)) if p.contains("BroadcastNestedLoopJoin") => name
+    }.toSet
+    val dead = nestedLoopOk.filterNot(q => SparkEntry.queries.contains(q) && withBnlj(q))
+    assert(dead.isEmpty,
+      s"allowlist entries without a nested-loop join: ${dead.toSeq.sorted.mkString(", ")}")
   }
 
   /** The plan strings of every `node` (a physical node name) a query's SQL
@@ -295,16 +255,25 @@ class PlanSpec extends SparkSpec {
     assert(stray.isEmpty, s"q282 nested-loop joins besides the brute scan:\n${stray.mkString("\n")}")
   }
 
-  test("plan lint: graph loop scalars attach without condition-less nested-loop joins") {
-    // Node counts, q234's seed count, q214's total weight and q154's
-    // per-round dangling share attach as scalar subqueries; a 1-row
-    // crossJoin would plan as a BroadcastNestedLoopJoin with no condition.
+  test("plan lint: 1-row scalars attach without condition-less nested-loop joins") {
+    // Node counts, totals, bounds, trained weights and per-round argmaxes
+    // attach as scalar subqueries; a 1-row crossJoin or join on true
+    // would plan as a BroadcastNestedLoopJoin with no condition. Memos are
+    // dropped first so BPE training runs inside the walked executions.
+    Caches.releaseMemos()
     val bare = "^BroadcastNestedLoopJoin Build(Left|Right), \\w+$".r
-    for ((q, bnlj) <- Seq("q117" -> nestedLoops(Graph.q117Pagerank(spark, sf())),
-        "q154" -> nestedLoops(Graph.q154PagerankDangling(spark, sf())),
-        "q214" -> nestedLoops(Graph.q214Modularity(spark, sf())),
-        "q234" -> nestedLoops(Graph.q234PersonalizedPagerank(spark, sf())))) {
-      val stray = bnlj.filter(bare.findFirstIn(_).isDefined)
+    val queries = Seq("q117_pagerank", "q154_pagerank_dangling", "q214_modularity",
+      "q234_personalized_pagerank", "q49_tfidf_top_terms", "q118_basket_pairs",
+      "q142_rolling_bitmap", "q152_layout_pruning", "q169_lm_quality", "q170_dsir_select",
+      "q180_quality_tiers", "q181_bpe_train", "q184_lr_train", "q185_lr_confusion",
+      "q197_pmi_collocations", "q198_vocab_growth", "q199_source_divergence",
+      "q200_bm25_retrieval", "q206_cms_join_size", "q211_calibration_curve",
+      "q228_split_conformal", "q237_sketch_set_algebra", "q245_assoc_rules",
+      "q248_wordpiece_train", "q260_markov_attribution", "q285_mg_heavy_hitters",
+      "q287_nndescent_graph", "q288_graph_beam_search")
+    for (q <- queries) {
+      val stray = nestedLoops(SparkEntry.queries(q)(spark, sf()))
+        .filter(bare.findFirstIn(_).isDefined)
       assert(stray.isEmpty, s"$q condition-less nested-loop joins:\n${stray.mkString("\n")}")
     }
   }
