@@ -14,10 +14,12 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *   // or: .withExtensions(new GraftExtensions)
   * }}}
   *
-  * so `graft_dot` and `graft_shingles5` resolve in plain SQL text on a
-  * cluster where the user never calls [[GraftExtensions.register]] (e.g.
-  * thrift-server / SQL-only deployments). The per-session `register` path
-  * stays for the driver contract's local sessions.
+  * so every native function of the one table below (`graft_dot`,
+  * `graft_shingles5`, `graft_shingle_hashes` and `graft_minhash`) resolves
+  * in plain SQL text on a cluster where the user never calls
+  * [[GraftExtensions.register]] (e.g. thrift-server / SQL-only
+  * deployments). The per-session `register` path stays for the driver
+  * contract's local sessions.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
@@ -30,7 +32,9 @@ object GraftExtensions {
   /** Every native function: SQL name, expression class, builder. */
   private val functions: Seq[(String, Class[_], Seq[Expression] => Expression)] = Seq(
     ("graft_dot", classOf[DotProduct], exprs => DotProduct(exprs.head, exprs(1))),
-    ("graft_shingles5", classOf[Shingles5], exprs => Shingles5(exprs.head)))
+    ("graft_shingles5", classOf[Shingles5], exprs => Shingles5(exprs.head)),
+    ("graft_shingle_hashes", classOf[ShingleHashes], exprs => ShingleHashes(exprs.head)),
+    ("graft_minhash", classOf[MinHash], exprs => MinHash(exprs.head)))
 
   /** Register every native function the session's function registry lacks
     * (Spark 4's Column API no longer exposes raw Expressions, so the

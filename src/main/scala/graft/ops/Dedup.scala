@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.Tables
+import graft.functions.MinHash
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -73,103 +74,105 @@ object Dedup {
       |  CAST(sum(CASE WHEN n > 1 THEN n ELSE 0 END) AS BIGINT) AS n_dup_docs
       |FROM (SELECT md5(text) AS h, count(*) AS n FROM documents GROUP BY 1) g""".stripMargin
 
-  private val NumHashes = 8
-  private val BandRows = 2 // 4 bands × 2 rows
-  // Universal-hash family for the 8 minhash functions: m_i = (A_i·h1 +
-  // B_i·h2 + C_i) mod P over the two 32-bit halves (h1,h2) of the shingle
-  // md5's first 16 hex chars. 16-bit coefficients keep every product ≤ 2⁴⁸
-  // — exact int64 in both engines — and P = 2³¹−1 keeps minima < 2³¹ so a
-  // 2-row band packs into one BIGINT (m·2³¹ + m'). Replaces r1's 8 md5
-  // re-digests per shingle row (the dominant q46 cost at sf0.1: ~32M extra
-  // digests) with 2 hex-parses + 8 fused multiply-adds.
-  private val HashP = 2147483647L
-  private val HashA = Seq(45007L, 50021L, 53003L, 57037L, 60013L, 63029L, 49999L, 54001L)
-  private val HashB = Seq(39041L, 42043L, 46049L, 48073L, 51061L, 55057L, 58067L, 61051L)
-  private def hashC(i: Int): Long = i * 7919L
+  // 4 bands × 2 rows over the 8 minima of [[graft.functions.MinHash]],
+  // whose hash family minsSql replays in the oracles
+  private val NumHashes = MinHash.NumHashes
+  private val BandRows = 2
 
-  /** One row per (doc_id, distinct 5-gram shingle hash) — the shared base
-    * for signatures and Jaccard counting. Only the 32-hex md5 survives past
-    * this point: the raw shingle string is hashed and dropped immediately,
-    * so every downstream shuffle (signature agg, the Jaccard equality join)
-    * carries a fixed-width key instead of arbitrary-length text. Jaccard on
-    * hashes ≡ Jaccard on shingles modulo md5 collisions, and the oracle
-    * applies the identical transformation.
-    *
-    * Built on [[Text.docShingles]]: the documents shuffle by doc_id (one row
-    * per document), and each is shingled in place by the native kernel,
-    * which already drops a document's repeated grams — no token rows, no
-    * window, no dedup aggregate. The result stays hash-partitioned by
-    * doc_id, so the per-document signature agg needs no further shuffle.
-    * Digesting happens exactly once per shingle; the 8 minhash "functions"
-    * are integer universal hashes over hex chunks of hg (see HashA/HashB
-    * above), not re-digests. */
+  /** One row per (doc_id, distinct 5-gram shingle hash): the exploded base
+    * of the queries that join or count per shingle (q106, q109, q196's
+    * exact truth, q279). Only the 32-hex md5 exists past the kernel
+    * ([[Text.docShingleHashes]]: documents shuffle by doc_id, then each is
+    * tokenized and hashed in place), so every downstream shuffle carries a
+    * fixed-width key instead of arbitrary-length text. Jaccard on hashes ≡
+    * Jaccard on shingles modulo md5 collisions, and the oracle applies the
+    * identical transformation. */
   private def hashedShingles(s: SparkSession, dir: String): DataFrame =
-    Text.docShingles(Tables.documents(s, dir))
-      .select(col("doc_id"), md5(col("g").cast("binary")).as("hg"))
+    Text.docShingleHashes(Tables.documents(s, dir))
 
   private def hashedShinglesSql: String =
     s"""hx AS (
        |  SELECT doc_id, md5(g) AS hg
        |  FROM (SELECT doc_id, unnest(${Text.shingles5Sql(Text.tokensSql)}) AS g FROM documents) ex)""".stripMargin
 
-  /** MinHash + LSH near-duplicate pairs, Jaccard-verified.
+  /** The MinHash sketch: one persisted row per document, `(doc_id, hs, sz,
+    * m)` — its distinct shingle hashes `hs` ([[Text.shingleHashes]]), their
+    * count `sz` and the 8 minima `m` ([[graft.functions.MinHash]]), all
+    * computed in place after one doc_id shuffle of the documents. Nothing
+    * per shingle is exploded, aggregated or joined: bands read `m`, and the
+    * Jaccard verify intersects two `hs` arrays. Spark's CacheManager
+    * matches by canonical plan, so q48 (which embeds q46) and repeated
+    * invocations share one cached table until the harness's post-query
+    * `Caches.releaseAll`.
     *
-    * shingle(5-gram) → md5 once → 8× integer minhash (universal hash of the
-    * md5's hex chunks) → 4 bands of 2 packed into BIGINT keys → self-join on
-    * (band_idx, band_val) → Jaccard on candidate pairs via a hash-equality
-    * join (no arrays carried through shuffles) → keep ≥ 0.5. The band join
-    * is the only pairwise step and touches only colliding buckets;
-    * everything aggregates with map-side combine — the 100 TB-safe LSH
-    * shape. */
-  def q46MinhashLshPairs(s: SparkSession, dir: String): DataFrame = {
-    // hx feeds three consumers (signatures + both sides of the Jaccard
-    // join); persist so the tokenize/shingle/hash pipeline runs once.
-    // Spark's CacheManager matches by canonical plan, so q48 (which embeds
-    // this query) and repeated invocations reuse the same cached table —
-    // a few MB per sf dir — until the harness's post-query Caches.releaseAll.
-    // The cluster-scale analogue is materializing the signature table to
-    // storage between the sketch and verify stages.
-    val hx = graft.Caches.persist(hashedShingles(s, dir))
-    val h1 = conv(substring(col("hg"), 1, 8), 16, 10).cast("long")
-    val h2 = conv(substring(col("hg"), 9, 8), 16, 10).cast("long")
-    val minCols = (0 until NumHashes)
-      .map(i => min((h1 * HashA(i) + h2 * HashB(i) + hashC(i)) % HashP).as(s"m$i"))
-    val sigs = hx.groupBy(col("doc_id"))
-      .agg(minCols.head, (minCols.tail :+ count(lit(1)).as("sz")): _*)
-    val nBands = NumHashes / BandRows
-    val bandStructs = (0 until nBands).map { b =>
+    * Documents with no 5-gram (under 5 tokens) are dropped AFTER the
+    * persist: their minima are `Long.MaxValue`, which would overflow the
+    * band packing, and a filter placed before the persist is pushed under
+    * the doc_id shuffle, where the kernels run a second time in the scan
+    * task. */
+  private def sketches(s: SparkSession, dir: String): DataFrame =
+    graft.Caches.persist(Tables.documents(s, dir).repartition(col("doc_id"))
+      .select(col("doc_id"), Text.shingleHashes(Text.tokens(col("text"))).as("hs"))
+      .select(col("doc_id"), col("hs"), size(col("hs")).cast("long").as("sz"),
+        call_function("graft_minhash", col("hs")).as("m")))
+      .filter(col("sz") > 0)
+
+  /** The LSH band rows of a sketch: 4 bands of 2 minima, each packed into
+    * one BIGINT `band_val`. `sz` rides along so candidate pairs carry both
+    * Jaccard denominators without joining back. */
+  private def bands(sk: DataFrame): DataFrame = {
+    val packed = (0 until NumHashes / BandRows).map { b =>
       struct(lit(b).as("band_idx"),
-        (col(s"m${BandRows * b}") * lit(2147483648L) + col(s"m${BandRows * b + 1}")).as("band_val"))
+        (col("m").getItem(BandRows * b) * lit(2147483648L) + col("m").getItem(BandRows * b + 1))
+          .as("band_val"))
     }
-    // sz rides along with each band row so candidate pairs carry both
-    // signature sizes — the Jaccard denominator needs no extra joins back
-    // to sigs (two fewer shuffles; sz is functionally dependent on doc_id
-    // so the distinct/groupBy keys stay correct).
-    val bands = sigs.select(col("doc_id"), col("sz"), explode(array(bandStructs: _*)).as("band"))
+    sk.select(col("doc_id"), col("sz"), explode(array(packed: _*)).as("band"))
       .select(col("doc_id"), col("sz"),
         col("band.band_idx").as("band_idx"), col("band.band_val").as("band_val"))
-    val cands = bands.as("a")
-      .join(bands.as("b"),
+  }
+
+  /** Candidate pairs `(doc_a, doc_b, size_a, size_b)` with their exact
+    * shingle intersection `inter` and `jaccard`, kept at Jaccard ≥ 0.5.
+    * Each candidate picks up both documents' hash arrays by two doc-id
+    * joins and intersects them in place (`hs` holds distinct hashes, so
+    * the intersection's size is |A ∩ B|). */
+  private def verified(cands: DataFrame, sk: DataFrame): DataFrame =
+    cands
+      .join(sk.select(col("doc_id").as("doc_a"), col("hs").as("ha")), Seq("doc_a"))
+      .join(sk.select(col("doc_id").as("doc_b"), col("hs").as("hb")), Seq("doc_b"))
+      .withColumn("inter", size(array_intersect(col("ha"), col("hb"))).cast("long"))
+      .withColumn("jaccard",
+        col("inter").cast("double") / (col("size_a") + col("size_b") - col("inter")))
+      .filter(col("jaccard") >= 0.5)
+
+  /** MinHash + LSH near-duplicate pairs, Jaccard-verified.
+    *
+    * One sketch row per document ([[sketches]]: shingle hashes and 8
+    * integer minhashes from two native kernels) → 4 bands of 2 minima
+    * packed into BIGINT keys → self-join on (band_idx, band_val) → exact
+    * Jaccard of each candidate by intersecting the two documents' hash
+    * arrays → keep ≥ 0.5. The band join is the only pairwise step and
+    * touches only colliding buckets; the per-shingle work stays inside
+    * one row per document, so no shingle-sized table reaches a shuffle,
+    * an aggregate or a join. */
+  def q46MinhashLshPairs(s: SparkSession, dir: String): DataFrame = {
+    val sk = sketches(s, dir)
+    val bs = bands(sk)
+    val cands = bs.as("a")
+      .join(bs.as("b"),
         col("a.band_idx") === col("b.band_idx") && col("a.band_val") === col("b.band_val") &&
           col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
         col("a.sz").as("size_a"), col("b.sz").as("size_b"))
       .distinct()
-    cands
-      .join(hx.select(col("doc_id").as("doc_a"), col("hg")), Seq("doc_a"))
-      .join(hx.select(col("doc_id").as("doc_b"), col("hg")), Seq("doc_b", "hg"))
-      .groupBy(col("doc_a"), col("doc_b"), col("size_a"), col("size_b"))
-      .agg(count(lit(1)).as("inter"))
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("size_a") + col("size_b") - col("inter")))
-      .filter(col("jaccard") >= 0.5)
+    verified(cands, sk)
       .select(col("doc_a"), col("doc_b"), col("inter"), col("size_a"), col("size_b"), col("jaccard"))
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
   private def minsSql: String = (0 until NumHashes)
-    .map(i => s"  min((CAST('0x' || substr(hg, 1, 8) AS BIGINT) * ${HashA(i)} + " +
-      s"CAST('0x' || substr(hg, 9, 8) AS BIGINT) * ${HashB(i)} + ${hashC(i)}) % $HashP) AS m$i")
+    .map(i => s"  min((CAST('0x' || substr(hg, 1, 8) AS BIGINT) * ${MinHash.A(i)} + " +
+      s"CAST('0x' || substr(hg, 9, 8) AS BIGINT) * ${MinHash.B(i)} + ${MinHash.c(i)}) % ${MinHash.P}) AS m$i")
     .mkString(",\n")
 
   private def bandSelectsSql: String = (0 until NumHashes / BandRows).map { b =>
@@ -308,9 +311,10 @@ object Dedup {
   }
 
   /** Near-dup clusters: connected components over the LSH pair graph
-    * (q46's Jaccard-verified edges), labeled by the component's minimum
-    * doc_id; the representative ("kept") doc is that minimum — the final
-    * step of a dedup pipeline (drop every member but the representative).
+    * (q46's Jaccard-verified edges, from its one-row-per-document sketch),
+    * labeled by the component's minimum doc_id; the representative
+    * ("kept") doc is that minimum — the final step of a dedup pipeline
+    * (drop every member but the representative).
     *
     * Distributed min-label propagation: each iteration is one join +
     * aggregate; the driver loop only checks a monotone convergence
@@ -329,10 +333,6 @@ object Dedup {
       .orderBy(col("cluster_rep"), col("doc_id"))
   }
 
-  /** q46's pipeline + the recursive transitive-min closure as CTEs ending
-    * in `labels(id, cluster_rep)` — shared by q48's oracle and the
-    * end-to-end corpus-pipeline oracle (graft.Pipelines.q101Oracle). Must
-    * follow a `WITH RECURSIVE` keyword at the call site. */
   /** q46's pipeline as CTEs ending in `pairs(doc_a, doc_b)` — the shared
     * prefix of [[clusterLabelCtes]], also used standalone by q227's oracle
     * (which runs the closure over two different edge restrictions). */
@@ -363,6 +363,10 @@ object Dedup {
       |  WHERE CAST(inter AS DOUBLE) / (sa.sz + sb.sz - inter) >= 0.5)""".stripMargin
   }
 
+  /** q46's pipeline + the recursive transitive-min closure as CTEs ending
+    * in `labels(id, cluster_rep)` — shared by q48's oracle and the
+    * end-to-end corpus-pipeline oracle (graft.Pipelines.q101Oracle). Must
+    * follow a `WITH RECURSIVE` keyword at the call site. */
   val clusterLabelCtes: String =
     s"""$pairsCtes,
       |edges AS (
@@ -411,7 +415,9 @@ object Dedup {
     // 128MB–1GB band at cluster scale) instead of one shard per shuffle
     // partition, and the read-back lists proportionally fewer files.
     cleaned.hint("rebalance").write.mode("overwrite").parquet(outPath)
-    s.read.parquet(outPath)
+    // the written frame's schema: inferring it would start a footer-reading
+    // job over files this call just wrote
+    s.read.schema(cleaned.schema).parquet(outPath)
   }
 
   // Jaccard threshold for the exact n-gram similarity join, as an exact
@@ -439,7 +445,7 @@ object Dedup {
     *  3. length filter: J ≥ t forces t·max(sa,sb) ≤ min(sa,sb), applied
     *     inside the candidate join condition;
     *  4. exact verify: intersection counted only for surviving candidates
-    *     via the same hash-equality join as q46.
+    *     via a hash-equality join back to the shingle rows.
     *
     * Scale shape: df-ranking is one groupBy + one doc-partitioned window;
     * the candidate join keys on single gram hashes restricted to prefixes
@@ -449,8 +455,8 @@ object Dedup {
     * algorithm-independent ground truth, so the compare also proves the
     * pruning loses nothing at sf0.01. */
   def q106NgramJaccardJoin(s: SparkSession, dir: String): DataFrame = {
-    // hx feeds the df ranking AND both verify sides; same persist rationale
-    // (and canonical-plan cache share with q46/q48) as in q46.
+    // hx feeds the df ranking AND both verify sides; persisted so the
+    // tokenize/shingle/hash pipeline runs once.
     val hx = graft.Caches.persist(hashedShingles(s, dir))
     // df as a window over hg (a content hash — cardinality scales with the
     // corpus) instead of groupBy+join-back: one shuffle of hx, not two
@@ -695,7 +701,7 @@ object Dedup {
     * work the update needs is `delta-bands ⋈ all-bands` — the base×base
     * quadrant, which dominates a full rebuild (at 100 TB the base is
     * 50–500× the daily delta), is NEVER touched. Candidates verify with
-    * the exact hash-equality Jaccard join and keep ≥ 0.5, exactly as q46.
+    * the exact Jaccard and keep ≥ 0.5, exactly as q46.
     *
     * The oracle is the INCREMENTAL-EQUALS-RECOMPUTE law (q131's law
     * applied to an index): it computes the FULL q46 pair set and filters
@@ -710,28 +716,16 @@ object Dedup {
     * of the materialized signature table (Materialize.scala's store) and
     * the delta side alone runs the shingle→minhash pipeline. The claim
     * this query pins is the JOIN TOPOLOGY (delta-probe, never
-    * base×base) and its exactness. */
+    * base×base) and its exactness. Base and delta share q46's sketch,
+    * bands and array-intersection verify. */
   def q176IncrementalLshUpdate(s: SparkSession, dir: String): DataFrame = {
-    val hx = graft.Caches.persist(hashedShingles(s, dir))
-    val h1 = conv(substring(col("hg"), 1, 8), 16, 10).cast("long")
-    val h2 = conv(substring(col("hg"), 9, 8), 16, 10).cast("long")
-    val minCols = (0 until NumHashes)
-      .map(i => min((h1 * HashA(i) + h2 * HashB(i) + hashC(i)) % HashP).as(s"m$i"))
-    val sigs = hx.groupBy(col("doc_id"))
-      .agg(minCols.head, (minCols.tail :+ count(lit(1)).as("sz")): _*)
-    val nBands = NumHashes / BandRows
-    val bandStructs = (0 until nBands).map { b =>
-      struct(lit(b).as("band_idx"),
-        (col(s"m${BandRows * b}") * lit(2147483648L) + col(s"m${BandRows * b + 1}")).as("band_val"))
-    }
-    val bands = sigs.select(col("doc_id"), col("sz"), explode(array(bandStructs: _*)).as("band"))
-      .select(col("doc_id"), col("sz"),
-        col("band.band_idx").as("band_idx"), col("band.band_val").as("band_val"))
-    val deltaBands = bands.filter(col("doc_id") % 5 === 0)
+    val sk = sketches(s, dir)
+    val bs = bands(sk)
+    val deltaBands = bs.filter(col("doc_id") % 5 === 0)
     // probe: delta × (base ∪ delta); canonical (least, greatest) ordering
     // dedups the delta-delta pairs that collide from both probe directions
     val cands = deltaBands.as("a")
-      .join(bands.as("b"),
+      .join(bs.as("b"),
         col("a.band_idx") === col("b.band_idx") && col("a.band_val") === col("b.band_val") &&
           col("a.doc_id") =!= col("b.doc_id"))
       .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
@@ -739,14 +733,7 @@ object Dedup {
         when(col("a.doc_id") < col("b.doc_id"), col("a.sz")).otherwise(col("b.sz")).as("size_a"),
         when(col("a.doc_id") < col("b.doc_id"), col("b.sz")).otherwise(col("a.sz")).as("size_b"))
       .distinct()
-    cands
-      .join(hx.select(col("doc_id").as("doc_a"), col("hg")), Seq("doc_a"))
-      .join(hx.select(col("doc_id").as("doc_b"), col("hg")), Seq("doc_b", "hg"))
-      .groupBy(col("doc_a"), col("doc_b"), col("size_a"), col("size_b"))
-      .agg(count(lit(1)).as("inter"))
-      .withColumn("jaccard",
-        col("inter").cast("double") / (col("size_a") + col("size_b") - col("inter")))
-      .filter(col("jaccard") >= 0.5)
+    verified(cands, sk)
       .withColumn("new_side",
         when(col("doc_a") % 5 === 0 && col("doc_b") % 5 === 0, "delta-delta")
           .otherwise("delta-base"))

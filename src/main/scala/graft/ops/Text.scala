@@ -36,13 +36,21 @@ object Text {
     * every session built by [[graft.GraftSession]]. */
   def shingles5(toks: Column): Column = call_function("graft_shingles5", toks)
 
-  /** One row per (doc_id, distinct 5-gram `g`) of `docs`, hash-partitioned
-    * by doc_id: the documents shuffle (one row per document), then each
-    * document is tokenized and shingled in place. Shared by the near-dup
-    * family (Dedup's hashed shingles) and q205. */
-  def docShingles(docs: DataFrame): DataFrame =
+  /** The md5 hex of each distinct 5-gram of `toks`, in [[shingles5]]'s
+    * order: `transform(shingles5(toks), g -> md5(g))` as one native loop
+    * ([[graft.functions.ShingleHashes]], `graft_shingle_hashes`), so the
+    * gram text never leaves the kernel. The engine's one shingle-hash
+    * definition. */
+  def shingleHashes(toks: Column): Column = call_function("graft_shingle_hashes", toks)
+
+  /** One row per (doc_id, distinct 5-gram md5 hex `hg`) of `docs`,
+    * hash-partitioned by doc_id: the documents shuffle (one row per
+    * document), then each document is tokenized and hashed in place.
+    * Shared by the exploded near-dup family (Dedup's hashed shingles) and
+    * q205. */
+  def docShingleHashes(docs: DataFrame): DataFrame =
     docs.repartition(col("doc_id"))
-      .select(col("doc_id"), explode(shingles5(tokens(col("text")))).as("g"))
+      .select(col("doc_id"), explode(shingleHashes(tokens(col("text")))).as("hg"))
 
   /** DuckDB mirror of [[shingles5]] over a token-list expression `t`. */
   def shingles5Sql(t: String): String =
@@ -220,7 +228,7 @@ object Text {
       .select(
         col("doc_id"),
         md5(concat_ws(" ", col("toks")).cast("binary")).as("content_md5"),
-        array_min(transform(Text.shingles5(col("toks")), g => md5(g.cast("binary")))).as("min_shingle_hash"),
+        array_min(shingleHashes(col("toks"))).as("min_shingle_hash"),
         size(col("toks")).cast("long").as("n_tokens"))
       .orderBy(col("doc_id"))
   }
@@ -2652,11 +2660,11 @@ object Text {
     * after the dump — novelty_ppm falling across dumps is the saturation
     * signal that caps how many more dumps are worth the scan.
     *
-    * Scale stance: the shingles come from [[docShingles]] (documents
-    * shuffled by doc_id, one row each, then shingled row-locally), then
-    * ONE gram shuffle keyed by the 60-bit md5 slice of the shingle — the
-    * q46 discipline (hash and DROP the gram text before the
-    * shuffle; both engines hash identically, so novelty-over-hashes is
+    * Scale stance: the shingle hashes come from [[docShingleHashes]]
+    * (documents shuffled by doc_id, one row each, then hashed
+    * row-locally), then ONE gram shuffle keyed by the 60-bit md5 slice of
+    * the shingle — the q46 discipline (hash and DROP the gram text before
+    * the shuffle; both engines hash identically, so novelty-over-hashes is
     * bit-identical even under a collision). The per-gram reduce carries a
     * single long: the bit_or dump MASK (bit d set ⇔ the gram occurs in
     * dump d; first dump = lowest set bit), map-side combined. The mask
@@ -2671,10 +2679,9 @@ object Text {
     // The shared shingle stream: grams repeated within a document are
     // already dropped by the kernel, and bit_or would not count them twice
     // anyway.
-    val maskCounts = docShingles(Tables.documents(s, dir))
+    val maskCounts = docShingleHashes(Tables.documents(s, dir))
       .select((col("doc_id") % 4).as("dump"),
-        conv(substring(md5(col("g").cast("binary")), 1, 15), 16, 10)
-          .cast("long").as("g"))
+        conv(substring(col("hg"), 1, 15), 16, 10).cast("long").as("g"))
       .groupBy(col("g"))
       .agg(expr("bit_or(shiftleft(1, cast(dump AS int)))").as("mask"))
       .groupBy(col("mask")).agg(count(lit(1)).as("n_grams"))

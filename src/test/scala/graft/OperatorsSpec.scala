@@ -280,6 +280,47 @@ class OperatorsSpec extends SparkSpec {
     assert(viewsLeaked.isEmpty, s"catalog entries leaked: $viewsLeaked")
   }
 
+  test("near-dup pipeline on documents under 5 tokens: pinned rows, no overflow") {
+    // Documents with no 5-gram carry no sketch: their minima would be
+    // Long.MaxValue, and packing two into a band overflows under ANSI
+    // mode. The rows are pinned from the exploded-shingle pipeline; first
+    // some documents are short, then all of them.
+    import spark.implicits._
+    val l1 = "the quick brown fox jumps over the lazy dog while seven wizards quietly hex every jovial zebra at dawn"
+    val l2 = "apache spark plans a query as a tree of operators and codegen fuses the hot loops into one method"
+    val l3 = "numbers like one hundred and twenty three appear rarely in this synthetic corpus of planted documents"
+    val long = Seq[(Long, String)](1L -> l1, 2L -> s"$l1 again", 3L -> l1, 4L -> l2,
+      5L -> s"$l2 today", 6L -> l3)
+    val short = Seq[(Long, String)](7L -> "alpha beta", 8L -> "one two three four",
+      9L -> "alpha beta", 10L -> "", 11L -> null)
+    def corpus(docs: Seq[(Long, String)]): String = {
+      val dir = java.nio.file.Files.createTempDirectory("graft-short").toString
+      docs.map { case (id, t) => (id, t, "en", if (id % 2 == 0) "web" else "wiki",
+          Option(t).map(_.length.toLong).getOrElse(0L)) }
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      dir
+    }
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      try df.collect().map(_.toSeq.mkString(",")).toSeq finally Caches.releaseAll()
+    val pinned = Seq(
+      (long ++ short,
+        Seq("1,2,15,15,16,0.9375", "1,3,15,15,15,1.0", "2,3,15,16,15,0.9375", "4,5,15,15,16,0.9375"),
+        Seq("1,1,3,1", "2,1,3,0", "3,1,3,0", "4,4,2,1", "5,4,2,0"),
+        Seq("1", "4", "6", "7", "8", "10", "11"),
+        Seq("train,3,3")),
+      (short, Seq.empty, Seq.empty, Seq("7", "8", "10", "11"), Seq.empty))
+    for ((docs, q46, q48, cleaned, prepared) <- pinned) {
+      val dir = corpus(docs)
+      val out = java.nio.file.Files.createTempDirectory("graft-short-out").toString
+      assert(rows(Dedup.q46MinhashLshPairs(spark, dir)) == q46)
+      assert(rows(Dedup.q48DedupClusters(spark, dir)) == q48)
+      assert(rows(Dedup.cleanedCorpus(spark, dir, s"$out/clean").select("doc_id").orderBy("doc_id")) ==
+        cleaned)
+      assert(rows(Pipelines.prepareCorpus(spark, dir, s"$out/prep")) == prepared)
+    }
+  }
+
   test("q48 on a clean corpus (no near-dup pairs) returns empty, no NPE") {
     // ADVICE.md r1: empty labels made agg(sum(lbl)).head.getLong(0) NPE.
     import spark.implicits._
@@ -393,6 +434,104 @@ class OperatorsSpec extends SparkSpec {
       val a = graft.functions.Shingles5(Literal.create(t, ArrayType(StringType))).eval()
         .asInstanceOf[ArrayData]
       assert(a.toSeq[Any](StringType).map(_.toString) == gramsRef(t), t)
+    }
+  }
+
+  /** A one-argument kernel over each array (NULL for a `null` entry), run
+    * twice: in a generated-code projection (compiled, no interpreted
+    * fallback) and by the interpreted `eval`. */
+  private def kernelRuns(kernel: org.apache.spark.sql.catalyst.expressions.Expression =>
+      org.apache.spark.sql.catalyst.expressions.Expression,
+      arrays: Seq[Seq[String]]): (Seq[Seq[Any]], Seq[Seq[Any]]) = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+    import org.apache.spark.sql.types.{ArrayType, StringType}
+    import org.apache.spark.unsafe.types.UTF8String
+    val in = ArrayType(StringType)
+    val out = kernel(BoundReference(0, in, nullable = true)).dataType.asInstanceOf[ArrayType].elementType
+    def seq(a: ArrayData): Seq[Any] =
+      if (a == null) null
+      else a.toSeq[Any](out).map { case u: UTF8String => u.toString; case v => v }
+    val proj = GenerateUnsafeProjection.generate(Seq(kernel(BoundReference(0, in, nullable = true))))
+    val generated = arrays.map { t =>
+      val arg = if (t == null) null else new GenericArrayData(t.map(UTF8String.fromString))
+      val r = proj(InternalRow(arg))
+      seq(if (r.isNullAt(0)) null else r.getArray(0))
+    }
+    val interpreted = arrays.map(t => seq(kernel(Literal.create(t, in)).eval().asInstanceOf[ArrayData]))
+    (generated, interpreted)
+  }
+
+  test("shingle-hash and minhash kernels: hand-computed cases in generated code and eval") {
+    import graft.functions.{MinHash, ShingleHashes}
+    val (hg, hi) = kernelRuns(ShingleHashes(_), Seq(
+      Seq("a", "b", "c", "d"),
+      Seq("a", "b", "c", "d", "e"),
+      Seq("x", "y", "z", "x", "y", "z", "x", "y", "z", "x"),
+      Seq.empty,
+      null))
+    for (h <- Seq(hg, hi)) {
+      assert(h(0) == Seq.empty)
+      assert(h(1) == Seq("2438b89b82c22b3d063b2ee165c033c0")) // md5("a b c d e")
+      // grams 4-6 repeat grams 1-3 and give no second hash
+      assert(h(2) == Seq("d0dde8f1d458cf4de6a330448cf3fe73", "a6bcb6e1e5412f5671e8d54757dd4905",
+        "19a227c23f73251e865250db642aa9cb"))
+      assert(h(3) == Seq.empty)
+      assert(h(4) == null)
+    }
+    // (h1, h2) = (1, 2): A(i) + 2·B(i) + 7919·i; (3, 0): 3·A(i) + 7919·i
+    val x = Seq(123089L, 142026L, 160939L, 176940L, 193811L, 212738L, 213647L, 231536L)
+    val z = Seq(135021L, 157982L, 174847L, 194868L, 211715L, 228682L, 197511L, 217436L)
+    val (mg, mi) = kernelRuns(MinHash(_), Seq(
+      Seq("00000001000000020000000000000000"),
+      Seq("00000003000000000123456789abcdef"),
+      Seq("00000001000000020000000000000000", null, "00000003000000000123456789abcdef"),
+      Seq("ffffffffffffffff0000000000000000"),
+      Seq.empty,
+      null))
+    for (m <- Seq(mg, mi)) {
+      assert(m(0) == x)
+      assert(m(1) == z)
+      // element-wise minima; the NULL element is skipped
+      assert(m(2) == x.zip(z).map { case (a, b) => math.min(a, b) })
+      // (2³²−1)·(A(i) + B(i)) + 7919·i mod 2³¹−1: no overflow at the top of the range
+      assert(m(3) == Seq(84048L, 99983L, 114890L, 128867L, 142750L, 157681L, 155580L, 170485L))
+      assert(m(4) == Seq.fill(8)(Long.MaxValue))
+      assert(m(5) == null)
+    }
+    for (bad <- Seq("0123456789abcde", "0123456789abcdeg"))
+      intercept[IllegalArgumentException](kernelRuns(MinHash(_), Seq(Seq(bad))))
+  }
+
+  test("shingle-hash and minhash kernels equal driver-side references on seeded inputs") {
+    import graft.functions.{MinHash, ShingleHashes}
+    import spark.implicits._
+    val rnd = new scala.util.Random(21)
+    val vocab = Seq("a", "b", "c", "dd", "é")
+    val arrays = Seq.fill(300)(Seq.fill(rnd.nextInt(16))(vocab(rnd.nextInt(vocab.size))))
+    def md5Hex(g: String): String =
+      java.security.MessageDigest.getInstance("MD5").digest(g.getBytes("UTF-8"))
+        .map(b => f"${b & 0xff}%02x").mkString
+    val (hg, hi) = kernelRuns(ShingleHashes(_), arrays)
+    arrays.zip(hg.zip(hi)).foreach { case (t, (g, i)) =>
+      assert(g == gramsRef(t).map(md5Hex), t)
+      assert(i == g, t)
+    }
+    // the minima by the Column formula: one row per hash, min per array
+    val hashes = Seq.fill(200)(Seq.fill(1 + rnd.nextInt(40))(md5Hex(rnd.nextString(8))))
+    val h1 = conv(substring(col("hg"), 1, 8), 16, 10).cast("long")
+    val h2 = conv(substring(col("hg"), 9, 8), 16, 10).cast("long")
+    val mins = (0 until 8).map(i => min((h1 * MinHash.A(i) + h2 * MinHash.B(i) + MinHash.c(i)) % MinHash.P))
+    val byColumns = hashes.zipWithIndex.toDF("hs", "i")
+      .select(col("i"), explode(col("hs")).as("hg"))
+      .groupBy(col("i")).agg(array(mins: _*).as("m"))
+      .collect().map(r => r.getInt(0) -> r.getSeq[Long](1)).toMap
+    val (mg, mi) = kernelRuns(MinHash(_), hashes)
+    hashes.indices.foreach { k =>
+      assert(mg(k) == byColumns(k), hashes(k))
+      assert(mi(k) == byColumns(k), hashes(k))
     }
   }
 

@@ -198,19 +198,20 @@ class PlanSpec extends SparkSpec {
       s"allowlist entries without a nested-loop join: ${dead.toSeq.sorted.mkString(", ")}")
   }
 
-  /** The plan strings of every `node` (a physical node name) a query's SQL
-    * executions run. The final-plan lint never sees the plans of
-    * checkpointed loop stages, scalar subqueries or writes, so this walks
+  /** The plan strings of every node named in `nodes` (physical node
+    * names) a query's SQL executions run. The final-plan lint never sees
+    * the plans of checkpointed loop stages, scalar subqueries or writes,
+    * so this walks
     * the `sparkPlanInfo` of every SQL execution start and AQE update, as
     * perfbench's probe does. */
-  private def executedNodes(node: String)(build: => org.apache.spark.sql.DataFrame): Seq[String] = {
+  private def executedNodes(nodes: String*)(build: => org.apache.spark.sql.DataFrame): Seq[String] = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
     import org.apache.spark.sql.execution.SparkPlanInfo
     import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
     val found = java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
     val fence = new java.util.concurrent.CountDownLatch(1)
     def walk(p: SparkPlanInfo): Unit = {
-      if (p.nodeName == node) found.add(p.simpleString)
+      if (nodes.contains(p.nodeName)) found.add(p.simpleString)
       p.children.foreach(walk)
     }
     val listener = new SparkListener {
@@ -327,6 +328,21 @@ class PlanSpec extends SparkSpec {
       assert(shuffles(q46.queryExecution.executedPlan).size <= 2,
         q46.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode))
     } finally Caches.releaseAll()
+  }
+
+  test("plan lint: near-dup pairs join no shingle-hash keys, cache builds included") {
+    // q46 verifies candidates by intersecting two per-document hash arrays;
+    // a join keyed by the shingle hash hg means the exploded shingle table
+    // is back on the q46 → q48 → q101 path.
+    val joins = Seq("SortMergeJoin", "ShuffledHashJoin", "BroadcastHashJoin")
+    val hgKey = "^\\w+ \\[[^\\]]*\\bhg#\\d+".r
+    for ((q, found) <- Seq("q46" -> executedNodes(joins: _*)(Dedup.q46MinhashLshPairs(spark, sf())),
+        "q48" -> executedNodes(joins: _*)(Dedup.q48DedupClusters(spark, sf())),
+        "q101" -> executedNodes(joins: _*)(Pipelines.q101CorpusPipeline(spark, sf())))) {
+      assert(found.nonEmpty, s"$q ran no join")
+      val byHash = found.filter(hgKey.findFirstIn(_).isDefined)
+      assert(byHash.isEmpty, s"$q joins keyed by hg:\n${byHash.mkString("\n")}")
+    }
   }
 
   test("plan lint: no window over an unreduced input without a high-cardinality partition key") {
