@@ -41,14 +41,16 @@ object Pipelines {
       .withColumn("toks", toks)
       .withColumn("n_tokens", size(col("toks")))
       .withColumn("punct_ratio",
-        (length(col("text")) - length(regexp_replace(col("text"), "[^a-z0-9 ]", "")))
-          .cast("double") / greatest(length(col("text")), lit(1)))
-      .filter(col("n_tokens") >= minTokens && col("punct_ratio") <= maxPunctRatio)
+        ops.Text.punctCount(col("text")).cast("double") / greatest(length(col("text")), lit(1)))
+    // The gate rides in the explode (a failing document gets no chunk), not
+    // in a Filter: Catalyst pushes a Filter below the toks projection and
+    // then tokenizes every document twice.
+    val keep = col("n_tokens") >= minTokens && col("punct_ratio") <= maxPunctRatio
 
     val nChunks = when(col("n_tokens") <= ChunkLen, lit(1))
       .otherwise(ceil((col("n_tokens") - ChunkLen).cast("double") / ChunkStride).cast("int") + 1)
     val chunks = quality
-      .withColumn("chunk_idx", explode(sequence(lit(0), nChunks - 1)))
+      .withColumn("chunk_idx", explode(when(keep, sequence(lit(0), nChunks - 1))))
       .select(
         col("doc_id"), col("lang"), col("chunk_idx"),
         concat_ws(" ",

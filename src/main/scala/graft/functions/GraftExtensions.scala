@@ -14,12 +14,21 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *   // or: .withExtensions(new GraftExtensions)
   * }}}
   *
-  * so every native function of the one table below (`graft_dot`,
-  * `graft_shingles5`, `graft_shingle_hashes` and `graft_minhash`) resolves
-  * in plain SQL text on a cluster where the user never calls
+  * so every native function of the one table below resolves in plain SQL
+  * text on a cluster where the user never calls
   * [[GraftExtensions.register]] (e.g. thrift-server / SQL-only
   * deployments). The per-session `register` path stays for the driver
   * contract's local sessions.
+  *
+  * The native functions:
+  *  - `graft_dot(a, b)` ([[DotProduct]]): dot product of two double arrays;
+  *  - `graft_shingles5(toks)` ([[Shingles5]]): distinct word 5-grams;
+  *  - `graft_shingle_hashes(toks)` ([[ShingleHashes]]): md5 hex of each
+  *    distinct 5-gram;
+  *  - `graft_minhash(hs)` ([[MinHash]]): the 8 MinHash minima of a hash
+  *    array;
+  *  - `graft_punct_count(text)` ([[PunctCount]]): code points outside
+  *    `[a-z0-9 ]`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit =
@@ -34,7 +43,8 @@ object GraftExtensions {
     ("graft_dot", classOf[DotProduct], exprs => DotProduct(exprs.head, exprs(1))),
     ("graft_shingles5", classOf[Shingles5], exprs => Shingles5(exprs.head)),
     ("graft_shingle_hashes", classOf[ShingleHashes], exprs => ShingleHashes(exprs.head)),
-    ("graft_minhash", classOf[MinHash], exprs => MinHash(exprs.head)))
+    ("graft_minhash", classOf[MinHash], exprs => MinHash(exprs.head)),
+    ("graft_punct_count", classOf[PunctCount], exprs => PunctCount(exprs.head)))
 
   /** Register every native function the session's function registry lacks
     * (Spark 4's Column API no longer exposes raw Expressions, so the

@@ -4,7 +4,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Native Catalyst expression for word shingling (SURVEY.md §7.3(a)): the
@@ -171,5 +171,47 @@ object MinHash {
       k += 1
     }
     new GenericArrayData(m)
+  }
+}
+
+/** Native Catalyst expression `graft_punct_count`: the number of code points
+  * of a string outside `[a-z0-9 ]` — exactly
+  * `length(text) - length(regexp_replace(text, '[^a-z0-9 ]', ''))`, with
+  * NULL for NULL. `length` counts code points, so the loop steps through
+  * the UTF-8 bytes as `UTF8String.numChars` does: a multi-byte character
+  * (accented letter, CJK, an emoji's whole surrogate pair) counts once.
+  *
+  * One byte-level loop per row, with no regex compile, no Java-string
+  * decode and no result string: the regex builtin pays all three even when
+  * nothing matches.
+  */
+case class PunctCount(child: Expression) extends UnaryExpression {
+  override def dataType: DataType = IntegerType
+
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case _: StringType => TypeCheckResult.TypeCheckSuccess
+    case other => TypeCheckResult.TypeCheckFailure(s"graft_punct_count needs a string argument, got $other")
+  }
+
+  override protected def nullSafeEval(text: Any): Any = PunctCount.count(text.asInstanceOf[UTF8String])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    defineCodeGen(ctx, ev, text => s"${PunctCount.getClass.getName}.MODULE$$.count($text)")
+
+  override protected def withNewChildInternal(newChild: Expression): PunctCount =
+    copy(child = newChild)
+}
+
+object PunctCount {
+  def count(text: UTF8String): Int = {
+    val n = text.numBytes()
+    var punct = 0
+    var i = 0
+    while (i < n) {
+      val b = text.getByte(i)
+      if (!((b >= 'a' && b <= 'z') || (b >= '0' && b <= '9') || b == ' ')) punct += 1
+      i += UTF8String.numBytesForFirstByte(b)
+    }
+    punct
   }
 }

@@ -135,15 +135,25 @@ object Dedup {
     * shingle intersection `inter` and `jaccard`, kept at Jaccard ≥ 0.5.
     * Each candidate picks up both documents' hash arrays by two doc-id
     * joins and intersects them in place (`hs` holds distinct hashes, so
-    * the intersection's size is |A ∩ B|). */
-  private def verified(cands: DataFrame, sk: DataFrame): DataFrame =
-    cands
-      .join(sk.select(col("doc_id").as("doc_a"), col("hs").as("ha")), Seq("doc_a"))
-      .join(sk.select(col("doc_id").as("doc_b"), col("hs").as("hb")), Seq("doc_b"))
+    * the intersection's size is |A ∩ B|).
+    *
+    * The cached sketch is the streamed side of both joins; only candidates
+    * cross a broadcast. The first join broadcasts the candidate pairs, the
+    * second broadcasts each pair with its first document's array, so a
+    * broadcast holds at most candidates × one `hs` array. Broadcasting the
+    * sketch instead — what static planning picks, because an unmaterialized
+    * cache looks tiny — ships every document's array to the driver twice
+    * to serve a few candidates. */
+  private def verified(cands: DataFrame, sk: DataFrame): DataFrame = {
+    val withA = sk.select(col("doc_id").as("doc_a"), col("hs").as("ha"))
+      .join(broadcast(cands), Seq("doc_a"))
+    sk.select(col("doc_id").as("doc_b"), col("hs").as("hb"))
+      .join(broadcast(withA), Seq("doc_b"))
       .withColumn("inter", size(array_intersect(col("ha"), col("hb"))).cast("long"))
       .withColumn("jaccard",
         col("inter").cast("double") / (col("size_a") + col("size_b") - col("inter")))
       .filter(col("jaccard") >= 0.5)
+  }
 
   /** MinHash + LSH near-duplicate pairs, Jaccard-verified.
     *

@@ -52,6 +52,12 @@ object Text {
     docs.repartition(col("doc_id"))
       .select(col("doc_id"), explode(shingleHashes(tokens(col("text")))).as("hg"))
 
+  /** Code points of `c` outside `[a-z0-9 ]`: the quality gates'
+    * punctuation count, `length(c) - length(regexp_replace(c, '[^a-z0-9 ]',
+    * ''))` as one native byte loop ([[graft.functions.PunctCount]],
+    * `graft_punct_count`). The DuckDB oracles keep the regex formula. */
+  def punctCount(c: Column): Column = call_function("graft_punct_count", c)
+
   /** DuckDB mirror of [[shingles5]] over a token-list expression `t`. */
   def shingles5Sql(t: String): String =
     s"list_distinct(CASE WHEN len($t) >= 5 THEN list_transform(range(1, len($t) - 3), " +
@@ -95,8 +101,7 @@ object Text {
     Tables.documents(s, dir)
       .withColumn("n_tokens", size(toks).cast("long"))
       .withColumn("n_chars_txt", length(col("text")).cast("long"))
-      .withColumn("n_punct",
-        (length(col("text")) - length(regexp_replace(col("text"), "[^a-z0-9 ]", ""))).cast("long"))
+      .withColumn("n_punct", punctCount(col("text")).cast("long"))
       .withColumn("n_stop", countIn(toks, stopEn))
       .withColumn("n_ws_tokens", size(split(col("text"), "\\s+")).cast("long"))
       // BPE-ish subword units: letter runs, digit runs, single punctuation
@@ -1045,8 +1050,7 @@ object Text {
     Tables.documents(s, dir)
       .withColumn("n_tokens", size(toks).cast("long"))
       .withColumn("n_chars", length(col("text")).cast("long"))
-      .withColumn("n_punct",
-        (length(col("text")) - length(regexp_replace(col("text"), "[^a-z0-9 ]", ""))).cast("long"))
+      .withColumn("n_punct", punctCount(col("text")).cast("long"))
       .withColumn("n_stop", countIn(toks, stopEn))
       .withColumn("score_ppm",
         expr("500000 * n_stop div greatest(n_tokens, 1) + " +

@@ -535,6 +535,55 @@ class OperatorsSpec extends SparkSpec {
     }
   }
 
+  /** `graft_punct_count` over each text (NULL for a `null` entry), run in a
+    * generated-code projection (compiled, no interpreted fallback) and by
+    * the interpreted `eval`. */
+  private def punctRuns(texts: Seq[String]): (Seq[Any], Seq[Any]) = {
+    import graft.functions.PunctCount
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{BoundReference, Literal}
+    import org.apache.spark.sql.catalyst.expressions.codegen.GenerateUnsafeProjection
+    import org.apache.spark.sql.types.StringType
+    import org.apache.spark.unsafe.types.UTF8String
+    val proj = GenerateUnsafeProjection.generate(Seq(PunctCount(BoundReference(0, StringType, nullable = true))))
+    val generated = texts.map { t =>
+      val r = proj(InternalRow(if (t == null) null else UTF8String.fromString(t)))
+      if (r.isNullAt(0)) null else r.getInt(0)
+    }
+    (generated, texts.map(t => PunctCount(Literal.create(t, StringType)).eval()))
+  }
+
+  test("punctuation-count kernel: hand-computed cases in generated code and eval") {
+    val cases = Seq(
+      "abc xyz 09" -> 0,
+      "ABC def" -> 3, // uppercase is outside [a-z]
+      "a\tb\nc d" -> 2,
+      "café naïve" -> 2, // é and ï are one code point each
+      "数据 ok" -> 2,
+      "a😀b" -> 1, // a surrogate pair in UTF-16, one code point
+      "hi, there!" -> 2,
+      "" -> 0)
+    val (g, i) = punctRuns(cases.map(_._1) :+ null)
+    for (r <- Seq(g, i)) assert(r == cases.map(_._2) :+ null)
+  }
+
+  test("punctuation-count kernel equals the regex formula on sf0.01 and non-ASCII documents") {
+    import spark.implicits._
+    val docs = spark.read.parquet(s"${sf("sf0.01")}/documents.parquet").select(col("text"))
+      .unionByName(RobustnessSpec.nonAsciiTexts.toDF("text"))
+    val regex = length(col("text")) - length(regexp_replace(col("text"), "[^a-z0-9 ]", ""))
+    val rows = docs.select(col("text"), Text.punctCount(col("text")).as("k"), regex.as("r")).collect()
+    assert(rows.length > RobustnessSpec.nonAsciiTexts.size)
+    assert(rows.exists(r => !r.isNullAt(2) && r.getInt(2) > 0))
+    val (g, i) = punctRuns(rows.map(_.getString(0)).toSeq)
+    rows.zip(g.zip(i)).foreach { case (r, (gen, ev)) =>
+      val want = if (r.isNullAt(2)) null else r.getInt(2)
+      assert(r.get(1) == want, r.getString(0))
+      assert(gen == want, r.getString(0))
+      assert(ev == want, r.getString(0))
+    }
+  }
+
   // The testdata embeddings are isotropic random (no cluster structure), so
   // IVF recall ≈ the probed fraction (nprobe/k = 25%); beating that shows the
   // probe targets the right buckets. Real clustered corpora recall far higher.

@@ -2,6 +2,7 @@ package graft
 
 import graft.ops._
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.SparkPlanInfo
 
 /** Physical-plan shape assertions (SURVEY.md §4): the plans we want at
   * 100 TB, pinned so a refactor can't silently regress them — filters and
@@ -198,26 +199,20 @@ class PlanSpec extends SparkSpec {
       s"allowlist entries without a nested-loop join: ${dead.toSeq.sorted.mkString(", ")}")
   }
 
-  /** The plan strings of every node named in `nodes` (physical node
-    * names) a query's SQL executions run. The final-plan lint never sees
-    * the plans of checkpointed loop stages, scalar subqueries or writes,
-    * so this walks
-    * the `sparkPlanInfo` of every SQL execution start and AQE update, as
-    * perfbench's probe does. */
-  private def executedNodes(nodes: String*)(build: => org.apache.spark.sql.DataFrame): Seq[String] = {
+  /** The plan of every SQL execution start and AQE update a query posts
+    * (cache builds sit under their `InMemoryTableScan` nodes). The
+    * final-plan lint never sees the plans of checkpointed loop stages,
+    * scalar subqueries or writes, so this walks the `sparkPlanInfo` of
+    * every event, as perfbench's probe does. */
+  private def executedPlans(build: => org.apache.spark.sql.DataFrame): Seq[SparkPlanInfo] = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
-    import org.apache.spark.sql.execution.SparkPlanInfo
     import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
-    val found = java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
+    val found = java.util.Collections.synchronizedList(new java.util.ArrayList[SparkPlanInfo]())
     val fence = new java.util.concurrent.CountDownLatch(1)
-    def walk(p: SparkPlanInfo): Unit = {
-      if (nodes.contains(p.nodeName)) found.add(p.simpleString)
-      p.children.foreach(walk)
-    }
     val listener = new SparkListener {
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart => walk(s.sparkPlanInfo)
-        case u: SparkListenerSQLAdaptiveExecutionUpdate => walk(u.sparkPlanInfo)
+        case s: SparkListenerSQLExecutionStart => found.add(s.sparkPlanInfo)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate => found.add(u.sparkPlanInfo)
         case _ => ()
       }
       override def onJobStart(j: SparkListenerJobStart): Unit =
@@ -232,11 +227,19 @@ class PlanSpec extends SparkSpec {
       sc.setLocalProperty("graft.fence", "1")
       try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.fence", null)
       assert(fence.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus never drained")
-      found.toArray.map(_.toString).toSeq
+      found.toArray(Array.empty[SparkPlanInfo]).toSeq
     } finally {
       sc.removeSparkListener(listener)
       Caches.releaseAll()
     }
+  }
+
+  /** The plan strings of every node named in `nodes` (physical node
+    * names) a query's SQL executions run. */
+  private def executedNodes(nodes: String*)(build: => org.apache.spark.sql.DataFrame): Seq[String] = {
+    def walk(p: SparkPlanInfo): Seq[String] =
+      (if (nodes.contains(p.nodeName)) Seq(p.simpleString) else Nil) ++ p.children.flatMap(walk)
+    executedPlans(build).flatMap(walk)
   }
 
   private def nestedLoops(build: => org.apache.spark.sql.DataFrame): Seq[String] =
@@ -342,6 +345,35 @@ class PlanSpec extends SparkSpec {
       assert(found.nonEmpty, s"$q ran no join")
       val byHash = found.filter(hgKey.findFirstIn(_).isDefined)
       assert(byHash.isEmpty, s"$q joins keyed by hg:\n${byHash.mkString("\n")}")
+    }
+  }
+
+  test("plan lint: the Jaccard verify broadcasts no sketch-wide hash arrays, cache builds included") {
+    // The verify streams the cached sketch and broadcasts only candidates
+    // (with one document's array). A broadcast that reaches a scan of the
+    // sketch's hs through no join, and keeps hs on the way up, ships every
+    // document's hash array to the driver.
+    val sketchScan = "^InMemoryTableScan \\[[^\\]]*\\bhs#(\\d+)".r
+    def keepsHs(p: SparkPlanInfo, above: List[SparkPlanInfo]): Boolean =
+      if (p.nodeName.contains("Join")) false
+      else sketchScan.findFirstMatchIn(p.simpleString) match {
+        case Some(m) => above.forall(n => n.nodeName != "Project" || n.simpleString.contains(s"hs#${m.group(1)}"))
+        case None => p.children.exists(keepsHs(_, p :: above))
+      }
+    def broadcasts(p: SparkPlanInfo): Seq[SparkPlanInfo] =
+      (if (p.nodeName == "BroadcastExchange") Seq(p) else Nil) ++ p.children.flatMap(broadcasts)
+    def render(p: SparkPlanInfo, pad: String): String = {
+      val below = if (p.nodeName.contains("Join") || p.nodeName == "InMemoryTableScan") Nil
+        else p.children.map(render(_, pad + "  "))
+      ((pad + p.simpleString) +: below).mkString("\n")
+    }
+    for ((q, plans) <- Seq("q46" -> executedPlans(Dedup.q46MinhashLshPairs(spark, sf())),
+        "q176" -> executedPlans(Dedup.q176IncrementalLshUpdate(spark, sf())),
+        "q101" -> executedPlans(Pipelines.q101CorpusPipeline(spark, sf())))) {
+      val found = plans.flatMap(broadcasts)
+      assert(found.nonEmpty, s"$q broadcast nothing")
+      val wide = found.filter(b => b.children.exists(keepsHs(_, Nil))).map(render(_, "")).distinct
+      assert(wide.isEmpty, s"$q broadcasts of the sketch's hs:\n${wide.mkString("\n")}")
     }
   }
 

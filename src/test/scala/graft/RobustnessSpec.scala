@@ -121,12 +121,8 @@ class RobustnessSpec extends SparkSpec {
   test("non-ASCII text: tokenizer, minhash, and quality score survive emoji/CJK/accents/controls") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-unicode").toString
-    Seq(
-      (1L, "Café ☕ DATA 数据 test42", "en", "s1"),
-      (2L, "naïve 😀😀 résumé ok", "en", "s1"),
-      (3L, "العربية rtl mixed ASCII", "en", "s1"),
-      (4L, "数据集 only cjk データ", "en", "s1"))
-      .map { case (id, t, l, s0) => (id, t, l, s0) }
+    RobustnessSpec.nonAsciiTexts.zipWithIndex
+      .map { case (t, i) => (i + 1L, t, "en", "s1") }
       .toDF("doc_id", "text", "lang", "source")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     // tokens(): [^a-z0-9]+ splitting makes every non-alnum codepoint a
@@ -147,10 +143,55 @@ class RobustnessSpec extends SparkSpec {
     Caches.releaseAll()
   }
 
+  test("quality gates on NULL, empty and all-punctuation texts: pinned rows") {
+    // The rows are pinned from a run of the regex punctuation count
+    // (`length(text) - length(regexp_replace(text, '[^a-z0-9 ]', ''))`).
+    // q41 divides by the character and token counts without a guard, so
+    // under ANSI mode the empty and the token-free documents make it
+    // throw DIVIDE_BY_ZERO; it runs on the other documents.
+    import spark.implicits._
+    val body = "apache spark plans a query as a tree of operators and codegen fuses the hot loops"
+    val docs = Seq[(Long, String)](1L -> body, 2L -> s"$body into one method",
+      3L -> null, 4L -> "", 5L -> "!!! ??? ... ,,, ;;; --- ### @@@ %%% &&& ***",
+      6L -> "A!! B!! C!! D!! E!! F!! G!! H!! I!! J!! K!!", 7L -> s"Café ☕ 数据 😀 $body",
+      8L -> "?! ok ?!")
+    def corpus(docs: Seq[(Long, String)]): String = {
+      val dir = java.nio.file.Files.createTempDirectory("graft-gate").toString
+      docs.map { case (id, t) => (id, t, "en", "web", Option(t).map(_.length.toLong).getOrElse(0L)) }
+        .toDF("doc_id", "text", "lang", "source", "n_chars")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      dir
+    }
+    def rows(df: DataFrame): Seq[String] =
+      try df.collect().map(_.toSeq.mkString(",")).toSeq finally Caches.releaseAll()
+    val out = java.nio.file.Files.createTempDirectory("graft-gate-out").toString
+    val prepared = rows(Pipelines.prepareCorpus(spark, corpus(docs), out))
+    val q41 = rows(ops.Text.q41DocQuality(spark, corpus(docs.filter { case (id, _) => id != 4L && id != 5L })))
+    // 2 and 7 are near-dups of 1; 5 has no token; 6's uppercase letters
+    // count as punctuation (33 of 43 characters)
+    assert(prepared == Seq("train,1,1"))
+    assert(q41 == Seq(
+      "1,en,web,16,81,0,5,16,16,0.0,0.3125,0.48824999999999996",
+      "2,en,web,19,97,0,5,19,19,0.0,0.2631578947368421,0.4695789473684211",
+      "3,en,web,null,null,null,null,null,null,null,null,null",
+      "6,en,web,11,43,33,1,11,33,0.7674418604651163,0.09090909090909091,0.13722198731501056",
+      "7,en,web,17,93,6,5,20,22,0.06451612903225806,0.29411764705882354,0.4617039848197344",
+      "8,en,web,1,8,4,0,3,5,0.5,0.0,0.152"))
+  }
+
   test("q161 seasonal anomaly gate still fires on the time-shifted union") {
     try {
       assert(run(ops.Events.q161SeasonalAnomaly _).count() > 0L,
         "±3·MAD gate flagged nothing on the variant corpus")
     } finally Caches.releaseAll()
   }
+}
+
+object RobustnessSpec {
+  /** Emoji, CJK, accented, RTL and mixed-case texts. */
+  val nonAsciiTexts: Seq[String] = Seq(
+    "Café ☕ DATA 数据 test42",
+    "naïve 😀😀 résumé ok",
+    "العربية rtl mixed ASCII",
+    "数据集 only cjk データ")
 }
