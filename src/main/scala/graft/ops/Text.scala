@@ -107,8 +107,9 @@ object Text {
       // BPE-ish subword units: letter runs, digit runs, single punctuation
       .withColumn("n_bpe_tokens",
         regexp_count(lower(col("text")), lit("[a-z]+|[0-9]+|[^a-z0-9\\s]")).cast("long"))
-      .withColumn("punct_ratio", col("n_punct").cast("double") / col("n_chars_txt"))
-      .withColumn("stop_ratio", col("n_stop").cast("double") / col("n_tokens"))
+      // NULL on an empty or token-free document, as DuckDB's `/` by zero
+      .withColumn("punct_ratio", try_divide(col("n_punct").cast("double"), col("n_chars_txt")))
+      .withColumn("stop_ratio", try_divide(col("n_stop").cast("double"), col("n_tokens")))
       .withColumn("quality_score",
         col("stop_ratio") * lit(0.5) + (lit(1.0) - col("punct_ratio")) * lit(0.3) +
           least(col("n_tokens").cast("double") / lit(100.0), lit(1.0)) * lit(0.2))

@@ -69,16 +69,8 @@ object Vector {
     * are the query set (broadcast); each scans the full corpus once
     * (BroadcastNestedLoopJoin) and keeps its 10 nearest by cosine. */
   def q50CosineTopk(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftExtensions.register(s)
-    val emb = Tables.embeddings(s, dir).select(col("vec_id"), v(col("embedding")).as("v"))
-      .withColumn("nrm", norm(col("v")))
-    val q = emb.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val w = Window.partitionBy(col("query_id")).orderBy(col("cos_sim").desc, col("vec_id").asc)
-    broadcast(q).join(emb, col("query_id") =!= col("vec_id"))
-      .withColumn("cos_sim", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= 10)
+    val emb = cosCorpus(s, dir)
+    topK(bruteScored(cosProbes(emb.filter(col("vec_id") % 100 === 0)), emb), 10)
       .select(col("query_id"), col("rk"), col("vec_id"), col("cos_sim"))
       .orderBy(col("query_id"), col("rk"))
   }
@@ -105,36 +97,11 @@ object Vector {
     * an equi-join on centroid id, which is what makes IVF the 100 TB path.
     * Self-matches are excluded. */
   def q51IvfTopk(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftExtensions.register(s)
-    val emb = Tables.embeddings(s, dir).select(col("vec_id"), v(col("embedding")).as("v"))
-      .withColumn("nrm", norm(col("v")))
-    val cent = emb.filter(col("vec_id") < 8)
-      .select(col("vec_id").as("cid"), col("v").as("cv"), col("nrm").as("cn"))
-    val simToCent = broadcast(cent).join(emb, lit(true))
-      .withColumn("csim", dot(col("cv"), col("v")) / (col("cn") * col("nrm")))
-    val wAssign = Window.partitionBy(col("vec_id")).orderBy(col("csim").desc, col("cid").asc)
-    val assign = simToCent
-      .withColumn("arn", row_number().over(wAssign))
-      .filter(col("arn") === 1)
-      .select(col("vec_id"), col("cid"))
-    val probes = simToCent
-      .filter(col("vec_id") % 100 === 0)
-      .withColumn("prn", row_number().over(wAssign))
-      .filter(col("prn") <= 2)
-      .select(col("vec_id").as("query_id"), col("cid"))
-    val vecsByCluster = assign
-      .join(emb, Seq("vec_id"))
-      .select(col("cid"), col("vec_id"), col("v"), col("nrm"))
-    val q = emb.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("query_id"), col("v").as("qv"), col("nrm").as("qn"))
-    val wTop = Window.partitionBy(col("query_id")).orderBy(col("cos_sim").desc, col("vec_id").asc)
-    probes
-      .join(vecsByCluster, Seq("cid"))
-      .filter(col("query_id") =!= col("vec_id"))
-      .join(broadcast(q), Seq("query_id"))
-      .withColumn("cos_sim", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-      .withColumn("rk", row_number().over(wTop).cast("long"))
-      .filter(col("rk") <= 5)
+    val emb = cosCorpus(s, dir)
+    val sims = cellSims(emb, emb.filter(col("vec_id") < IvfCells))
+    val probe = col("vec_id") % 100 === 0
+    ivfTopK(cosProbes(emb.filter(probe)), emb, nearest(sims, col("csim").desc, 1),
+        nearest(sims.filter(probe), col("csim").desc, IvfProbes), 5)
       .select(col("query_id"), col("rk"), col("vec_id"), col("cos_sim"))
       .orderBy(col("query_id"), col("rk"))
   }
@@ -178,72 +145,14 @@ object Vector {
     * at cos ≥ 0.95 collide with probability ≈0.99). 8-bit bands give 256
     * buckets, so isotropic data does NOT all-collide (4-bit bands would put
     * ~1/16 of the corpus in every bucket and degenerate to all-pairs).
-    *
-    * Projections are computed in exact fixed-point integers: each float
-    * component scales to `round(x·2²⁴)` (exact — floats carry 24 mantissa
-    * bits) and each hyperplane coefficient is the integer
-    * `(b·73856093 + j·19349663) mod 97 − 48` ∈ [−48,48]. The sign of
-    * Σ xq·c is then an exact int64 decision — order-independent and
-    * engine-identical — so the whole matrix of 64 projections collapses to
-    * one codegen'd explode → broadcast-join(coef grid) → sum pipeline
-    * instead of 64 interpreted array-lambda folds (profiled ~10× faster),
-    * and stays correct under any partial-aggregation order at cluster
-    * scale. */
+    * Projections and cosine run on the exact 2²⁴ fixed-point plane
+    * ([[lshBands]], [[lshVerify]]), so they are order-independent,
+    * engine-identical, and correct under any partial-aggregation order at
+    * cluster scale. */
   def q52EmbeddingNearDup(s: SparkSession, dir: String): DataFrame = {
-    // Bilinear b·j term decorrelates the planes: a purely affine mix makes
-    // every plane a cyclic shift of the same mod-97 sawtooth (19349663 ≡ 6
-    // mod 97), which correlates all sign bits and degenerates the banding to
-    // near-all-pairs (measured: 817k candidate pairs affine vs 72k bilinear
-    // on 2000 isotropic vectors ≈ the 62k independence ideal).
-    //
-    // The 64 projections are inlined as codegen'd column expressions — the
-    // coefficient c(b,j) is a closed-form function of (b, j), so each plane
-    // b contributes one `sum(xq * c(b,j))` agg column over the exploded
-    // (vec_id, j, xq) rows. That keeps the whole sketch phase one narrow
-    // HashAggregate (Dim rows/vector in, 64 longs/vector out) instead of a
-    // 64×-exploding coefficient join (r1 shape: |corpus|·Dim·64 intermediate
-    // rows through a shuffle — measured ~2.5× slower at sf0.1).
-    def coef(b: Int): Column =
-      (lit(b * 73856093L) + col("j") * 19349663L + col("j") * lit(b.toLong * 83492791L)) % 97 - 48
-    val xq = graft.Caches.persist(Tables.embeddings(s, dir)
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("j0", "x")))
-      .select(col("vec_id"), (col("j0") + 1).as("j"),
-        round(col("x").cast("double") * FixedPoint, 0).cast("long").as("xq")))
-    val projCols = (0 until SimBits).map(b => sum(col("xq") * coef(b)).as(s"p$b"))
-    val proj = xq.groupBy(col("vec_id")).agg(projCols.head, projCols.tail: _*)
-    val bandStructs = (0 until SimBits / BandBits).map { bi =>
-      val bits = (0 until BandBits)
-        .map(r => when(col(s"p${bi * BandBits + r}") > 0, lit(1L << r)).otherwise(lit(0L)))
-        .reduce(_ + _)
-      struct(lit(bi).as("band_idx"), bits.as("band_val"))
-    }
-    // Persisted: the band table feeds both sides of the candidate self-join
-    // (released by the harness's post-query Caches.releaseAll).
-    val bands = graft.Caches.persist(
-      proj.select(col("vec_id"), explode(array(bandStructs: _*)).as("band"))
-        .select(col("vec_id"), col("band.band_idx").as("band_idx"),
-          col("band.band_val").as("band_val")))
-    val cands = bands.as("a")
-      .join(bands.as("b"),
-        col("a.band_idx") === col("b.band_idx") && col("a.band_val") === col("b.band_val") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
-      .distinct()
-    // Candidate cosine from the same fixed-point integers: exact int64 dot
-    // and norms (order-independent), one codegen'd join-aggregate instead of
-    // an interpreted per-pair array fold.
-    val nq = xq.groupBy(col("vec_id")).agg(sum(col("xq") * col("xq")).as("nq2"))
-    val pairDot = cands
-      .join(xq.select(col("vec_id").as("vec_a"), col("j"), col("xq").as("xa")), Seq("vec_a"))
-      .join(xq.select(col("vec_id").as("vec_b"), col("j"), col("xq").as("xb")), Seq("vec_b", "j"))
-      .groupBy(col("vec_a"), col("vec_b"))
-      .agg(sum(col("xa") * col("xb")).as("dq"))
-    pairDot
-      .join(nq.select(col("vec_id").as("vec_a"), col("nq2").as("na2")), Seq("vec_a"))
-      .join(nq.select(col("vec_id").as("vec_b"), col("nq2").as("nb2")), Seq("vec_b"))
-      .withColumn("cos_sim",
-        col("dq").cast("double") / (sqrt(col("na2").cast("double")) * sqrt(col("nb2").cast("double"))))
-      .filter(col("cos_sim") >= 0.45)
+    val xq = graft.Caches.persist(coords(s, dir)
+      .select(col("vec_id"), col("j"), fixedPoint(FixedPoint).as("xq")))
+    lshVerify(lshBands(xq), xq, Nil, 0.45)
       .select(col("vec_a"), col("vec_b"), col("cos_sim"))
       .orderBy(col("vec_a"), col("vec_b"))
   }
@@ -367,6 +276,214 @@ object Vector {
 
   private val IvfCells = 8
   private val IvfProbes = 2
+
+  // Exploded-form retrieval kernels, shared by q50/q51/q52/q110/q156/q239/
+  // q265/q268/q274/q275/q277. A vector is either a row of doubles scored by
+  // the native cosine fold, or one (vec_id, j) row per coordinate at a
+  // fixed-point scale, where every distance and projection is an exact
+  // int64 sum. Every rank breaks ties to the smaller id (vec_id for hits,
+  // cid for cells), so each result is a total order; and every double is a
+  // correctly rounded op on the same left-fold sums in both engines, so the
+  // DuckDB oracles hash-match. Nothing here persists except the LSH band
+  // table and the gain table; callers persist what they reuse.
+
+  /** The cosine corpus (vec_id, label, vv, nrm): vv is the embedding
+    * widened to doubles and nrm its L2 norm. */
+  private def cosCorpus(s: SparkSession, dir: String): DataFrame = {
+    graft.functions.GraftExtensions.register(s)
+    Tables.embeddings(s, dir)
+      .select(col("vec_id"), col("label").cast("long").as("label"), v(col("embedding")).as("vv"))
+      .withColumn("nrm", norm(col("vv")))
+  }
+
+  /** Rows of [[cosCorpus]] as probe queries (query_id, qlabel, qv, qn). */
+  private def cosProbes(emb: DataFrame): DataFrame =
+    emb.select(col("vec_id").as("query_id"), col("label").as("qlabel"),
+      col("vv").as("qv"), col("nrm").as("qn"))
+
+  /** The fixed retrieval-eval probes of `emb` ([[evalProbeIds]]). */
+  private def evalProbes(s: SparkSession, dir: String, emb: DataFrame): DataFrame =
+    cosProbes(emb.join(broadcast(evalProbeIds(s, dir)), Seq("vec_id")))
+
+  /** `pairs` of probe and corpus rows with cos_sim = dot(qv, vv) / (qn·nrm). */
+  private def cosScore(pairs: DataFrame): DataFrame =
+    pairs.withColumn("cos_sim", dot(col("qv"), col("vv")) / (col("qn") * col("nrm")))
+
+  /** Brute force: every probe of the broadcast `q` against every OTHER
+    * corpus row, scored. */
+  private def bruteScored(q: DataFrame, emb: DataFrame): DataFrame =
+    cosScore(broadcast(q).join(emb, col("query_id") =!= col("vec_id")))
+
+  /** The `k` best scored rows per query_id, ranked rk = 1..k by
+    * (cos_sim desc, vec_id asc). */
+  private def topK(scored: DataFrame, k: Int): DataFrame =
+    scored.withColumn("rk", row_number().over(Window.partitionBy(col("query_id"))
+      .orderBy(col("cos_sim").desc, col("vec_id").asc)).cast("long"))
+      .filter(col("rk") <= k)
+
+  /** A top-k list as (query_id, qlabel, rk, vec_id, rel): rel = 1 when the
+    * hit shares the query's label (the eval family's relevance). */
+  private def graded(top: DataFrame): DataFrame =
+    top.select(col("query_id"), col("qlabel"), col("rk"), col("vec_id"),
+      (col("label") === col("qlabel")).cast("long").as("rel"))
+
+  /** The `n` nearest cells per vec_id of a (vec_id, cid, score) frame,
+    * nearest first under `order` (cosine `csim` desc or L2 `d2` asc), ties
+    * to the smaller cid. */
+  private def nearest(d: DataFrame, order: Column, n: Int): DataFrame =
+    d.withColumn("rn", row_number().over(Window.partitionBy(col("vec_id"))
+      .orderBy(order, col("cid").asc))).filter(col("rn") <= n)
+
+  /** Every corpus row paired with every cell (cid, cv, cn) — the `cells`
+    * rows of the corpus, broadcast — and the cosine csim between them. */
+  private def cellSims(emb: DataFrame, cells: DataFrame): DataFrame =
+    broadcast(cells.select(col("vec_id").as("cid"), col("vv").as("cv"), col("nrm").as("cn")))
+      .join(emb, lit(true))
+      .withColumn("csim", dot(col("cv"), col("vv")) / (col("cn") * col("nrm")))
+
+  /** IVF candidate top-k: each query's candidates are the other corpus
+    * rows `assign`ed (vec_id, cid) to one of its `probes` (vec_id, cid)
+    * cells — an equi-join on cell id, never query × corpus. */
+  private def ivfTopK(q: DataFrame, emb: DataFrame, assign: DataFrame, probes: DataFrame,
+      k: Int): DataFrame =
+    topK(cosScore(probes.select(col("vec_id").as("query_id"), col("cid"))
+      .join(assign.select(col("vec_id"), col("cid")).join(emb, Seq("vec_id")), Seq("cid"))
+      .filter(col("query_id") =!= col("vec_id"))
+      .join(broadcast(q), Seq("query_id"))), k)
+
+  /** The corpus exploded to one (vec_id, j, x) row per coordinate: j is
+    * 1-based and x the float widened to double. */
+  private def coords(s: SparkSession, dir: String): DataFrame =
+    Tables.embeddings(s, dir)
+      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("j0", "x")))
+      .select(col("vec_id"), (col("j0") + 1).as("j"), col("x").cast("double").as("x"))
+
+  /** [[coords]]' x at the power-of-two fixed-point `scale`, rounded
+    * HALF_UP to a long. x·scale is an exact double, so both engines round
+    * the same value, and every later sum of the longs is an exact int64. */
+  private def fixedPoint(scale: Long): Column = round(col("x") * scale, 0).cast("long")
+
+  /** (vec_id, cid, d2): exact squared L2 from each (vec_id, j, xk) row set
+    * of `xk` to each centroid (cid, j, cq) of the broadcast `cent`. */
+  private def l2Dists(xk: DataFrame, cent: DataFrame): DataFrame =
+    xk.join(broadcast(cent), Seq("j"))
+      .groupBy(col("vec_id"), col("cid"))
+      .agg(sum((col("xk") - col("cq")) * (col("xk") - col("cq"))).as("d2"))
+
+  /** KmIters exploded Lloyd rounds over the 2¹² plane `xk` from the `seeds`
+    * rows of it (one cell per seed vec_id); returns the trained centroids
+    * (cid, j, cq). Assignment is the nearest cell by (d2, cid); the update is
+    * the truncating integer mean `sum div count`, exact in both engines. A
+    * cell left without members drops out, as in the unrolled oracle. */
+  private def lloyd(xk: DataFrame, seeds: DataFrame): DataFrame =
+    (1 to KmIters).foldLeft(seeds.select(col("vec_id").as("cid"), col("j"), col("xk").as("cq"))) {
+      (cent, _) =>
+        xk.join(nearest(l2Dists(xk, cent), col("d2").asc, 1).select(col("vec_id"), col("cid")),
+            Seq("vec_id"))
+          .groupBy(col("cid"), col("j"))
+          .agg(expr("sum(xk) div count(1)").as("cq"))
+    }
+
+  /** Hyperplane-LSH bands (vec_id, band_idx, band_val) of the 2²⁴ plane
+    * `xq` (vec_id, j, xq): SimBits sign bits cut into SimBits/BandBits
+    * bands. Plane b's coefficient at dimension j is the integer
+    * `(b·73856093 + j·19349663 + b·j·83492791) mod 97 − 48`, so each
+    * projection Σ xq·c is an exact int64 and each sign bit an exact
+    * decision. The bilinear b·j term decorrelates the planes: an affine mix
+    * makes every plane a cyclic shift of one mod-97 sawtooth and the bands
+    * degenerate to near all-pairs (817k vs 72k candidate pairs on 2,000
+    * isotropic vectors, 62k ideal). The 64 projections are closed-form
+    * column sums of one narrow codegen'd aggregate, not a 64× coefficient
+    * join (measured ~2.5× slower at sf0.1) nor 64 interpreted array folds
+    * (~10× slower). */
+  private def lshBands(xq: DataFrame): DataFrame = {
+    def coef(b: Int): Column =
+      (lit(b * 73856093L) + col("j") * 19349663L + col("j") * lit(b.toLong * 83492791L)) % 97 - 48
+    val projCols = (0 until SimBits).map(b => sum(col("xq") * coef(b)).as(s"p$b"))
+    val bandStructs = (0 until SimBits / BandBits).map { bi =>
+      val bits = (0 until BandBits)
+        .map(r => when(col(s"p${bi * BandBits + r}") > 0, lit(1L << r)).otherwise(lit(0L)))
+        .reduce(_ + _)
+      struct(lit(bi).as("band_idx"), bits.as("band_val"))
+    }
+    xq.groupBy(col("vec_id")).agg(projCols.head, projCols.tail: _*)
+      .select(col("vec_id"), explode(array(bandStructs: _*)).as("band"))
+      .select(col("vec_id"), col("band.band_idx").as("band_idx"), col("band.band_val").as("band_val"))
+  }
+
+  /** Verified LSH near-duplicates (keys.., vec_a, vec_b, cos_sim), vec_a <
+    * vec_b: pairs sharing the `keys` and at least one band of `bands`
+    * (persisted — it feeds both sides of the self-join), kept when their
+    * cosine on the 2²⁴ plane `xq` reaches `minCos`. The cosine is one
+    * double division of exact int64 dot and norms, so the verdict is
+    * order-independent. */
+  private def lshVerify(bands: DataFrame, xq: DataFrame, keys: Seq[String],
+      minCos: Double): DataFrame = {
+    val b = graft.Caches.persist(bands)
+    val same = (keys :+ "band_idx" :+ "band_val").map(c => col(s"a.$c") === col(s"b.$c")).reduce(_ && _)
+    val nq = xq.groupBy(col("vec_id")).agg(sum(col("xq") * col("xq")).as("nq2"))
+    b.as("a").join(b.as("b"), same && col("a.vec_id") < col("b.vec_id"))
+      .select(keys.map(c => col(s"a.$c").as(c)) ++
+        Seq(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b")): _*)
+      .distinct()
+      .join(xq.select(col("vec_id").as("vec_a"), col("j"), col("xq").as("xa")), Seq("vec_a"))
+      .join(xq.select(col("vec_id").as("vec_b"), col("j"), col("xq").as("xb")), Seq("vec_b", "j"))
+      .groupBy((keys ++ Seq("vec_a", "vec_b")).map(col): _*)
+      .agg(sum(col("xa") * col("xb")).as("dq"))
+      .join(nq.select(col("vec_id").as("vec_a"), col("nq2").as("na2")), Seq("vec_a"))
+      .join(nq.select(col("vec_id").as("vec_b"), col("nq2").as("nb2")), Seq("vec_b"))
+      .withColumn("cos_sim",
+        col("dq").cast("double") / (sqrt(col("na2").cast("double")) * sqrt(col("nb2").cast("double"))))
+      .filter(col("cos_sim") >= minCos)
+  }
+
+  /** The eval family's exact-integer DCG discounts, persisted: (rk, g,
+    * cum_g) for rk 1..10, g(r) = 2³⁶ div log2fp(r + 1) (the fixed-point
+    * log2 of the LM costs, so g(1) = 2²⁰ exactly) and cum_g the ideal DCG
+    * of r relevant hits. */
+  private def gainTable(s: SparkSession): DataFrame =
+    graft.Caches.persist(
+      Text.withLog2fp(s.range(1, 11).toDF("rk").limit(10), "rk + 1", "lg")
+        .select(col("rk"), expr("68719476736L div lg").as("g"))
+        .withColumn("cum_g", sum(col("g")).over(Window.orderBy(col("rk"))
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow))))
+
+  /** A graded top-k with each hit's gain g joined on its rank. */
+  private def withGain(top: DataFrame, gains: DataFrame): DataFrame =
+    top.join(broadcast(gains.select(col("rk"), col("g"))), Seq("rk"))
+
+  /** A graded top-k with cum_rel, the relevant hits at ranks ≤ rk. */
+  private def withCumRel(top: DataFrame): DataFrame =
+    top.withColumn("cum_rel", sum(col("rel")).over(Window.partitionBy(col("query_id"))
+      .orderBy(col("rk")).rowsBetween(Window.unboundedPreceding, Window.currentRow)))
+
+  /** Per-query metric rows with n_rel, the corpus rows sharing the query's
+    * label other than the query itself. */
+  private def withNRel(agg: DataFrame, emb: DataFrame): DataFrame =
+    agg.join(emb.groupBy(col("label")).agg(count(lit(1)).as("c")), col("qlabel") === col("label"))
+      .withColumn("n_rel", col("c") - 1)
+
+  /** Rows with n_rel and the ideal DCG cum_g at rank min(n_rel, 10). */
+  private def withIdcg(df: DataFrame, gains: DataFrame): DataFrame =
+    df.withColumn("cap", least(col("n_rel"), lit(10L)))
+      .join(broadcast(gains.select(col("rk").as("cap"), col("cum_g"))), Seq("cap"))
+
+  // Per-query aggregates of a graded top-k, and the ppm metrics over them.
+  // Every metric is a floored integer quotient: exact, engine-identical.
+  private def hits: Column = sum(col("rel"))
+  private def firstRel: Column = min(when(col("rel") === 1L, col("rk")))
+  private def dcg: Column = sum(expr("rel * g"))
+  private def precSum: Column = sum(when(col("rel") === 1L, expr("(cum_rel * 1000000L) div rk")))
+  private def rrPpm(fr: String): Column = expr(s"CASE WHEN $fr IS NULL THEN 0L ELSE 1000000L div $fr END")
+  private def recallPpm(h: String): Column = expr(s"($h * 1000000L) div nullif(n_rel, 0L)")
+  private def apPpm(sp: String): Column = expr(s"$sp div nullif(least(n_rel, 10L), 0L)")
+  private def ndcgPpm(d: String): Column = expr(s"($d * 1000000L) div cum_g")
+
+  /** (query_id, ov_raw): the hits two graded top-k lists share per query. */
+  private def overlap(a: DataFrame, b: DataFrame): DataFrame =
+    a.select(col("query_id"), col("vec_id"))
+      .join(b.select(col("query_id"), col("vec_id")), Seq("query_id", "vec_id"))
+      .groupBy(col("query_id")).agg(count(lit(1)).as("ov_raw"))
 
   // Array-form IVF-PQ kernels, shared by q102, q281 and q282. A vector is
   // one `xv` array<bigint>; a codebook is ONE row holding its whole sorted
@@ -641,51 +758,28 @@ object Vector {
       |WHERE vec_id % 17 = 0
       |ORDER BY vec_id""".stripMargin
 
-  private val KmK = 4      // clusters
-  private val KmIters = 2  // unrolled Lloyd iterations (oracle mirrors them)
+  private[graft] val KmK = 4      // clusters
+  private[graft] val KmIters = 2  // unrolled Lloyd iterations (oracle mirrors them)
   // 12-bit fixed point for the TRAINING loop: means stay exact under
   // integer division and every SSE partial fits int64 with headroom
   // (diff² ≤ 2²⁶ · 64 dims · corpus ≪ 2⁶³); the 2²⁴ FixedPoint used by the
   // SEARCH queries would overflow the exact SSE sums at larger corpora.
-  private val KmFP = 1L << 12
+  private[graft] val KmFP = 1L << 12
 
   /** Distributed k-means training (Lloyd's algorithm) — the step that
     * produces real IVF/PQ codebooks (q51/q102 use deterministic seed
     * vectors as stand-in centroids; this is how the stand-ins graduate).
     *
-    * Each iteration is the canonical two-shuffle Spark shape: (1) assign —
-    * every vector joins the BROADCAST centroid table (K·Dim rows) and
-    * takes its argmin-L2 cluster; (2) update — per-(cluster, dimension)
-    * mean via partial+final hash aggregation. All arithmetic is exact
-    * fixed-point int64 (quantized input, truncating integer division for
-    * the mean — identical semantics in both engines), so every distance,
-    * argmin, and centroid is order-independent and the unrolled-SQL oracle
-    * hash-matches bit-for-bit. Reports per-cluster membership and exact
-    * SSE under the final centroids. */
+    * Each iteration is the canonical two-shuffle Spark shape ([[lloyd]]):
+    * (1) assign — every vector joins the BROADCAST centroid table (K·Dim
+    * rows) and takes its nearest cluster; (2) update — per-(cluster,
+    * dimension) mean via partial+final hash aggregation. Reports
+    * per-cluster membership and exact SSE under the final centroids. */
   def q110KmeansFixedPoint(s: SparkSession, dir: String): DataFrame = {
     // feeds every iteration's assign join and update aggregation
-    val xq = graft.Caches.persist(Tables.embeddings(s, dir)
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("j0", "x")))
-      .select(col("vec_id"), (col("j0") + 1).as("j"),
-        round(col("x").cast("double") * KmFP, 0).cast("long").as("xq")))
-    def dists(cent: DataFrame): DataFrame =
-      xq.join(broadcast(cent), Seq("j"))
-        .groupBy(col("vec_id"), col("cid"))
-        .agg(sum((col("xq") - col("cq")) * (col("xq") - col("cq"))).as("d2"))
-    def nearest(d: DataFrame): DataFrame = {
-      val w = Window.partitionBy(col("vec_id")).orderBy(col("d2").asc, col("cid").asc)
-      d.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-        .select(col("vec_id"), col("cid"), col("d2"))
-    }
-    var cent = xq.filter(col("vec_id") < KmK)
-      .select(col("vec_id").as("cid"), col("j"), col("xq").as("cq"))
-    for (_ <- 1 to KmIters) {
-      val a = nearest(dists(cent)).select(col("vec_id"), col("cid"))
-      cent = xq.join(a, Seq("vec_id"))
-        .groupBy(col("cid"), col("j"))
-        .agg(expr("sum(xq) div count(1)").as("cq")) // exact truncating mean
-    }
-    nearest(dists(cent))
+    val xk = graft.Caches.persist(coords(s, dir)
+      .select(col("vec_id"), col("j"), fixedPoint(KmFP).as("xk")))
+    nearest(l2Dists(xk, lloyd(xk, xk.filter(col("vec_id") < KmK))), col("d2").asc, 1)
       .groupBy(col("cid"))
       .agg(count(lit(1)).as("n_vecs"), sum(col("d2")).as("sse"))
       .orderBy(col("cid"))
@@ -730,10 +824,8 @@ object Vector {
     * pairwise work: the cluster (SemDeDup's own trick — cross-cluster
     * pairs are never considered) and hyperplane-LSH banding within the
     * cluster (q52's trick — same-cluster pairs must also share a band), so
-    * the exact-cosine stage touches (cid, band)-bucket collisions, never
-    * cluster² pairs. All decisions are exact integers (fixed-point
-    * coordinates, int64 dots/norms, the q52 cosine form), so the
-    * kept/dropped sets are bit-identical on any cluster. ε = 0.30: SemDeDup
+    * the exact-cosine stage ([[lshVerify]] keyed by cid) touches
+    * (cid, band)-bucket collisions, never cluster² pairs. ε = 0.30: SemDeDup
     * tunes ε per corpus; this isotropic synthetic corpus has cosines
     * concentrated near 0 (σ ≈ 1/√64), so 0.30 ≈ 2.4σ marks the
     * "semantically same" tail (q52's 0.45 finds nothing here — a dedup
@@ -744,63 +836,15 @@ object Vector {
     // One explode, both fixed-point scales: xk (2^12) drives the k-means
     // recurrence exactly as q110; xq (2^24, float-exact) drives
     // projections and cosine exactly as q52.
-    val base = graft.Caches.persist(Tables.embeddings(s, dir)
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("j0", "x")))
-      .select(col("vec_id"), (col("j0") + 1).as("j"),
-        round(col("x").cast("double") * KmFP, 0).cast("long").as("xk"),
-        round(col("x").cast("double") * FixedPoint, 0).cast("long").as("xq")))
-    def dists(cent: DataFrame): DataFrame =
-      base.join(broadcast(cent), Seq("j"))
-        .groupBy(col("vec_id"), col("cid"))
-        .agg(sum((col("xk") - col("cq")) * (col("xk") - col("cq"))).as("d2"))
-    def nearest(d: DataFrame): DataFrame = {
-      val w = Window.partitionBy(col("vec_id")).orderBy(col("d2").asc, col("cid").asc)
-      d.withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-        .select(col("vec_id"), col("cid"))
-    }
-    var cent = base.filter(col("vec_id") < KmK)
-      .select(col("vec_id").as("cid"), col("j"), col("xk").as("cq"))
-    for (_ <- 1 to KmIters) {
-      val a = nearest(dists(cent))
-      cent = base.join(a, Seq("vec_id"))
-        .groupBy(col("cid"), col("j"))
-        .agg(expr("sum(xk) div count(1)").as("cq"))
-    }
-    val asg = graft.Caches.persist(nearest(dists(cent)))
-    // q52's banding, keyed by (cid, band_idx, band_val).
-    def coef(b: Int): Column =
-      (lit(b * 73856093L) + col("j") * 19349663L + col("j") * lit(b.toLong * 83492791L)) % 97 - 48
-    val projCols = (0 until SimBits).map(b => sum(col("xq") * coef(b)).as(s"p$b"))
-    val proj = base.groupBy(col("vec_id")).agg(projCols.head, projCols.tail: _*)
-    val bandStructs = (0 until SimBits / BandBits).map { bi =>
-      val bits = (0 until BandBits)
-        .map(r => when(col(s"p${bi * BandBits + r}") > 0, lit(1L << r)).otherwise(lit(0L)))
-        .reduce(_ + _)
-      struct(lit(bi).as("band_idx"), bits.as("band_val"))
-    }
-    val bands = graft.Caches.persist(
-      proj.select(col("vec_id"), explode(array(bandStructs: _*)).as("band"))
-        .select(col("vec_id"), col("band.band_idx").as("band_idx"),
-          col("band.band_val").as("band_val"))
-        .join(asg, Seq("vec_id")))
-    val cands = bands.as("a")
-      .join(bands.as("b"),
-        col("a.cid") === col("b.cid") && col("a.band_idx") === col("b.band_idx") &&
-          col("a.band_val") === col("b.band_val") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.cid").as("cid"), col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
-      .distinct()
-    val nq = base.groupBy(col("vec_id")).agg(sum(col("xq") * col("xq")).as("nq2"))
-    val dups = cands
-      .join(base.select(col("vec_id").as("vec_a"), col("j"), col("xq").as("xa")), Seq("vec_a"))
-      .join(base.select(col("vec_id").as("vec_b"), col("j"), col("xq").as("xb")), Seq("vec_b", "j"))
-      .groupBy(col("cid"), col("vec_a"), col("vec_b"))
-      .agg(sum(col("xa") * col("xb")).as("dq"))
-      .join(nq.select(col("vec_id").as("vec_a"), col("nq2").as("na2")), Seq("vec_a"))
-      .join(nq.select(col("vec_id").as("vec_b"), col("nq2").as("nb2")), Seq("vec_b"))
-      .filter(col("dq").cast("double") /
-        (sqrt(col("na2").cast("double")) * sqrt(col("nb2").cast("double"))) >= 0.30)
-      .select(col("cid"), col("vec_a"), col("vec_b"))
-    val dupsP = graft.Caches.persist(dups)
+    val base = graft.Caches.persist(coords(s, dir).select(col("vec_id"), col("j"),
+      fixedPoint(KmFP).as("xk"), fixedPoint(FixedPoint).as("xq")))
+    val asg = graft.Caches.persist(
+      nearest(l2Dists(base, lloyd(base, base.filter(col("vec_id") < KmK))), col("d2").asc, 1)
+        .select(col("vec_id"), col("cid")))
+    // q52's banding and verify, keyed by the cluster id
+    val dupsP = graft.Caches.persist(
+      lshVerify(lshBands(base).join(asg, Seq("vec_id")), base, Seq("cid"), 0.30)
+        .select(col("cid"), col("vec_a"), col("vec_b")))
     val stats = asg.groupBy(col("cid")).agg(count(lit(1)).as("n_vecs"))
     val pairStats = dupsP.groupBy(col("cid")).agg(count(lit(1)).as("n_dup_pairs"))
     // Greedy keep-lowest: every pair is (low, high); the high side drops.
@@ -1215,32 +1259,17 @@ object Vector {
     * Scale: queries broadcast (the q50 stance); at real scale the scored
     * pass swaps to the q51/q102 IVF probe join with the same downstream
     * ranking unchanged — mining quality degrades gracefully with nprobe,
-    * which is exactly how production ANCE refreshes negatives. Cosine is
-    * double (IEEE-deterministic per row: same fold order both engines);
-    * ranking ties break on vec_id. */
+    * which is exactly how production ANCE refreshes negatives. */
   def q239HardNegatives(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.GraftExtensions.register(s)
-    val emb = Tables.embeddings(s, dir)
-      .select(col("vec_id"), col("label"), v(col("embedding")).as("v"))
-      .withColumn("nrm", norm(col("v")))
-    val q = emb.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("query_id"), col("label").as("q_label"),
-        col("v").as("qv"), col("nrm").as("qn"))
-    val scored = broadcast(q).join(emb, col("query_id") =!= col("vec_id"))
-      .withColumn("cos_sim", dot(col("qv"), col("v")) / (col("qn") * col("nrm")))
-      .select(col("query_id"), col("q_label"), col("vec_id"), col("label"),
-        col("cos_sim"))
-    val posTop = scored.filter(col("label") === col("q_label"))
+    val emb = cosCorpus(s, dir)
+    val scored = bruteScored(cosProbes(emb.filter(col("vec_id") % 100 === 0)), emb)
+    val posTop = scored.filter(col("label") === col("qlabel"))
       .groupBy(col("query_id")).agg(max(col("cos_sim")).as("top_pos_sim"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-    scored.filter(col("label") =!= col("q_label"))
-      .withColumn("rk", row_number().over(w).cast("long"))
-      .filter(col("rk") <= 5)
+    topK(scored.filter(col("label") =!= col("qlabel")), 5)
       .join(broadcast(posTop), Seq("query_id"))
-      .select(col("query_id"), col("q_label").cast("long").as("q_label"),
+      .select(col("query_id"), col("qlabel").as("q_label"),
         col("rk"), col("vec_id").as("neg_id"),
-        col("label").cast("long").as("neg_label"), col("cos_sim"),
+        col("label").as("neg_label"), col("cos_sim"),
         col("top_pos_sim"),
         (col("cos_sim") > col("top_pos_sim")).cast("long").as("margin_violation"))
       .orderBy(col("query_id"), col("rk"))
@@ -1351,53 +1380,24 @@ object Vector {
     * metric that grades the ANN stack (q50–q53, q102, q249) as a RETRIEVAL
     * system, not just a nearest-neighbor oracle: per probe query, the
     * discounted cumulative gain of label-relevant results in the cosine
-    * top-10, normalized by the ideal ordering. Exact integers throughout:
-    * the rank discounts 1/log₂(rank+1) come from the SAME fixed-point log2
-    * machinery as the LM costs (gain g(r) = 2³⁶ div log2fp(r+1), so
-    * g(1) = 2²⁰ exactly), the ideal DCG is a cumulative-gain lookup at
-    * min(n_relevant, 10) — an equi-join on the 10-row discount frame, not
-    * a θ-join — and NDCG ships in ppm.
+    * top-10, normalized by the ideal ordering. The discounts are
+    * [[gainTable]]'s exact integers, the ideal DCG is a cumulative-gain
+    * lookup at min(n_relevant, 10) — an equi-join on the 10-row discount
+    * frame, not a θ-join — and NDCG ships in ppm.
     *
     * Scale: the scored pass is q50's declared broadcast-queries × corpus
     * scan (swap in the IVF probe join at real scale, metric unchanged);
     * per-label corpus counts are one aggregate; everything after runs on
     * |queries| rows. */
   def q265NdcgRetrieval(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.{Window => W}
-    graft.functions.GraftExtensions.register(s)
-    val emb = graft.Caches.persist(
-      Tables.embeddings(s, dir)
-        .select(col("vec_id"), col("label").cast("long").as("label"),
-          v(col("embedding")).as("vv"))
-        .withColumn("nrm", norm(col("vv"))))
-    val q = emb.join(broadcast(evalProbeIds(s, dir)), Seq("vec_id"))
-      .select(col("vec_id").as("query_id"), col("label").as("qlabel"),
-        col("vv").as("qv"), col("nrm").as("qn"))
-    val wR = W.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-    val ranked = broadcast(q).join(emb, col("query_id") =!= col("vec_id"))
-      .withColumn("cos_sim", dot(col("qv"), col("vv")) / (col("qn") * col("nrm")))
-      .withColumn("rk", row_number().over(wR).cast("long"))
-      .filter(col("rk") <= 10)
-      .select(col("query_id"), col("qlabel"), col("rk"),
-        (col("label") === col("qlabel")).cast("long").as("rel"))
-    val gains = graft.Caches.persist(
-      Text.withLog2fp(s.range(1, 11).toDF("rk").limit(10), "rk + 1", "lg")
-        .select(col("rk"), expr("68719476736L div lg").as("g"))
-        .withColumn("cum_g", sum(col("g")).over(W.orderBy(col("rk"))
-          .rowsBetween(W.unboundedPreceding, W.currentRow))))
-    val dcg = ranked.join(broadcast(gains.select(col("rk"), col("g"))), Seq("rk"))
-      .groupBy(col("query_id"), col("qlabel"))
-      .agg(sum(col("rel")).as("hits"), sum(expr("rel * g")).as("dcg_fp"))
-    val lc = emb.groupBy(col("label")).agg(count(lit(1)).as("c"))
-    dcg
-      .join(lc, col("qlabel") === col("label"))
-      .withColumn("n_rel", col("c") - 1)
-      .withColumn("cap", least(col("n_rel"), lit(10L)))
-      .join(broadcast(gains.select(col("rk").as("cap"), col("cum_g"))), Seq("cap"))
+    val emb = graft.Caches.persist(cosCorpus(s, dir))
+    val gains = gainTable(s)
+    val top = graded(topK(bruteScored(evalProbes(s, dir, emb), emb), 10))
+    val agg = withGain(top, gains).groupBy(col("query_id"), col("qlabel"))
+      .agg(hits.as("hits"), dcg.as("dcg_fp"))
+    withIdcg(withNRel(agg, emb), gains)
       .select(col("query_id"), col("qlabel").as("label"), col("n_rel"),
-        col("hits"), col("dcg_fp"), col("cum_g").as("idcg_fp"),
-        expr("(dcg_fp * 1000000L) div cum_g").as("ndcg_ppm"))
+        col("hits"), col("dcg_fp"), col("cum_g").as("idcg_fp"), ndcgPpm("dcg_fp").as("ndcg_ppm"))
       .orderBy(col("query_id"))
   }
 
@@ -1441,42 +1441,21 @@ object Vector {
     * the FIRST relevant rank in the cosine top-10 (0 when none — the
     * convention that makes MRR averageable), recall@10 = hits / total
     * relevant corpus members, and precision@10 = hits / 10. Shares q265's
-    * scored pass verbatim (same broadcast probe-queries × corpus scan —
-    * IVF probes at real scale, metric unchanged) and needs NO log2
-    * machinery: all three metrics are exact integer ppm.
+    * scored pass (the brute kernels — IVF probes at real scale, metric
+    * unchanged) and needs NO log2 machinery.
     *
     * Scale: one scored pass, one per-label corpus count aggregate,
     * everything after runs on |queries| rows. */
   def q268RetrievalMrrRecall(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.{Window => W}
-    graft.functions.GraftExtensions.register(s)
-    val emb = graft.Caches.persist(
-      Tables.embeddings(s, dir)
-        .select(col("vec_id"), col("label").cast("long").as("label"),
-          v(col("embedding")).as("vv"))
-        .withColumn("nrm", norm(col("vv"))))
-    val q = emb.join(broadcast(evalProbeIds(s, dir)), Seq("vec_id"))
-      .select(col("vec_id").as("query_id"), col("label").as("qlabel"),
-        col("vv").as("qv"), col("nrm").as("qn"))
-    val wR = W.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-    val ranked = broadcast(q).join(emb, col("query_id") =!= col("vec_id"))
-      .withColumn("cos_sim", dot(col("qv"), col("vv")) / (col("qn") * col("nrm")))
-      .withColumn("rk", row_number().over(wR).cast("long"))
-      .filter(col("rk") <= 10)
-      .select(col("query_id"), col("qlabel"), col("rk"),
-        (col("label") === col("qlabel")).cast("long").as("rel"))
-    val agg = ranked.groupBy(col("query_id"), col("qlabel"))
-      .agg(sum(col("rel")).as("hits"),
-        min(when(col("rel") === 1L, col("rk"))).as("fr"))
-    val lc = emb.groupBy(col("label")).agg(count(lit(1)).as("c"))
-    agg.join(lc, col("qlabel") === col("label"))
-      .withColumn("n_rel", col("c") - 1)
+    val emb = graft.Caches.persist(cosCorpus(s, dir))
+    val agg = graded(topK(bruteScored(evalProbes(s, dir, emb), emb), 10))
+      .groupBy(col("query_id"), col("qlabel")).agg(hits.as("hits"), firstRel.as("fr"))
+    withNRel(agg, emb)
       .select(col("query_id"), col("qlabel").as("label"), col("n_rel"),
         col("hits"),
         coalesce(col("fr"), lit(0L)).as("first_rel_rank"),
-        expr("CASE WHEN fr IS NULL THEN 0L ELSE 1000000L div fr END").as("rr_ppm"),
-        expr("(hits * 1000000L) div nullif(n_rel, 0L)").as("recall_ppm"),
+        rrPpm("fr").as("rr_ppm"),
+        recallPpm("hits").as("recall_ppm"),
         (col("hits") * lit(100000L)).as("precision_at10_ppm"))
       .orderBy(col("query_id"))
   }
@@ -1521,89 +1500,34 @@ object Vector {
     *
     * Queries whose probes surface no relevant candidate keep a row with
     * ivf_hits = 0 (left join + coalesce), so the gate can't overreport —
-    * the q111 discipline applied to q268's metrics. All metrics exact
-    * integer ppm. */
+    * the q111 discipline applied to q268's metrics. */
   def q274IvfRetrievalEval(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.{Window => W}
-    graft.functions.GraftExtensions.register(s)
-    val emb = graft.Caches.persist(
-      Tables.embeddings(s, dir)
-        .select(col("vec_id"), col("label").cast("long").as("label"),
-          v(col("embedding")).as("vv"))
-        .withColumn("nrm", norm(col("vv"))))
-    val q = emb.join(broadcast(evalProbeIds(s, dir)), Seq("vec_id"))
-      .select(col("vec_id").as("query_id"), col("label").as("qlabel"),
-        col("vv").as("qv"), col("nrm").as("qn"))
-    val wR = W.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-    // --- brute-force reference pass (q268's scan, persisted: feeds both
-    // the reference metrics and the overlap gate) ---
-    val bfTop = graft.Caches.persist(
-      broadcast(q).join(emb, col("query_id") =!= col("vec_id"))
-        .withColumn("cos_sim", dot(col("qv"), col("vv")) / (col("qn") * col("nrm")))
-        .withColumn("rk", row_number().over(wR).cast("long"))
-        .filter(col("rk") <= 10)
-        .select(col("query_id"), col("qlabel"), col("rk"), col("vec_id"),
-          (col("label") === col("qlabel")).cast("long").as("rel")))
-    // --- IVF probe pass (q51's index shape at k=10): assign every vector
-    // to its nearest of 8 centroids, probe each query's 2 nearest cells,
-    // rank ONLY the vectors assigned there ---
-    // ADVICE r11: centroid seeds are the 8 SMALLEST vec_ids (data-derived,
-    // TakeOrderedAndProject), not a hardcoded `vec_id < 8` — a filtered or
-    // re-keyed corpus can't silently yield an empty centroid set and a
-    // plausible-looking 0% index recall. Identical ids (0–7) on this data.
-    val cent = emb.orderBy(col("vec_id")).limit(8)
-      .select(col("vec_id").as("cid"), col("vv").as("cv"), col("nrm").as("cn"))
-    val simToCent = broadcast(cent).join(emb, lit(true))
-      .withColumn("csim", dot(col("cv"), col("vv")) / (col("cn") * col("nrm")))
-    val wAssign = W.partitionBy(col("vec_id")).orderBy(col("csim").desc, col("cid").asc)
-    val assign = simToCent
-      .withColumn("arn", row_number().over(wAssign))
-      .filter(col("arn") === 1)
-      .select(col("vec_id"), col("cid"))
-    val probes = simToCent
-      .join(broadcast(evalProbeIds(s, dir)), Seq("vec_id"))
-      .withColumn("prn", row_number().over(wAssign))
-      .filter(col("prn") <= 2)
-      .select(col("vec_id").as("query_id"), col("cid"))
-    val vecsByCluster = assign.join(emb, Seq("vec_id"))
-      .select(col("cid"), col("vec_id"), col("label"), col("vv"), col("nrm"))
-    val ivfTop = graft.Caches.persist(
-      probes
-        .join(vecsByCluster, Seq("cid"))
-        .filter(col("query_id") =!= col("vec_id"))
-        .join(broadcast(q), Seq("query_id"))
-        .withColumn("cos_sim", dot(col("qv"), col("vv")) / (col("qn") * col("nrm")))
-        .withColumn("rk", row_number().over(wR).cast("long"))
-        .filter(col("rk") <= 10)
-        .select(col("query_id"), col("rk"), col("vec_id"),
-          (col("label") === col("qlabel")).cast("long").as("rel")))
-    // --- metrics on both passes + the overlap gate, all on |queries| rows ---
+    val emb = graft.Caches.persist(cosCorpus(s, dir))
+    val q = evalProbes(s, dir, emb)
+    // brute-force reference pass (q268's scan, persisted: feeds both the
+    // reference metrics and the overlap gate)
+    val bfTop = graft.Caches.persist(graded(topK(bruteScored(q, emb), 10)))
+    // IVF probe pass (q51's index shape at k=10). ADVICE r11: centroid
+    // seeds are the 8 SMALLEST vec_ids (data-derived, TakeOrderedAndProject),
+    // not a hardcoded `vec_id < 8` — a filtered or re-keyed corpus can't
+    // silently yield an empty centroid set and a plausible-looking 0% index
+    // recall. Identical ids (0–7) on this data.
+    val sims = cellSims(emb, emb.orderBy(col("vec_id")).limit(IvfCells))
+    val ivfTop = graft.Caches.persist(graded(ivfTopK(q, emb, nearest(sims, col("csim").desc, 1),
+      nearest(sims.join(broadcast(evalProbeIds(s, dir)), Seq("vec_id")), col("csim").desc, IvfProbes),
+      10)))
+    // metrics on both passes + the overlap gate, all on |queries| rows
     val bfAgg = bfTop.groupBy(col("query_id"), col("qlabel"))
-      .agg(sum(col("rel")).as("bf_hits"),
-        min(when(col("rel") === 1L, col("rk"))).as("bf_fr"),
-        count(lit(1)).as("bf_k"))
+      .agg(hits.as("bf_hits"), firstRel.as("bf_fr"), count(lit(1)).as("bf_k"))
     val ivfAgg = ivfTop.groupBy(col("query_id"))
-      .agg(sum(col("rel")).as("ivf_hits_raw"),
-        min(when(col("rel") === 1L, col("rk"))).as("ivf_fr"))
-    val overlap = bfTop.select(col("query_id"), col("vec_id"))
-      .join(ivfTop.select(col("query_id"), col("vec_id")), Seq("query_id", "vec_id"))
-      .groupBy(col("query_id")).agg(count(lit(1)).as("ov_raw"))
-    val lc = emb.groupBy(col("label")).agg(count(lit(1)).as("c"))
-    bfAgg
-      .join(ivfAgg, Seq("query_id"), "left")
-      .join(overlap, Seq("query_id"), "left")
-      .join(lc, col("qlabel") === col("label"))
-      .withColumn("n_rel", col("c") - 1)
+      .agg(hits.as("ivf_hits_raw"), firstRel.as("ivf_fr"))
+    withNRel(bfAgg.join(ivfAgg, Seq("query_id"), "left")
+        .join(overlap(bfTop, ivfTop), Seq("query_id"), "left"), emb)
       .withColumn("ivf_hits", coalesce(col("ivf_hits_raw"), lit(0L)))
       .withColumn("topk_overlap", coalesce(col("ov_raw"), lit(0L)))
       .select(col("query_id"), col("qlabel").as("label"), col("n_rel"),
-        col("bf_hits"),
-        expr("CASE WHEN bf_fr IS NULL THEN 0L ELSE 1000000L div bf_fr END").as("bf_rr_ppm"),
-        expr("(bf_hits * 1000000L) div nullif(n_rel, 0L)").as("bf_recall_ppm"),
-        col("ivf_hits"),
-        expr("CASE WHEN ivf_fr IS NULL THEN 0L ELSE 1000000L div ivf_fr END").as("ivf_rr_ppm"),
-        expr("(ivf_hits * 1000000L) div nullif(n_rel, 0L)").as("ivf_recall_ppm"),
+        col("bf_hits"), rrPpm("bf_fr").as("bf_rr_ppm"), recallPpm("bf_hits").as("bf_recall_ppm"),
+        col("ivf_hits"), rrPpm("ivf_fr").as("ivf_rr_ppm"), recallPpm("ivf_hits").as("ivf_recall_ppm"),
         col("topk_overlap"),
         expr("(topk_overlap * 1000000L) div bf_k").as("index_recall_ppm"))
       .orderBy(col("query_id"))
@@ -1675,46 +1599,18 @@ object Vector {
 
   /** q275: MAP@10 — mean-average-precision, the last standard retrieval
     * number next to q265's NDCG and q268's MRR/recall (VERDICT r10 item 6).
-    * AP@10 = (Σ over relevant ranks r≤10 of precision@r) / min(n_rel, 10);
-    * each precision@r is the exact floored ppm (cum_rel(r)·1e6 div r), so
-    * the sum is order-independent and engine-identical, and the final
-    * division is one more exact integer op. Shares q265/q268's scored pass
-    * verbatim (brute-force broadcast scan — IVF probes at real scale, gated
-    * by q274); everything after the top-10 filter runs on ≤10·|queries|
-    * rows. */
+    * AP@10 = (Σ over relevant ranks r≤10 of precision@r) / min(n_rel, 10),
+    * each precision@r the floored ppm cum_rel(r)·1e6 div r. Shares
+    * q265/q268's scored pass (IVF probes at real scale, gated by q274);
+    * everything after the top-10 filter runs on ≤10·|queries| rows. */
   def q275MapAtK(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.{Window => W}
-    graft.functions.GraftExtensions.register(s)
-    val emb = graft.Caches.persist(
-      Tables.embeddings(s, dir)
-        .select(col("vec_id"), col("label").cast("long").as("label"),
-          v(col("embedding")).as("vv"))
-        .withColumn("nrm", norm(col("vv"))))
-    val q = emb.join(broadcast(evalProbeIds(s, dir)), Seq("vec_id"))
-      .select(col("vec_id").as("query_id"), col("label").as("qlabel"),
-        col("vv").as("qv"), col("nrm").as("qn"))
-    val wR = W.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-    val wCum = W.partitionBy(col("query_id")).orderBy(col("rk"))
-      .rowsBetween(W.unboundedPreceding, W.currentRow)
-    val ranked = broadcast(q).join(emb, col("query_id") =!= col("vec_id"))
-      .withColumn("cos_sim", dot(col("qv"), col("vv")) / (col("qn") * col("nrm")))
-      .withColumn("rk", row_number().over(wR).cast("long"))
-      .filter(col("rk") <= 10)
-      .select(col("query_id"), col("qlabel"), col("rk"),
-        (col("label") === col("qlabel")).cast("long").as("rel"))
-      .withColumn("cum_rel", sum(col("rel")).over(wCum))
-    val agg = ranked.groupBy(col("query_id"), col("qlabel"))
-      .agg(sum(col("rel")).as("hits"),
-        sum(when(col("rel") === 1L, expr("(cum_rel * 1000000L) div rk")))
-          .as("sum_prec_raw"))
-    val lc = emb.groupBy(col("label")).agg(count(lit(1)).as("c"))
-    agg.join(lc, col("qlabel") === col("label"))
-      .withColumn("n_rel", col("c") - 1)
+    val emb = graft.Caches.persist(cosCorpus(s, dir))
+    val agg = withCumRel(graded(topK(bruteScored(evalProbes(s, dir, emb), emb), 10)))
+      .groupBy(col("query_id"), col("qlabel")).agg(hits.as("hits"), precSum.as("sum_prec_raw"))
+    withNRel(agg, emb)
       .withColumn("sum_prec_ppm", coalesce(col("sum_prec_raw"), lit(0L)))
       .select(col("query_id"), col("qlabel").as("label"), col("n_rel"),
-        col("hits"), col("sum_prec_ppm"),
-        expr("sum_prec_ppm div nullif(least(n_rel, 10L), 0L)").as("ap_ppm"))
+        col("hits"), col("sum_prec_ppm"), apPpm("sum_prec_ppm").as("ap_ppm"))
       .orderBy(col("query_id"))
   }
 
@@ -1751,9 +1647,8 @@ object Vector {
   /** q277: retrieval eval through a TRAINED IVF index (VERDICT r11 items
     * 1+5) — q274 executes the IVF eval path but its centroids are arbitrary
     * seed vectors (the 8 smallest vec_ids, untrained); this query trains
-    * the 8-cell codebook with q110's exact fixed-point Lloyd recurrence
-    * (2 iterations, 2¹² quantization, truncating integer means — identical
-    * in both engines), assigns and probes by the SAME exact integer L2
+    * the 8-cell codebook with q110's exploded Lloyd recurrence
+    * ([[lloyd]]), assigns and probes by the SAME exact integer L2
     * distance, and reports NDCG@10 and MAP@10 — the two metrics q274
     * doesn't carry — on the brute and IVF passes SIDE-BY-SIDE, plus the
     * q111 index-recall gate. This is the number a real IVF deployment
@@ -1762,17 +1657,9 @@ object Vector {
     * Scale: training is q110's two-shuffle-per-iteration loop over a
     * K·Dim broadcast codebook; the IVF scoring pass is an equi-join on
     * trained cell id (~nprobe/k of the corpus); the brute pass is the
-    * declared q50 reference being graded against. All metrics exact
-    * integer ppm (the q265 log2 gain machinery, the q275 floored
-    * precision sums). */
+    * declared q50 reference being graded against. */
   def q277TrainedIvfEval(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.{Window => W}
-    graft.functions.GraftExtensions.register(s)
-    val emb = graft.Caches.persist(
-      Tables.embeddings(s, dir)
-        .select(col("vec_id"), col("label").cast("long").as("label"),
-          v(col("embedding")).as("vv"))
-        .withColumn("nrm", norm(col("vv"))))
+    val emb = graft.Caches.persist(cosCorpus(s, dir))
     // k-means training plane: one explode at the 2^12 training scale
     // (q110's representation; q156 carries both scales the same way).
     // r15 second-pass note: the q282 array-fold rewrite was TRIED here and
@@ -1781,100 +1668,34 @@ object Vector {
     // and the higher-order-function folds run interpreted (no whole-stage
     // codegen), measuring 1.4 → 2.2 s quiet. The fold rewrite pays only
     // where the before shape's exchanges dominate (q281/q282/q102).
-    val xk = graft.Caches.persist(Tables.embeddings(s, dir)
-      .select(col("vec_id"), posexplode(col("embedding")).as(Seq("j0", "x")))
-      .select(col("vec_id"), (col("j0") + 1).as("j"),
-        round(col("x").cast("double") * KmFP, 0).cast("long").as("xk")))
+    val xk = graft.Caches.persist(coords(s, dir)
+      .select(col("vec_id"), col("j"), fixedPoint(KmFP).as("xk")))
     // seeds: the TIvfK smallest vec_ids — data-derived (ADVICE r11: never
     // empty on a filtered/re-keyed corpus), TakeOrderedAndProject not a
     // global sort
     val seeds = Tables.embeddings(s, dir).select(col("vec_id"))
       .orderBy(col("vec_id")).limit(TIvfK)
-    def dists(c: DataFrame): DataFrame =
-      xk.join(broadcast(c), Seq("j"))
-        .groupBy(col("vec_id"), col("cid"))
-        .agg(sum((col("xk") - col("cq")) * (col("xk") - col("cq"))).as("d2"))
-    val wA = W.partitionBy(col("vec_id")).orderBy(col("d2").asc, col("cid").asc)
-    def nearest(d: DataFrame): DataFrame =
-      d.withColumn("rn", row_number().over(wA)).filter(col("rn") === 1)
-        .select(col("vec_id"), col("cid"))
-    var cent = xk.join(broadcast(seeds), Seq("vec_id"))
-      .select(col("vec_id").as("cid"), col("j"), col("xk").as("cq"))
-    for (_ <- 1 to KmIters) {
-      val a = nearest(dists(cent))
-      cent = xk.join(a, Seq("vec_id"))
-        .groupBy(col("cid"), col("j"))
-        .agg(expr("sum(xk) div count(1)").as("cq")) // exact truncating mean
-    }
     // trained-cell distances feed BOTH the corpus assignment and the
     // query probes — persisted so the two consumers share one pass
-    val dist = graft.Caches.persist(dists(cent))
-    val assign = nearest(dist)
-    val probes = dist.join(broadcast(evalProbeIds(s, dir)), Seq("vec_id"))
-      .withColumn("prn", row_number().over(wA)).filter(col("prn") <= 2)
-      .select(col("vec_id").as("query_id"), col("cid"))
-    val q = emb.join(broadcast(evalProbeIds(s, dir)), Seq("vec_id"))
-      .select(col("vec_id").as("query_id"), col("label").as("qlabel"),
-        col("vv").as("qv"), col("nrm").as("qn"))
-    val wR = W.partitionBy(col("query_id"))
-      .orderBy(col("cos_sim").desc, col("vec_id").asc)
-    val wCum = W.partitionBy(col("query_id")).orderBy(col("rk"))
-      .rowsBetween(W.unboundedPreceding, W.currentRow)
-    val bfTop = graft.Caches.persist(
-      broadcast(q).join(emb, col("query_id") =!= col("vec_id"))
-        .withColumn("cos_sim", dot(col("qv"), col("vv")) / (col("qn") * col("nrm")))
-        .withColumn("rk", row_number().over(wR).cast("long"))
-        .filter(col("rk") <= 10)
-        .select(col("query_id"), col("qlabel"), col("rk"), col("vec_id"),
-          (col("label") === col("qlabel")).cast("long").as("rel")))
-    val vecsByCluster = assign.join(emb, Seq("vec_id"))
-      .select(col("cid"), col("vec_id"), col("label"), col("vv"), col("nrm"))
-    val ivfTop = graft.Caches.persist(
-      probes.join(vecsByCluster, Seq("cid"))
-        .filter(col("query_id") =!= col("vec_id"))
-        .join(broadcast(q), Seq("query_id"))
-        .withColumn("cos_sim", dot(col("qv"), col("vv")) / (col("qn") * col("nrm")))
-        .withColumn("rk", row_number().over(wR).cast("long"))
-        .filter(col("rk") <= 10)
-        .select(col("query_id"), col("rk"), col("vec_id"),
-          (col("label") === col("qlabel")).cast("long").as("rel")))
-    // q265's exact-integer gain table: g(r) = 2^36 div log2fp(r+1)
-    val gains = graft.Caches.persist(
-      Text.withLog2fp(s.range(1, 11).toDF("rk").limit(10), "rk + 1", "lg")
-        .select(col("rk"), expr("68719476736L div lg").as("g"))
-        .withColumn("cum_g", sum(col("g")).over(W.orderBy(col("rk"))
-          .rowsBetween(W.unboundedPreceding, W.currentRow))))
-    val bfM = bfTop
-      .withColumn("cum_rel", sum(col("rel")).over(wCum))
-      .join(broadcast(gains.select(col("rk"), col("g"))), Seq("rk"))
-      .groupBy(col("query_id"), col("qlabel"))
-      .agg(coalesce(sum(expr("rel * g")), lit(0L)).as("bf_dcg_fp"),
-        coalesce(sum(when(col("rel") === 1L,
-          expr("(cum_rel * 1000000L) div rk"))), lit(0L)).as("bf_sp_ppm"),
+    val dist = graft.Caches.persist(l2Dists(xk, lloyd(xk, xk.join(broadcast(seeds), Seq("vec_id")))))
+    val q = evalProbes(s, dir, emb)
+    val bfTop = graft.Caches.persist(graded(topK(bruteScored(q, emb), 10)))
+    val ivfTop = graft.Caches.persist(graded(ivfTopK(q, emb, nearest(dist, col("d2").asc, 1),
+      nearest(dist.join(broadcast(evalProbeIds(s, dir)), Seq("vec_id")), col("d2").asc, IvfProbes),
+      10)))
+    val gains = gainTable(s)
+    val bfM = withGain(withCumRel(bfTop), gains).groupBy(col("query_id"), col("qlabel"))
+      .agg(coalesce(dcg, lit(0L)).as("bf_dcg_fp"), coalesce(precSum, lit(0L)).as("bf_sp_ppm"),
         count(lit(1)).as("bf_k"))
-    val ivfM = ivfTop
-      .withColumn("cum_rel", sum(col("rel")).over(wCum))
-      .join(broadcast(gains.select(col("rk"), col("g"))), Seq("rk"))
-      .groupBy(col("query_id"))
-      .agg(coalesce(sum(expr("rel * g")), lit(0L)).as("ivf_dcg_raw"),
-        coalesce(sum(when(col("rel") === 1L,
-          expr("(cum_rel * 1000000L) div rk"))), lit(0L)).as("ivf_sp_raw"))
-    val overlap = bfTop.select(col("query_id"), col("vec_id"))
-      .join(ivfTop.select(col("query_id"), col("vec_id")), Seq("query_id", "vec_id"))
-      .groupBy(col("query_id")).agg(count(lit(1)).as("ov_raw"))
-    val lc = emb.groupBy(col("label")).agg(count(lit(1)).as("c"))
-    bfM
-      .join(ivfM, Seq("query_id"), "left")
-      .join(overlap, Seq("query_id"), "left")
-      .join(lc, col("qlabel") === col("label"))
-      .withColumn("n_rel", col("c") - 1)
-      .withColumn("cap", least(col("n_rel"), lit(10L)))
-      .join(broadcast(gains.select(col("rk").as("cap"), col("cum_g"))), Seq("cap"))
+    val ivfM = withGain(withCumRel(ivfTop), gains).groupBy(col("query_id"))
+      .agg(coalesce(dcg, lit(0L)).as("ivf_dcg_raw"), coalesce(precSum, lit(0L)).as("ivf_sp_raw"))
+    withIdcg(withNRel(bfM.join(ivfM, Seq("query_id"), "left")
+        .join(overlap(bfTop, ivfTop), Seq("query_id"), "left"), emb), gains)
       .select(col("query_id"), col("qlabel").as("label"), col("n_rel"),
-        expr("(bf_dcg_fp * 1000000L) div cum_g").as("bf_ndcg_ppm"),
-        expr("(coalesce(ivf_dcg_raw, 0L) * 1000000L) div cum_g").as("ivf_ndcg_ppm"),
-        expr("bf_sp_ppm div nullif(least(n_rel, 10L), 0L)").as("bf_ap_ppm"),
-        expr("coalesce(ivf_sp_raw, 0L) div nullif(least(n_rel, 10L), 0L)").as("ivf_ap_ppm"),
+        ndcgPpm("bf_dcg_fp").as("bf_ndcg_ppm"),
+        ndcgPpm("coalesce(ivf_dcg_raw, 0L)").as("ivf_ndcg_ppm"),
+        apPpm("bf_sp_ppm").as("bf_ap_ppm"),
+        apPpm("coalesce(ivf_sp_raw, 0L)").as("ivf_ap_ppm"),
         coalesce(col("ov_raw"), lit(0L)).as("topk_overlap"),
         expr("(coalesce(ov_raw, 0L) * 1000000L) div bf_k").as("index_recall_ppm"))
       .orderBy(col("query_id"))
@@ -1995,8 +1816,9 @@ object Vector {
     * starts FROM the seed codebook, so Lloyd's monotone descent bounds
     * sse_trained ≤ sse_seed + KmIters·n·PqDims (the integer-truncation
     * slack: a truncated mean is off the exact mean by < 1 per coordinate) —
-    * a law OperatorsSpec pins; the real-corpus win on planted structure is
-    * quantified by IvfTrainProbe's α grid.
+    * a law OperatorsSpec pins; the win on planted structure is recorded in
+    * `evidence/probe_ivf_trained_pq.json` (the α grid at sf0.1) and
+    * `evidence/probe_ivf_trained_x100_r14.json` (200k vectors).
     *
     * Scale stance: the shared array-form IVF-PQ kernels — assignment is a
     * row-local fold per (vec, block) against the 1-row codebook attached

@@ -15,7 +15,10 @@ import org.apache.spark.sql.SparkSession
   * Usage: QueryProbe [sfDir] [passes] [nameSubstring...]
   * Prints one JSON line per query (the fastest pass's metrics) and a
   * closing summary line. Memos are released after every pass, so each
-  * pass measures the query's own training.
+  * pass measures the query's own training. Each measured pass runs in job
+  * group `<query>#<pass>` (the warm-up in none), so with Spark's event log
+  * on, `scripts/stage_breakdown.py <log> --group '^q277_'` keeps one
+  * query's jobs.
   */
 object QueryProbe {
   private class Acc extends SparkListener {
@@ -61,13 +64,19 @@ object QueryProbe {
       finally { graft.Caches.releaseAll(); graft.Caches.releaseMemos() }
       var best = Double.MaxValue
       var line = ""
-      (1 to passes).foreach { _ =>
+      (1 to passes).foreach { pass =>
         acc.reset()
+        // jobs named `<query>#<pass>`, as perfbench names its own, so an
+        // event log splits per query (scripts/stage_breakdown.py --group)
+        spark.sparkContext.setJobGroup(s"$name#$pass", name, interruptOnCancel = false)
         val t0 = System.nanoTime()
         try fn(spark, dir).count()
         catch { case scala.util.control.NonFatal(e) =>
           System.err.println(s"PROBE FAIL $name: ${e.getMessage}") }
-        finally { graft.Caches.releaseAll(); graft.Caches.releaseMemos() }
+        finally {
+          spark.sparkContext.clearJobGroup()
+          graft.Caches.releaseAll(); graft.Caches.releaseMemos()
+        }
         val w = (System.nanoTime() - t0) / 1e9
         Thread.sleep(150) // let the listener bus drain before reading counters
         if (w < best) {

@@ -594,6 +594,7 @@ class OperatorsSpec extends SparkSpec {
       .map(r => (r.getAs[Long]("query_id"), r.getAs[Long]("vec_id"))).toSet
     val recall = (brute & ivf).size.toDouble / brute.size
     assert(recall >= 0.25, s"recall=$recall")
+    assert(ivf.forall { case (q, v) => q != v }, "a query is its own IVF neighbor")
   }
 
   test("PQ top-k overlaps brute-force top-k (sanity recall on random data)") {
@@ -2723,6 +2724,82 @@ class OperatorsSpec extends SparkSpec {
       // an IVF hit list is a subset of a 10-list: recall can't exceed brute's
       // 10-bounded ceiling semantics, and rr_ppm is a reciprocal-rank ppm
       assert(r.getAs[Long]("ivf_rr_ppm") <= 1000000L)
+    }
+  }
+
+  /** sf0.001's embeddings with exact ties planted: vector 1 becomes a copy
+    * of vector 0, so the first two Lloyd seeds are equidistant from every
+    * point, and every vector with vec_id ≡ 0 (mod 3) gets a copy scaled by
+    * 2 under vec_id + 1000 with the next label, so a hit and its copy tie
+    * exactly on cosine (scaling by 2 is exact) but differ in relevance and
+    * norm (the fixture vectors all have norm 1). */
+  private lazy val tiedEmbeddings: String = {
+    import spark.implicits._
+    val rows = Tables.embeddings(spark, sf()).select("vec_id", "embedding", "label")
+      .as[(Long, Seq[Float], Int)].collect()
+    val e0 = rows.find(_._1 == 0L).get._2
+    val dir = java.nio.file.Files.createTempDirectory("graft-ties").toString
+    (rows.map { case (id, e, l) => (id, if (id == 1L) e0 else e, l) } ++
+      rows.filter(_._1 % 3 == 0).map { case (id, e, l) => (id + 1000L, e.map(_ * 2), l + 1) })
+      .toSeq.toDF("vec_id", "embedding", "label")
+      .write.parquet(s"$dir/embeddings.parquet")
+    dir
+  }
+
+  test("q268 hits and first relevant rank equal a driver-side brute cosine top-10") {
+    // An independent reference for the shared brute-force kernel (the
+    // shared-pass tests above compare it with itself): the same
+    // left-to-right double dot as graft_dot, cosine dot / (|q|·|v|), the
+    // query excluded, ties to the smaller vec_id.
+    def dot(a: Array[Double], b: Array[Double]): Double = {
+      var acc = 0.0
+      var i = 0
+      while (i < a.length) { acc += a(i) * b(i); i += 1 }
+      acc
+    }
+    Seq(sf(), tiedEmbeddings).foreach { dir =>
+      val emb = Tables.embeddings(spark, dir).select("vec_id", "label", "embedding").collect()
+        .map(r => (r.getLong(0), r.getInt(1).toLong, r.getSeq[Float](2).map(_.toDouble).toArray))
+      val nrm = emb.map { case (id, _, v) => id -> math.sqrt(dot(v, v)) }.toMap
+      val expected = emb.filter(_._1 % 100 == 0).sortBy(_._1).take(ops.Vector.EvalProbeK)
+        .map { case (qid, ql, qv) =>
+          val rel = emb.filter(_._1 != qid)
+            .map { case (id, l, v) => (dot(qv, v) / (nrm(qid) * nrm(id)), id, l == ql) }
+            .sortBy { case (c, id, _) => (-c, id) }.take(10).map(_._3)
+          qid -> (rel.count(identity).toLong, (rel.indexOf(true) + 1).toLong)
+        }.toMap
+      val got = ops.Vector.q268RetrievalMrrRecall(spark, dir).collect()
+        .map(r => r.getAs[Long]("query_id") -> (r.getAs[Long]("hits"), r.getAs[Long]("first_rel_rank"))).toMap
+      Caches.releaseAll()
+      assert(expected.nonEmpty && got == expected, dir)
+    }
+  }
+
+  test("q110 n_vecs and sse equal a driver-side exact Long Lloyd recurrence") {
+    // An independent reference for the shared exploded Lloyd kernel:
+    // HALF_UP quantization at KmFP, KmK seeds = the vec_ids below KmK,
+    // KmIters rounds of nearest-cell assignment (ties to the smaller cid)
+    // and truncating integer means.
+    import ops.Vector.{KmFP, KmIters, KmK}
+    Seq(sf(), tiedEmbeddings).foreach { dir =>
+      val pts = Tables.embeddings(spark, dir).select("vec_id", "embedding").collect()
+        .map(r => r.getLong(0) -> r.getSeq[Float](1).map(x =>
+          BigDecimal(x.toDouble * KmFP).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLongExact).toArray)
+      def d2(a: Array[Long], b: Array[Long]): Long = a.indices.map(i => (a(i) - b(i)) * (a(i) - b(i))).sum
+      // each point with its nearest (d2, cid)
+      def assign(cent: Seq[(Long, Array[Long])]): Seq[(Array[Long], (Long, Long))] =
+        pts.toSeq.map { case (_, x) => x -> cent.map { case (c, cq) => (d2(x, cq), c) }.min }
+      val trained = (1 to KmIters).foldLeft(pts.toSeq.filter(_._1 < KmK)) { (cent, _) =>
+        assign(cent).groupBy(_._2._2).toSeq.map { case (c, ms) =>
+          c -> ms.head._1.indices.map(j => ms.map(_._1(j)).sum / ms.size).toArray
+        }
+      }
+      val expected = assign(trained).groupBy(_._2._2).toSeq
+        .map { case (c, ms) => (c, ms.size.toLong, ms.map(_._2._1).sum) }.sorted
+      val got = ops.Vector.q110KmeansFixedPoint(spark, dir).collect()
+        .map(r => (r.getAs[Long]("cid"), r.getAs[Long]("n_vecs"), r.getAs[Long]("sse"))).toSeq
+      Caches.releaseAll()
+      assert(expected.nonEmpty && got == expected, dir)
     }
   }
 

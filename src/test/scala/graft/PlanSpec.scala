@@ -158,16 +158,18 @@ class PlanSpec extends SparkSpec {
     // q50's declared brute-force broadcast probe-queries × corpus scan
     // (the retrieval pass being graded; IVF probes at real scale)
     "q265_ndcg_retrieval",
-    // q265's identical scored pass (shared shape, different metrics)
+    // the shared brute-force kernel (`Vector.bruteScored`) as in q265,
+    // graded by different metrics
     "q268_retrieval_mrr_recall",
-    // embeds q268's brute-force pass as the REFERENCE the IVF probe
+    // embeds the shared brute-force kernel as the REFERENCE the IVF probe
     // path is gated against (the q111 shape at k=10); the IVF side
     // itself is the equi-join on centroid id — no BNLJ of its own
     // beyond the 8-row broadcast centroid assignment
     "q274_ivf_retrieval_eval",
-    // q265/q268's identical scored pass (shared shape, MAP metric)
+    // the shared brute-force kernel (`Vector.bruteScored`) as in
+    // q265/q268, graded by MAP
     "q275_map_at_k",
-    // embeds the same brute-force reference pass as q274, graded against
+    // embeds the shared brute-force kernel as q274 does, graded against
     // the trained-k-means IVF equi-join side (VERDICT r11 items 1+5)
     "q277_trained_ivf_eval",
     // q50's declared brute-force broadcast query × corpus scan as the

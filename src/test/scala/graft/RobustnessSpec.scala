@@ -146,9 +146,9 @@ class RobustnessSpec extends SparkSpec {
   test("quality gates on NULL, empty and all-punctuation texts: pinned rows") {
     // The rows are pinned from a run of the regex punctuation count
     // (`length(text) - length(regexp_replace(text, '[^a-z0-9 ]', ''))`).
-    // q41 divides by the character and token counts without a guard, so
-    // under ANSI mode the empty and the token-free documents make it
-    // throw DIVIDE_BY_ZERO; it runs on the other documents.
+    // The empty (4) and the token-free (5) documents divide by zero: their
+    // ratios and score read NULL, as q41Oracle's DuckDB `/` gives on this
+    // corpus.
     import spark.implicits._
     val body = "apache spark plans a query as a tree of operators and codegen fuses the hot loops"
     val docs = Seq[(Long, String)](1L -> body, 2L -> s"$body into one method",
@@ -166,7 +166,7 @@ class RobustnessSpec extends SparkSpec {
       try df.collect().map(_.toSeq.mkString(",")).toSeq finally Caches.releaseAll()
     val out = java.nio.file.Files.createTempDirectory("graft-gate-out").toString
     val prepared = rows(Pipelines.prepareCorpus(spark, corpus(docs), out))
-    val q41 = rows(ops.Text.q41DocQuality(spark, corpus(docs.filter { case (id, _) => id != 4L && id != 5L })))
+    val q41 = rows(ops.Text.q41DocQuality(spark, corpus(docs)))
     // 2 and 7 are near-dups of 1; 5 has no token; 6's uppercase letters
     // count as punctuation (33 of 43 characters)
     assert(prepared == Seq("train,1,1"))
@@ -174,6 +174,8 @@ class RobustnessSpec extends SparkSpec {
       "1,en,web,16,81,0,5,16,16,0.0,0.3125,0.48824999999999996",
       "2,en,web,19,97,0,5,19,19,0.0,0.2631578947368421,0.4695789473684211",
       "3,en,web,null,null,null,null,null,null,null,null,null",
+      "4,en,web,0,0,0,0,1,0,null,null,null",
+      "5,en,web,0,43,33,0,11,33,0.7674418604651163,null,null",
       "6,en,web,11,43,33,1,11,33,0.7674418604651163,0.09090909090909091,0.13722198731501056",
       "7,en,web,17,93,6,5,20,22,0.06451612903225806,0.29411764705882354,0.4617039848197344",
       "8,en,web,1,8,4,0,3,5,0.5,0.0,0.152"))
