@@ -1,17 +1,22 @@
 #!/usr/bin/env python3
-"""Per-job and per-stage breakdown of one Spark event log.
+"""Per-job and per-stage breakdown of Spark event logs.
 
 Usage:
-    python3 scripts/stage_breakdown.py <event log> [--group REGEX]
+    python3 scripts/stage_breakdown.py <event log>... [--group REGEX]
 
-<event log> is one event-log file (plain JSON lines, or `.zstd`, read
+Each <event log> is one event-log file (plain JSON lines, or `.zstd`, read
 through the `zstd` binary) or a rolling event-log directory
-(`eventlog_v2_*`), whose `events_*` files are read in order. `--group`
-keeps only the jobs whose job group matches REGEX; perfbench names each
-measured query's jobs `<query>#<pass>`, so `--group '#1$'` selects the
-first measured pass and drops the warm-up.
+(`eventlog_v2_*`), whose `events_*` files are read in order; every log
+given is reported on its own, under a `== <path>` header (a perfbench
+corpus_5x first run leaves two: the ScaleUp JVM's and the benchmark's).
+`--group` keeps only the jobs whose job group matches REGEX; perfbench
+names each measured query's jobs `<query>#<pass>`, so `--group '#1$'`
+selects the first measured pass and drops the warm-up.
 
-For each job it prints the wall time, and for each of its stages the wall
+For each job it prints its group, its description (`spark.job.description`:
+the query name under perfbench, or a phase label such as `q282/coarse r1`
+that `graft.Caches.bounded` sets around its collect) and the wall time,
+and for each of its stages the wall
 time, task count, task seconds (executor run time), CPU seconds, shuffle
 records written and read, and the task result bytes (total and largest
 task). A stage whose tasks return megabytes to the driver is a collect;
@@ -60,6 +65,7 @@ def load(path):
             props = e.get("Properties") or {}
             jobs[e["Job ID"]] = {"start": e["Submission Time"], "end": None,
                                  "group": props.get("spark.jobGroup.id") or "",
+                                 "desc": props.get("spark.job.description") or "",
                                  "stages": e["Stage IDs"]}
         elif kind == "SparkListenerJobEnd":
             jobs[e["Job ID"]]["end"] = e["Completion Time"]
@@ -92,22 +98,20 @@ def seconds(start, end):
     return (end - start) / 1000 if start is not None and end is not None else float("nan")
 
 
-def main():
-    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
-    ap.add_argument("log")
-    ap.add_argument("--group", help="keep jobs whose job group matches this regex")
-    a = ap.parse_args()
-    jobs, stages = load(a.log)
-    keep = sorted(j for j, v in jobs.items() if a.group is None or re.search(a.group, v["group"]))
+def report(path, group):
+    """Print one log's breakdown; False when no job matched."""
+    jobs, stages = load(path)
+    keep = sorted(j for j, v in jobs.items() if group is None or re.search(group, v["group"]))
     if not keep:
-        sys.exit("stage_breakdown: no job matched")
+        print("no job matched")
+        return False
     head = f"{'stage':>7} {'wall_s':>7} {'tasks':>5} {'task_s':>7} {'cpu_s':>7} " \
            f"{'shuf_w':>9} {'shuf_r':>9} {'result_mb':>9} {'max_task_mb':>11}  name"
     total = {"task_ms": 0, "cpu_ns": 0, "result_bytes": 0, "shuffle_written": 0, "tasks": 0}
     seen = set()
     for j in keep:
         job = jobs[j]
-        print(f"job {j} [{job['group']}] wall {seconds(job['start'], job['end']):.2f} s")
+        print(f"job {j} [{job['group']}] \"{job['desc']}\" wall {seconds(job['start'], job['end']):.2f} s")
         print(head)
         for sid in sorted(job["stages"]):
             s = stages.get(sid)
@@ -128,6 +132,20 @@ def main():
           f"task {total['task_ms'] / 1000:.2f} s, cpu {total['cpu_ns'] / 1e9:.2f} s, "
           f"shuffle records written {total['shuffle_written']}, "
           f"task results {total['result_bytes'] / 2**20:.2f} MiB")
+    return True
+
+
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("logs", nargs="+", metavar="log")
+    ap.add_argument("--group", help="keep jobs whose job group matches this regex")
+    a = ap.parse_args()
+    matched = False
+    for path in a.logs:
+        print(f"== {path}")
+        matched = report(path, a.group) or matched
+    if not matched:
+        sys.exit("stage_breakdown: no job matched")
 
 
 if __name__ == "__main__":

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.LogicalRDD
 
 /** Lifecycle registry for per-query cached state (ADVICE.md r1: persisted
@@ -82,6 +82,35 @@ object Caches {
   def releaseCheckpoint(df: DataFrame): Unit =
     df.queryExecution.analyzed.collect { case l: LogicalRDD => l.rdd }
       .foreach(_.unpersist(false))
+
+  /** `df` collected to the driver once, as a LocalRelation-backed frame,
+    * for a frame whose size a dictionary bounds (a codebook, a probe set, a
+    * reduced series), never the corpus: throws above `maxRows`. A
+    * `.scalar()` over the result, or a Filter or Project the optimizer folds
+    * into the relation, runs on the driver with no job (a broadcast of it
+    * still runs one small job, with no scan), where a checkpointed frame
+    * pays its checkpoint job and a job per consumer; the corpus-scale plan
+    * that PRODUCES the rows still runs distributed. No `limit`:
+    * CollectLimit's incremental take adds jobs.
+    *
+    * The collect's jobs carry `label` (say `q282/coarse r1`) as their
+    * `spark.job.description`; the caller's description is restored after,
+    * and the job group is left alone. Nothing is registered: the rows live
+    * in the plan, so there is nothing to release. */
+  def bounded(df: DataFrame, maxRows: Int, label: String): DataFrame =
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(boundedRows(df, maxRows, label): _*), df.schema)
+
+  /** The rows behind [[bounded]], for callers that assemble a value from
+    * them on the driver. */
+  private[graft] def boundedRows(df: DataFrame, maxRows: Int, label: String): Array[Row] = {
+    val sc = df.sparkSession.sparkContext
+    val prior = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(label)
+    val rows = try df.collect() finally sc.setJobDescription(prior)
+    if (rows.length > maxRows)
+      throw new IllegalStateException(s"$label: ${rows.length} rows, bound $maxRows")
+    rows
+  }
 
   /** Run `f`, then release ONLY the cache entries `f` registered on this
     * thread — the self-cleaning wrapper for library entry points (e.g.

@@ -38,14 +38,16 @@ object Analytics {
     * optimizer's ConvertToLocalRelation folds each step's anchor lookup to
     * a driver-local LocalTableScan (the checkpointed-RDD anchor paid job
     * submission + scheduling per step). The corpus-scale aggregate that
-    * PRODUCES the frame still runs distributed. */
-  private def localAnchorView(s: SparkSession, df: DataFrame, prefix: String): String = {
-    val rows = df.collect()
+    * PRODUCES the frame still runs distributed; the collect, its row bound
+    * and its job label are [[graft.Caches.bounded]]'s. */
+  private def localAnchorView(df: DataFrame, maxRows: Int, prefix: String, label: String): String = {
     val name = s"${prefix}${viewSeq.incrementAndGet()}"
-    s.createDataFrame(java.util.Arrays.asList(rows: _*), df.schema)
-      .createOrReplaceTempView(name)
+    graft.Caches.bounded(df, maxRows, label).createOrReplaceTempView(name)
     name
   }
+
+  /** Row bound of a quarterly series: 1,024 years of quarters. */
+  private val MaxQuarters = 4096
 
   /** Integer division truncating toward zero — SQL `div`, DuckDB `//`. */
   private def idiv(a: Column, b: Any): Column = call_function("div", a, lit(b))
@@ -1793,7 +1795,7 @@ object Analytics {
     // checkpointed-RDD anchor paid ~3 jobs + scheduling per statement —
     // JobTrace r15: 119 jobs). See [[localAnchorView]] for why the bounded
     // collect is driver-safe at any scale.
-    val mv = localAnchorView(s, idx, "graft_quarters_w")
+    val mv = localAnchorView(idx, MaxQuarters, "graft_quarters_w", "q217/quarters")
     // ADVICE r8: scripting.enabled is session-global — save and restore it
     // so this query leaves no side effect on the shared session (ScaleSpec
     // runs queries concurrently on one SparkSession).

@@ -1,9 +1,10 @@
 package graft.ops
 
 import graft.Tables
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType, StructField, StructType}
 
 /** Similarity search over the `embeddings` table (SURVEY.md §2.11 —
   * mandated LLM-pipeline extension): brute-force cosine top-k as the
@@ -57,10 +58,10 @@ object Vector {
     * corpus-share semantics because the brute/IVF top-k OPERATOR itself is
     * their declared surface. */
   private[graft] val EvalProbeK = 100
-  private def evalProbeIds(s: SparkSession, dir: String): DataFrame =
-    Tables.embeddings(s, dir).select(col("vec_id"))
-      .filter(col("vec_id") % 100 === 0)
-      .orderBy(col("vec_id")).limit(EvalProbeK)
+  private def evalProbeIds(emb: DataFrame): DataFrame = evalProbeRows(emb.select(col("vec_id")))
+  /** The rows of `df` (one per vec_id) whose vec_id is an eval probe id. */
+  private def evalProbeRows(df: DataFrame): DataFrame =
+    df.filter(col("vec_id") % 100 === 0).orderBy(col("vec_id")).limit(EvalProbeK)
   /** DuckDB twin of [[evalProbeIds]] — splice as a CTE named `pids`. */
   private val pidsSql: String =
     s"pids AS (SELECT vec_id FROM embeddings WHERE vec_id % 100 = 0 ORDER BY vec_id LIMIT $EvalProbeK)"
@@ -134,10 +135,10 @@ object Vector {
       |WHERE rk <= 5
       |ORDER BY query_id, rk""".stripMargin
 
-  private val SimBits = 64
-  private val BandBits = 8
+  private[graft] val SimBits = 64
+  private[graft] val BandBits = 8
   private val Dim = 64 // corpus embedding dimensionality (FIXTURES.md)
-  private val FixedPoint = 1L << 24 // float mantissa width: x*2^24 is exact
+  private[graft] val FixedPoint = 1L << 24 // float mantissa width: x*2^24 is exact
 
   /** Hyperplane-LSH near-duplicate pairs: 64 sign bits → 8 bands of 8 bits →
     * self-join on (band_idx, band_val) → exact cosine on candidates → keep
@@ -194,9 +195,9 @@ object Vector {
       |WHERE cos_sim >= 0.45
       |ORDER BY vec_a, vec_b""".stripMargin
 
-  private val PqBlocks = 8  // 8 subspaces × 8 dims
+  private[graft] val PqBlocks = 8  // 8 subspaces × 8 dims
   private val PqDims = Dim / PqBlocks
-  private val PqK = 16      // centroids per subspace
+  private[graft] val PqK = 16      // centroids per subspace
 
   /** Product-quantization ANN top-k (the third ANN family beside IVF and
     * hyperplane LSH): vectors compress to 8 one-byte codes (argmin-L2
@@ -274,8 +275,8 @@ object Vector {
       |WHERE rk <= 10
       |ORDER BY query_id, rk""".stripMargin
 
-  private val IvfCells = 8
-  private val IvfProbes = 2
+  private[graft] val IvfCells = 8
+  private[graft] val IvfProbes = 2
 
   // Exploded-form retrieval kernels, shared by q50/q51/q52/q110/q156/q239/
   // q265/q268/q274/q275/q277. A vector is either a row of doubles scored by
@@ -302,8 +303,8 @@ object Vector {
       col("vv").as("qv"), col("nrm").as("qn"))
 
   /** The fixed retrieval-eval probes of `emb` ([[evalProbeIds]]). */
-  private def evalProbes(s: SparkSession, dir: String, emb: DataFrame): DataFrame =
-    cosProbes(emb.join(broadcast(evalProbeIds(s, dir)), Seq("vec_id")))
+  private def evalProbes(emb: DataFrame): DataFrame =
+    cosProbes(emb.join(broadcast(evalProbeIds(emb)), Seq("vec_id")))
 
   /** `pairs` of probe and corpus rows with cos_sim = dot(qv, vv) / (qn·nrm). */
   private def cosScore(pairs: DataFrame): DataFrame =
@@ -371,18 +372,24 @@ object Vector {
       .agg(sum((col("xk") - col("cq")) * (col("xk") - col("cq"))).as("d2"))
 
   /** KmIters exploded Lloyd rounds over the 2¹² plane `xk` from the `seeds`
-    * rows of it (one cell per seed vec_id); returns the trained centroids
-    * (cid, j, cq). Assignment is the nearest cell by (d2, cid); the update is
-    * the truncating integer mean `sum div count`, exact in both engines. A
-    * cell left without members drops out, as in the unrolled oracle. */
-  private def lloyd(xk: DataFrame, seeds: DataFrame): DataFrame =
-    (1 to KmIters).foldLeft(seeds.select(col("vec_id").as("cid"), col("j"), col("xk").as("cq"))) {
-      (cent, _) =>
-        xk.join(nearest(l2Dists(xk, cent), col("d2").asc, 1).select(col("vec_id"), col("cid")),
-            Seq("vec_id"))
-          .groupBy(col("cid"), col("j"))
-          .agg(expr("sum(xk) div count(1)").as("cq"))
+    * rows of it (one cell per seed vec_id, at most `k`); returns the trained
+    * centroids (cid, j, cq). Assignment is the nearest cell by (d2, cid); the
+    * update is the truncating integer mean `sum div count`, exact in both
+    * engines. A cell left without members drops out, as in the unrolled
+    * oracle. Each round's k·Dim-row table is driver-held
+    * ([[graft.Caches.bounded]], jobs labelled `<tag>/lloyd r<n>`): the corpus
+    * is scanned once per round and the next round broadcasts a local
+    * relation instead of re-planning the previous rounds. */
+  private def lloyd(xk: DataFrame, seeds: DataFrame, k: Int, tag: String): DataFrame = {
+    def held(cent: DataFrame, label: String): DataFrame = graft.Caches.bounded(cent, k * Dim, s"$tag/$label")
+    (1 to KmIters).foldLeft(held(seeds.select(col("vec_id").as("cid"), col("j"), col("xk").as("cq")),
+        "lloyd seed")) { (cent, r) =>
+      held(xk.join(nearest(l2Dists(xk, cent), col("d2").asc, 1).select(col("vec_id"), col("cid")),
+          Seq("vec_id"))
+        .groupBy(col("cid"), col("j"))
+        .agg(expr("sum(xk) div count(1)").as("cq")), s"lloyd r$r")
     }
+  }
 
   /** Hyperplane-LSH bands (vec_id, band_idx, band_val) of the 2²⁴ plane
     * `xq` (vec_id, j, xq): SimBits sign bits cut into SimBits/BandBits
@@ -486,23 +493,27 @@ object Vector {
       .groupBy(col("query_id")).agg(count(lit(1)).as("ov_raw"))
 
   // Array-form IVF-PQ kernels, shared by q102, q281 and q282. A vector is
-  // one `xv` array<bigint>; a codebook is ONE row holding its whole sorted
-  // entry list, attached to corpus rows with `.scalar()` (a constant-key
-  // join plans as a BroadcastNestedLoopJoin). Every distance, argmin,
-  // residual and LUT entry is then a row-local integer array fold, so the
-  // n·cells and n·blocks·codes distance fan-outs never cross an exchange:
-  // the only corpus-scale shuffles left are the Lloyd mean updates (partial
-  // aggregates, dictionary-sized after map-side combine) and the top-k
-  // windows. All values are exact int64, so every argmin and sum is
+  // one `xv` array<bigint>; a codebook is ONE driver-held row holding its
+  // whole sorted entry list, attached to corpus rows with `.scalar()` (a
+  // constant-key join plans as a BroadcastNestedLoopJoin), which over a
+  // local relation runs no job. Every distance, argmin, residual and LUT
+  // entry is then a row-local integer array fold, so the n·cells and
+  // n·blocks·codes distance fan-outs never cross an exchange. A Lloyd round
+  // is ONE mean aggregate over the corpus; its rows (at most entries × dims)
+  // are collected through `Caches.bounded` and the next codebook is
+  // assembled on the driver, so nothing in the chain is checkpointed and no
+  // round re-plans the rounds before it. The corpus-scale shuffles left are
+  // those aggregates (dictionary-sized after map-side combine) and the
+  // top-k windows. All values are exact int64, so every argmin and sum is
   // order-independent and engine-identical.
 
-  /** The corpus as one `xv` array per vector at fixed-point `scale`,
+  /** The loaded `emb` as one `xv` array per vector at fixed-point `scale`,
     * persisted and fanned out to session parallelism: file splits are sized
     * for raw bytes while every downstream pass is a CPU-dense fold (A/B on
     * q282 at sf0.1: 1.9 s vs 2.8 s serial). */
-  private def quantPlane(s: SparkSession, dir: String, scale: Long): DataFrame =
-    graft.Caches.persist(Tables.embeddings(s, dir)
-      .repartition(s.sparkContext.defaultParallelism)
+  private def quantPlane(emb: DataFrame, scale: Long): DataFrame =
+    graft.Caches.persist(emb
+      .repartition(emb.sparkSession.sparkContext.defaultParallelism)
       .select(col("vec_id"), expr("transform(embedding, " +
         s"x -> CAST(round(CAST(x AS DOUBLE) * $scale) AS BIGINT))").as("xv")))
 
@@ -510,16 +521,26 @@ object Vector {
   private def l2(a: String, b: String): String =
     s"aggregate(zip_with($a, $b, (xx, yy) -> (xx - yy) * (xx - yy)), 0L, (acc2, vv) -> acc2 + vv)"
 
-  /** `rows` as a 1-row codebook: one array of struct(<rows' columns>),
-    * sorted by those columns in order. */
-  private def codebook(rows: DataFrame): DataFrame =
-    rows.groupBy().agg(sort_array(collect_list(struct(rows.columns.toSeq.map(col): _*))))
+  /** Driver-held codebook entries (integer key columns, then one array
+    * column, keys unique) as a 1-row codebook: one array of struct(<the
+    * columns>) sorted by the keys, the order `sort_array` gives them. */
+  private def bookOf(s: SparkSession, entry: StructType, rows: Seq[Row]): DataFrame = {
+    val nKeys = entry.length - 1
+    val sorted = rows.sortBy(r => (0 until nKeys).map(r.getAs[Number](_).longValue))(
+      Ordering.Implicits.seqOrdering[IndexedSeq, Long])
+    s.createDataFrame(java.util.Arrays.asList(Row(sorted)),
+      StructType(Seq(StructField("book", ArrayType(entry, containsNull = false), nullable = false))))
+  }
 
-  /** The rows of `df` whose vec_id is one of the corpus's `k` smallest:
+  /** The (at most `entries`) codebook rows of `rows`, collected under job
+    * label `label`, as a driver-held 1-row codebook ([[bookOf]]). */
+  private def codebook(rows: DataFrame, entries: Int, label: String): DataFrame =
+    bookOf(rows.sparkSession, rows.schema, graft.Caches.boundedRows(rows, entries, label).toSeq)
+
+  /** The rows of `df` (one per vec_id) with the `k` smallest vec_ids:
     * data-derived seeds, never empty on a filtered or re-keyed corpus. */
-  private def seedRows(s: SparkSession, dir: String, df: DataFrame, k: Int): DataFrame =
-    df.join(broadcast(Tables.embeddings(s, dir).select(col("vec_id"))
-      .orderBy(col("vec_id")).limit(k)), Seq("vec_id"))
+  private def seedRows(df: DataFrame, k: Int): DataFrame =
+    df.orderBy(col("vec_id")).limit(k)
 
   /** (d2, cid) from array `v` to every cell of the attached `cents`. */
   private def cellDists(v: String): String =
@@ -557,29 +578,45 @@ object Vector {
     casg.select(col("vec_id"), posexplode(expr(s"transform(sequence(0, ${PqBlocks - 1}), " +
       s"b -> slice(rq, b * $PqDims + 1, $PqDims))")).as(Seq("block", "rq8")))
 
-  /** Each residual block with its nearest code `best` = (d2, pcid) under
-    * the (block, pcid, pq8) codebook `book` ((d2 asc, pcid asc) tie rule). */
-  private def pqAssign(blocks: DataFrame, book: DataFrame): DataFrame =
-    blocks.select(col("vec_id"), col("block"), col("rq8"), book.scalar().as("pents"))
-      .select(col("vec_id"), col("block"), col("rq8"), expr("array_min(transform(" +
-        "filter(pents, pe -> pe.block = block), " +
-        s"pe -> struct(${l2("rq8", "pe.pq8")} AS d2, pe.pcid AS pcid)))").as("best"))
+  /** The untrained PQ codebook of the (at most PqK) `casg` rows `seeds`:
+    * one entry (block, pcid = vec_id, pq8) per residual block. */
+  private def pqSeed(seeds: DataFrame, label: String): DataFrame =
+    codebook(residBlocks(seeds).select(col("block"), col("vec_id").as("pcid"), col("rq8").as("pq8")),
+      PqBlocks * PqK, label)
 
-  /** The Lloyd update: exact truncating per-(keys, coordinate) mean of the
-    * `v` arrays, reassembled as one array `out` per key. */
-  private def centroidMeans(asg: DataFrame, keys: Seq[String], v: String, out: String): DataFrame =
-    asg.select(keys.map(col) :+ posexplode(col(v)).as(Seq("j0", "x")): _*)
+  /** `blocks` with each residual block's nearest code `best` = (d2, pcid)
+    * under the (block, pcid, pq8) codebook `book` ((d2 asc, pcid asc) tie
+    * rule). */
+  private def pqAssign(blocks: DataFrame, book: DataFrame): DataFrame =
+    blocks.withColumn("pents", book.scalar())
+      .withColumn("best", expr("array_min(transform(filter(pents, pe -> pe.block = block), " +
+        s"pe -> struct(${l2("rq8", "pe.pq8")} AS d2, pe.pcid AS pcid)))"))
+      .drop("pents")
+
+  /** One Lloyd update as a driver-held codebook: the exact truncating
+    * per-(keys, coordinate) mean of the `v` arrays of `asg` is ONE
+    * aggregate over the corpus, whose (at most `maxRows`) rows are
+    * collected under job label `label` and reassembled on the driver, each
+    * key's means in coordinate order as one array `out`. */
+  private def meanBook(asg: DataFrame, keys: Seq[String], v: String, out: String, maxRows: Int,
+      label: String): DataFrame = {
+    val means = asg.select(keys.map(col) :+ posexplode(col(v)).as(Seq("j0", "x")): _*)
       .groupBy((keys :+ "j0").map(col): _*)
       .agg(expr("sum(x) div count(1)").as("m"))
-      .groupBy(keys.map(col): _*)
-      .agg(expr("transform(array_sort(collect_list(struct(j0, m))), e -> e.m)").as(out))
+    val n = keys.length
+    val entries = graft.Caches.boundedRows(means, maxRows, label).toSeq
+      .groupBy(_.toSeq.take(n)).toSeq
+      .map { case (k, ms) => Row.fromSeq(k :+ ms.sortBy(_.getInt(n)).map(_.getLong(n + 1))) }
+    bookOf(asg.sparkSession, StructType(means.schema.take(n) :+ StructField(out, ArrayType(LongType))),
+      entries)
+  }
 
-  /** KmIters per-subspace Lloyd rounds over `blocks` from the seed entries
-    * (block, pcid, pq8); returns the trained entries. */
-  private def pqLloyd(blocks: DataFrame, seed: DataFrame): DataFrame =
-    (1 to KmIters).foldLeft(seed) { (p, _) =>
-      centroidMeans(pqAssign(blocks, codebook(p)).withColumn("pcid", col("best.pcid")),
-        Seq("block", "pcid"), "rq8", "pq8")
+  /** KmIters per-subspace Lloyd rounds over `blocks` from the seed codebook
+    * `seed`; returns the trained codebook (jobs labelled `<tag>/pq r<n>`). */
+  private def pqLloyd(blocks: DataFrame, seed: DataFrame, tag: String): DataFrame =
+    (1 to KmIters).foldLeft(seed) { (book, r) =>
+      meanBook(pqAssign(blocks, book).withColumn("pcid", col("best.pcid")),
+        Seq("block", "pcid"), "rq8", "pq8", PqBlocks * PqK * PqDims, s"$tag/pq r$r")
     }
 
   /** (vec_id, ccid, cidx): each vector's PQ codes, stored as the POSITION
@@ -599,19 +636,21 @@ object Vector {
         expr(s"transform(pents, pe -> ${l2(s"slice(qrq, pe.block * $PqDims + 1, $PqDims)", "pe.pq8")})")
           .as("lutArr"))
 
-  /** (query_id, vec_id, approx_d2, rk) for rk ≤ 10: candidates are the
-    * members of each query's probed cells other than itself, scored by
-    * summing LUT entries at their code positions (ADC) and ranked by
-    * (approx_d2, vec_id). */
-  private def adcTop10(codes: DataFrame, lut: DataFrame): DataFrame =
+  /** (query_id, vec_id, approx_d2, rk, n_cand) for rk ≤ 10: candidates are
+    * the members of each query's probed cells other than itself (n_cand of
+    * them), scored by summing LUT entries at their code positions (ADC) and
+    * ranked by (approx_d2, vec_id). */
+  private def adcTop10(codes: DataFrame, lut: DataFrame): DataFrame = {
+    val byQuery = Window.partitionBy(col("query_id"))
     codes.join(broadcast(lut), Seq("ccid"))
       .filter(col("query_id") =!= col("vec_id"))
       .select(col("query_id"), col("vec_id"),
         expr(s"aggregate(sequence(0, ${PqBlocks - 1}), 0L, (acc, b) -> acc + element_at(lutArr, element_at(cidx, b + 1) + 1))")
           .as("approx_d2"))
-      .withColumn("rk", row_number().over(Window.partitionBy(col("query_id"))
-        .orderBy(col("approx_d2").asc, col("vec_id").asc)))
+      .withColumn("rk", row_number().over(byQuery.orderBy(col("approx_d2").asc, col("vec_id").asc)))
+      .withColumn("n_cand", count(lit(1)).over(byQuery))
       .filter(col("rk") <= 10)
+  }
 
   /** IVF-PQ top-k — the production ANN shape (IVF coarse cells + PQ
     * residual codes + asymmetric-distance lookup), composing q51's inverted
@@ -630,16 +669,17 @@ object Vector {
     *
     * All arithmetic is exact fixed-point int64 (`round(x·2²⁴)`), so every
     * argmin and distance sum is order-independent and engine-identical.
-    * At scale: codes+cell ids are ~9 bytes/vector and the probe is an
-    * equi-join on cell id touching ~nprobe/cells of the corpus. */
+    * Both stand-in codebooks are driver-held 1-row frames
+    * (`Caches.bounded`), attached with `.scalar()`. At scale: codes+cell
+    * ids are ~9 bytes/vector and the probe is an equi-join on cell id
+    * touching ~nprobe/cells of the corpus. */
   def q102IvfPqTopk(s: SparkSession, dir: String): DataFrame = {
-    val plane = quantPlane(s, dir, FixedPoint)
+    val plane = quantPlane(Tables.embeddings(s, dir), FixedPoint)
     val cells = codebook(plane.filter(col("vec_id") < IvfCells)
-      .select(col("vec_id").as("cid"), col("xv").as("cq")))
+      .select(col("vec_id").as("cid"), col("xv").as("cq")), IvfCells, "q102/cells")
     val casg = assignResid(plane, cells)
-    // untrained PQ codebook: the PqK smallest vec_ids' residual blocks
-    val book = codebook(residBlocks(casg).filter(col("vec_id") < PqK)
-      .select(col("block"), col("vec_id").as("pcid"), col("rq8").as("pq8")))
+    // untrained PQ codebook: the residual blocks of vec_ids below PqK
+    val book = pqSeed(casg.filter(col("vec_id") < PqK), "q102/pq book")
     adcTop10(pqCodes(casg, book),
         pqLut(probeResid(plane.filter(col("vec_id") % 100 === 0), cells), book))
       .select(col("query_id"), col("rk").cast("long").as("rk"), col("vec_id"), col("approx_d2"))
@@ -773,13 +813,14 @@ object Vector {
     * Each iteration is the canonical two-shuffle Spark shape ([[lloyd]]):
     * (1) assign — every vector joins the BROADCAST centroid table (K·Dim
     * rows) and takes its nearest cluster; (2) update — per-(cluster,
-    * dimension) mean via partial+final hash aggregation. Reports
-    * per-cluster membership and exact SSE under the final centroids. */
+    * dimension) mean via partial+final hash aggregation, collected to the
+    * driver as the next round's table. Reports per-cluster membership and
+    * exact SSE under the final centroids. */
   def q110KmeansFixedPoint(s: SparkSession, dir: String): DataFrame = {
     // feeds every iteration's assign join and update aggregation
     val xk = graft.Caches.persist(coords(s, dir)
       .select(col("vec_id"), col("j"), fixedPoint(KmFP).as("xk")))
-    nearest(l2Dists(xk, lloyd(xk, xk.filter(col("vec_id") < KmK))), col("d2").asc, 1)
+    nearest(l2Dists(xk, lloyd(xk, xk.filter(col("vec_id") < KmK), KmK, "q110")), col("d2").asc, 1)
       .groupBy(col("cid"))
       .agg(count(lit(1)).as("n_vecs"), sum(col("d2")).as("sse"))
       .orderBy(col("cid"))
@@ -839,7 +880,7 @@ object Vector {
     val base = graft.Caches.persist(coords(s, dir).select(col("vec_id"), col("j"),
       fixedPoint(KmFP).as("xk"), fixedPoint(FixedPoint).as("xq")))
     val asg = graft.Caches.persist(
-      nearest(l2Dists(base, lloyd(base, base.filter(col("vec_id") < KmK))), col("d2").asc, 1)
+      nearest(l2Dists(base, lloyd(base, base.filter(col("vec_id") < KmK), KmK, "q156")), col("d2").asc, 1)
         .select(col("vec_id"), col("cid")))
     // q52's banding and verify, keyed by the cluster id
     val dupsP = graft.Caches.persist(
@@ -1392,7 +1433,7 @@ object Vector {
   def q265NdcgRetrieval(s: SparkSession, dir: String): DataFrame = {
     val emb = graft.Caches.persist(cosCorpus(s, dir))
     val gains = gainTable(s)
-    val top = graded(topK(bruteScored(evalProbes(s, dir, emb), emb), 10))
+    val top = graded(topK(bruteScored(evalProbes(emb), emb), 10))
     val agg = withGain(top, gains).groupBy(col("query_id"), col("qlabel"))
       .agg(hits.as("hits"), dcg.as("dcg_fp"))
     withIdcg(withNRel(agg, emb), gains)
@@ -1448,7 +1489,7 @@ object Vector {
     * everything after runs on |queries| rows. */
   def q268RetrievalMrrRecall(s: SparkSession, dir: String): DataFrame = {
     val emb = graft.Caches.persist(cosCorpus(s, dir))
-    val agg = graded(topK(bruteScored(evalProbes(s, dir, emb), emb), 10))
+    val agg = graded(topK(bruteScored(evalProbes(emb), emb), 10))
       .groupBy(col("query_id"), col("qlabel")).agg(hits.as("hits"), firstRel.as("fr"))
     withNRel(agg, emb)
       .select(col("query_id"), col("qlabel").as("label"), col("n_rel"),
@@ -1503,7 +1544,7 @@ object Vector {
     * the q111 discipline applied to q268's metrics. */
   def q274IvfRetrievalEval(s: SparkSession, dir: String): DataFrame = {
     val emb = graft.Caches.persist(cosCorpus(s, dir))
-    val q = evalProbes(s, dir, emb)
+    val q = evalProbes(emb)
     // brute-force reference pass (q268's scan, persisted: feeds both the
     // reference metrics and the overlap gate)
     val bfTop = graft.Caches.persist(graded(topK(bruteScored(q, emb), 10)))
@@ -1514,7 +1555,7 @@ object Vector {
     // recall. Identical ids (0–7) on this data.
     val sims = cellSims(emb, emb.orderBy(col("vec_id")).limit(IvfCells))
     val ivfTop = graft.Caches.persist(graded(ivfTopK(q, emb, nearest(sims, col("csim").desc, 1),
-      nearest(sims.join(broadcast(evalProbeIds(s, dir)), Seq("vec_id")), col("csim").desc, IvfProbes),
+      nearest(sims.join(broadcast(evalProbeIds(emb)), Seq("vec_id")), col("csim").desc, IvfProbes),
       10)))
     // metrics on both passes + the overlap gate, all on |queries| rows
     val bfAgg = bfTop.groupBy(col("query_id"), col("qlabel"))
@@ -1605,7 +1646,7 @@ object Vector {
     * everything after the top-10 filter runs on ≤10·|queries| rows. */
   def q275MapAtK(s: SparkSession, dir: String): DataFrame = {
     val emb = graft.Caches.persist(cosCorpus(s, dir))
-    val agg = withCumRel(graded(topK(bruteScored(evalProbes(s, dir, emb), emb), 10)))
+    val agg = withCumRel(graded(topK(bruteScored(evalProbes(emb), emb), 10)))
       .groupBy(col("query_id"), col("qlabel")).agg(hits.as("hits"), precSum.as("sum_prec_raw"))
     withNRel(agg, emb)
       .withColumn("sum_prec_ppm", coalesce(col("sum_prec_raw"), lit(0L)))
@@ -1677,11 +1718,11 @@ object Vector {
       .orderBy(col("vec_id")).limit(TIvfK)
     // trained-cell distances feed BOTH the corpus assignment and the
     // query probes — persisted so the two consumers share one pass
-    val dist = graft.Caches.persist(l2Dists(xk, lloyd(xk, xk.join(broadcast(seeds), Seq("vec_id")))))
-    val q = evalProbes(s, dir, emb)
+    val dist = graft.Caches.persist(l2Dists(xk, lloyd(xk, xk.join(broadcast(seeds), Seq("vec_id")), TIvfK, "q277")))
+    val q = evalProbes(emb)
     val bfTop = graft.Caches.persist(graded(topK(bruteScored(q, emb), 10)))
     val ivfTop = graft.Caches.persist(graded(ivfTopK(q, emb, nearest(dist, col("d2").asc, 1),
-      nearest(dist.join(broadcast(evalProbeIds(s, dir)), Seq("vec_id")), col("d2").asc, IvfProbes),
+      nearest(dist.join(broadcast(evalProbeIds(emb)), Seq("vec_id")), col("d2").asc, IvfProbes),
       10)))
     val gains = gainTable(s)
     val bfM = withGain(withCumRel(bfTop), gains).groupBy(col("query_id"), col("qlabel"))
@@ -1821,25 +1862,27 @@ object Vector {
     * `evidence/probe_ivf_trained_x100_r14.json` (200k vectors).
     *
     * Scale stance: the shared array-form IVF-PQ kernels — assignment is a
-    * row-local fold per (vec, block) against the 1-row codebook attached
-    * as a scalar subquery; the update is a partial-aggregated mean per
-    * (block, code, coordinate). The corpus is touched once per iteration,
-    * never pairwise. All arithmetic exact int64 at the 2¹² training scale;
+    * row-local fold per (vec, block) against a driver-held 1-row codebook
+    * attached with `.scalar()`; each Lloyd update is ONE partial-aggregated
+    * mean per (block, code, coordinate), collected and reassembled on the
+    * driver; one final pass scores every block against both codebooks.
+    * The corpus is touched once per round, never pairwise, and nothing is
+    * checkpointed. All arithmetic exact int64 at the 2¹² training scale;
     * the ppm improvement rides DECIMAL(38,0)/HUGEINT (sse·10⁶ passes 2⁶³
     * on large corpora). */
   def q281TrainedPqDistortion(s: SparkSession, dir: String): DataFrame = {
-    val plane = quantPlane(s, dir, KmFP)
+    val plane = quantPlane(Tables.embeddings(s, dir), KmFP)
     // residuals against the UNTRAINED seed cells (q102's shape, data-derived)
-    val blocks = residBlocks(assignResid(plane, codebook(seedRows(s, dir, plane, IvfCells)
-      .select(col("vec_id").as("cid"), col("xv").as("cq")))))
+    val casg = assignResid(plane, codebook(seedRows(plane, IvfCells)
+      .select(col("vec_id").as("cid"), col("xv").as("cq")), IvfCells, "q281/coarse seed"))
+    val blocks = residBlocks(casg)
     // seed codebook: the PqK smallest vec_ids' residual blocks
-    val seed = seedRows(s, dir, blocks, PqK)
-      .select(col("block"), col("vec_id").as("pcid"), col("rq8").as("pq8"))
-    val seedSse = pqAssign(blocks, codebook(seed)).groupBy(col("block"))
-      .agg(count(lit(1)).as("n_vecs"), sum(col("best.d2")).as("sse_seed"))
-    val trainedSse = pqAssign(blocks, codebook(pqLloyd(blocks, seed))).groupBy(col("block"))
-      .agg(sum(col("best.d2")).as("sse_trained"))
-    seedSse.join(trainedSse, Seq("block"))
+    val seed = pqSeed(seedRows(casg, PqK), "q281/pq seed")
+    // one pass scores every block against both codebooks
+    pqAssign(pqAssign(blocks, seed).withColumnRenamed("best", "seed_best"), pqLloyd(blocks, seed, "q281"))
+      .groupBy(col("block"))
+      .agg(count(lit(1)).as("n_vecs"), sum(col("seed_best.d2")).as("sse_seed"),
+        sum(col("best.d2")).as("sse_trained"))
       .select(col("block").cast("long").as("block"), col("n_vecs"),
         col("sse_seed"), col("sse_trained"),
         expr("CAST((CAST(sse_seed - sse_trained AS DECIMAL(38,0)) * 1000000)" +
@@ -1918,62 +1961,61 @@ object Vector {
     * coarse, train PQ on residuals, probe, ADC) — q102 executes the same
     * topology untrained, q277/q281 train each half in isolation.
     *
-    * Scale stance: ONE quantization pass in array form feeds every side,
-    * and the index side is built from the shared array-form IVF-PQ
-    * kernels: every distance, argmin, and LUT entry is a row-local integer
-    * fold against a 1-row codebook attached as a scalar subquery (no join),
-    * so the only corpus-scale shuffles are the per-round centroid-update
-    * partial aggregates and the two top-k windows. The one nested-loop
-    * join is the brute grading scan's declared query × corpus inequality.
-    * Every distance, argmin, mean, and rank is exact int64 at the 2¹²
-    * training scale, so the DuckDB oracle hash-matches bit-for-bit. */
+    * Scale stance: ONE embeddings load and ONE quantization pass in array
+    * form feed every side, and the index side is built from the shared
+    * array-form IVF-PQ kernels: every distance, argmin, and LUT entry is a
+    * row-local integer fold against a 1-row codebook attached with
+    * `.scalar()` (no join). Everything whose size a dictionary bounds is
+    * driver-held (`Caches.bounded`, jobs labelled `q282/<phase>`): the seed
+    * and trained codebooks (each Lloyd round is ONE mean aggregate,
+    * collected), the EvalProbeK probe vectors and their probed cells. So
+    * nothing is checkpointed, and the corpus-scale shuffles are the
+    * per-round mean aggregates and the two top-k windows; each side's
+    * top-10 gathers into one list per query, and the overlap is their
+    * intersection (the ADC window also counts each query's candidates,
+    * n_cand). The one nested-loop join is the brute grading scan's
+    * declared query × corpus inequality. Every distance, argmin, mean, and
+    * rank is exact int64 at the 2¹² training scale, so the DuckDB oracle
+    * hash-matches bit-for-bit. */
   def q282TrainedIvfPqRecall(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.{Window => W}
-    val plane = quantPlane(s, dir, KmFP) // also the brute side's input
+    val plane = quantPlane(Tables.embeddings(s, dir), KmFP) // also the brute side's input
     // coarse codebook: q277's trained recurrence (data-derived seeds)
-    var cent = seedRows(s, dir, plane, IvfCells).select(col("vec_id").as("cid"), col("xv").as("cq"))
-    for (_ <- 1 to KmIters)
-      cent = centroidMeans(nearestCell(plane, codebook(cent)).withColumn("cid", col("best.cid")),
-        Seq("cid"), "xv", "cq")
-    // each trained codebook is checkpointed once, so its training chain
-    // runs once instead of inside every consumer's scalar subquery
-    val cells = graft.Caches.trackCheckpoint(codebook(cent).localCheckpoint())
+    val cells = (1 to KmIters).foldLeft(codebook(seedRows(plane, IvfCells)
+        .select(col("vec_id").as("cid"), col("xv").as("cq")), IvfCells, "q282/coarse seed")) { (c, r) =>
+      meanBook(nearestCell(plane, c).withColumn("cid", col("best.cid")), Seq("cid"), "xv", "cq",
+        IvfCells * Dim, s"q282/coarse r$r")
+    }
     val casg = assignResid(plane, cells)
-    val probes = graft.Caches.trackCheckpoint(probeResid(
-      plane.join(broadcast(evalProbeIds(s, dir)), Seq("vec_id")), cells).localCheckpoint())
+    // the fixed probe vectors and their probed cells, driver-held
+    val qv = graft.Caches.bounded(evalProbeRows(plane), EvalProbeK, "q282/probe vectors")
+    val probes = graft.Caches.bounded(probeResid(qv, cells), EvalProbeK * IvfProbes, "q282/probe cells")
     // PQ codebooks: q281's trained recurrence on the residual subspaces
-    val blocks = residBlocks(casg)
-    val book = graft.Caches.trackCheckpoint(codebook(pqLloyd(blocks, seedRows(s, dir, blocks, PqK)
-      .select(col("block"), col("vec_id").as("pcid"), col("rq8").as("pq8")))).localCheckpoint())
-    val ivfTop = graft.Caches.persist(adcTop10(pqCodes(casg, book), pqLut(probes, book))
-      .select(col("query_id"), col("vec_id")))
+    val book = pqLloyd(residBlocks(casg), pqSeed(seedRows(casg, PqK), "q282/pq seed"), "q282")
+    val ivf = adcTop10(pqCodes(casg, book), pqLut(probes, book))
+      .groupBy(col("query_id"))
+      .agg(collect_list(col("vec_id")).as("ivf_top"), max(col("n_cand")).as("n_cand"))
     // brute exact-L2 reference on the same 2^12 plane — the q50 broadcast
     // query × corpus scan with a codegen'd integer array fold (the exploded
     // j-join formulation computes identical values but pays a 64× shuffle
     // fan-out and dominated the bench wall at 9.3 s; this shape reads the
     // corpus once per query batch, no shuffle before the top-k window).
-    val qv = plane.join(broadcast(evalProbeIds(s, dir)), Seq("vec_id"))
-      .select(col("vec_id").as("query_id"), col("xv").as("qxv"))
-    val wB = W.partitionBy(col("query_id")).orderBy(col("bd2").asc, col("vec_id").asc)
-    val bfTop = graft.Caches.persist(
-      broadcast(qv).join(plane, col("query_id") =!= col("vec_id"))
-        .withColumn("bd2", expr(l2("qxv", "xv")))
-        .withColumn("rk", row_number().over(wB)).filter(col("rk") <= 10)
-        .select(col("query_id"), col("vec_id")))
-    val ov = bfTop.join(ivfTop, Seq("query_id", "vec_id"))
-      .groupBy(col("query_id")).agg(count(lit(1)).as("ov"))
-    val bfk = bfTop.groupBy(col("query_id")).agg(count(lit(1)).as("bf_k"))
-    // candidate-set size: probed cells' populations minus self (a query's
-    // rn=1 cell is its own assigned cell, so self is always a candidate)
-    val cellSz = casg.groupBy(col("ccid")).agg(count(lit(1)).as("csz"))
-    val ncand = probes.join(cellSz, Seq("ccid"))
-      .groupBy(col("query_id")).agg((sum(col("csz")) - 1L).as("n_cand"))
-    bfk
-      .join(ov, Seq("query_id"), "left")
-      .join(ncand, Seq("query_id"))
-      .select(col("query_id"), col("n_cand"), col("bf_k"),
-        coalesce(col("ov"), lit(0L)).as("topk_overlap"),
-        expr("(coalesce(ov, 0L) * 1000000) div bf_k").as("recall_ppm"))
+    val bf = broadcast(qv.select(col("vec_id").as("query_id"), col("xv").as("qxv")))
+      .join(plane, col("query_id") =!= col("vec_id"))
+      .withColumn("bd2", expr(l2("qxv", "xv")))
+      .withColumn("rk", row_number().over(Window.partitionBy(col("query_id"))
+        .orderBy(col("bd2").asc, col("vec_id").asc)))
+      .filter(col("rk") <= 10)
+      .groupBy(col("query_id"))
+      .agg(collect_list(col("vec_id")).as("bf_top"), count(lit(1)).as("bf_k"))
+    // both top-10 lists are duplicate-free, so the overlap is the size of
+    // their intersection; a query whose probed cells hold only itself has
+    // no ADC candidates (n_cand 0)
+    bf.join(ivf, Seq("query_id"), "left")
+      .withColumn("ov", when(col("ivf_top").isNull, lit(0L))
+        .otherwise(size(array_intersect(col("bf_top"), col("ivf_top"))).cast("long")))
+      .select(col("query_id"), coalesce(col("n_cand"), lit(0L)).as("n_cand"), col("bf_k"),
+        col("ov").as("topk_overlap"),
+        expr("(ov * 1000000) div bf_k").as("recall_ppm"))
       .orderBy(col("query_id"))
   }
 
@@ -2298,7 +2340,7 @@ object Vector {
   /** Exact brute top-[[NnK]] for the fixed probe frame over the quantized
     * plane — (query_id, v, rk); the grading reference for q287/q288. */
   private def bruteTopNn(s: SparkSession, dir: String, qv: DataFrame): DataFrame = {
-    val probes = qv.join(broadcast(evalProbeIds(s, dir)), Seq("vec_id"))
+    val probes = qv.join(broadcast(evalProbeIds(Tables.embeddings(s, dir))), Seq("vec_id"))
       .select(col("vec_id").as("query_id"), col("vec").as("qvec"), col("nrm2").as("qn"))
     val wB = Window.partitionBy(col("query_id")).orderBy(col("d2").asc, col("v").asc)
     broadcast(probes).join(qv, col("query_id") =!= col("vec_id"))
@@ -2316,7 +2358,7 @@ object Vector {
     // once, not once per consumer (r15)
     val brute = graft.Caches.trackCheckpoint(
       bruteTopNn(s, dir, qv).select(col("query_id"), col("v")).localCheckpoint())
-    val pids = evalProbeIds(s, dir).select(col("vec_id").as("query_id"))
+    val pids = evalProbeIds(Tables.embeddings(s, dir)).select(col("vec_id").as("query_id"))
     def overlap(e: DataFrame, name: String): DataFrame =
       e.select(col("u").as("query_id"), col("v"))
         .join(broadcast(pids), Seq("query_id"))
@@ -2428,13 +2470,13 @@ object Vector {
     * is exactly the long-range-link gap HNSW's hierarchy fills. */
   def q288GraphBeamSearch(s: SparkSession, dir: String): DataFrame = {
     val (qv, _, edges) = nnDescentBuild(s, dir)
-    val pids = evalProbeIds(s, dir).select(col("vec_id").as("query_id"))
+    val pids = evalProbeIds(Tables.embeddings(s, dir)).select(col("vec_id").as("query_id"))
     // bounded ≤K-row query frame, referenced once per hop inside the loop:
     // checkpointed ONCE so each hop's action broadcasts the materialized
     // rows instead of re-running the qv scan+join (was one extra job per
     // hop — 8 of the 84 probe jobs)
     val qvec = graft.Caches.trackCheckpoint(
-      qv.join(broadcast(evalProbeIds(s, dir)), Seq("vec_id"))
+      qv.join(broadcast(evalProbeIds(Tables.embeddings(s, dir))), Seq("vec_id"))
         .select(col("vec_id").as("query_id"), col("vec").as("qvec"), col("nrm2").as("qn"))
         .localCheckpoint())
     // 4 scattered global entry points (i·⌊n/4⌋): a single entry stalls in a
@@ -2573,7 +2615,7 @@ object Vector {
     * probe (mean/max over its K−1 pairs). */
   def q289JlProjectionAudit(s: SparkSession, dir: String): DataFrame = {
     graft.functions.GraftExtensions.register(s)
-    val pid = evalProbeIds(s, dir)
+    val pid = evalProbeIds(Tables.embeddings(s, dir))
     // probe vectors only: the audit grid is fixed-size by construction
     val px = Tables.embeddings(s, dir).join(broadcast(pid), Seq("vec_id"))
       .select(col("vec_id"),

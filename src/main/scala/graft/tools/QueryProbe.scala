@@ -18,7 +18,10 @@ import org.apache.spark.sql.SparkSession
   * pass measures the query's own training. Each measured pass runs in job
   * group `<query>#<pass>` (the warm-up in none), so with Spark's event log
   * on, `scripts/stage_breakdown.py <log> --group '^q277_'` keeps one
-  * query's jobs.
+  * query's jobs. The action is an order-insensitive checksum over every
+  * output column, not `count()`: under a count Catalyst prunes whatever no
+  * row count depends on (q277's whole trained-IVF side is a left join
+  * on a unique key), so a lazy plan would read cheaper than it runs.
   */
 object QueryProbe {
   private class Acc extends SparkListener {
@@ -47,6 +50,11 @@ object QueryProbe {
     }
   }
 
+  private def run(df: org.apache.spark.sql.DataFrame): Unit = {
+    import org.apache.spark.sql.functions.{col, struct, sum, to_json, xxhash64}
+    df.agg(sum(xxhash64(to_json(struct(df.columns.map(col).toIndexedSeq: _*))))).collect()
+  }
+
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val passes = args.drop(1).headOption.map(_.toInt).getOrElse(2)
@@ -59,7 +67,7 @@ object QueryProbe {
       .filter { case (n, _) => only.isEmpty || only.exists(n.contains) }
     val results = selected.map { case (name, fn) =>
       // warmup pass at the smallest sf (JIT/codegen), as Bench does
-      try fn(spark, "/root/testdata/sf0.001").count()
+      try run(fn(spark, "/root/testdata/sf0.001"))
       catch { case scala.util.control.NonFatal(_) => () }
       finally { graft.Caches.releaseAll(); graft.Caches.releaseMemos() }
       var best = Double.MaxValue
@@ -70,7 +78,7 @@ object QueryProbe {
         // event log splits per query (scripts/stage_breakdown.py --group)
         spark.sparkContext.setJobGroup(s"$name#$pass", name, interruptOnCancel = false)
         val t0 = System.nanoTime()
-        try fn(spark, dir).count()
+        try run(fn(spark, dir))
         catch { case scala.util.control.NonFatal(e) =>
           System.err.println(s"PROBE FAIL $name: ${e.getMessage}") }
         finally {

@@ -2852,4 +2852,200 @@ class OperatorsSpec extends SparkSpec {
       }
     }
   }
+
+  // Driver-side exact Long references for the trained IVF-PQ chain (q281,
+  // q282) and the hyperplane-LSH sketch (q52, q156): each rebuilds the
+  // query's definition from the embeddings alone, with no Spark kernel.
+
+  /** `dir`'s embeddings by vec_id, each coordinate rounded HALF_UP at
+    * fixed point `scale`. */
+  private def fixedRows(dir: String, scale: Long): Seq[(Long, Array[Long])] =
+    Tables.embeddings(spark, dir).select("vec_id", "embedding").collect().toSeq
+      .map(r => r.getLong(0) -> r.getSeq[Float](1).map(x =>
+        BigDecimal(x.toDouble * scale).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLongExact).toArray)
+      .sortBy(_._1)
+
+  private def sqDist(a: Array[Long], b: Array[Long]): Long = a.indices.map(i => (a(i) - b(i)) * (a(i) - b(i))).sum
+
+  private def minus(a: Array[Long], b: Array[Long]): Array[Long] = a.indices.map(i => a(i) - b(i)).toArray
+
+  /** (d2, key) of the entry of `book` nearest to `v`, ties to the smaller key. */
+  private def nearestEntry(v: Array[Long], book: Seq[(Long, Array[Long])]): (Long, Long) =
+    book.map { case (k, c) => (sqDist(v, c), k) }.min
+
+  /** KmIters Lloyd rounds over `pts` from `seeds`: nearest-entry
+    * assignment, then each entry's truncating per-coordinate mean; an entry
+    * left without members drops out. */
+  private def lloydRef(pts: Seq[Array[Long]], seeds: Seq[(Long, Array[Long])]): Seq[(Long, Array[Long])] =
+    (1 to ops.Vector.KmIters).foldLeft(seeds) { (book, _) =>
+      pts.groupBy(p => nearestEntry(p, book)._2).toSeq.sortBy(_._1).map { case (k, ms) =>
+        k -> ms.head.indices.map(j => ms.map(_(j)).sum / ms.size).toArray
+      }
+    }
+
+  /** Subspace `b` (PqBlocks equal slices) of `v`. */
+  private def pqBlock(v: Array[Long], b: Int): Array[Long] = {
+    val d = v.length / ops.Vector.PqBlocks
+    v.slice(b * d, (b + 1) * d)
+  }
+
+  test("q281 per-block n_vecs, sse_seed, sse_trained and ppm equal a driver-side Long PQ training") {
+    import ops.Vector.{IvfCells, KmFP, PqBlocks, PqK}
+    Seq(sf(), tiedEmbeddings).foreach { dir =>
+      val pts = fixedRows(dir, KmFP)
+      // residuals against the untrained seed cells: the IvfCells smallest vec_ids
+      val cells = pts.take(IvfCells)
+      val resid = pts.map { case (id, x) => id -> minus(x, cells.toMap.apply(nearestEntry(x, cells)._2)) }
+      val expected = (0 until PqBlocks).map { b =>
+        val blocks = resid.map { case (id, r) => id -> pqBlock(r, b) }
+        val seed = blocks.take(PqK)
+        def sse(book: Seq[(Long, Array[Long])]): Long = blocks.map(p => nearestEntry(p._2, book)._1).sum
+        val (s0, s1) = (sse(seed), sse(lloydRef(blocks.map(_._2), seed)))
+        (b.toLong, blocks.size.toLong, s0, s1,
+          if (s0 == 0L) None else Some((BigInt(s0 - s1) * 1000000 / BigInt(s0)).toLong))
+      }
+      val got = ops.Vector.q281TrainedPqDistortion(spark, dir).collect().toSeq.map(r =>
+        (r.getAs[Long]("block"), r.getAs[Long]("n_vecs"), r.getAs[Long]("sse_seed"),
+          r.getAs[Long]("sse_trained"), Option(r.getAs[java.lang.Long]("improvement_ppm")).map(_.longValue)))
+      Caches.releaseAll()
+      assert(got.nonEmpty && got == expected, dir)
+    }
+  }
+
+  test("q282 rows equal a driver-side Long IVF-PQ index graded against the brute top-10") {
+    import ops.Vector.{EvalProbeK, IvfCells, IvfProbes, KmFP, PqBlocks, PqK}
+    Seq(sf(), tiedEmbeddings).foreach { dir =>
+      val pts = fixedRows(dir, KmFP)
+      // coarse: Lloyd from the IvfCells smallest vec_ids, then the final assignment
+      val cells = lloydRef(pts.map(_._2), pts.take(IvfCells))
+      val cellOf = cells.toMap
+      val cellIds = pts.map { case (id, x) => id -> nearestEntry(x, cells)._2 }.toMap
+      val resid = pts.map { case (id, x) => id -> minus(x, cellOf(cellIds(id))) }
+      // PQ: per block, Lloyd from the PqK smallest vec_ids' residual blocks
+      val books = (0 until PqBlocks).map { b =>
+        val blocks = resid.map { case (id, r) => id -> pqBlock(r, b) }
+        lloydRef(blocks.map(_._2), blocks.take(PqK))
+      }
+      val codes = resid.map { case (id, r) =>
+        id -> (0 until PqBlocks).map(b => books(b).toMap.apply(nearestEntry(pqBlock(r, b), books(b))._2))
+      }.toMap
+      val members = pts.map(_._1).groupBy(cellIds)
+      val expected = pts.filter(_._1 % 100 == 0).take(EvalProbeK).map { case (q, x) =>
+        val probed = cells.map { case (c, cq) => (sqDist(x, cq), c) }.sorted.take(IvfProbes).map(_._2)
+        // ADC: the query residual per probed cell against each member's codes
+        val adc = probed.flatMap { c =>
+          val qr = minus(x, cellOf(c))
+          members.getOrElse(c, Nil).filter(_ != q).map(id =>
+            ((0 until PqBlocks).map(b => sqDist(pqBlock(qr, b), codes(id)(b))).sum, id))
+        }
+        val ivf = adc.sorted.take(10).map(_._2).toSet
+        val bf = pts.filter(_._1 != q).map { case (id, v) => (sqDist(x, v), id) }.sorted.take(10).map(_._2)
+        val ov = bf.count(ivf).toLong
+        (q, probed.map(members.getOrElse(_, Nil).size.toLong).sum - 1, bf.size.toLong, ov,
+          ov * 1000000L / bf.size)
+      }.filter(_._3 > 0)
+      val got = ops.Vector.q282TrainedIvfPqRecall(spark, dir).collect().toSeq.map(r =>
+        (r.getAs[Long]("query_id"), r.getAs[Long]("n_cand"), r.getAs[Long]("bf_k"),
+          r.getAs[Long]("topk_overlap"), r.getAs[Long]("recall_ppm")))
+      Caches.releaseAll()
+      assert(got.nonEmpty && got == expected, dir)
+    }
+  }
+
+  /** Each vector's SimBits/BandBits band values on the 2²⁴ plane `xq`:
+    * sign bits of the integer projections on lshBands' planes. */
+  private def lshBandsRef(xq: Seq[(Long, Array[Long])]): Map[Long, Seq[Long]] = {
+    import ops.Vector.{BandBits, SimBits}
+    xq.map { case (id, v) =>
+      val p = (0 until SimBits).map(b => v.indices.map { i =>
+        val j = i + 1L
+        v(i) * ((b * 73856093L + j * 19349663L + b * j * 83492791L) % 97 - 48)
+      }.sum)
+      id -> (0 until SimBits / BandBits).map(bi =>
+        (0 until BandBits).map(r => if (p(bi * BandBits + r) > 0) 1L << r else 0L).sum)
+    }.toMap
+  }
+
+  /** (vec_a, vec_b, cos) with vec_a < vec_b for every pair sharing a band
+    * and `key`, kept when its integer cosine reaches `minCos`. */
+  private def lshPairsRef(xq: Seq[(Long, Array[Long])], key: Long => Long,
+      minCos: Double): Seq[(Long, Long, Double)] = {
+    val bands = lshBandsRef(xq)
+    val v = xq.toMap
+    def dotL(a: Array[Long], b: Array[Long]): Long = a.indices.map(i => a(i) * b(i)).sum
+    (for {
+      (a, va) <- xq; (b, vb) <- xq
+      if a < b && key(a) == key(b) && bands(a).zip(bands(b)).exists(t => t._1 == t._2)
+      cos = dotL(va, vb).toDouble / (math.sqrt(dotL(va, va).toDouble) * math.sqrt(dotL(vb, vb).toDouble))
+      if cos >= minCos
+    } yield (a, b, cos)).sorted
+  }
+
+  test("q52 pairs equal a driver-side hyperplane-LSH band sketch and exact verify") {
+    import ops.Vector.FixedPoint
+    Seq(sf(), tiedEmbeddings).foreach { dir =>
+      // q52's threshold: cosine ≥ 0.45
+      val expected = lshPairsRef(fixedRows(dir, FixedPoint), _ => 0L, 0.45)
+      val got = ops.Vector.q52EmbeddingNearDup(spark, dir).collect().toSeq
+        .map(r => (r.getAs[Long]("vec_a"), r.getAs[Long]("vec_b"), r.getAs[Double]("cos_sim")))
+      Caches.releaseAll()
+      assert(got == expected, dir)
+      if (dir == tiedEmbeddings) assert(expected.nonEmpty)
+    }
+  }
+
+  test("q156 per-cluster dedup counts equal a driver-side k-means + LSH reference") {
+    import ops.Vector.{FixedPoint, KmFP, KmK}
+    Seq(sf(), tiedEmbeddings).foreach { dir =>
+      val xk = fixedRows(dir, KmFP)
+      val cents = lloydRef(xk.map(_._2), xk.filter(_._1 < KmK))
+      val cid = xk.map { case (id, x) => id -> nearestEntry(x, cents)._2 }.toMap
+      // q156's threshold: cosine ≥ 0.30, pairs only inside one cluster
+      val dups = lshPairsRef(fixedRows(dir, FixedPoint), cid, 0.30)
+      val expected = cid.values.toSeq.distinct.sorted.map { c =>
+        val n = cid.count(_._2 == c).toLong
+        val mine = dups.filter(d => cid(d._1) == c)
+        val dropped = mine.map(_._2).distinct.size.toLong
+        (c, n, mine.size.toLong, dropped, n - dropped)
+      }
+      val got = ops.Vector.q156SemanticDedup(spark, dir).collect().toSeq.map(r =>
+        (r.getAs[Long]("cid"), r.getAs[Long]("n_vecs"), r.getAs[Long]("n_dup_pairs"),
+          r.getAs[Long]("n_dropped"), r.getAs[Long]("n_kept")))
+      Caches.releaseAll()
+      assert(got == expected, dir)
+      if (dir == tiedEmbeddings) assert(dups.nonEmpty)
+    }
+  }
+
+  test("Caches.bounded: a labelled collect into a local relation, refused above the bound") {
+    val sc = spark.sparkContext
+    val labels = java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
+    val seen = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val d = Option(j.properties).map(_.getProperty("spark.job.description")).orNull
+        labels.add(d)
+        if (d == "spec/bounded") seen.countDown()
+      }
+    }
+    val before = Caches.liveCountHere
+    sc.addSparkListener(listener)
+    sc.setJobDescription("caller")
+    try {
+      val df = spark.range(0, 40, 1, 4).toDF("id").filter(col("id") % 3 === 0)
+      val held = Caches.bounded(df, 14, "spec/bounded")
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+      assert(held.queryExecution.analyzed
+        .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+      assert(held.collect().map(_.getLong(0)).toSeq == (0L until 40L by 3L))
+      assert(seen.await(30, java.util.concurrent.TimeUnit.SECONDS), s"no labelled job: $labels")
+      val e = intercept[IllegalStateException](Caches.bounded(df, 13, "spec/over"))
+      assert(e.getMessage.contains("spec/over") && e.getMessage.contains("14 rows"), e.getMessage)
+      assert(sc.getLocalProperty("spark.job.description") == "caller")
+      assert(Caches.liveCountHere == before)
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
+  }
 }

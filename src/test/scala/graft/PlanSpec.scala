@@ -261,6 +261,27 @@ class PlanSpec extends SparkSpec {
     assert(stray.isEmpty, s"q282 nested-loop joins besides the brute scan:\n${stray.mkString("\n")}")
   }
 
+  test("plan lint: q282 trains on driver-held codebooks: no checkpoint, few jobs") {
+    // Each Lloyd round is one aggregate collected to the driver
+    // (Caches.bounded) and the codebooks, probe vectors and probed cells
+    // are local relations, so nothing is checkpointed and no round re-runs
+    // the rounds before it.
+    val sites = java.util.Collections.synchronizedList(new java.util.ArrayList[String]())
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (!Option(j.properties).exists(_.getProperty("graft.fence") != null))
+          sites.add(j.stageInfos.maxBy(_.stageId).name) // "<call site> at <file>:<line>"
+    }
+    spark.sparkContext.addSparkListener(counter)
+    try executedPlans(Vector.q282TrainedIvfPqRecall(spark, sf()))
+    finally spark.sparkContext.removeSparkListener(counter)
+    val jobs = sites.toArray.map(_.toString).toSeq
+    val checkpoints = jobs.filter(_.startsWith("localCheckpoint"))
+    assert(checkpoints.isEmpty, s"q282 checkpoint jobs: ${checkpoints.mkString(", ")}")
+    // 24 at sf0.001 (the checkpointed chain started 50 or more)
+    assert(jobs.length <= 28, s"q282 started ${jobs.length} jobs: ${jobs.mkString(", ")}")
+  }
+
   test("plan lint: 1-row scalars attach without condition-less nested-loop joins") {
     // Node counts, totals, bounds, trained weights and per-round argmaxes
     // attach as scalar subqueries; a 1-row crossJoin or join on true
